@@ -127,33 +127,36 @@ def fit_features(
             f"fit_features: on_overflow={on_overflow!r} — must be 'error' "
             "or 'keep' (anything else would silently truncate like 'keep')"
         )
-    from dataquality_ml_spark.operators.profile import _valid
+    from dataquality_ml_spark.operators.profile import _ident, _valid_sql
 
     roles = roles or infer_roles(df, label_col)
     num, cats, bools = roles["numeric"], roles["categorical"], roles["boolean"]
 
+    # SQL text in one selectExpr, not Column calls: see profile._valid_sql
     aggs = []
-    for c in num:
-        valid = _valid(df, c)
-        vc = F.when(valid, F.col(c))
-        aggs.append(F.count(vc).alias(f"{c}__n"))
-        aggs.append(F.avg(vc).alias(f"{c}__mean"))
-        aggs.append(F.stddev_samp(vc).alias(f"{c}__std"))
+    for i, c in enumerate(num):
+        q = _ident(c)
+        vc = f"CASE WHEN {_valid_sql(df, c)} THEN {q} END"
+        aggs += [
+            f"count({vc}) AS _{i}_n",
+            f"avg({vc}) AS _{i}_mean",
+            f"stddev_samp({vc}) AS _{i}_std",
+        ]
         if strategy == "median":
             fn = "percentile" if exact_median else "percentile_approx"
-            aggs.append(F.expr(f"{fn}({c}, 0.5)").alias(f"{c}__med"))
-    row = df.agg(*aggs).first() if aggs else None
+            aggs.append(f"{fn}({q}, 0.5) AS _{i}_med")
+    row = df.selectExpr(*aggs).first() if aggs else None
 
     model = FeatureModel(strategy=strategy, bool_cols=list(bools))
-    for c in num:
-        if row[f"{c}__n"] < min_valid:
+    for i, c in enumerate(num):
+        if row[f"_{i}_n"] < min_valid:
             # 100%-invalid columns are dropped, reference lib/utils.py:187-199
             continue
         model.numeric_cols.append(c)
-        model.mean[c] = float(row[f"{c}__mean"])
-        model.std[c] = float(row[f"{c}__std"] or 0.0)
+        model.mean[c] = float(row[f"_{i}_mean"])
+        model.std[c] = float(row[f"_{i}_std"] or 0.0)
         model.impute[c] = float(
-            row[f"{c}__med"] if strategy == "median" else row[f"{c}__mean"]
+            row[f"_{i}_med"] if strategy == "median" else row[f"_{i}_mean"]
         )
 
     if cats:

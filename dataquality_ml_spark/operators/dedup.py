@@ -403,9 +403,12 @@ def minhash_dedup_pairs(
     """Full MinHash+LSH near-dup pipeline: shingle → hash → sign → band →
     bucket-join → exact-Jaccard verify."""
     # The hashed-shingle relation feeds three plan branches (signatures +
-    # both sides of the verify join); cache it so tokenization/shingling/
-    # hashing runs once. Compact: one bigint array per doc.
-    hs = with_hashed_shingles(df, text_col, id_col, k).cache()
+    # both sides of the verify join); checkpoint it so tokenization/
+    # shingling/hashing runs once. Compact: one bigint array per doc. A
+    # lazy local checkpoint, not .cache(): its blocks go with the returned
+    # plan, while a cache entry would stay in the session's CacheManager
+    # after every call.
+    hs = with_hashed_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     sig = minhash_signatures(hs, num_perms, id_col)
     cand = minhash_candidates(sig, bands, rows, id_col)
     return jaccard_verify(cand, hs, threshold, id_col).orderBy("id_a", "id_b")
@@ -1306,7 +1309,8 @@ def prefix_filter_jaccard_pairs(
     from pyspark.sql import Window
 
     num, den = int(round(threshold * 1_000_000)), 1_000_000
-    hs = with_hashed_shingles(df, text_col, id_col, k).cache()
+    # lazy local checkpoint, not .cache(): see minhash_dedup_pairs
+    hs = with_hashed_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     ex = hs.select(
         F.col(id_col), F.size("hs").alias("n"), F.explode("hs").alias("s")
     )

@@ -12,6 +12,8 @@ At 100 TB this is the difference between 40 full scans and 1.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType, NumericType
@@ -29,13 +31,48 @@ def _is_float(df: DataFrame, c: str) -> bool:
     return isinstance(df.schema[c].dataType, (DoubleType, FloatType))
 
 
-def _valid(df: DataFrame, c: str):
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (backticks doubled), so
+    spaces, dots and quotes in column names survive SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str_lit(s: str) -> str:
+    """``s`` as a single-quoted SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _double_lit(v) -> str:
+    """A Python float (or None) as an exact SQL DOUBLE literal."""
+    if v is None:
+        return "CAST(NULL AS DOUBLE)"
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return "CAST('%s' AS DOUBLE)" % ("NaN" if v != v else "Infinity" if v > 0 else "-Infinity")
+
+
+def _valid_sql(df: DataFrame, c: str) -> str:
     """Non-null and (for float types) non-NaN — the reference's validity
-    predicate (lib/utils.py:191: ``isNotNull() & ~isnan()``)."""
-    cond = F.col(c).isNotNull()
+    predicate (lib/utils.py:191: ``isNotNull() & ~isnan()``) — as SQL text.
+
+    The wide per-column operators (``profile``, ``prune_low_quality``,
+    ``valid_columns``, ``features.fit_features``) splice it into SQL
+    aggregate strings handed to the JVM in ONE ``selectExpr``: building the
+    same expressions through the ``Column`` API costs several py4j round
+    trips per call (tens of thousands for a 40-column profile)."""
+    q = _ident(c)
     if _is_float(df, c):
-        cond = cond & ~F.isnan(F.col(c))
-    return cond
+        return f"({q} IS NOT NULL AND NOT isnan({q}))"
+    return f"({q} IS NOT NULL)"
+
+
+def _valid(df: DataFrame, c: str):
+    """:func:`_valid_sql` as a Column, for Column-API callers."""
+    return F.expr(_valid_sql(df, c))
+
+
+PROFILE_STATS = ("null_frac", "zero_frac", "mean", "stddev", "min", "max")
 
 
 def profile(df: DataFrame, columns: list[str] | None = None, exact_quantiles: bool = False) -> DataFrame:
@@ -51,36 +88,38 @@ def profile(df: DataFrame, columns: list[str] | None = None, exact_quantiles: bo
     item-2 hazard; values bit-equal on NaN-free columns, NaNs excluded);
     default ``percentile_approx`` with a 10k accuracy parameter is the
     one-pass sketch path (t-digest-style, mergeable, bounded memory).
+
+    Plan construction: the wide aggregation is ONE ``selectExpr`` of SQL
+    aggregate strings (column ``i``'s stats are aliased ``_<i>_<stat>``)
+    and the unpivot to one row per column is ONE
+    ``inline(array(named_struct(...), ...))`` over that single row — both
+    run in Spark, and the driver sends two expression lists instead of
+    thousands of per-Column py4j calls.
     """
     cols = columns or numeric_columns(df)
     q_array = "array(" + ", ".join(str(q) for q in PROFILE_QUANTILES) + ")"
 
-    aggs: list = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        valid = _valid(df, c)
-        vc = F.when(valid, F.col(c))  # NULL out invalid values for stats
-        aggs.extend(
-            [
-                F.count(vc).alias(f"{c}__n_valid"),
-                F.avg((~valid).cast("double")).alias(f"{c}__null_frac"),
-                F.avg((valid & (F.col(c) == 0)).cast("double")).alias(f"{c}__zero_frac"),
-                F.avg(vc).alias(f"{c}__mean"),
-                F.stddev_samp(vc).alias(f"{c}__stddev"),
-                F.min(vc).alias(f"{c}__min"),
-                F.max(vc).alias(f"{c}__max"),
-                # feeds the selection's low-cardinality collect fast path
-                F.approx_count_distinct(vc).alias(f"{c}__nd"),
-            ]
-        )
+    aggs = ["count(1) AS __n"]
+    for i, c in enumerate(cols):
+        q, valid = _ident(c), _valid_sql(df, c)
+        vc = f"CASE WHEN {valid} THEN {q} END"  # NULL out invalid values for stats
+        aggs += [
+            f"count({vc}) AS _{i}_n_valid",
+            f"avg(CAST(NOT {valid} AS DOUBLE)) AS _{i}_null_frac",
+            f"avg(CAST(({valid} AND {q} = 0) AS DOUBLE)) AS _{i}_zero_frac",
+            f"avg({vc}) AS _{i}_mean",
+            f"stddev_samp({vc}) AS _{i}_stddev",
+            f"min({vc}) AS _{i}_min",
+            f"max({vc}) AS _{i}_max",
+            # feeds the selection's low-cardinality collect fast path
+            f"approx_count_distinct({vc}) AS _{i}_nd",
+        ]
         if not exact_quantiles:
             # All quantiles in ONE sketch per column, not one each.
-            aggs.append(
-                F.expr(f"percentile_approx({c}, {q_array})").alias(f"{c}__pcts")
-            )
+            aggs.append(f"percentile_approx({q}, {q_array}) AS _{i}_pcts")
 
-    wide = df.agg(*aggs)
+    wide = df.selectExpr(*aggs)
 
-    exact_pcts = None
     if exact_quantiles:
         # the wide agg already computed every column's (n_valid, min, max)
         # over exactly the valid population — collect it (O(cols) scalars)
@@ -91,40 +130,38 @@ def profile(df: DataFrame, columns: list[str] | None = None, exact_quantiles: bo
         wide = df.sparkSession.createDataFrame([wrow], wide.schema)
         pre = {
             (c,): (
-                wrow[f"{c}__n_valid"],
-                None if wrow[f"{c}__min"] is None else float(wrow[f"{c}__min"]),
-                None if wrow[f"{c}__max"] is None else float(wrow[f"{c}__max"]),
-                wrow[f"{c}__nd"],
+                wrow[f"_{i}_n_valid"],
+                None if wrow[f"_{i}_min"] is None else float(wrow[f"_{i}_min"]),
+                None if wrow[f"_{i}_max"] is None else float(wrow[f"_{i}_max"]),
+                wrow[f"_{i}_nd"],
             )
-            for c in cols
+            for i, c in enumerate(cols)
         }
         exact_pcts = exact_quantiles_multi(
             df, cols, PROFILE_QUANTILES, stats=pre, checkpoint=False
         )
+        pcts = [[_double_lit(exact_pcts[c][q]) for q in PROFILE_QUANTILES] for c in cols]
+    else:
+        pcts = [
+            [f"_{i}_pcts[{j}]" for j in range(len(PROFILE_QUANTILES))]
+            for i in range(len(cols))
+        ]
 
-    # Unpivot driver-side: the wide agg row is tiny (O(cols) scalars).
-    stats = ["n_valid", "null_frac", "zero_frac", "mean", "stddev", "min", "max"] + [
-        f"p{int(q * 100)}" for q in PROFILE_QUANTILES
-    ]
-    def _stat(c: str, s: str):
-        if s.startswith("p") and s[1:].isdigit():
-            i = [f"p{int(q * 100)}" for q in PROFILE_QUANTILES].index(s)
-            if exact_pcts is not None:
-                v = exact_pcts[c][PROFILE_QUANTILES[i]]
-                return F.lit(v).cast("double").alias(s)
-            return F.col(f"{c}__pcts").getItem(i).cast("double").alias(s)
-        return F.col(f"{c}__{s}").cast("double").alias(s)
-
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__n").cast("bigint").alias("n_rows"),
-            F.col(f"{c}__n_valid").cast("bigint").alias("n_valid"),
-            *[_stat(c, s) for s in stats[1:]],
-        )
-        for c in cols
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("p")).select("p.*")
+    # Unpivot in Spark: one generator over the single wide row.
+    structs = []
+    for i, c in enumerate(cols):
+        fields = [
+            f"'column', {_str_lit(c)}",
+            "'n_rows', CAST(__n AS BIGINT)",
+            f"'n_valid', CAST(_{i}_n_valid AS BIGINT)",
+        ]
+        fields += [f"'{s}', CAST(_{i}_{s} AS DOUBLE)" for s in PROFILE_STATS]
+        fields += [
+            f"'p{int(q * 100)}', CAST({v} AS DOUBLE)"
+            for q, v in zip(PROFILE_QUANTILES, pcts[i])
+        ]
+        structs.append("named_struct(" + ", ".join(fields) + ")")
+    return wide.selectExpr(f"inline(array({', '.join(structs)}))")
 
 
 def valid_columns(df: DataFrame, columns: list[str] | None = None, min_valid: int = 1) -> list[str]:
@@ -134,10 +171,10 @@ def valid_columns(df: DataFrame, columns: list[str] | None = None, min_valid: in
     cols = columns or numeric_columns(df)
     if not cols:
         return []
-    row = df.agg(
-        *[F.count(F.when(_valid(df, c), F.lit(1))).alias(c) for c in cols]
+    row = df.selectExpr(
+        *[f"count(CASE WHEN {_valid_sql(df, c)} THEN 1 END) AS _{i}" for i, c in enumerate(cols)]
     ).first()
-    return [c for c in cols if row[c] >= min_valid]
+    return [c for i, c in enumerate(cols) if row[f"_{i}"] >= min_valid]
 
 
 def prune_low_quality(
@@ -152,16 +189,16 @@ def prune_low_quality(
     if not cols:
         return []
     aggs = []
-    for c in cols:
-        valid = _valid(df, c)
-        aggs.append(F.avg((~valid).cast("double")).alias(f"{c}__miss"))
-        aggs.append(F.avg((valid & (F.col(c) == 0)).cast("double")).alias(f"{c}__zero"))
-    row = df.agg(*aggs).first()
+    for i, c in enumerate(cols):
+        valid = _valid_sql(df, c)
+        aggs.append(f"avg(CAST(NOT {valid} AS DOUBLE)) AS _{i}_miss")
+        aggs.append(f"avg(CAST(({valid} AND {_ident(c)} = 0) AS DOUBLE)) AS _{i}_zero")
+    row = df.selectExpr(*aggs).first()
     return [
         c
-        for c in cols
-        if (row[f"{c}__miss"] or 0.0) <= max_missing_frac
-        and (row[f"{c}__zero"] or 0.0) <= max_zero_frac
+        for i, c in enumerate(cols)
+        if (row[f"_{i}_miss"] or 0.0) <= max_missing_frac
+        and (row[f"_{i}_zero"] or 0.0) <= max_zero_frac
     ]
 
 
@@ -1130,7 +1167,7 @@ def exact_quantiles_multi(
                     *[
                         F.struct(
                             F.lit(c).alias("column"),
-                            F.col(c).cast("double").alias("v"),
+                            F.col(_ident(c)).cast("double").alias("v"),
                         )
                         for c in columns
                     ]

@@ -9,6 +9,9 @@ Re-provides the reference's dual-mode session builder
 - Arrow on for every pandas UDF / toPandas boundary.
 - Iceberg extensions are attached only when an Iceberg catalog is requested,
   so local tests carry no Maven baggage.
+- Per-call origin capture off: PySpark otherwise records the Python call
+  site of every ``Column`` / ``functions.*`` call for error messages, at
+  several extra py4j round trips per call.
 """
 
 from __future__ import annotations
@@ -60,6 +63,11 @@ def get_spark(
         # UTC session the values are identical and epoch casts keep working.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # A static conf that PySpark reads once per process, on the first
+        # Column or functions.* call: it must be a builder setting, not a
+        # later spark.conf.set. Off, error messages lose the Python
+        # call-site fragment; extra_conf={...: "true"} restores it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
 
     if iceberg_catalog:
