@@ -11,8 +11,8 @@ deliberate engineering changes:
 
 1. **One stats pass.** The reference runs one Spark job per column for
    validity plus one per ML stage for stats (~40+ jobs). Here a single
-   aggregation computes every count/mean/median/σ, and one small groupBy per
-   categorical column computes the frequency tables.
+   column-keyed aggregation computes every count/mean/median/σ, and one
+   stacked groupBy computes every categorical column's frequency table.
 2. **array<double> features, not VectorUDT.** Features stay SQL-queryable
    (and DuckDB-checkable); convert with ``array_to_vector`` only at an
    MLlib boundary.
@@ -127,37 +127,27 @@ def fit_features(
             f"fit_features: on_overflow={on_overflow!r} — must be 'error' "
             "or 'keep' (anything else would silently truncate like 'keep')"
         )
-    from dataquality_ml_spark.operators.profile import _ident, _valid_sql
+    from dataquality_ml_spark.operators.profile import _collect_column_stats, _ident
 
     roles = roles or infer_roles(df, label_col)
     num, cats, bools = roles["numeric"], roles["categorical"], roles["boolean"]
 
-    # SQL text in one selectExpr, not Column calls: see profile._valid_sql
-    aggs = []
-    for i, c in enumerate(num):
-        q = _ident(c)
-        vc = f"CASE WHEN {_valid_sql(df, c)} THEN {q} END"
-        aggs += [
-            f"count({vc}) AS _{i}_n",
-            f"avg({vc}) AS _{i}_mean",
-            f"stddev_samp({vc}) AS _{i}_std",
-        ]
-        if strategy == "median":
-            fn = "percentile" if exact_median else "percentile_approx"
-            aggs.append(f"{fn}({q}, 0.5) AS _{i}_med")
-    row = df.selectExpr(*aggs).first() if aggs else None
+    # one column-keyed aggregation for every numeric column: see
+    # profile._column_stats
+    stats = ["n_valid", "mean", "stddev"]
+    if strategy == "median":
+        stats.append("median" if exact_median else "median_approx")
+    rows = _collect_column_stats(df, num, stats) if num else []
 
     model = FeatureModel(strategy=strategy, bool_cols=list(bools))
-    for i, c in enumerate(num):
-        if row[f"_{i}_n"] < min_valid:
+    for c, r in zip(num, rows):
+        if (r["n_valid"] if r else 0) < min_valid:
             # 100%-invalid columns are dropped, reference lib/utils.py:187-199
             continue
         model.numeric_cols.append(c)
-        model.mean[c] = float(row[f"_{i}_mean"])
-        model.std[c] = float(row[f"_{i}_std"] or 0.0)
-        model.impute[c] = float(
-            row[f"_{i}_med"] if strategy == "median" else row[f"_{i}_mean"]
-        )
+        model.mean[c] = float(r["mean"])
+        model.std[c] = float(r["stddev"] or 0.0)
+        model.impute[c] = float(r[stats[-1]] if strategy == "median" else r["mean"])
 
     if cats:
         # ONE stacked explode + groupBy for every categorical column —
@@ -171,7 +161,7 @@ def fit_features(
                         *[
                             F.struct(
                                 F.lit(c).alias("col"),
-                                F.col(c).cast("string").alias("val"),
+                                F.col(_ident(c)).cast("string").alias("val"),
                             )
                             for c in cats
                         ]
@@ -262,7 +252,15 @@ def apply_features(
     mapping table, because a 10k-branch CASE expression blows up codegen
     (JVM 64KB method limit forces interpreted mode) while a broadcast hash
     join is O(1) per row at any cardinality.
+
+    Column names are backtick-quoted wherever they are resolved, so names
+    with dots or backticks work.
     """
+    from dataquality_ml_spark.operators.profile import _ident
+
+    def col(name: str):
+        return F.col(_ident(name))
+
     feats: list = []
     for c in model.categorical_cols:
         cats = model.categories[c]
@@ -284,33 +282,33 @@ def apply_features(
             )
             df = df.join(
                 F.broadcast(mapping),
-                df[c] == mapping[f"__{c}_val"],
+                col(c) == mapping[_ident(f"__{c}_val")],
                 "left",
             ).drop(f"__{c}_val")
             # unseen/null → the "keep" bucket, same as the when-chain path
             feats.append(
-                F.coalesce(F.col(f"__{c}_joined"), F.lit(float(len(cats)))).alias(
+                F.coalesce(col(f"__{c}_joined"), F.lit(float(len(cats)))).alias(
                     f"{c}_idx"
                 )
             )
             continue
         expr = F.lit(float(len(cats)))  # unseen/null → the "keep" bucket
         for i, v in enumerate(cats):
-            expr = F.when(F.col(c) == v, float(i)).otherwise(expr)
+            expr = F.when(col(c) == v, float(i)).otherwise(expr)
         feats.append(expr.alias(f"{c}_idx"))
 
     if mode == "skip":
         cond = F.lit(True)
         for c in model.numeric_cols:
-            valid = F.col(c).isNotNull()
+            valid = col(c).isNotNull()
             if df.schema[c].dataType.typeName() in ("double", "float"):
-                valid = valid & ~F.isnan(F.col(c))
+                valid = valid & ~F.isnan(col(c))
             cond = cond & valid
         df = df.where(cond)
 
     for c in model.numeric_cols:
         imputed = F.coalesce(
-            F.when(~F.isnan(F.col(c).cast("double")), F.col(c).cast("double")),
+            F.when(~F.isnan(col(c).cast("double")), col(c).cast("double")),
             F.lit(model.impute[c]),
         )
         sd = model.std[c] if model.std[c] > 0 else 1.0
@@ -319,12 +317,12 @@ def apply_features(
     for c in model.bool_cols:
         # bool→int cast, reference app/AE_model.py:33-40; distinct alias so
         # select("*", ...) never duplicates the source column name
-        feats.append(F.col(c).cast("int").cast("double").alias(f"{c}_int"))
+        feats.append(col(c).cast("int").cast("double").alias(f"{c}_int"))
 
     named = df.select("*", *feats).drop(
         *[f"__{c}_joined" for c in model.categorical_cols]
     )
-    return named.withColumn(out, F.array(*[F.col(n) for n in model.feature_names]))
+    return named.withColumn(out, F.array(*[col(n) for n in model.feature_names]))
 
 
 def save_model(model: FeatureModel, path: str) -> None:
@@ -350,10 +348,15 @@ def robust_scale(
     histogram-refine selection scans (profile.exact_quantiles_multi —
     one engine, round 11); the transform itself is an embarrassingly
     parallel projection of broadcast scalars. ``exact=False`` is the
-    one-pass percentile_approx sketch."""
-    if exact:
-        from dataquality_ml_spark.operators.profile import exact_quantiles_multi
+    one-pass percentile_approx sketch, in the column-keyed aggregation of
+    ``profile._column_stats``."""
+    from dataquality_ml_spark.operators.profile import (
+        _collect_column_stats,
+        _ident,
+        exact_quantiles_multi,
+    )
 
+    if exact:
         # checkpoint=False: the melt sits on a raw scan — re-reading the
         # parquet per selection level beats materializing the melt first
         qs = exact_quantiles_multi(
@@ -361,15 +364,12 @@ def robust_scale(
         )
         stats = {c: (qs[c][0.5], qs[c][0.25], qs[c][0.75]) for c in cols}
     else:
-        [row] = df.agg(
-            *[
-                F.expr(f"percentile_approx({c}, array(0.25, 0.5, 0.75))").alias(c)
-                for c in cols
-            ]
-        ).collect()
+        rows = _collect_column_stats(df, cols, ["quartiles"])
         stats = {
-            c: (row[c][1], row[c][0], row[c][2]) if row[c] is not None else (None,) * 3
-            for c in cols
+            c: (r["quartiles"][1], r["quartiles"][0], r["quartiles"][2])
+            if r is not None and r["quartiles"] is not None
+            else (None,) * 3
+            for c, r in zip(cols, rows)
         }
     out = {}
     for c in cols:
@@ -377,7 +377,7 @@ def robust_scale(
         if med is None:
             continue  # all-null column: leave untouched
         iqr = q3 - q1
-        centered = F.col(c) - F.lit(float(med))
+        centered = F.col(_ident(c)) - F.lit(float(med))
         out[c] = centered / F.lit(float(iqr)) if iqr > 0 else centered
     return df.withColumns(out)
 

@@ -56,11 +56,10 @@ def _valid_sql(df: DataFrame, c: str) -> str:
     """Non-null and (for float types) non-NaN — the reference's validity
     predicate (lib/utils.py:191: ``isNotNull() & ~isnan()``) — as SQL text.
 
-    The wide per-column operators (``profile``, ``prune_low_quality``,
-    ``valid_columns``, ``features.fit_features``) splice it into SQL
-    aggregate strings handed to the JVM in ONE ``selectExpr``: building the
-    same expressions through the ``Column`` API costs several py4j round
-    trips per call (tens of thousands for a 40-column profile)."""
+    The per-column statistics operators splice it into the SQL text of the
+    column-keyed relation (:func:`_column_stats`): building the same
+    expressions through the ``Column`` API costs several py4j round trips
+    per call (tens of thousands for a 40-column profile)."""
     q = _ident(c)
     if _is_float(df, c):
         return f"({q} IS NOT NULL AND NOT isnan({q}))"
@@ -74,12 +73,74 @@ def _valid(df: DataFrame, c: str):
 
 PROFILE_STATS = ("null_frac", "zero_frac", "mean", "stddev", "min", "max")
 
+# Per-column statistics over the column-keyed relation (i, v, ok): ``v`` is
+# the column's value as DOUBLE, ``ok`` its validity. Stats of the valid
+# population read ``IF(ok, v, NULL)``; quantiles read the raw ``v`` (NaN
+# included), as ``percentile_approx`` over the column itself would.
+_VALID_V = "IF(ok, v, NULL)"
+_STAT_SQL = {
+    "n_rows": "count(ok)",
+    "n_valid": "count_if(ok)",
+    "null_frac": "avg(CAST(NOT ok AS DOUBLE))",
+    "zero_frac": "avg(CAST(ok AND v = 0 AS DOUBLE))",
+    "mean": f"avg({_VALID_V})",
+    "stddev": f"stddev_samp({_VALID_V})",
+    "min": f"min({_VALID_V})",
+    "max": f"max({_VALID_V})",
+    # feeds the exact-quantile selection's low-cardinality collect fast path
+    "nd": f"approx_count_distinct({_VALID_V})",
+    # all quantiles in ONE sketch per column, not one each
+    "pcts": "percentile_approx(v, array(" + ", ".join(str(q) for q in PROFILE_QUANTILES) + "))",
+    "quartiles": "percentile_approx(v, array(0.25, 0.5, 0.75))",
+    "median": "percentile(v, 0.5)",
+    "median_approx": "percentile_approx(v, 0.5)",
+}
+
+
+def _column_stats(
+    df: DataFrame, cols: list[str], stats: list[str], every_column: bool = False
+) -> DataFrame:
+    """``stats`` (keys of ``_STAT_SQL``) per column, one row per column
+    index ``i`` (column ``cols[i]``).
+
+    The columns are melted into ONE long relation (i, v, ok) by a single
+    ``inline(array(named_struct(...), ...))`` generate, then grouped by
+    ``i`` with a fixed list of aggregates whatever the column count, so
+    the per-task projection stays ~10 expressions (see :func:`profile`
+    for why that matters); only per-column partial buffers are shuffled.
+
+    ``groupBy`` yields no row for a column with no input rows: callers
+    that collect treat a missing ``i`` as "no rows"; ``every_column=True``
+    adds one neutral (i, NULL, NULL) row per column instead, which every
+    aggregate ignores (which is why ``n_rows`` is ``count(ok)``)."""
+    melt = ", ".join(
+        f"named_struct('i', {i}, 'v', CAST({_ident(c)} AS DOUBLE), 'ok', {_valid_sql(df, c)})"
+        for i, c in enumerate(cols)
+    )
+    long = df.selectExpr(f"inline(array({melt}))")
+    if every_column:
+        long = long.union(
+            df.sparkSession.range(0, len(cols), 1, 1).selectExpr(
+                "CAST(id AS INT) AS i", "CAST(NULL AS DOUBLE) AS v", "CAST(NULL AS BOOLEAN) AS ok"
+            )
+        )
+    return long.groupBy("i").agg(*[F.expr(_STAT_SQL[s]).alias(s) for s in stats])
+
+
+def _collect_column_stats(df: DataFrame, cols: list[str], stats: list[str]) -> list:
+    """:func:`_column_stats` collected in column order; ``None`` for a
+    column without input rows."""
+    got = {r["i"]: r for r in _column_stats(df, cols, stats).collect()}
+    return [got.get(i) for i in range(len(cols))]
+
 
 def profile(df: DataFrame, columns: list[str] | None = None, exact_quantiles: bool = False) -> DataFrame:
     """Profile numeric columns in a single aggregation.
 
-    Returns one row per column: (column, n_rows, n_valid, null_frac,
-    zero_frac, mean, stddev, min, max, p25, p50, p75, p90, p95).
+    Returns one row per column, in ``columns`` order: (column, n_rows,
+    n_valid, null_frac, zero_frac, mean, stddev, min, max, p25, p50, p75,
+    p90, p95). A frame with no rows still gives one row per column
+    (n_rows 0, NULL stats).
 
     ``exact_quantiles=True`` computes EXACT quantiles for every column in
     the shared histogram-refine selection scans (round 8:
@@ -89,92 +150,67 @@ def profile(df: DataFrame, columns: list[str] | None = None, exact_quantiles: bo
     default ``percentile_approx`` with a 10k accuracy parameter is the
     one-pass sketch path (t-digest-style, mergeable, bounded memory).
 
-    Plan construction: the wide aggregation is ONE ``selectExpr`` of SQL
-    aggregate strings (column ``i``'s stats are aliased ``_<i>_<stat>``)
-    and the unpivot to one row per column is ONE
-    ``inline(array(named_struct(...), ...))`` over that single row — both
-    run in Spark, and the driver sends two expression lists instead of
-    thousands of per-Column py4j calls.
+    Plan construction: the statistics are ONE column-keyed aggregation
+    (:func:`_column_stats`): the columns are melted to (i, v, ok) rows and
+    grouped by column index with a fixed list of ~10 aggregates. The
+    former wide form — one row of 9 aggregates per column, unpivoted
+    afterwards — ran without whole-stage codegen and regenerated a
+    several-hundred-expression projection in every task, which cost more
+    than the data work. Values are aggregated as DOUBLE (what ``avg`` and
+    ``stddev_samp`` do anyway for non-decimal inputs; DECIMAL means may
+    move in the last ulp). The output keeps the column order with one
+    ``coalesce(1).sortWithinPartitions`` over the per-column rows.
     """
     cols = columns or numeric_columns(df)
-    q_array = "array(" + ", ".join(str(q) for q in PROFILE_QUANTILES) + ")"
-
-    aggs = ["count(1) AS __n"]
-    for i, c in enumerate(cols):
-        q, valid = _ident(c), _valid_sql(df, c)
-        vc = f"CASE WHEN {valid} THEN {q} END"  # NULL out invalid values for stats
-        aggs += [
-            f"count({vc}) AS _{i}_n_valid",
-            f"avg(CAST(NOT {valid} AS DOUBLE)) AS _{i}_null_frac",
-            f"avg(CAST(({valid} AND {q} = 0) AS DOUBLE)) AS _{i}_zero_frac",
-            f"avg({vc}) AS _{i}_mean",
-            f"stddev_samp({vc}) AS _{i}_stddev",
-            f"min({vc}) AS _{i}_min",
-            f"max({vc}) AS _{i}_max",
-            # feeds the selection's low-cardinality collect fast path
-            f"approx_count_distinct({vc}) AS _{i}_nd",
-        ]
-        if not exact_quantiles:
-            # All quantiles in ONE sketch per column, not one each.
-            aggs.append(f"percentile_approx({q}, {q_array}) AS _{i}_pcts")
-
-    wide = df.selectExpr(*aggs)
+    stats = ["n_rows", "n_valid", *PROFILE_STATS]
+    stats.append("nd" if exact_quantiles else "pcts")
+    per_col = _column_stats(df, cols, stats, every_column=True)
 
     if exact_quantiles:
-        # the wide agg already computed every column's (n_valid, min, max)
-        # over exactly the valid population — collect it (O(cols) scalars)
-        # and hand those to the selection so it skips its own stats scan
-        [wrow] = wide.collect()
-        # explicit schema: an all-null column makes its stats None, which
-        # schema inference from the bare Row cannot type
-        wide = df.sparkSession.createDataFrame([wrow], wide.schema)
-        pre = {
-            (c,): (
-                wrow[f"_{i}_n_valid"],
-                None if wrow[f"_{i}_min"] is None else float(wrow[f"_{i}_min"]),
-                None if wrow[f"_{i}_max"] is None else float(wrow[f"_{i}_max"]),
-                wrow[f"_{i}_nd"],
-            )
-            for i, c in enumerate(cols)
-        }
+        # the aggregation already computed every column's (n_valid, min,
+        # max) over exactly the valid population — collect it (O(cols)
+        # rows) and hand those to the selection so it skips its own stats
+        # scan; the collected rows are reused, not recomputed
+        rows = per_col.collect()
+        per_col = df.sparkSession.createDataFrame(rows, per_col.schema)
+        pre = {(cols[r["i"]],): (r["n_valid"], r["min"], r["max"], r["nd"]) for r in rows}
         exact_pcts = exact_quantiles_multi(
             df, cols, PROFILE_QUANTILES, stats=pre, checkpoint=False
         )
-        pcts = [[_double_lit(exact_pcts[c][q]) for q in PROFILE_QUANTILES] for c in cols]
-    else:
         pcts = [
-            [f"_{i}_pcts[{j}]" for j in range(len(PROFILE_QUANTILES))]
-            for i in range(len(cols))
+            "element_at(array("
+            + ", ".join(_double_lit(exact_pcts[c][q]) for c in cols)
+            + "), i + 1)"
+            for q in PROFILE_QUANTILES
         ]
+    else:
+        pcts = [f"pcts[{j}]" for j in range(len(PROFILE_QUANTILES))]
 
-    # Unpivot in Spark: one generator over the single wide row.
-    structs = []
-    for i, c in enumerate(cols):
-        fields = [
-            f"'column', {_str_lit(c)}",
-            "'n_rows', CAST(__n AS BIGINT)",
-            f"'n_valid', CAST(_{i}_n_valid AS BIGINT)",
-        ]
-        fields += [f"'{s}', CAST(_{i}_{s} AS DOUBLE)" for s in PROFILE_STATS]
-        fields += [
-            f"'p{int(q * 100)}', CAST({v} AS DOUBLE)"
-            for q, v in zip(PROFILE_QUANTILES, pcts[i])
-        ]
-        structs.append("named_struct(" + ", ".join(fields) + ")")
-    return wide.selectExpr(f"inline(array({', '.join(structs)}))")
+    names = "array(" + ", ".join(_str_lit(c) for c in cols) + ")"
+    return (
+        per_col.coalesce(1)
+        .sortWithinPartitions("i")
+        .selectExpr(
+            # coalesce: i is always in range, but with ANSI off element_at
+            # is typed nullable, and ``column`` is a non-null field
+            f"coalesce(element_at({names}, i + 1), '') AS column",
+            "n_rows",
+            "n_valid",
+            *PROFILE_STATS,
+            *[f"CAST({v} AS DOUBLE) AS p{int(q * 100)}" for q, v in zip(PROFILE_QUANTILES, pcts)],
+        )
+    )
 
 
 def valid_columns(df: DataFrame, columns: list[str] | None = None, min_valid: int = 1) -> list[str]:
     """Columns with at least ``min_valid`` non-null/non-NaN values — the
     reference's feature-validity filter (lib/utils.py:187-203), collapsed
-    from one job per column into one job total."""
+    from one job per column into one column-keyed aggregation."""
     cols = columns or numeric_columns(df)
     if not cols:
         return []
-    row = df.selectExpr(
-        *[f"count(CASE WHEN {_valid_sql(df, c)} THEN 1 END) AS _{i}" for i, c in enumerate(cols)]
-    ).first()
-    return [c for i, c in enumerate(cols) if row[f"_{i}"] >= min_valid]
+    rows = _collect_column_stats(df, cols, ["n_valid"])
+    return [c for c, r in zip(cols, rows) if (r["n_valid"] if r else 0) >= min_valid]
 
 
 def prune_low_quality(
@@ -184,21 +220,17 @@ def prune_low_quality(
     max_missing_frac: float = 0.95,
 ) -> list[str]:
     """Feature-quality pruning (reference P10, app/LSTM_AE_enhanced.py:32-39:
-    drop features >95% zero or >95% missing) in one aggregation."""
+    drop features >95% zero or >95% missing) in one column-keyed
+    aggregation. A frame without rows prunes nothing."""
     cols = columns or numeric_columns(df)
     if not cols:
         return []
-    aggs = []
-    for i, c in enumerate(cols):
-        valid = _valid_sql(df, c)
-        aggs.append(f"avg(CAST(NOT {valid} AS DOUBLE)) AS _{i}_miss")
-        aggs.append(f"avg(CAST(({valid} AND {_ident(c)} = 0) AS DOUBLE)) AS _{i}_zero")
-    row = df.selectExpr(*aggs).first()
+    rows = _collect_column_stats(df, cols, ["null_frac", "zero_frac"])
     return [
         c
-        for i, c in enumerate(cols)
-        if (row[f"_{i}_miss"] or 0.0) <= max_missing_frac
-        and (row[f"_{i}_zero"] or 0.0) <= max_zero_frac
+        for c, r in zip(cols, rows)
+        if r is None
+        or ((r["null_frac"] or 0.0) <= max_missing_frac and (r["zero_frac"] or 0.0) <= max_zero_frac)
     ]
 
 

@@ -308,7 +308,13 @@ def rhp_near_dup_pairs(
         F.col(vec_col),
         _norm(F.col(vec_col)).alias("nrm"),
         *rhp_signature(F.col(vec_col), planes, bits_per_band),
-    ).cache()  # consumed once per band for candidates + once for verify
+    )
+    # consumed once per band for candidates + once for verify, all inside
+    # one query: EAGER, because a lazy checkpoint read by concurrent
+    # subtrees races and recomputes (see drift.py's shared projection); a
+    # local checkpoint, not .cache(), so no CacheManager entry outlives
+    # the call
+    sig = sig.localCheckpoint(eager=True)
 
     cand = None
     for b in range(n_bands):

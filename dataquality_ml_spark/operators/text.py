@@ -247,9 +247,12 @@ def unigram_logprob(
     """
     df = ensure_parallelism(df)
     toks = df.select(F.col(id_col), F.explode_outer(tokens(text_col)).alias("tok"))
-    # corpus total comes from the (tiny, cached) vocab agg — no separate
-    # count pass over the exploded corpus
-    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf")).cache()
+    # corpus total comes from the (tiny, checkpointed) vocab agg — no
+    # separate count pass over the exploded corpus; a local checkpoint, not
+    # .cache(), so no CacheManager entry outlives the call
+    counts = (
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint(eager=False)
+    )
     total = counts.agg(F.sum("tf")).first()[0]
     vocab = counts.select(
         "tok", F.log(F.col("tf") / F.lit(float(total))).alias("logp")
@@ -342,9 +345,11 @@ def bigram_pmi(
     ).otherwise(F.array().cast("array<string>"))
 
     # ONE corpus scan: tag unigrams and bigrams into a single exploded
-    # stream and count them together, then split the (vocab-sized, cached)
-    # result. The naive two-agg shape re-tokenized the corpus once per
-    # consumer (totals + PMI lookups = 4-5 scans of the text column).
+    # stream and count them together, then split the (vocab-sized,
+    # checkpointed) result. The naive two-agg shape re-tokenized the corpus
+    # once per consumer (totals + PMI lookups = 4-5 scans of the text
+    # column). A local checkpoint, not .cache(), so no CacheManager entry
+    # outlives the call.
     tagged = (
         base.select(
             F.explode_outer(
@@ -356,7 +361,7 @@ def bigram_pmi(
         )
         .groupBy("p.ty", "p.g")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     bc = tagged.where(F.col("ty") == "b").select(
         F.col("g").alias("bigram"), F.col("cnt").alias("c_ab")

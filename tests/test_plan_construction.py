@@ -1,7 +1,9 @@
-"""Driver-side plan construction: the wide per-column operators build their
+"""Driver-side plan construction: the per-column operators build their
 aggregations from SQL text (quoting of awkward column names, py4j round-trip
-budget), the session turns off per-call origin capture, and the dedup
-pipelines leave no entries in the session's CacheManager."""
+budget), the feature pipeline quotes awkward names too, the session turns off
+per-call origin capture and keeps a whole pass's generated classes, and the
+dedup, text and similarity pipelines leave no entries in the session's
+CacheManager."""
 
 from __future__ import annotations
 
@@ -208,4 +210,78 @@ def test_dedup_pipelines_leave_no_cache_entries(spark):
     assert [(r["id_a"], r["id_b"]) for r in first] == [(1, 2)]
     assert first == second
     assert [(r["id_a"], r["id_b"]) for r in prefix] == [(1, 2)]
+    assert cache.isEmpty()
+
+
+@pytest.mark.parametrize("cutoff", [100, 1])
+def test_fit_and_apply_features_quote_awkward_names(spark, cutoff):
+    """A dotted numeric column and a backticked categorical column, through
+    both categorical encodings (when-chain, and the broadcast join above
+    ``broadcast_cutoff``)."""
+    rows = [(1.0, "a"), (3.0, "b"), (None, "a"), (float("nan"), None), (5.0, "c")]
+    df = spark.createDataFrame(rows, f"`{DOT}` double, `{TICK.replace('`', '``')}` string")
+    model = feat.fit_features(
+        df, roles={"numeric": [DOT], "categorical": [TICK], "boolean": []}, label_col=None
+    )
+    assert model.numeric_cols == [DOT] and model.categorical_cols == [TICK]
+    assert model.categories[TICK] == ["a", "b", "c"]
+    assert _close(model.mean[DOT], 3.0) and _close(model.std[DOT], 2.0)
+
+    got = feat.apply_features(df, model, broadcast_cutoff=cutoff).collect()
+    assert len(got) == len(rows)
+    by_key = {(r[DOT] if r[DOT] == r[DOT] else "nan", r[TICK]): r["features"] for r in got}
+    # [category index, (value or imputed mean − mean) / std]
+    assert by_key[(1.0, "a")] == [0.0, -1.0]
+    assert by_key[(None, "a")] == [0.0, 0.0]
+    assert by_key[("nan", None)] == [3.0, 0.0]  # null category → the keep bucket
+    assert by_key[(5.0, "c")] == [2.0, 1.0]
+    kept = feat.apply_features(df, model, mode="skip", broadcast_cutoff=cutoff)
+    assert sorted(r[DOT] for r in kept.collect()) == [1.0, 3.0, 5.0]
+
+
+def test_session_codegen_cache_holds_a_daily_pass(spark):
+    """get_spark() raises the generated-class cache to 1024 entries (static
+    conf): a query re-run after ~120 other compiles, more than Spark's
+    default of 100 entries, compiles nothing."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def query():
+        return spark.range(4).selectExpr("id * 7 + 3 AS x", "sqrt(id) AS y").where("x > 2").collect()
+
+    first = query()
+    before = compiles.getCount()
+    for k in range(60):  # two distinct classes each
+        spark.range(2).selectExpr(f"id + {k} AS x{k}").collect()
+    middle = compiles.getCount()
+    assert middle - before > 100
+    assert query() == first
+    assert compiles.getCount() == middle
+
+
+def test_text_and_similarity_operators_leave_no_cache_entries(spark):
+    import random
+
+    from dataquality_ml_spark.operators.similarity import rhp_near_dup_pairs
+    from dataquality_ml_spark.operators.text import bigram_pmi, unigram_logprob
+
+    docs = spark.createDataFrame(
+        [(1, "a b a c"), (2, "a b"), (3, "the quick fox")], "doc_id bigint, text string"
+    )
+    rng = random.Random(3)
+    base = [rng.gauss(0, 1) for _ in range(64)]
+    vecs = spark.createDataFrame(
+        [(0, base), (1, [v + 0.001 for v in base])]
+        + [(i, [rng.gauss(0, 1) for _ in range(64)]) for i in range(2, 12)],
+        "vec_id long, embedding array<float>",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other tests' cached frames are not ours
+    for _ in range(2):
+        uni = {r["doc_id"]: r["n_tokens"] for r in unigram_logprob(docs).collect()}
+        pmi = {r["bigram"]: r["c_ab"] for r in bigram_pmi(docs, min_count=1).collect()}
+        pairs = [(r["id_a"], r["id_b"]) for r in rhp_near_dup_pairs(vecs, threshold=0.9).collect()]
+        assert uni == {1: 4, 2: 2, 3: 3}
+        assert pmi["a b"] == 2
+        assert (0, 1) in pairs
     assert cache.isEmpty()
