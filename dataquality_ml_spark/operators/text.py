@@ -348,8 +348,11 @@ def bigram_pmi(
     # stream and count them together, then split the (vocab-sized,
     # checkpointed) result. The naive two-agg shape re-tokenized the corpus
     # once per consumer (totals + PMI lookups = 4-5 scans of the text
-    # column). A local checkpoint, not .cache(), so no CacheManager entry
-    # outlives the call.
+    # column). EAGER, because the one query below reads it from several
+    # concurrent subtrees (bc, uc twice, both sides of totals), and a lazy
+    # checkpoint read that way races and recomputes (see drift.py's shared
+    # projection); a local checkpoint, not .cache(), so no CacheManager
+    # entry outlives the call.
     tagged = (
         base.select(
             F.explode_outer(
@@ -361,7 +364,7 @@ def bigram_pmi(
         )
         .groupBy("p.ty", "p.g")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     bc = tagged.where(F.col("ty") == "b").select(
         F.col("g").alias("bigram"), F.col("cnt").alias("c_ab")

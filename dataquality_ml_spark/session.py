@@ -12,8 +12,6 @@ Re-provides the reference's dual-mode session builder
 - Per-call origin capture off: PySpark otherwise records the Python call
   site of every ``Column`` / ``functions.*`` call for error messages, at
   several extra py4j round trips per call.
-- A generated-code cache large enough for a whole daily pass, so repeated
-  passes in one session reuse compiled classes.
 """
 
 from __future__ import annotations
@@ -70,10 +68,6 @@ def get_spark(
         # later spark.conf.set. Off, error messages lose the Python
         # call-site fragment; extra_conf={...: "true"} restores it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Static: the generated-class cache. One daily pass compiles ~190
-        # distinct classes; at Spark's default of 100 the LRU thrashes and
-        # every later pass in a long-lived session recompiles all of them.
-        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
 
     if iceberg_catalog:

@@ -1,9 +1,8 @@
 """Driver-side plan construction: the per-column operators build their
 aggregations from SQL text (quoting of awkward column names, py4j round-trip
 budget), the feature pipeline quotes awkward names too, the session turns off
-per-call origin capture and keeps a whole pass's generated classes, and the
-dedup, text and similarity pipelines leave no entries in the session's
-CacheManager."""
+per-call origin capture, and the dedup, text and similarity pipelines leave
+no entries in the session's CacheManager."""
 
 from __future__ import annotations
 
@@ -237,26 +236,6 @@ def test_fit_and_apply_features_quote_awkward_names(spark, cutoff):
     assert by_key[(5.0, "c")] == [2.0, 1.0]
     kept = feat.apply_features(df, model, mode="skip", broadcast_cutoff=cutoff)
     assert sorted(r[DOT] for r in kept.collect()) == [1.0, 3.0, 5.0]
-
-
-def test_session_codegen_cache_holds_a_daily_pass(spark):
-    """get_spark() raises the generated-class cache to 1024 entries (static
-    conf): a query re-run after ~120 other compiles, more than Spark's
-    default of 100 entries, compiles nothing."""
-    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
-    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-
-    def query():
-        return spark.range(4).selectExpr("id * 7 + 3 AS x", "sqrt(id) AS y").where("x > 2").collect()
-
-    first = query()
-    before = compiles.getCount()
-    for k in range(60):  # two distinct classes each
-        spark.range(2).selectExpr(f"id + {k} AS x{k}").collect()
-    middle = compiles.getCount()
-    assert middle - before > 100
-    assert query() == first
-    assert compiles.getCount() == middle
 
 
 def test_text_and_similarity_operators_leave_no_cache_entries(spark):
