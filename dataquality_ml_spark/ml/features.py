@@ -127,7 +127,7 @@ def fit_features(
             f"fit_features: on_overflow={on_overflow!r} — must be 'error' "
             "or 'keep' (anything else would silently truncate like 'keep')"
         )
-    from dataquality_ml_spark.operators.profile import _collect_column_stats, _ident
+    from dataquality_ml_spark.operators.profile import _collect_column_stats, _melt_sql
 
     roles = roles or infer_roles(df, label_col)
     num, cats, bools = roles["numeric"], roles["categorical"], roles["boolean"]
@@ -150,27 +150,13 @@ def fit_features(
         model.impute[c] = float(r[stats[-1]] if strategy == "median" else r["mean"])
 
     if cats:
-        # ONE stacked explode + groupBy for every categorical column —
-        # not one job per column (the reference's per-column-job pattern,
-        # lib/utils.py:187-195, repeated here until round 3). The result
-        # is O(total categories) rows: tiny relative to the corpus.
-        stacked = (
-            df.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(c).alias("col"),
-                                F.col(_ident(c)).cast("string").alias("val"),
-                            )
-                            for c in cats
-                        ]
-                    )
-                ).alias("cv")
-            )
-            .select("cv.col", "cv.val")
-            .where(F.col("val").isNotNull())
-        )
+        # ONE melt (profile._melt_sql) + groupBy for every categorical
+        # column — not one job per column (the reference's per-column-job
+        # pattern, lib/utils.py:187-195, repeated here until round 3). The
+        # result is O(total categories) rows: tiny relative to the corpus.
+        stacked = df.selectExpr(
+            _melt_sql(cats, col="{name}", val="CAST({col} AS STRING)")
+        ).where("val IS NOT NULL")
         counts = stacked.groupBy("col", "val").count()
         if max_categories is not None:
             from pyspark.sql import Window

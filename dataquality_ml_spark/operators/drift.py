@@ -25,8 +25,8 @@ collect of row data.
 - ``cvm_statistic`` / ``rank_sum_test`` / ``qq_table`` (round 8): the
   body-shift, rank-based, and localized complements to KS — all on the
   same grouped-distinct-value + distributed-prefix-sum machinery
-  (``_ecdf_counts`` / ``exact_quantiles_grouped``), so none of them
-  funnels a row-sized relation through one task.
+  (``_ecdf_counts``), so none of them funnels a row-sized relation
+  through one task.
 - ``mutual_information``: scale-free dependence effect size over the same
   contingency shape as chi2.
 """
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from dataquality_ml_spark.operators.profile import _ident, _melt_sql
 
 EPS = 1e-6  # proportion clamp so empty bins don't produce ±inf PSI terms
 
@@ -675,9 +677,8 @@ def qq_table(
     ``_ecdf_counts`` relation (round 8): value v occupies sorted index
     range [c−n, c) on each side, so every probe quantile needs only the
     floor/ceil order statistics of q·(tot−1) — a conditional aggregation
-    over the distinct-value relation, mirroring
-    ``profile.exact_quantiles_grouped``'s arithmetic bit-for-bit
-    (lo·(1−f) + hi·f, the ``percentile`` / QUANTILE_CONT form). Passing
+    over the distinct-value relation, with the arithmetic of
+    ``percentile`` / QUANTILE_CONT bit-for-bit (lo·(1−f) + hi·f). Passing
     ``ecdf`` shares one build across the whole two-sample family; NaNs
     are assumed absent (``_ecdf_counts`` drops nulls only).
 
@@ -1023,14 +1024,15 @@ def categorical_drift_report(
     in ONE pass — (column, psi, jsd, chi2, n_a, n_b), one row per column.
 
     The categorical companion of :func:`feature_drift_report` (round 10,
-    VERDICT r9 item 5): both sides melt to a TAGGED (column, category,
-    in_r) relation — a narrow generate, no shuffle — and ONE groupBy
-    (sum of tags / anti-tags per cell) aligns the two distributions in a
-    single shuffle (NULL is a real category, absent categories count 0 —
-    identical cells to the pre-round-13 two-groupBy + null-safe
-    full-outer shape, minus the join), and every statistic is a
-    per-column window/agg over that bounded relation. ``split=`` makes
-    the tag a predicate over ONE scan of a shared source (``cur=None``).
+    VERDICT r9 item 5): both sides melt (``profile._melt_sql``) to a
+    TAGGED (column, category, in_r) relation — a narrow generate, no
+    shuffle — and ONE groupBy (sum of tags / anti-tags per cell) aligns
+    the two distributions in a single shuffle (NULL is a real category,
+    absent categories count 0 — identical cells to the pre-round-13
+    two-groupBy + null-safe full-outer shape, minus the join), and every
+    statistic is a per-column window/agg over that bounded relation.
+    ``split=`` makes the tag a predicate over ONE scan of a shared source
+    (``cur=None``).
     Formulas are shared with the standalone operators:
     PSI uses the same EPS clamp as :func:`psi_categorical`, JSD the same
     0-handling as :func:`js_divergence`; chi² is the textbook
@@ -1072,22 +1074,12 @@ def categorical_drift_report(
         )
     keys = list(keys or [])
 
+    melt = F.expr(
+        _melt_sql(columns, column="{name}", category="CAST({col} AS STRING)")
+    )
+
     def _melt(df: DataFrame, tag) -> DataFrame:
-        return df.select(
-            *[F.col(k) for k in keys],
-            tag.alias("in_r"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            F.col(c).cast("string").alias("category"),
-                        )
-                        for c in columns
-                    ]
-                )
-            ).alias("p"),
-        ).select(*keys, "in_r", "p.*")
+        return df.select(*[F.col(_ident(k)) for k in keys], tag.alias("in_r"), melt)
 
     # ONE tagged relation and ONE groupBy build the aligned category
     # counts — sum(in_r)/sum(1-in_r) per cell is exactly what the old
@@ -1213,9 +1205,10 @@ def feature_drift_report(
 
     This is the feature-level kill of the reference's per-column job
     loop (reference lib/utils.py:187-195 runs one Spark job per column
-    per statistic): both sides melt to (column, value) — a narrow
-    generate, no shuffle — and ``drift_panel(keys=['column'])`` treats
-    each column as a segment of the SAME keyed ECDF build, so a
+    per statistic): both sides melt to (column, value) through
+    ``profile._melt_sql`` — a narrow generate, no shuffle; any column
+    name works — and ``drift_panel(keys=['column'])`` treats each
+    column as a segment of the SAME keyed ECDF build, so a
     40-feature drift report costs one scan per side + one grouped
     aggregation, not 160 jobs. Columns cast to double; NaN/null
     excluded per column (``_ecdf_counts`` population).
@@ -1259,6 +1252,8 @@ def feature_drift_report(
     if split is None and cur is None:
         raise ValueError("feature_drift_report: cur is required without split")
 
+    melt = F.expr(_melt_sql(columns, column="{name}", v="CAST({col} AS DOUBLE)"))
+
     def _melt(df: DataFrame, tag=None, tag_col: str | None = None) -> DataFrame:
         # tag (split mode): 1 where the predicate holds, 0 where its
         # negation holds, NULL (dropped) where it is NULL — exactly the
@@ -1266,33 +1261,17 @@ def feature_drift_report(
         # ALREADY-computed 0/1/NULL tag column (the split path computes
         # it before the parallelism repartition so the exchange carries
         # only the tag + panel columns, guide §2.3).
-        tagged = (tag is not None) or (tag_col is not None)
         if tag is not None:
             pre = [F.when(tag, 1).when(~tag, 0).alias("in_a")]
         elif tag_col is not None:
             pre = [F.col(tag_col).alias("in_a")]
         else:
             pre = []
-        m = df.select(
-            *pre,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            F.col(c).cast("double").alias("v"),
-                        )
-                        for c in columns
-                    ]
-                )
-            ).alias("p"),
-        ).select(*(["in_a"] if tagged else []), "p.*").where(
-            ~F.isnan("v") | F.col("v").isNull()
-        )
-        if tagged:
+        m = df.select(*pre, melt).where("NOT isnan(v) OR v IS NULL")
+        if pre:
             # the split form feeds _ecdf_from_tagged directly, so apply
             # the null-v filter _ecdf_counts would have applied per side
-            m = m.where(F.col("in_a").isNotNull() & F.col("v").isNotNull())
+            m = m.where("in_a IS NOT NULL AND v IS NOT NULL")
         return m
 
     def _bucketize(ms: list, extra: list):
@@ -1376,8 +1355,7 @@ def feature_drift_report(
         extra_cats = [c for c in categorical_columns if c not in columns]
         shared = ref.select(
             F.when(split, 1).when(~split, 0).alias("__in_a"),
-            *columns,
-            *extra_cats,
+            *[F.col(_ident(c)) for c in columns + extra_cats],
         )
         if len(columns) > 1:
             shared = ensure_parallelism(
@@ -1422,7 +1400,7 @@ def feature_drift_report(
 
                 src = ref.select(
                     F.when(split, 1).when(~split, 0).alias("__in_a"),
-                    *columns,
+                    *[F.col(_ident(c)) for c in columns],
                 )
                 src = ensure_parallelism(
                     src,

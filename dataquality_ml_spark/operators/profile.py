@@ -97,37 +97,65 @@ _STAT_SQL = {
 }
 
 
-def _column_stats(
-    df: DataFrame, cols: list[str], stats: list[str], every_column: bool = False
-) -> DataFrame:
-    """``stats`` (keys of ``_STAT_SQL``) per column, one row per column
-    index ``i`` (column ``cols[i]``).
+def _melt_sql(cols: list[str], **fields) -> str:
+    """The one column melt, as SQL text for ``selectExpr``/``F.expr``:
+    ``inline(array(named_struct(...), ...))`` turns every input row into
+    one row per column of ``cols`` — a narrow generate, no shuffle — and so
+    builds the long (column, value) relation that every per-column
+    statistic aggregates once (one stats pass, instead of the reference's
+    one Spark job per column, lib/utils.py:187-195).
 
-    The columns are melted into ONE long relation (i, v, ok) by a single
-    ``inline(array(named_struct(...), ...))`` generate, then grouped by
-    ``i`` with a fixed list of aggregates whatever the column count, so
-    the per-task projection stays ~10 expressions (see :func:`profile`
-    for why that matters); only per-column partial buffers are shuffled.
+    Each keyword is one field of the long rows. Its value is a SQL
+    template, filled in per column with ``{i}`` (the column's index in
+    ``cols``), ``{name}`` (its name as a string literal) and ``{col}``
+    (its quoted identifier, so any column name works), or a function from
+    the column name to SQL. The plan costs a handful of py4j round trips
+    whatever the column count; one ``Column``-API struct per column costs
+    tens."""
+
+    def field(tmpl, i: int, c: str) -> str:
+        if callable(tmpl):
+            return tmpl(c)
+        return tmpl.format(i=i, name=_str_lit(c), col=_ident(c))
+
+    structs = ", ".join(
+        "named_struct(" + ", ".join(f"'{k}', {field(t, i, c)}" for k, t in fields.items()) + ")"
+        for i, c in enumerate(cols)
+    )
+    return f"inline(array({structs}))"
+
+
+def _column_stats(
+    df: DataFrame, cols: list[str], stats: list, every_column: bool = False
+) -> DataFrame:
+    """``stats`` per column, one row per column index ``i`` (column
+    ``cols[i]``). Each stat is a key of ``_STAT_SQL`` or a ``(name, sql)``
+    pair: an aggregate over (i, v, ok) that is not one of them.
+
+    The columns are melted into ONE long relation (i, v, ok) by
+    :func:`_melt_sql`, then grouped by ``i`` with a fixed list of
+    aggregates whatever the column count, so the per-task projection
+    stays ~10 expressions (see :func:`profile` for why that matters); only
+    per-column partial buffers are shuffled.
 
     ``groupBy`` yields no row for a column with no input rows: callers
     that collect treat a missing ``i`` as "no rows"; ``every_column=True``
     adds one neutral (i, NULL, NULL) row per column instead, which every
     aggregate ignores (which is why ``n_rows`` is ``count(ok)``)."""
-    melt = ", ".join(
-        f"named_struct('i', {i}, 'v', CAST({_ident(c)} AS DOUBLE), 'ok', {_valid_sql(df, c)})"
-        for i, c in enumerate(cols)
+    long = df.selectExpr(
+        _melt_sql(cols, i="{i}", v="CAST({col} AS DOUBLE)", ok=lambda c: _valid_sql(df, c))
     )
-    long = df.selectExpr(f"inline(array({melt}))")
     if every_column:
         long = long.union(
             df.sparkSession.range(0, len(cols), 1, 1).selectExpr(
                 "CAST(id AS INT) AS i", "CAST(NULL AS DOUBLE) AS v", "CAST(NULL AS BOOLEAN) AS ok"
             )
         )
-    return long.groupBy("i").agg(*[F.expr(_STAT_SQL[s]).alias(s) for s in stats])
+    aggs = [(s, _STAT_SQL[s]) if isinstance(s, str) else s for s in stats]
+    return long.groupBy("i").agg(*[F.expr(sql).alias(name) for name, sql in aggs])
 
 
-def _collect_column_stats(df: DataFrame, cols: list[str], stats: list[str]) -> list:
+def _collect_column_stats(df: DataFrame, cols: list[str], stats: list) -> list:
     """:func:`_column_stats` collected in column order; ``None`` for a
     column without input rows."""
     got = {r["i"]: r for r in _column_stats(df, cols, stats).collect()}
@@ -243,26 +271,14 @@ def categorical_entropy(df: DataFrame, cols: list[str]) -> DataFrame:
     near 0 flags a near-constant column, entropy near ln(n_distinct) flags a
     uniform one — the signal used to pick partition/salt keys.
 
-    Single scan: each row is exploded into (column, value) pairs (a narrow
-    generate — no shuffle), then ONE groupBy collapses to O(Σ distinct)
-    rows; the entropy sum itself is a second agg over those grouped rows,
-    which is negligible at any scale.
+    Single scan: each row is melted into (column, value) pairs
+    (:func:`_melt_sql`, a narrow generate — no shuffle), then ONE groupBy
+    collapses to O(Σ distinct) rows; the entropy sum itself is a second
+    agg over those grouped rows, which is negligible at any scale.
     """
     from pyspark.sql import Window
 
-    pairs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("column"),
-                        F.col(c).cast("string").alias("value"),
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("p")
-    ).select("p.*")
+    pairs = df.selectExpr(_melt_sql(cols, column="{name}", value="CAST({col} AS STRING)"))
     counts = pairs.groupBy("column", "value").agg(F.count(F.lit(1)).alias("c"))
     tot = Window.partitionBy("column")
     p = F.col("c") / F.sum("c").over(tot)
@@ -319,155 +335,6 @@ def heavy_hitters(df: DataFrame, col: str, top_n: int = 10) -> DataFrame:
         .withColumn("share", F.col("n") / F.col("_tot"))
         .select("value", "n", "share", "rank")
         .orderBy("rank")
-    )
-
-
-def exact_quantiles_grouped(
-    df: DataFrame,
-    columns: list[str],
-    qs: list[float] | tuple[float, ...] = PROFILE_QUANTILES,
-    group_by: list[str] | None = None,
-) -> DataFrame:
-    """EXACT linear-interpolated quantiles that scale: grouped value counts
-    instead of Spark's ``percentile`` aggregate.
-
-    ``percentile(c, ...)`` funnels every (value, count) pair of every column
-    into a single final aggregation buffer — O(distinct values) memory on
-    one task, which is exactly the pattern that dies at 100 TB. Here the
-    heavy lifting is a ``groupBy(column, value)`` count (map-side combined,
-    fully parallel shuffle) followed by a per-column cumulative window over
-    the DISTINCT values only; each value row knows its sorted index range
-    [cum-cnt, cum), so the two order statistics every quantile needs
-    (floor/ceil of q·(n-1)) are picked up with a conditional aggregation.
-    Matches ``percentile`` / DuckDB ``quantile_cont`` bit-for-bit (same
-    lo + frac·(hi-lo) interpolation on IEEE doubles).
-
-    Returns (*group_by, column, q, val). ``group_by`` adds per-group
-    quantiles with the same machinery — the window keys on (groups,
-    column), so parallelism GROWS with group count instead of funneling
-    per-group buffers through one task the way grouped ``percentile``
-    does. At bench SF the single-buffer aggregate is faster (fewer
-    stages); this operator is the documented path once distinct values
-    per column (or per group) stop fitting one executor's memory.
-    """
-    from pyspark.sql import Window
-
-    g = list(group_by or [])
-    if len(columns) == 1:
-        # no Generate node for the common single-column case (the explode
-        # below costs a per-row struct alloc + generate before the groupBy)
-        pairs = df.select(
-            *g,
-            F.lit(columns[0]).alias("column"),
-            F.col(columns[0]).cast("double").alias("v"),
-        ).where(F.col("v").isNotNull() & ~F.isnan("v"))
-    else:
-        pairs = (
-            df.select(
-                *g,
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(F.lit(c).alias("column"), F.col(c).cast("double").alias("v"))
-                            for c in columns
-                        ]
-                    )
-                ).alias("p")
-            )
-            .select(*g, "p.*")
-            .where(F.col("v").isNotNull() & ~F.isnan("v"))
-        )
-    keys = [*g, "column"]
-    gc = pairs.groupBy(*keys, "v").agg(F.count(F.lit(1)).alias("cnt"))
-    # Cumulative counts over the distinct-value relation via the keyed
-    # distributed prefix sum (VERDICT r7: a Window.partitionBy(column)
-    # with one column is a single-partition window over |distinct v| rows
-    # — for continuous columns that is ≈ the whole table through one
-    # task). The prefix restarts per (groups, column); integer sums, so
-    # `cum` is bit-identical to the former window.
-    from dataquality_ml_spark.operators.relational import exclusive_prefix_sum
-
-    # Per-key valid-row totals ride back from the prefix-sum decomposition's
-    # OWN driver-side subtotal collect (with_totals) — the former
-    # ``gc.groupBy(keys).agg(sum)`` branch re-ran the whole upstream scan +
-    # (keys, v) groupBy a second time per quantile call (round 13, guide
-    # §1.2/§2.4: the subtotal job already computed these numbers).
-    cum, tot_map = exclusive_prefix_sum(
-        gc, "v", "cnt", out="_before", keys=keys, with_totals=True
-    )
-    cum = cum.withColumn("cum", F.col("_before") + F.col("cnt")).drop("_before")
-    # null-safe join: a NULL group key is a real group (grouped
-    # ``percentile`` keeps it; a plain equi-join silently dropped it —
-    # latent until round 8's grouped-selection differential caught it)
-    key_schema = ", ".join(
-        f"_n_{k} {gc.schema[k].dataType.simpleString()}" for k in keys
-    )
-    nn = df.sparkSession.createDataFrame(
-        [(*kt, int(v[0])) for kt, v in tot_map.items()],
-        f"{key_schema}, n bigint",
-    )
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"_n_{k}"))
-        cond = c if cond is None else (cond & c)
-    cum = cum.join(F.broadcast(nn), cond).drop(*[f"_n_{k}" for k in keys])
-
-    q_arr = F.array(*[F.lit(float(q)) for q in qs])
-    # Keep only the value rows whose index range contains k or k+1 for some
-    # quantile — everything else is dropped before the final (tiny) agg.
-    targets = F.filter(
-        F.transform(
-            q_arr,
-            lambda q: F.struct(
-                q.alias("q"),
-                F.floor(q * (F.col("n") - 1)).alias("k"),
-                (q * (F.col("n") - 1) - F.floor(q * (F.col("n") - 1))).alias("frac"),
-            ),
-        ),
-        lambda s: (
-            (s["k"] >= F.col("cum") - F.col("cnt")) & (s["k"] < F.col("cum"))
-        )
-        | ((s["k"] + 1 >= F.col("cum") - F.col("cnt")) & (s["k"] + 1 < F.col("cum"))),
-    )
-    tagged = cum.select(
-        *keys,
-        "v",
-        (F.col("cum") - F.col("cnt")).alias("start"),
-        F.col("cum").alias("end"),
-        F.explode(targets).alias("s"),
-    )
-    return (
-        tagged.groupBy(*keys, F.col("s.q").alias("q"))
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("s.k") >= F.col("start")) & (F.col("s.k") < F.col("end")),
-                    F.col("v"),
-                )
-            ).alias("v_lo"),
-            F.max(
-                F.when(
-                    (F.col("s.k") + 1 >= F.col("start")) & (F.col("s.k") + 1 < F.col("end")),
-                    F.col("v"),
-                )
-            ).alias("v_hi"),
-            F.first("s.frac").alias("frac"),
-        )
-        .select(
-            *keys,
-            "q",
-            # Spark's percentile and DuckDB's quantile_cont both evaluate
-            # lo*(1-f) + hi*f (not lo + f*(hi-lo) — one ulp apart on IEEE
-            # doubles); the equality guard avoids re-rounding lo when both
-            # order statistics land on the same value.
-            F.when(
-                F.col("v_hi").isNull() | (F.col("v_hi") == F.col("v_lo")), F.col("v_lo")
-            )
-            .otherwise(
-                F.col("v_lo") * (1 - F.col("frac")) + F.col("v_hi") * F.col("frac")
-            )
-            .alias("val"),
-        )
     )
 
 
@@ -577,35 +444,6 @@ def _walk_hist(hist: dict, base: int, lo: float, hi: float, ks, bins: int):
             break
 
 
-def _select_grouped_many(vals, gnames, stats, qs_f, bins, collect_limit):
-    """Histogram-refine selection for MANY segments (round 9, VERDICT r8
-    item 3): the ≤max_groups path encodes chain membership as one
-    WHEN-chain condition per chain, which stops being cheap past a few
-    dozen groups (a groups×targets-branch CASE expression blows up
-    codegen). Here membership is a broadcast JOIN instead: each
-    refinement level joins a driver-built spec relation keyed on
-    (group key…, bucket path so far) carrying that chain's (lo, hi), and
-    the bucket id is ONE shared expression over the joined bounds — so a
-    100-segment (or 100k-segment) drift panel's medians still move only
-    chains·bins COUNT rows per level, never the distinct-value relation
-    (which is what the former fallback to ``exact_quantiles_grouped``
-    shuffled).
-
-    Bit-parity with the WHEN-chain path: (hi−lo)/bins, (v−lo)/w, floor,
-    clamp are the same IEEE-double expressions whether the bounds arrive
-    as literals or joined columns, and the driver walk is shared
-    (``_walk_hist``). Level L replays L broadcast joins (depth-capped at
-    8); group keys join null-safely, so NULL segment keys are real
-    segments. Depth-capped chains still above ``collect_limit`` resolve
-    distributed via per-chain exclusive prefix sums — the driver never
-    receives more than collect_limit + |targets| rows from any path.
-    """
-    plans, chains = _qplan(stats, qs_f)
-    return _select_chains(
-        vals, gnames, plans, chains, qs_f, bins, collect_limit
-    )
-
-
 def _select_chains(
     vals,
     gnames,
@@ -617,11 +455,22 @@ def _select_chains(
     weight_col=None,
     join_membership=True,
 ):
-    """Shared join-membership refinement engine behind
-    :func:`_select_grouped_many` (row counts) and the >max_groups path of
-    :func:`weighted_quantiles_select` (round 10: ``weight_col`` swaps
-    every COUNT for SUM(weight); the weighted 1-based rank
-    r = max(q·W, 1) is mapped by the CALLER to the 0-based index
+    """The one exact-quantile engine: histogram-refine selection behind
+    every exact face (:func:`exact_quantiles_select` and its grouped and
+    multi-column forms, :func:`weighted_quantiles_select`).
+
+    Chain membership is a literal WHEN-chain per chain for few segments
+    (``join_membership=False``), or a broadcast JOIN for many: each
+    refinement level joins a driver-built spec relation keyed on (group
+    key…, bucket path so far) carrying that chain's (lo, hi), and the
+    bucket id is ONE shared expression over the joined bounds, so any
+    number of segments moves only chains·bins COUNT rows per level, never
+    the distinct-value relation. Both taggers feed the same IEEE-double
+    bucket algebra and the same driver walk (``_walk_hist``); group keys
+    match null-safely, so NULL segment keys are real segments.
+
+    ``weight_col`` swaps every COUNT for SUM(weight); the weighted 1-based
+    rank r = max(q·W, 1) is mapped by the CALLER to the 0-based index
     convention as k = ceil(r) − 1, which is exact for integer cumulative
     weights: cumw ≥ r ⟺ cumw > k ⟺ unweighted "value holding index k")."""
     from pyspark.sql.types import (
@@ -932,11 +781,10 @@ def exact_quantiles_select(
     histogram-refine SELECTION — the scalar-threshold fast path
     (reference A7/A8 thresholds, ``np.percentile`` app/AE_model.py:197).
 
-    ``exact_quantiles_grouped`` is the general machinery, but it shuffles
-    the whole distinct-value relation (for continuous columns that is an
-    O(rows) shuffle). Selection never does: every order statistic the
-    quantiles need is located by repeatedly histogramming the value range
-    (Munro-Paterson-style refinement):
+    Selection never shuffles the distinct-value relation (for a
+    continuous column that would be an O(rows) shuffle): every order
+    statistic the quantiles need is located by repeatedly histogramming
+    the value range (Munro-Paterson-style refinement):
 
     1. one narrow scan: per-group (n, min, max);
     2. per refinement level, ONE narrow scan computes equi-width bucket
@@ -952,9 +800,10 @@ def exact_quantiles_select(
     size; depth is log_bins(n / collect_limit) — 0 extra levels at bench
     SF, ≤2 at 10¹² rows. Values are bit-equal to ``percentile`` / DuckDB
     QUANTILE_CONT (same floor/ceil order statistics, same
-    lo·(1−f) + hi·f interpolation); NaNs/nulls excluded exactly like
-    ``exact_quantiles_grouped``. Ties are free: a bucket whose value
-    range has collapsed resolves without collecting. A depth cap stops
+    lo·(1−f) + hi·f interpolation); NaNs and nulls are excluded. Column
+    and group names may hold any character (they are quoted). Ties are
+    free: a bucket whose value range has collapsed resolves without
+    collecting. A depth cap stops
     the refinement at 8 levels: capped chains at or below
     ``collect_limit`` collect as usual, and chains STILL above the limit
     (possible when a range straddles 0/denormals, where a tiny relative
@@ -983,9 +832,9 @@ def exact_quantiles_select(
     import math
 
     groups = list(group_by or [])
-    gcols = [F.col(g).alias(f"_g{i}") for i, g in enumerate(groups)]
+    gcols = [F.col(_ident(g)).alias(f"_g{i}") for i, g in enumerate(groups)]
     gnames = [f"_g{i}" for i in range(len(groups))]
-    vals = df.select(*gcols, F.col(col).cast("double").alias("v")).where(
+    vals = df.select(*gcols, F.col(_ident(col)).cast("double").alias("v")).where(
         F.col("v").isNotNull() & ~F.isnan("v")
     )
     # scanned once per refinement level + batched collects — materialize
@@ -1100,12 +949,12 @@ def weighted_quantiles_select(
         )
     qs_f = [float(q) for q in qs]
     groups = list(group_by or [])
-    gcols = [F.col(g).alias(f"_g{i}") for i, g in enumerate(groups)]
+    gcols = [F.col(_ident(g)).alias(f"_g{i}") for i, g in enumerate(groups)]
     gnames = [f"_g{i}" for i in range(len(groups))]
     vals = df.select(
         *gcols,
-        F.col(col).cast("double").alias("v"),
-        F.col(weight_col).cast("long").alias("w"),
+        F.col(_ident(col)).cast("double").alias("v"),
+        F.col(_ident(weight_col)).cast("long").alias("w"),
     ).where(
         F.col("v").isNotNull()
         & ~F.isnan("v")
@@ -1186,27 +1035,13 @@ def exact_quantiles_multi(
     **select_kw,
 ) -> dict:
     """{col: {q: val}} for several columns in the SAME selection scans:
-    melt to (column, value) — a narrow generate, no shuffle — then the
+    melt to (column, value) with :func:`_melt_sql`, then the
     grouped :func:`exact_quantiles_select` treats each column as a
     segment, so one histogram pass per refinement level serves every
     column at once. Columns that are entirely null/NaN map to
     {q: None}. The multi-column face of the scalar-threshold fast path
     (reference A7/A8 on many features; ``profile``'s exact quantiles)."""
-    pairs = (
-        df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            F.col(_ident(c)).cast("double").alias("v"),
-                        )
-                        for c in columns
-                    ]
-                )
-            ).alias("p")
-        ).select("p.*")
-    )
+    pairs = df.selectExpr(_melt_sql(columns, column="{name}", v="CAST({col} AS DOUBLE)"))
     qs_f = [float(q) for q in qs]
     got = exact_quantiles_select(
         pairs, "v", qs_f, group_by=["column"], **select_kw

@@ -168,8 +168,9 @@ def suggest_rules(
       (nulls count as out of range, identically in the oracle).
 
     Pass structure, regardless of column count: one agg for counts and
-    distincts, one distributed grouped-count quantile build for ALL
-    numeric columns' percentiles (round 8: the former in-agg
+    distincts, one shared histogram-refine selection
+    (``profile.exact_quantiles_multi``) for ALL numeric columns'
+    percentiles (round 8: the former in-agg
     ``F.percentile`` buffered each column's full value-count map in one
     merge buffer), then one pass-2 agg computing set membership lists
     and range supports only for the columns that qualified.  Everything

@@ -16,40 +16,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _exact_quantiles(df: DataFrame, col: str, qs: list[float]) -> list[float]:
-    """Exact linear-interpolated quantiles WITHOUT Spark's single-buffer
-    ``percentile`` aggregate (VERDICT r7 item 2): delegates to
-    ``profile.exact_quantiles_select`` — iterative histogram-refine
-    SELECTION (round 8). Narrow scans + a bins-sized count shuffle locate
-    every needed order statistic; unlike the grouped-count path this
-    never shuffles the distinct-value relation at all (an O(rows) shuffle
-    for continuous columns), and driver state stays O(bins +
-    collect_limit) at any scale. Bit-equal to ``percentile`` / numpy
-    linear interpolation on NaN-free input (NaNs are excluded, same as
-    ``exact_quantiles_grouped``)."""
-    from dataquality_ml_spark.operators.profile import exact_quantiles_select
-
-    return exact_quantiles_select(df, col, [float(q) for q in qs])
+from dataquality_ml_spark.operators.profile import (
+    _collect_column_stats,
+    _double_lit,
+    _ident,
+    exact_quantiles_multi,
+    exact_quantiles_select,
+)
 
 
 def percentile_threshold(df: DataFrame, col: str, q: float, exact: bool = True) -> float:
     """Threshold = q-th percentile of ``col`` (reference A7: P95/P90/P72).
 
     ``exact=True`` reproduces numpy's linear interpolation exactly via the
-    distributed grouped-count order-statistic path (no single-buffer
-    ``Percentile`` aggregate anywhere in the plan); ``exact=False`` is the
+    histogram-refine selection (``profile.exact_quantiles_select``: no
+    single-buffer ``Percentile`` aggregate anywhere in the plan, no
+    distinct-value shuffle; NaNs are excluded); ``exact=False`` is the
     mergeable approx sketch (cheaper still — one pass, bounded memory).
     """
     if exact:
-        return _exact_quantiles(df, col, [q])[0]
+        return exact_quantiles_select(df, col, [q])[0]
     return df.agg(F.expr(f"percentile_approx({col}, {q})").alias("t")).first()["t"]
 
 
 def iqr_threshold(df: DataFrame, col: str, k: float = 1.5, exact: bool = True) -> float:
     """Threshold = Q3 + k·IQR (reference A8, app/LSTM_AE.py:513-517)."""
     if exact:
-        q1, q3 = _exact_quantiles(df, col, [0.25, 0.75])
+        q1, q3 = exact_quantiles_select(df, col, [0.25, 0.75])
     else:
         row = df.agg(F.expr(f"percentile_approx({col}, array(0.25, 0.75))").alias("qs")).first()
         q1, q3 = row["qs"]
@@ -86,7 +79,7 @@ def clip_outliers(df: DataFrame, col: str, lo_q: float = 0.01, hi_q: float = 0.9
     """Winsorize to [P(lo), P(hi)] (reference app/LSTM_AE_enhanced.py:58-69,
     driver-side numpy clip → here ``greatest(lo, least(hi, col))``)."""
     if exact:
-        lo, hi = _exact_quantiles(df, col, [lo_q, hi_q])
+        lo, hi = exact_quantiles_select(df, col, [lo_q, hi_q])
     else:
         row = df.agg(
             F.expr(f"percentile_approx({col}, array({lo_q}, {hi_q}))").alias("qs")
@@ -119,8 +112,6 @@ def mad_robust_outliers(
     ``exact=False`` switches both medians to the mergeable approx sketch
     for the cheapest one-pass form.
     """
-    from dataquality_ml_spark.operators.profile import exact_quantiles_select
-
     def _grouped_median(rel: DataFrame, col: str, out: str) -> DataFrame:
         if exact:
             # histogram-refine SELECTION per group (round 8): narrow scans
@@ -173,7 +164,7 @@ def batched_thresholds(
     (VERDICT r3 item 6): the scalar helpers above each run their own
     aggregation job, so a caller fitting several thresholds on one table
     pays one full scan per threshold. This computes the requested
-    percentiles plus Q1/median/Q3 for all columns in ONE aggregation, and
+    percentiles plus Q1/median/Q3 for all columns in ONE pass, and
     (``mad=True``) the per-column MADs in ONE more — 2 jobs total instead
     of 3·n_cols. (MAD is inherently two-pass: it is the median of
     deviations from the median.)
@@ -183,38 +174,23 @@ def batched_thresholds(
     for :func:`flag_anomalies`. ``exact=True`` locates ALL columns'
     order statistics in the shared histogram-refine selection scans
     (bit-equal to ``percentile``, no single-buffer aggregate, no
-    distinct-value shuffle);
-    ``exact=False`` is the mergeable approx sketch (cheapest — one pass,
-    bounded memory), same as the scalar helpers.
+    distinct-value shuffle; NaNs excluded). ``exact=False`` is the
+    mergeable approx sketch (cheapest — one pass, bounded memory) in the
+    column-keyed aggregation of ``profile._column_stats``: one
+    ``percentile_approx`` per pass whatever the column count, over the
+    columns' values as DOUBLE (NaNs included, as over the column itself).
     """
     all_qs = sorted({*ps, 0.25, 0.5, 0.75})
-
-    def _multi_quantiles(rel: DataFrame, qcols: list[str], qs=None) -> dict:
-        """{col: {q: val}} for every (col, q) — one distributed build
-        (exact) or one aggregation (approx)."""
-        qs = all_qs if qs is None else qs
-        if exact:
-            from dataquality_ml_spark.operators.profile import (
-                exact_quantiles_multi,
-            )
-
-            # all-null columns come back as {q: None} — every stat None
-            return exact_quantiles_multi(rel, qcols, qs)
-        q_list = ", ".join(str(q) for q in qs)
-        # collect(), not first(): first() plans an incremental limit that
-        # can launch extra jobs; the agg output is one row by construction
-        [row] = rel.agg(
-            *[
-                F.expr(f"percentile_approx({c}, array({q_list}))").alias(c)
-                for c in qcols
-            ]
-        ).collect()
-        return {
-            c: dict(zip(qs, row[c] if row[c] is not None else [None] * len(qs)))
-            for c in qcols
+    if exact:
+        # all-null columns come back as {q: None} — every stat None
+        per_col = exact_quantiles_multi(df, cols, all_qs)
+    else:
+        q_list = ", ".join(str(q) for q in all_qs)
+        rows = _collect_column_stats(df, cols, [("qs", f"percentile_approx(v, array({q_list}))")])
+        per_col = {
+            c: dict(zip(all_qs, r["qs"] if r and r["qs"] is not None else [None] * len(all_qs)))
+            for c, r in zip(cols, rows)
         }
-
-    per_col = _multi_quantiles(df, cols)
     out: dict[str, dict[str, float]] = {}
     for c in cols:
         by_q = per_col[c]
@@ -233,16 +209,19 @@ def batched_thresholds(
     if mad:
         # all-null columns have no median; their MAD is None by definition
         mad_cols = [c for c in cols if out[c]["median"] is not None]
-        if mad_cols:
-            dev = df.select(
-                *[
-                    F.abs(F.col(c) - F.lit(out[c]["median"])).alias(c)
-                    for c in mad_cols
-                ]
+        meds = [_double_lit(out[c]["median"]) for c in mad_cols]
+        mads: dict = {}
+        if mad_cols and exact:
+            dev = df.selectExpr(
+                *[f"abs({_ident(c)} - {m}) AS {_ident(c)}" for c, m in zip(mad_cols, meds)]
             )
-            mads = _multi_quantiles(dev, mad_cols, qs=[0.5])
+            mads = {c: v[0.5] for c, v in exact_quantiles_multi(dev, mad_cols, [0.5]).items()}
+        elif mad_cols:
+            dev = f"abs(v - element_at(array({', '.join(meds)}), i + 1))"
+            rows = _collect_column_stats(df, mad_cols, [("mad", f"percentile_approx({dev}, 0.5)")])
+            mads = {c: r["mad"] for c, r in zip(mad_cols, rows) if r}
         for c in cols:
-            out[c]["mad"] = mads[c][0.5] if c in set(mad_cols) else None
+            out[c]["mad"] = mads.get(c)
     return out
 
 
@@ -255,21 +234,17 @@ def impute_mean(df: DataFrame, cols: list[str]) -> DataFrame:
 
 def impute_median(df: DataFrame, cols: list[str], exact: bool = True) -> DataFrame:
     """Median imputation (reference A4/M1, Imputer(strategy="median")
-    app/IsolationForest_AE.py:116-121).  ``exact=True`` computes all
-    medians in one distributed grouped-count build (no single-buffer
-    ``Percentile`` aggregate — VERDICT r7 item 2)."""
+    app/IsolationForest_AE.py:116-121).  ``exact=True`` locates all
+    medians in the shared histogram-refine selection scans
+    (``profile.exact_quantiles_multi`` — no single-buffer ``Percentile``
+    aggregate, NaNs excluded); ``exact=False`` is the approx sketch."""
     if exact:
-        from dataquality_ml_spark.operators.profile import exact_quantiles_grouped
-
-        meds = {
-            r["column"]: r["val"]
-            for r in exact_quantiles_grouped(df, cols, [0.5]).collect()
-        }
+        meds = {c: v[0.5] for c, v in exact_quantiles_multi(df, cols, [0.5]).items()}
     else:
         row = df.agg(
-            *[F.expr(f"percentile_approx({c}, 0.5)").alias(c) for c in cols]
+            *[F.expr(f"percentile_approx({_ident(c)}, 0.5)").alias(c) for c in cols]
         ).first()
         meds = {c: row[c] for c in cols}
     return df.withColumns(
-        {c: F.coalesce(F.col(c), F.lit(meds.get(c))) for c in cols}
+        {c: F.coalesce(F.col(_ident(c)), F.lit(meds[c])) for c in cols}
     )

@@ -2170,12 +2170,12 @@ def perplexity_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "mean_logprob")
         .localCheckpoint(eager=False)
     )
-    from dataquality_ml_spark.operators.thresholds import _exact_quantiles
+    from dataquality_ml_spark.operators.profile import exact_quantiles_select
 
     # distributed exact terciles (round 8): mean_logprob is continuous, so
     # |distinct| ≈ |docs| and the former single-buffer percentile
     # aggregate was the VERDICT r7 item 2 hazard; values bit-equal
-    tq = _exact_quantiles(
+    tq = exact_quantiles_select(
         lp, "mean_logprob", [0.3333333333333333, 0.6666666666666666]
     )
     t1, t2 = (round(q, 6) for q in tq)
@@ -6151,8 +6151,8 @@ def cvm_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def qq_drift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile Q-Q drift table between the events-month halves — WHERE the
-    distribution moved, not just whether (drift.qq_table: one
-    exact_quantiles_grouped build keyed on the side tag, never a
+    distribution moved, not just whether (drift.qq_table: both sides'
+    order statistics picked off one shared ECDF build, never a
     single-buffer percentile aggregate)."""
     from dataquality_ml_spark.operators import drift as dr
 
@@ -6818,7 +6818,7 @@ def ad_drift_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def median_by_type_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-(event_type, day) median + P90 panel — ~150 segments,
     the oracle-gated face of the MANY-groups selection path (round 9:
-    profile._select_grouped_many, broadcast-JOIN chain membership): the
+    profile._select_chains, broadcast-JOIN chain membership): the
     shuffles carry only chains·bins count rows at any segment count,
     where the former >64-group fallback shuffled the full distinct-value
     relation. Values bit-equal to QUANTILE_CONT."""

@@ -1036,6 +1036,7 @@ def categorical_drift_stream(
     import numpy as np
 
     from dataquality_ml_spark.operators.drift import EPS
+    from dataquality_ml_spark.operators.profile import _melt_sql
 
     refs = {
         c: {k: int(v) for k, v in cats.items()}
@@ -1048,6 +1049,7 @@ def categorical_drift_stream(
         )
     reports: list = []
     applied: set = set()
+    melt = _melt_sql(columns, column="{name}", category="CAST({col} AS STRING)")
 
     def _score(ref: dict, cur: dict) -> dict:
         n_a = sum(ref.values())
@@ -1076,19 +1078,7 @@ def categorical_drift_stream(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in applied:
             return
-        melted = batch_df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            F.col(c).cast("string").alias("category"),
-                        )
-                        for c in columns
-                    ]
-                )
-            ).alias("p")
-        ).select("p.*")
+        melted = batch_df.selectExpr(melt)
         cells = (
             melted.groupBy("column", "category")
             .agg(F.count(F.lit(1)).alias("n"))

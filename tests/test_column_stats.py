@@ -1,5 +1,6 @@
 """Column-keyed statistics: ``profile``, ``prune_low_quality``,
-``valid_columns`` and ``fit_features`` aggregate one long (i, v, ok)
+``valid_columns``, ``fit_features`` and the sketch path of
+``batched_thresholds`` aggregate one long (i, v, ok)
 relation grouped by column index instead of one wide row — output shape
 on empty input, column order, DECIMAL and all-NULL columns, an aggregate
 whose size does not grow with the column count, and job counts."""
@@ -13,6 +14,7 @@ from decimal import Decimal
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from dataquality_ml_spark.operators import profile as prof
 
@@ -192,3 +194,39 @@ def test_robust_scale_approx_quartiles(spark):
     # n: 1,2,0,1,2,0,1,2,0,1,2 → q1 0, median 1, q3 2 → (v − 1) / 2
     assert sorted(r["n"] for r in out) == sorted((v % 3 - 1) / 2 for v in range(1, 12))
     assert all(r["dead"] is None for r in out)  # all-null: left untouched
+
+
+def test_batched_thresholds_approx_aggregate_size_independent_of_column_count(
+    spark, monkeypatch
+):
+    """batched_thresholds(exact=False) runs its quantile and MAD passes on
+    the column-keyed relation: the same aggregate nodes for 2 and 20
+    columns, not one percentile_approx per column. Any ``ps`` works."""
+    from dataquality_ml_spark.operators.thresholds import batched_thresholds
+
+    seen = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def spy(self):
+        seen.append(_aggregate_sizes(self))
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", spy)
+
+    def run(n_cols, ps=(0.9, 0.95)):
+        seen.clear()
+        df = spark.range(50).selectExpr(
+            *[f"IF(id % 7 = 0, NULL, id * {k + 1}) AS c{k}" for k in range(n_cols)]
+        )
+        return df, batched_thresholds(df, df.columns, ps=ps, exact=False), list(seen)
+
+    _, _, two = run(2)
+    assert len(two) == 2 and all(two), two
+    assert run(20)[2] == two
+
+    df, got, _ = run(2, ps=(0.37, 0.61))
+    monkeypatch.undo()
+    for c in df.columns:
+        want = df.agg(F.expr(f"percentile_approx({c}, array(0.37, 0.61))")).first()[0]
+        assert [got[c]["p37"], got[c]["p61"]] == want, c

@@ -54,47 +54,39 @@ def test_align_schema(spark, sf_dir):
     assert aligned.where(F.col("value").isNotNull()).count() == 0  # filled as nulls
 
 
-def test_exact_quantiles_grouped_matches_percentile(spark, sf_dir):
+def test_exact_quantiles_multi_matches_percentile(spark, sf_dir):
     import pytest
 
-    from dataquality_ml_spark.operators.profile import exact_quantiles_grouped
+    from dataquality_ml_spark.operators.profile import exact_quantiles_multi
 
     li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     qs = [0.25, 0.5, 0.75, 0.9, 0.95]
-    got = {
-        (r["column"], r["q"]): r["val"]
-        for r in exact_quantiles_grouped(li, cols, qs).collect()
-    }
+    got = exact_quantiles_multi(li, cols, qs)
     q_sql = ", ".join(str(q) for q in qs)
     ref = li.agg(
         *[F.expr(f"percentile({c}, array({q_sql}))").alias(c) for c in cols]
     ).first()
     for c in cols:
         for i, q in enumerate(qs):
-            assert got[(c, q)] == pytest.approx(ref[c][i], rel=0, abs=0), (c, q)
+            assert got[c][q] == pytest.approx(ref[c][i], rel=0, abs=0), (c, q)
 
 
-def test_exact_quantiles_grouped_per_group(spark, sf_dir):
+def test_exact_quantiles_select_per_group_matches_percentile(spark, sf_dir):
     import pytest
 
-    from dataquality_ml_spark.operators.profile import exact_quantiles_grouped
+    from dataquality_ml_spark.operators.profile import exact_quantiles_select
 
     ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     qs = [0.5, 0.9]
-    got = {
-        (r["event_type"], r["q"]): r["val"]
-        for r in exact_quantiles_grouped(
-            ev, ["value"], qs, group_by=["event_type"]
-        ).collect()
-    }
+    got = exact_quantiles_select(ev, "value", qs, group_by=["event_type"])
     ref = {
         r["event_type"]: r["p"]
         for r in ev.groupBy("event_type")
         .agg(F.expr("percentile(value, array(0.5, 0.9))").alias("p"))
         .collect()
     }
-    assert len(got) == 2 * len(ref)
+    assert len(got) == len(ref)
     for et, vals in ref.items():
         for i, q in enumerate(qs):
-            assert got[(et, q)] == pytest.approx(vals[i], rel=0, abs=0), (et, q)
+            assert got[(et,)][i] == pytest.approx(vals[i], rel=0, abs=0), (et, q)

@@ -121,13 +121,11 @@ def test_full_outer_join_preserves_unmatched_sides(spark):
 
 def test_batched_thresholds_matches_scalar_helpers_in_two_jobs(spark):
     """VERDICT r3 item 6 (amended round 8): the APPROX path still runs at
-    most 2 Spark jobs (one multi-column sketch aggregation + one MAD
-    pass); the EXACT path now routes through the distributed
-    grouped-count order-statistic build (VERDICT r7 item 2), which is
-    multi-job by design (checkpoint + subtotal + pickup per build) but
-    still ONE upstream scan per build — so the job-count pin applies to
-    approx, and exact is pinned on VALUES (numpy linear interpolation,
-    bit-equal)."""
+    most 2 Spark jobs (one column-keyed sketch aggregation + one MAD
+    pass); the EXACT path routes through the histogram-refine selection
+    (VERDICT r7 item 2), which is multi-job by design (stats + one scan
+    per refinement level) — so the job-count pin applies to approx, and
+    exact is pinned on VALUES (numpy linear interpolation, bit-equal)."""
     import numpy as np
     import pytest
 

@@ -5,7 +5,8 @@
   ``relational.exclusive_prefix_sum`` (two-level range decomposition).
 - the exact-percentile path (``thresholds.percentile_threshold(exact=True)``
   and friends) must never plan Spark's single-buffer ``Percentile``
-  aggregate — it routes through ``profile.exact_quantiles_grouped``.
+  aggregate — it routes through the histogram-refine selection of
+  ``profile.exact_quantiles_select``.
 
 Value parity for the rewrites is pinned separately: the DuckDB oracles in
 tests/test_oracle_parity.py stayed hash-green across the rewrite, and the
@@ -53,18 +54,31 @@ def test_youden_no_global_window(spark, sf_dir):
     assert _global_window_specs(plans.formatted_plan(df)) == []
 
 
-def test_exact_quantiles_plan_has_no_percentile_aggregate(spark):
-    from dataquality_ml_spark.operators.profile import exact_quantiles_grouped
+def test_exact_quantiles_plan_has_no_percentile_aggregate(spark, monkeypatch):
+    """Every query the exact selection runs, including the depth-capped
+    fallback's cumulative step (collect_limit=1 forces it), plans neither
+    a ``percentile`` aggregate nor a global window — the cumulative step
+    goes through the keyed exclusive_prefix_sum decomposition."""
+    from dataquality_ml_spark.operators.profile import exact_quantiles_select
 
+    seen = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def spy(self):
+        seen.append(plans.formatted_plan(self))
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", spy)
     df = spark.range(1000).select(
         (F.col("id") % 97).cast("double").alias("value")
     )
-    q = exact_quantiles_grouped(df, ["value"], [0.25, 0.5, 0.95])
-    plan = plans.formatted_plan(q)
-    assert not re.search(r"\bpercentile\(", plan), plan
-    # the cumulative step must not be a global window either — it goes
-    # through the keyed exclusive_prefix_sum decomposition
-    assert _global_window_specs(plan) == []
+    for kw in ({}, {"collect_limit": 1, "bins": 2}):
+        exact_quantiles_select(df, "value", [0.25, 0.5, 0.95], **kw)
+    assert len(seen) >= 3
+    for plan in seen:
+        assert not re.search(r"\bpercentile\(", plan), plan
+        assert _global_window_specs(plan) == []
 
 
 def test_percentile_threshold_matches_single_buffer_aggregate(spark):
@@ -244,7 +258,7 @@ def test_exact_quantiles_select_matches_percentile(spark):
             [(None,), (float("nan"),)] + [(float(i),) for i in range(100)],
             "v double",
         )
-    )  # NaN excluded like exact_quantiles_grouped
+    )  # NaN excluded, like percentile over the valid values
     assert exact_quantiles_select(
         spark.createDataFrame([], "v double"), "v", [0.5]
     ) == [None]
@@ -253,14 +267,11 @@ def test_exact_quantiles_select_matches_percentile(spark):
 def test_exact_quantiles_select_grouped_and_null_keys(spark):
     """Grouped selection == per-group percentile INCLUDING a NULL group
     key (which also pins the round-8 null-safe-join fixes in
-    exclusive_prefix_sum / exact_quantiles_grouped), and the >max_groups
-    fallback returns identical values."""
+    exclusive_prefix_sum), and the >max_groups join membership returns
+    identical values."""
     import random
 
-    from dataquality_ml_spark.operators.profile import (
-        exact_quantiles_grouped,
-        exact_quantiles_select,
-    )
+    from dataquality_ml_spark.operators.profile import exact_quantiles_select
 
     qs = [0.1, 0.5, 0.9, 1.0]
     q_sql = ", ".join(map(str, qs))
@@ -283,10 +294,6 @@ def test_exact_quantiles_select_grouped_and_null_keys(spark):
     )
     assert got == want
     assert exact_quantiles_select(gdf, "v", qs, group_by=["g"], max_groups=1) == want
-    gw: dict = {}
-    for r in exact_quantiles_grouped(gdf, ["v"], qs, group_by=["g"]).collect():
-        gw.setdefault((r["g"],), {})[r["q"]] = r["val"]
-    assert {g: [v[q] for q in qs] for g, v in gw.items()} == want
 
 
 def test_exact_quantiles_select_depth_cap_distributed_fallback(spark):
@@ -327,24 +334,15 @@ def test_exact_quantiles_select_depth_cap_distributed_fallback(spark):
     ) == gwant
 
 
-def test_exact_quantiles_select_many_groups_join_path(spark, monkeypatch):
-    """Above max_groups the selection must stay a selection (broadcast-JOIN
-    chain membership, count-row shuffles only) — NOT fall back to the
-    grouped-count build, which shuffles the full distinct-value relation
-    (round 9, VERDICT r8 item 3). Differential vs grouped percentile at
-    100 groups including a NULL key, with exact_quantiles_grouped
-    sentinel-blocked; forced refinement + depth-cap fallback covered via
-    tiny collect_limit/bins."""
+def test_exact_quantiles_select_many_groups_join_path(spark):
+    """Above max_groups the selection stays a selection (broadcast-JOIN
+    chain membership, count-row shuffles only — never the full
+    distinct-value relation; round 9, VERDICT r8 item 3). Differential vs
+    grouped percentile at 100 groups including a NULL key; forced
+    refinement + depth-cap fallback covered via tiny collect_limit/bins."""
     import random
 
     from dataquality_ml_spark.operators import profile as prof
-
-    def _boom(*a, **kw):
-        raise AssertionError(
-            "many-groups selection must not reach exact_quantiles_grouped"
-        )
-
-    monkeypatch.setattr(prof, "exact_quantiles_grouped", _boom)
 
     rng = random.Random(17)
     rows = []
@@ -378,9 +376,9 @@ def test_exact_quantiles_select_many_groups_join_path(spark, monkeypatch):
 def test_all_quantile_faces_share_the_chain_engine(spark, monkeypatch):
     """Round 11 (VERDICT r10 item 3): ONE selection loop. Every exact
     quantile face — scalar select, grouped select, exact_quantiles_multi,
-    thresholds' percentile/IQR helpers — must resolve through the shared
-    _select_chains engine, so a future quantile bug is one fix, not
-    three. Values stay bit-equal to percentile()."""
+    thresholds' percentile/IQR helpers, median imputation — must resolve
+    through the shared _select_chains engine, so a future quantile bug is
+    one fix, not three. Values stay bit-equal to percentile()."""
     from dataquality_ml_spark.operators import profile as prof
     from dataquality_ml_spark.operators import thresholds as th
 
@@ -416,6 +414,12 @@ def test_all_quantile_faces_share_the_chain_engine(spark, monkeypatch):
     }
     assert prof.exact_quantiles_select(gdf, "v", [0.5], group_by=["g"]) == gw
     assert len(calls) == 5
+    # median imputation: a null row takes the same exact median
+    holed = df.union(spark.createDataFrame([(None,)], "v double"))
+    imputed = th.impute_median(holed, ["v"], exact=True)
+    assert len(calls) == 6
+    n_med = df.where(F.col("v") == want[1]).count()
+    assert imputed.where(F.col("v") == want[1]).count() == n_med + 1
 
 
 def test_keyed_drift_family_no_global_window(spark):
