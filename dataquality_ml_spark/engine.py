@@ -227,10 +227,15 @@ class DQEngine:
         exact_threshold: bool = False,
     ) -> FittedDetector:
         """Fit on the normal slice, derive the threshold from TRAIN errors
-        (reference app/AE_model.py:42-48, :197) — one artifact out."""
+        (reference app/AE_model.py:42-48, :197) — one artifact out.
+
+        The transformed train relation is a lazy local checkpoint: the
+        sample collect materializes it on first use, and the threshold's
+        scoring pass reads those rows instead of re-running the scan and
+        the feature projection."""
         normal = train_df.where(F.col(label) == F.lit(0)) if label in train_df.columns else train_df
         fm = feat.fit_features(normal, roles=roles, label_col=label)
-        transformed = feat.apply_features(normal, fm)
+        transformed = feat.apply_features(normal, fm).localCheckpoint(eager=False)
         x = det.collect_feature_sample(transformed, max_rows=sample_rows)
         if detector == "pca":
             model = det.PCAAutoencoder.fit(x, n_components=n_components)
@@ -250,10 +255,18 @@ class DQEngine:
 
     def score(self, df: DataFrame, fitted: FittedDetector) -> DataFrame:
         """Transform with the SAME artifact (no refit drift), score
-        distributed, flag against the frozen threshold."""
+        distributed, flag against the frozen threshold.
+
+        The flagged relation is a lazy local checkpoint: its first consumer
+        materializes it, and every later one (evaluate, auc, report, a
+        sink) reads those rows instead of re-running the scan, the feature
+        projection and the scoring UDF. Under AQE the call itself runs the
+        scoring input's repartition stage, if it has one."""
         transformed = feat.apply_features(df, fitted.features)
         scored = det.score_distributed(transformed, fitted.model)
-        return th.flag_anomalies(scored, "score", fitted.threshold)
+        return th.flag_anomalies(scored, "score", fitted.threshold).localCheckpoint(
+            eager=False
+        )
 
     def explain(self, df: DataFrame, fitted: FittedDetector, top_k: int = 3) -> DataFrame:
         """Score + attribute: flagged rows carry the top_k features driving
@@ -320,7 +333,12 @@ class DQEngine:
             if label in train_df.columns
             else train_df
         )
-        seqs = self._windowed(normal, key, order, feats, timesteps, tiebreak).cache()
+        # read by the sample collect and the threshold's scoring pass; a
+        # lazy local checkpoint holds no CacheManager entry, so nothing is
+        # left behind when the fit raises
+        seqs = self._windowed(normal, key, order, feats, timesteps, tiebreak).localCheckpoint(
+            eager=False
+        )
         x = det.collect_feature_sample(seqs, max_rows=sample_rows)
         if detector == "pca":
             model: object = det.PCAAutoencoder.fit(x, n_components=n_components)
@@ -340,7 +358,6 @@ class DQEngine:
             raise ValueError(f"unknown sequence detector: {detector}")
         scored = det.score_distributed(seqs, model).select("score")
         t = th.percentile_threshold(scored, "score", threshold_q, exact=False)
-        seqs.unpersist()
         return FittedSequenceDetector(
             key=key,
             order=order,

@@ -161,8 +161,8 @@ def fit_features(
         if max_categories is not None:
             from pyspark.sql import Window
 
-            # consumed twice (cardinality collect, then the top-k cut) —
-            # lazy checkpoint so the stack+groupBy scan runs once
+            # consumed twice (cardinality collect, then the frequency
+            # collect) — lazy checkpoint so the stack+groupBy scan runs once
             counts = counts.localCheckpoint(eager=False)
 
             # cardinalities first: ≤ |cats| rows to the driver, and the
@@ -185,23 +185,24 @@ def fit_features(
                         "take the handleInvalid='keep' bucket)"
                     )
                 model.overflow = dict(sorted(over.items()))
-            # two-level salted top-k (profile.heavy_hitters shape): a
-            # global per-col row_number over an unbounded distinct-value
-            # relation would be a single-task funnel
-            order = [F.desc("count"), F.asc("val")]
-            w1 = Window.partitionBy("col", "_salt").orderBy(*order)
-            pruned = (
-                counts.withColumn("_salt", F.pmod(F.hash("val"), F.lit(32)))
-                .withColumn("_r1", F.row_number().over(w1))
-                .where(F.col("_r1") <= max_categories)
-                .drop("_r1", "_salt")
-            )
-            w2 = Window.partitionBy("col").orderBy(*order)
-            counts = (
-                pruned.withColumn("_r2", F.row_number().over(w2))
-                .where(F.col("_r2") <= max_categories)
-                .drop("_r2")
-            )
+                # two-level salted top-k (profile.heavy_hitters shape): a
+                # global per-col row_number over an unbounded distinct-value
+                # relation would be a single-task funnel. Only when a column
+                # is over the cap: under it the cut keeps every row.
+                order = [F.desc("count"), F.asc("val")]
+                w1 = Window.partitionBy("col", "_salt").orderBy(*order)
+                pruned = (
+                    counts.withColumn("_salt", F.pmod(F.hash("val"), F.lit(32)))
+                    .withColumn("_r1", F.row_number().over(w1))
+                    .where(F.col("_r1") <= max_categories)
+                    .drop("_r1", "_salt")
+                )
+                w2 = Window.partitionBy("col").orderBy(*order)
+                counts = (
+                    pruned.withColumn("_r2", F.row_number().over(w2))
+                    .where(F.col("_r2") <= max_categories)
+                    .drop("_r2")
+                )
         freq = counts.collect()
         by_col: dict[str, list] = {c: [] for c in cats}
         for r in freq:
@@ -232,24 +233,34 @@ def apply_features(
     row-drop the reference depends on).
 
     Categorical encoding picks its physical form by cardinality: at or
-    below ``broadcast_cutoff`` categories, a chained ``when`` expression
-    (stays inside whole-stage codegen — cheapest for the reference's 26
-    low-cardinality columns); above it, a broadcast-joined (value → idx)
+    below ``broadcast_cutoff`` categories, one ``CASE <col> WHEN ...``
+    expression (stays inside whole-stage codegen — cheapest for the
+    reference's 26 low-cardinality columns); above it, a broadcast-joined (value → idx)
     mapping table, because a 10k-branch CASE expression blows up codegen
     (JVM 64KB method limit forces interpreted mode) while a broadcast hash
     join is O(1) per row at any cardinality.
 
-    Column names are backtick-quoted wherever they are resolved, so names
-    with dots or backticks work.
+    The whole projection is built as SQL text (the ``CASE`` expressions,
+    the imputed/scaled numerics, the bool casts, the ``skip`` predicate
+    and the final ``array``) in one ``selectExpr`` plus one
+    ``withColumn``: a few dozen py4j round trips, where a ``Column``-API
+    build costs one per expression node. Column names are
+    backtick-quoted wherever they are resolved, so names with dots or
+    backticks work. ``out`` follows ``withColumn``: an existing column of
+    that name is replaced.
     """
-    from dataquality_ml_spark.operators.profile import _ident
+    from dataquality_ml_spark.operators.profile import (
+        _double_lit,
+        _ident,
+        _str_lit,
+        _valid_sql,
+    )
 
-    def col(name: str):
-        return F.col(_ident(name))
-
-    feats: list = []
+    feats: list[str] = []
+    joined: list[str] = []
     for c in model.categorical_cols:
         cats = model.categories[c]
+        keep = _double_lit(len(cats))  # unseen/null → the "keep" bucket
         if len(cats) > broadcast_cutoff:
             from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
@@ -268,47 +279,42 @@ def apply_features(
             )
             df = df.join(
                 F.broadcast(mapping),
-                col(c) == mapping[_ident(f"__{c}_val")],
+                F.col(_ident(c)) == mapping[_ident(f"__{c}_val")],
                 "left",
             ).drop(f"__{c}_val")
-            # unseen/null → the "keep" bucket, same as the when-chain path
-            feats.append(
-                F.coalesce(col(f"__{c}_joined"), F.lit(float(len(cats)))).alias(
-                    f"{c}_idx"
-                )
+            joined.append(f"__{c}_joined")
+            idx = f"coalesce({_ident(joined[-1])}, {keep})"
+        elif cats:
+            whens = " ".join(
+                f"WHEN {_str_lit(v)} THEN {_double_lit(i)}" for i, v in enumerate(cats)
             )
-            continue
-        expr = F.lit(float(len(cats)))  # unseen/null → the "keep" bucket
-        for i, v in enumerate(cats):
-            expr = F.when(col(c) == v, float(i)).otherwise(expr)
-        feats.append(expr.alias(f"{c}_idx"))
+            idx = f"CASE {_ident(c)} {whens} ELSE {keep} END"
+        else:
+            idx = keep
+        feats.append(f"{idx} AS {_ident(f'{c}_idx')}")
 
-    if mode == "skip":
-        cond = F.lit(True)
-        for c in model.numeric_cols:
-            valid = col(c).isNotNull()
-            if df.schema[c].dataType.typeName() in ("double", "float"):
-                valid = valid & ~F.isnan(col(c))
-            cond = cond & valid
-        df = df.where(cond)
+    if mode == "skip" and model.numeric_cols:
+        df = df.where(" AND ".join(_valid_sql(df, c) for c in model.numeric_cols))
 
     for c in model.numeric_cols:
-        imputed = F.coalesce(
-            F.when(~F.isnan(col(c).cast("double")), col(c).cast("double")),
-            F.lit(model.impute[c]),
-        )
+        v = f"CAST({_ident(c)} AS DOUBLE)"
+        imputed = f"coalesce(CASE WHEN NOT isnan({v}) THEN {v} END, {_double_lit(model.impute[c])})"
         sd = model.std[c] if model.std[c] > 0 else 1.0
-        feats.append(((imputed - F.lit(model.mean[c])) / F.lit(sd)).alias(f"{c}_scaled"))
+        feats.append(
+            f"(({imputed} - {_double_lit(model.mean[c])}) / {_double_lit(sd)})"
+            f" AS {_ident(f'{c}_scaled')}"
+        )
 
     for c in model.bool_cols:
         # bool→int cast, reference app/AE_model.py:33-40; distinct alias so
         # select("*", ...) never duplicates the source column name
-        feats.append(col(c).cast("int").cast("double").alias(f"{c}_int"))
+        feats.append(f"CAST(CAST({_ident(c)} AS INT) AS DOUBLE) AS {_ident(f'{c}_int')}")
 
-    named = df.select("*", *feats).drop(
-        *[f"__{c}_joined" for c in model.categorical_cols]
-    )
-    return named.withColumn(out, F.array(*[col(n) for n in model.feature_names]))
+    named = df.selectExpr("*", *feats)
+    if joined:
+        named = named.drop(*joined)
+    vec = ", ".join(_ident(n) for n in model.feature_names)
+    return named.withColumn(out, F.expr(f"array({vec})"))
 
 
 def save_model(model: FeatureModel, path: str) -> None:

@@ -1296,9 +1296,13 @@ def feature_drift_report(
                 pooled = pooled.select("column", "v").unionByName(
                     m.select("column", "v")
                 )
+            # NULL v (the two-frame melt keeps it) is left out, so a
+            # column without a value gets no bounds row and drops out of
+            # the panel, as it does unbinned and in the split= form
             rows = [
                 (r["column"], float(r["lo"]), float(r["hi"]))
-                for r in pooled.groupBy("column")
+                for r in pooled.where("v IS NOT NULL")
+                .groupBy("column")
                 .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
                 .collect()
             ]

@@ -36,7 +36,7 @@ def percentile_threshold(df: DataFrame, col: str, q: float, exact: bool = True) 
     """
     if exact:
         return exact_quantiles_select(df, col, [q])[0]
-    return df.agg(F.expr(f"percentile_approx({col}, {q})").alias("t")).first()["t"]
+    return df.agg(F.expr(f"percentile_approx({_ident(col)}, {q})").alias("t")).first()["t"]
 
 
 def iqr_threshold(df: DataFrame, col: str, k: float = 1.5, exact: bool = True) -> float:
@@ -44,7 +44,9 @@ def iqr_threshold(df: DataFrame, col: str, k: float = 1.5, exact: bool = True) -
     if exact:
         q1, q3 = exact_quantiles_select(df, col, [0.25, 0.75])
     else:
-        row = df.agg(F.expr(f"percentile_approx({col}, array(0.25, 0.75))").alias("qs")).first()
+        row = df.agg(
+            F.expr(f"percentile_approx({_ident(col)}, array(0.25, 0.75))").alias("qs")
+        ).first()
         q1, q3 = row["qs"]
     return q3 + k * (q3 - q1)
 
@@ -82,10 +84,12 @@ def clip_outliers(df: DataFrame, col: str, lo_q: float = 0.01, hi_q: float = 0.9
         lo, hi = exact_quantiles_select(df, col, [lo_q, hi_q])
     else:
         row = df.agg(
-            F.expr(f"percentile_approx({col}, array({lo_q}, {hi_q}))").alias("qs")
+            F.expr(f"percentile_approx({_ident(col)}, array({lo_q}, {hi_q}))").alias("qs")
         ).first()
-        lo, hi = row["qs"]
-    return df.withColumn(col, F.greatest(F.lit(lo), F.least(F.lit(hi), F.col(col))))
+        # an all-null column has no quantiles: pass it through, as the
+        # exact path's (None, None) bounds do
+        lo, hi = row["qs"] or (None, None)
+    return df.withColumn(col, F.greatest(F.lit(lo), F.least(F.lit(hi), F.col(_ident(col)))))
 
 
 def mad_robust_outliers(
@@ -228,8 +232,8 @@ def batched_thresholds(
 def impute_mean(df: DataFrame, cols: list[str]) -> DataFrame:
     """Mean imputation (reference A3/M1, Imputer(strategy="mean")
     lib/utils.py:209-213) as one stats aggregation + one projection."""
-    row = df.agg(*[F.avg(F.col(c)).alias(c) for c in cols]).first()
-    return df.withColumns({c: F.coalesce(F.col(c), F.lit(row[c])) for c in cols})
+    row = df.agg(*[F.avg(F.col(_ident(c))).alias(c) for c in cols]).first()
+    return df.withColumns({c: F.coalesce(F.col(_ident(c)), F.lit(row[c])) for c in cols})
 
 
 def impute_median(df: DataFrame, cols: list[str], exact: bool = True) -> DataFrame:

@@ -468,3 +468,36 @@ def test_engine_round13_facades(spark):
     )
     rq = eng.ranking_quality(ranked, ranked, k=2).first()
     assert rq["ndcg"] == pytest.approx(1.0) and rq["mrr"] == 1.0
+
+
+def test_score_output_is_materialized_for_later_consumers(spark):
+    """score() returns a lazily checkpointed relation: once one consumer
+    has run, the next one reads those rows — its plan has no scoring UDF —
+    and gets the values the unmaterialized relation gives."""
+    from dataquality_ml_spark.ml import detectors as det
+    from dataquality_ml_spark.ml import features as feat
+    from dataquality_ml_spark.operators import thresholds as th
+
+    eng = DQEngine(spark)
+    telemetry = spark.createDataFrame(_fixture_rows(), SCHEMA)
+    test = telemetry.where(F.col("date") == "2024-12-25")
+    fitted = eng.fit_detector(
+        telemetry.where(F.col("date") < "2024-12-25"),
+        roles={"numeric": ["smart_1", "smart_2"], "categorical": ["model"], "boolean": []},
+        detector="pca",
+        n_components=1,
+    )
+    scored = eng.score(test, fitted)
+    conf = eng.evaluate(scored).first()
+    auc = eng.auc(scored)
+    assert "ArrowEvalPython" not in auc._jdf.queryExecution().optimizedPlan().toString()
+
+    recomputed = th.flag_anomalies(
+        det.score_distributed(feat.apply_features(test, fitted.features), fitted.model),
+        "score",
+        fitted.threshold,
+    )
+    assert "ArrowEvalPython" in recomputed._jdf.queryExecution().optimizedPlan().toString()
+    assert conf == eng.evaluate(recomputed).first()
+    assert auc.first() == eng.auc(recomputed).first()
+    assert sorted(scored.collect()) == sorted(recomputed.collect())

@@ -251,9 +251,9 @@ def test_mllib_pipeline_parity(telemetry):
 
 
 def test_apply_features_high_cardinality_broadcast(spark):
-    """10k-category column: the chained-when path can't codegen this (JVM
-    64KB method limit); the broadcast-join path must produce the same
-    indices the when-chain gives at low cardinality."""
+    """10k-category column: the CASE path can't codegen this (JVM 64KB
+    method limit); the broadcast-join path must produce the same indices
+    the CASE expression gives at low cardinality."""
     n = 10_000
     df = spark.createDataFrame(
         [(i, f"cat_{i:05d}", float(i % 7)) for i in range(n)],
@@ -472,6 +472,38 @@ def test_feature_model_memo_invalidates_on_data_change(spark, tmp_path):
     _, m2 = _lineitem_features(spark, str(tmp_path))
     assert m2 is not m1  # regenerated data → refit
     clear_feature_model_memo()
+
+
+def test_fit_features_top_k_cut_only_over_the_cap(spark, monkeypatch):
+    """Under max_categories the frequency collect is a plain grouped count
+    (no salted top-k windows) and the categories equal a direct groupBy
+    count's frequencyDesc order; over it, the top-k windows run."""
+    rows = [(f"v{i % 7}", f"w{i % 3}") for i in range(50)] + [("v6", None)] * 4
+    df = spark.createDataFrame(rows, "a string, b string")
+    roles = {"numeric": [], "categorical": ["a", "b"], "boolean": []}
+    plans: list[str] = []
+    cls = type(df)
+    collect = cls.collect
+
+    def recording(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording)
+    model = feat.fit_features(df, roles=roles, label_col=None, max_categories=10)
+    under = list(plans)
+    plans.clear()
+    feat.fit_features(df, roles=roles, label_col=None, max_categories=5, on_overflow="keep")
+    over = list(plans)
+    monkeypatch.undo()
+
+    assert under and not any("Window" in p for p in under)
+    assert any("Window" in p for p in over)
+    for c in ("a", "b"):
+        counts = df.where(F.col(c).isNotNull()).groupBy(c).count().collect()
+        want = [r[c] for r in sorted(counts, key=lambda r: (-r["count"], r[c]))]
+        assert model.categories[c] == want, c
+    assert model.overflow == {}
 
 
 def test_fit_features_max_categories_cap(spark, telemetry):

@@ -1,9 +1,10 @@
-"""Driver-side plan construction: the per-column operators build their
-aggregations and melts from SQL text (quoting of awkward column names, py4j
-round-trip budget), the feature pipeline, the drift reports, the entropy
-profile and median imputation quote awkward names too, the session turns off
-per-call origin capture, and the dedup, text and similarity pipelines leave
-no entries in the session's CacheManager."""
+"""Driver-side plan construction: the per-column operators and the feature
+projection build their aggregations, melts and expressions from SQL text
+(quoting of awkward column names, py4j round-trip budgets), the feature
+pipeline, the drift reports, the entropy profile and the threshold and
+imputation helpers quote awkward names too, the session turns off per-call
+origin capture, and the dedup, text, similarity and sequence-detector
+pipelines leave no entries in the session's CacheManager."""
 
 from __future__ import annotations
 
@@ -238,6 +239,82 @@ def test_impute_median_quotes_awkward_names(awkward):
             assert g[c] == want or (want != want and g[c] != g[c]), (c, r[j], g[c])
 
 
+def _approx(raw, q):
+    """``percentile_approx`` below its 10k accuracy: the element at rank
+    ceil(q·n) of the non-null values, NaN sorting last."""
+    return raw[max(math.ceil(q * len(raw)) - 1, 0)] if raw else None
+
+
+def _same(a, b):
+    """Equal, with NaN equal to NaN and None only to None."""
+    if a is None or b is None:
+        return a is None and b is None
+    return a == b or (a != a and b != b)
+
+
+def _spark_clip(x, lo, hi):
+    """greatest(lo, least(hi, x)): NULL arguments are skipped and NaN is
+    larger than every other double."""
+    def key(v):
+        return (v != v, v if v == v else 0)
+
+    def pick(f, *vals):
+        vals = [v for v in vals if v is not None]
+        return f(vals, key=key) if vals else None
+
+    return pick(max, lo, pick(min, hi, x))
+
+
+def test_approx_thresholds_quote_awkward_names(awkward):
+    """percentile_threshold, iqr_threshold and clip_outliers on their
+    sketch paths splice the column into ``percentile_approx`` text."""
+    df, rows = awkward
+    for c, (_n, _v, raw) in _oracle(rows).items():
+        got = th.percentile_threshold(df, c, 0.9, exact=False)
+        assert _same(got, _approx(raw, 0.9)), c
+        if raw:
+            q1, q3 = _approx(raw, 0.25), _approx(raw, 0.75)
+            assert _same(th.iqr_threshold(df, c, k=1.5, exact=False), q3 + 1.5 * (q3 - q1)), c
+        lo, hi = _approx(raw, 0.1), _approx(raw, 0.9)
+        clipped = th.clip_outliers(df, c, 0.1, 0.9, exact=False)
+        assert clipped.columns == df.columns, c
+        j = COLS.index(c)
+        for r, g in zip(rows, clipped.collect()):
+            assert _same(g[c], _spark_clip(r[j], lo, hi)), (c, r[j], g[c])
+
+
+def test_impute_mean_quotes_awkward_names(awkward):
+    """Nulls take the mean of the non-null values (a NaN makes it NaN);
+    the all-null column stays null."""
+    df, rows = awkward
+    got = th.impute_mean(df, COLS).collect()
+    assert len(got) == len(rows)
+    for j, c in enumerate(COLS):
+        vals = [r[j] for r in rows if r[j] is not None]
+        mean = float(np.mean(vals)) if vals else None
+        for r, g in zip(rows, got):
+            want = mean if r[j] is None else r[j]
+            assert _same(g[c], want) or _close(g[c], want), (c, r[j], g[c])
+
+
+def test_binned_feature_drift_report_drops_all_null_column(awkward):
+    """A column without a value drops out of the binned panel whether its
+    bounds are inferred from two frames or from one tagged scan, as it
+    does unbinned."""
+    df, _rows = awkward
+    is_one = F.col(prof._ident(DOT)) == 1
+    a, b = df.where(is_one), df.where(~is_one)
+    got = [
+        {r["column"] for r in out.collect()}
+        for out in (
+            dr.feature_drift_report(a, b, COLS),
+            dr.feature_drift_report(a, b, COLS, bins=8),
+            dr.feature_drift_report(df, None, COLS, bins=8, split=is_one),
+        )
+    ]
+    assert got == [set(COLS) - {TICK}] * 3
+
+
 def _telemetry_shaped(spark):
     """38 numeric columns like a telemetry_batch snapshot (SMART
     normalized doubles with NaN, raw longs, capacity) plus string keys."""
@@ -298,6 +375,62 @@ def test_feature_drift_report_py4j_budget(spark, monkeypatch, debugging, budget)
     assert out.count() == 38
 
 
+@pytest.mark.parametrize("debugging", [True, False])
+def test_apply_features_py4j_budget(spark, monkeypatch, debugging):
+    """Building the feature projection on the 38-column frame plus a
+    40-category column and a boolean: SQL text, ~50 round trips either
+    way. A ``Column``-API build (one ``when`` per category, one node per
+    operator) took ~1,950 with origin capture off and ~7,700 on."""
+    df = _telemetry_shaped(spark).withColumns(
+        {"model_40": F.expr("concat('m', serial_number)"), "flag": F.expr("failure = 0")}
+    )
+    num = prof.numeric_columns(df)
+    model = feat.FeatureModel(
+        numeric_cols=num,
+        bool_cols=["flag"],
+        categorical_cols=["model_40"],
+        impute={c: 1.5 for c in num},
+        mean={c: 2.0 for c in num},
+        std={c: 3.0 for c in num},
+        categories={"model_40": [f"m{i}" for i in range(40)]},
+    )
+    monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
+    calls = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    out = feat.apply_features(df, model)
+    monkeypatch.undo()
+    assert calls[0] > 0
+    assert calls[0] <= 200, calls[0]
+    got = {r["serial_number"]: r["features"] for r in out.collect()}
+    assert len(got) == 8 and all(len(v) == 40 for v in got.values())
+    assert [got[str(i)][0] for i in range(8)] == [float(i) for i in range(8)]
+
+
+def test_apply_features_replaces_existing_out_column(spark):
+    """``out`` follows ``withColumn``: a column of that name is replaced in
+    place, not duplicated."""
+    df = spark.createDataFrame([(1.0, "a", 7), (3.0, "b", 8)], "x double, c string, features int")
+    model = feat.FeatureModel(
+        numeric_cols=["x"], categorical_cols=["c"], impute={"x": 2.0},
+        mean={"x": 2.0}, std={"x": 1.0}, categories={"c": ["b", "a"]},
+    )
+    out = feat.apply_features(df, model, out="features")
+    assert out.columns == ["x", "c", "features", "c_idx", "x_scaled"]
+    assert out.schema["features"].dataType.simpleString() == "array<double>"
+    got = sorted(tuple(r["features"]) for r in out.collect())
+    assert got == [(0.0, 1.0), (1.0, -1.0)]
+    # a source column named like the output, via a non-default out
+    again = feat.apply_features(df, model, out="c")
+    assert again.columns == ["x", "c", "features", "c_idx", "x_scaled"]
+    assert sorted(tuple(r["c"]) for r in again.collect()) == got
+
+
 def test_session_turns_off_origin_capture(spark):
     """get_spark() sets the flag; extra_conf can turn it back on. It is a
     static conf, fixed when the JVM starts, so the "true" case needs a
@@ -342,7 +475,7 @@ def test_dedup_pipelines_leave_no_cache_entries(spark):
 @pytest.mark.parametrize("cutoff", [100, 1])
 def test_fit_and_apply_features_quote_awkward_names(spark, cutoff):
     """A dotted numeric column and a backticked categorical column, through
-    both categorical encodings (when-chain, and the broadcast join above
+    both categorical encodings (CASE expression, and the broadcast join above
     ``broadcast_cutoff``)."""
     rows = [(1.0, "a"), (3.0, "b"), (None, "a"), (float("nan"), None), (5.0, "c")]
     df = spark.createDataFrame(rows, f"`{DOT}` double, `{TICK.replace('`', '``')}` string")
@@ -390,4 +523,22 @@ def test_text_and_similarity_operators_leave_no_cache_entries(spark):
         assert uni == {1: 4, 2: 2, 3: 3}
         assert pmi["a b"] == 2
         assert (0, 1) in pairs
+    assert cache.isEmpty()
+
+
+def test_failed_sequence_fit_leaves_no_cache_entries(spark):
+    """An unknown detector raises after the windowed relation is built; it
+    must not leave a CacheManager entry behind."""
+    from dataquality_ml_spark.engine import DQEngine
+
+    df = spark.createDataFrame(
+        [(k, t, float(t * k), 0) for k in range(3) for t in range(8)],
+        "k bigint, ts bigint, v double, failure int",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other tests' cached frames are not ours
+    with pytest.raises(ValueError, match="unknown sequence detector"):
+        DQEngine(spark).fit_sequence_detector(
+            df, key="k", order="ts", features="v", timesteps=3, detector="nope"
+        )
     assert cache.isEmpty()
