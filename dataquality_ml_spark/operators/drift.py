@@ -1,5 +1,6 @@
 """Distribution-drift operators: PSI, two-sample KS / Cramér–von Mises /
-Mann–Whitney rank-sum, Q-Q drift table, chi-square, mutual information.
+Mann–Whitney rank-sum / Anderson–Darling, Q-Q drift table, chi-square,
+mutual information, and the per-feature drift report.
 
 The reference retrains and re-evaluates daily snapshots but never tests
 whether today's data still looks like the training data (its only guard is
@@ -13,20 +14,25 @@ collect of row data.
   Fixed (lo, hi) edges make the result deterministic and engine-portable
   (no data-dependent quantile edges), and mean the whole computation is a
   single groupBy per side over a clamped ``floor((x-lo)/w)`` bucket id.
-- ``ks_statistic``: exact two-sample Kolmogorov-Smirnov D. Pre-aggregates
-  to one row per distinct value (groupBy), then takes the running-CDF
-  difference with a global-order window over those GROUPED rows — the
-  window sees |distinct values| rows, not |rows|. For truly unbounded
-  domains use ``bins=`` (binned KS): O(bins) rows, sketch-mergeable, the
-  100 TB path (D error ≤ bin probability mass).
+- One ECDF path: every two-sample test reads one relation with a row per
+  distinct pooled value (or bucket id) carrying per-side counts, running
+  counts and side totals. ``_ecdf_from_tagged`` builds it from a tagged
+  (``*keys``, v, in_a) relation; ``_ecdf_counts`` tags two frames and
+  ``feature_drift_report`` tags one melt of every panel column. Exact mode
+  takes the running counts from a distributed prefix sum (a continuous
+  column has ~|rows| distinct values); ``bins=`` takes them from a window
+  over bucket ids — O(bins) rows, the 100 TB path.
+- ``ks_statistic``: exact two-sample Kolmogorov-Smirnov D over that
+  relation (binned KS: D error ≤ bin probability mass).
+- ``cvm_statistic`` / ``rank_sum_test`` / ``anderson_darling`` /
+  ``qq_table``: the body-shift, rank-based, tail-weighted and localized
+  complements to KS, on the same relation. ``drift_panel`` computes KS,
+  Mann–Whitney, CvM and AD in one aggregation; each of their formulas is
+  written once, as SQL text (``_PANEL_AGG`` / ``_PANEL_OUT``), and the
+  keyed standalone operators select the same fragments.
 - ``chi2_independence``: chi-square statistic of independence between two
   categorical columns from the (a, b) contingency counts — one groupBy,
   margins derived with window sums (no second scan).
-- ``cvm_statistic`` / ``rank_sum_test`` / ``qq_table`` (round 8): the
-  body-shift, rank-based, and localized complements to KS — all on the
-  same grouped-distinct-value + distributed-prefix-sum machinery
-  (``_ecdf_counts``), so none of them funnels a row-sized relation
-  through one task.
 - ``mutual_information``: scale-free dependence effect size over the same
   contingency shape as chi2.
 """
@@ -36,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dataquality_ml_spark.operators.profile import _ident, _melt_sql
+from dataquality_ml_spark.operators.profile import _ident, _melt_sql, _str_lit
 
 EPS = 1e-6  # proportion clamp so empty bins don't produce ±inf PSI terms
 
@@ -52,9 +58,10 @@ def _bucket(col, lo: float, hi: float, bins: int):
 def _bin_props(df: DataFrame, col: str, lo: float, hi: float, bins: int, out: str) -> DataFrame:
     """(bin, proportion) in one scan: groupBy the bucket id, window-sum the
     per-bin counts into a total (the window runs over ≤``bins`` rows)."""
+    c = F.col(_ident(col))
     counts = (
-        df.where(F.col(col).isNotNull())
-        .groupBy(_bucket(F.col(col), lo, hi, bins).alias("bin"))
+        df.where(c.isNotNull())
+        .groupBy(_bucket(c, lo, hi, bins).alias("bin"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     total = Window.partitionBy()
@@ -80,13 +87,12 @@ def psi_bins(
     Cost at any scale: one scan per side → ≤2·bins rows. Missing bins are
     restored from a generated spine so both engines agree on row count.
 
-    ``split`` (round 14, the ``feature_drift_report(split=)`` contract):
-    a boolean Column over ``ref`` naming the two-sample split — ``cur``
-    must then be None. ONE scan, tagged per row (1/0/NULL-dropped),
-    ONE groupBy(bin) carrying both sides' counts — at 100 TB the second
-    scan of the same table is pure I/O (guide §2.3/§6). Proportions are
-    the same integer-count divisions, so results are bit-identical to
-    the two-frame form for a null-free predicate.
+    ``split``: a boolean Column over ``ref`` naming the two-sample split —
+    ``cur`` must then be None. ONE scan, tagged per row (1/0/NULL-dropped),
+    ONE groupBy(bin) carrying both sides' counts, instead of a second scan
+    of the same table. Proportions are the same integer-count divisions,
+    so results are bit-identical to the two-frame form for a null-free
+    predicate.
     """
     if (split is not None) and cur is not None:
         raise ValueError(
@@ -98,10 +104,11 @@ def psi_bins(
     spark = ref.sparkSession
     spine = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
     if split is not None:
+        c = F.col(_ident(col))
         counts = (
-            ref.where(F.col(col).isNotNull())
+            ref.where(c.isNotNull())
             .select(
-                _bucket(F.col(col), lo, hi, bins).alias("bin"),
+                _bucket(c, lo, hi, bins).alias("bin"),
                 F.when(split, 1).when(~split, 0).alias("in_r"),
             )
             .where(F.col("in_r").isNotNull())
@@ -166,30 +173,15 @@ def _ecdf_counts(
     hi: float | None = None,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """Shared ECDF machinery for the two-sample tests (KS, CvM, rank-sum):
-    one row per distinct pooled value/bucket carrying per-side counts
-    (n_a, n_b), INCLUSIVE running counts (ca, cb), and the side totals
-    (tot_a, tot_b) joined back from a per-group aggregate.
-
-    Exact mode (``bins=None``): the running counts ride ONE
-    ``exclusive_prefix_sum`` pass (round 8 — for continuous columns
-    |distinct| ≈ |rows|, so an unpartitioned ``Window.orderBy(v)``
-    cumulative here was the VERDICT r7 item 1 funnel).
-
-    Binned mode: a bounded window over ``_bucket`` ids — O(bins) rows by
-    a constant knob, no decomposition needed.
-
-    ``keys``: per-SEGMENT two-sample tests in the same single pass — the
-    prefix sums restart per key (``exclusive_prefix_sum(keys=...)``), the
-    binned window partitions on the keys, and the totals join on them.
-    Parallelism GROWS with segment count; nothing funnels.
-    """
+    """The ECDF relation of column ``col`` of two frames: their non-null
+    values (or ``_bucket`` ids with ``bins=``) tagged 1 and 0 in one
+    union, handed to :func:`_ecdf_from_tagged`. ``keys`` makes every
+    statistic over it per segment."""
     keys = list(keys or [])
-    key = _bucket(F.col(col), lo, hi, bins) if bins else F.col(col)
-    a = a.where(F.col(col).isNotNull())
-    b = b.where(F.col(col).isNotNull())
-    tagged = a.select(*keys, key.alias("v"), F.lit(1).alias("in_a")).unionAll(
-        b.select(*keys, key.alias("v"), F.lit(0).alias("in_a"))
+    c = F.col(_ident(col))
+    key = _bucket(c, lo, hi, bins) if bins else c
+    tagged = a.where(c.isNotNull()).select(*keys, key.alias("v"), F.lit(1).alias("in_a")).unionAll(
+        b.where(c.isNotNull()).select(*keys, key.alias("v"), F.lit(0).alias("in_a"))
     )
     return _ecdf_from_tagged(tagged, keys, bounded=bool(bins))
 
@@ -197,25 +189,25 @@ def _ecdf_counts(
 def _ecdf_from_tagged(
     tagged: DataFrame, keys: list[str], bounded: bool
 ) -> DataFrame:
-    """ECDF build over a PRE-TAGGED (``*keys``, v, in_a) relation — the
-    shared back half of :func:`_ecdf_counts`, exposed so single-scan
-    callers (``feature_drift_report(split=)``) can tag one scan instead
-    of unioning two filtered scans of the same source (guide §2.3/§6:
-    at 100 TB the second scan is the cost). ``bounded=True`` selects the
-    bounded-window path (correct whenever |distinct v| is bounded by a
-    knob — bucket ids); ``bounded=False`` the distributed prefix-sum
-    decomposition. Both produce identical integer ca/cb/tot columns."""
+    """The ECDF relation every two-sample test reads, from a tagged
+    (``*keys``, v, in_a) relation (in_a 1 for side a, 0 for side b; no
+    NULL tag or value): one row per (key tuple, distinct v) with per-side
+    counts (n_a, n_b), INCLUSIVE running counts (ca, cb) in v order and
+    the side totals (tot_a, tot_b).
+
+    ``bounded=True`` (bucket ids, |distinct v| bounded by a knob) takes the
+    running counts and totals from one keyed window pass;
+    ``bounded=False`` from the distributed prefix-sum decomposition, so
+    no window funnels ~|rows| distinct values through one task. Both give
+    identical integer ca/cb/tot columns."""
     per_v = tagged.groupBy(*keys, "v").agg(
         F.sum("in_a").alias("n_a"),
         F.sum(1 - F.col("in_a")).alias("n_b"),
     )
     if bounded:
-        # Bounded bucket relation: the side totals ride the SAME keyed
-        # window pass as the running counts (full-frame sum over the
-        # identical partitioning — one exchange, zero joins), instead of
-        # re-aggregating the upstream melt/scan a second time just to
-        # attach tot_a/tot_b (the pre-round-13 shape paid the whole
-        # upstream twice; guide §2.4).
+        # the side totals ride the same keyed window pass as the running
+        # counts (same partitioning: one exchange, no join, no second
+        # aggregation of the upstream relation)
         run = (
             Window.partitionBy(*keys)
             .orderBy("v")
@@ -238,11 +230,9 @@ def _ecdf_from_tagged(
         exclusive_prefix_sum,
     )
 
-    # Exact mode: the decomposition's driver-side subtotal collect already
-    # holds the per-key grand totals — read them back (with_totals) rather
-    # than re-running the whole upstream scan + union + groupBy for a
-    # tots aggregation (the pre-round-13 shape computed the melted
-    # relation twice per panel; guide §1.2/§2.4).
+    # the decomposition's driver-side subtotal collect already holds the
+    # per-key grand totals: read them back (with_totals) instead of
+    # aggregating the upstream relation a second time
     cum, tot_map = exclusive_prefix_sum(
         per_v,
         "v",
@@ -262,7 +252,7 @@ def _ecdf_from_tagged(
     if keys:
         # eqNullSafe, not a plain equi-join: a NULL-keyed segment is a
         # real group (GROUP BY semantics on both engines keep it), and a
-        # plain join would silently drop it — round-8 bug class.
+        # plain join would silently drop it
         key_schema = ", ".join(
             f"__t_{k} {per_v.schema[k].dataType.simpleString()}" for k in keys
         )
@@ -282,6 +272,109 @@ def _ecdf_from_tagged(
         "*",
         F.lit(int(ta)).cast("bigint").alias("tot_a"),
         F.lit(int(tb)).cast("bigint").alias("tot_b"),
+    )
+
+
+# The two-sample panel over an ECDF relation, written once as SQL text:
+# ``_PANEL_AGG`` holds the per-segment aggregates of the per-row terms,
+# ``_PANEL_OUT`` the finishing expressions over those aggregates. Double
+# literals carry a D suffix (a bare 2.0 is a DECIMAL in Spark SQL).
+_CNT = "(n_a + n_b)"
+_CDF = "CASE WHEN tot_{s} > 0 THEN c{s} / tot_{s} ELSE 0.0D END"
+# CvM numerator terms are exact integers in DECIMAL(38,0), cast BEFORE any
+# product: the bigint products (ca·tot_b, N²·tot_a·tot_b) overflow int64
+# well before 100 TB row counts
+_GAP = "(CAST(ca AS DECIMAL(38,0)) * tot_b - CAST(cb AS DECIMAL(38,0)) * tot_a)"
+_CVM_TERM = f"CAST({_CNT} AS DECIMAL(38,0)) * {_GAP} * {_GAP}"
+_CVM_DEN = (
+    "CAST(tot_a + tot_b AS DECIMAL(38,0)) * CAST(tot_a + tot_b AS DECIMAL(38,0))"
+    " * tot_a * tot_b"
+)
+# Anderson–Darling (Scholz & Stephens 1987, A²_akN, k = 2): l is the pooled
+# multiplicity, B the pooled count ≤ v minus l/2
+_L = f"CAST({_CNT} AS DOUBLE)"
+_N = "CAST(tot_a + tot_b AS DOUBLE)"
+_B = f"(CAST(ca + cb AS DOUBLE) - {_L} / 2)"
+_AD_DEN = f"({_B} * ({_N} - {_B}) - {_N} * {_L} / 4)"
+
+
+def _ad_sum(s: str) -> str:
+    """Side ``s``'s A² inner sum: M is its count ≤ v minus half its count
+    at v; the gap is squared as g·g (Math.pow is only ≤1 ulp exact)."""
+    g = f"({_N} * (CAST(c{s} AS DOUBLE) - n_{s} / 2) - tot_{s} * {_B})"
+    return (
+        f"sum(CASE WHEN {_AD_DEN} > 0 AND tot_{s} > 0 "
+        f"THEN {_L} / {_N} * ({g} * {g}) / {_AD_DEN} / tot_{s} ELSE 0.0D END)"
+    )
+
+
+_PANEL_AGG = {
+    "ks_d": f"max(abs({_CDF.format(s='a')} - {_CDF.format(s='b')}))",
+    # n_a · pooled midrank: rows strictly below v plus (ties + 1) / 2
+    "ra": f"sum(n_a * ((ca + cb - {_CNT}) + ({_CNT} + 1) / 2.0D))",
+    "ties": f"CAST(sum({_CNT} * {_CNT} * {_CNT} - {_CNT}) AS DOUBLE)",
+    "cvm_s": f"sum({_CVM_TERM})",
+    "cvm_den": f"max({_CVM_DEN})",
+    # under ansi off an overflowing DECIMAL(38,0) term becomes NULL and
+    # sum SKIPS it, so a non-null sum can still be wrong: the finishing
+    # guard compares the row count with the non-null term counts
+    "cvm_rows": "count(1)",
+    "cvm_terms": f"count({_CVM_TERM})",
+    "cvm_denoms": f"count({_CVM_DEN})",
+    "ad_a": _ad_sum("a"),
+    "ad_b": _ad_sum("b"),
+}
+_NA, _NB = "CAST(n_a AS DOUBLE)", "CAST(n_b AS DOUBLE)"
+_NN = f"({_NA} + {_NB})"
+_U = f"(ra - {_NA} * ({_NA} + 1) / 2)"
+_MU = f"({_NA} * {_NB} / 2)"
+_VAR = f"({_NA} * {_NB} / 12 * (({_NN} + 1) - ties / ({_NN} * ({_NN} - 1))))"
+_CVM_OK = (
+    "(cvm_s IS NOT NULL AND cvm_den IS NOT NULL AND cvm_terms = cvm_rows"
+    " AND cvm_denoms = cvm_rows) OR n_a IS NULL"
+)
+_CVM_OVERFLOW = (
+    "cvm_statistic exact path: DECIMAL(38,0) overflow — pooled n exceeds the "
+    "~2e9-row exact ceiling; rerun with cvm_statistic(exact=False) "
+    "(normalized double gaps)"
+)
+_PANEL_OUT = {
+    "ks_d": "ks_d",
+    "u_stat": _U,
+    # NaN > 0 is TRUE under Spark's NaN-greatest ordering, so the n == 1
+    # guard must be explicit, not folded into var > 0
+    "z_score": (
+        f"CASE WHEN {_NA} > 0 AND {_NB} > 0 AND {_VAR} > 0 "
+        f"THEN ({_U} - {_MU}) / sqrt({_VAR}) END"
+    ),
+    # one-sided segments have denominator 0 and report NULL
+    "cvm_t": (
+        f"CASE WHEN {_CVM_OK} THEN CASE WHEN cvm_den = 0 THEN CAST(NULL AS DOUBLE)"
+        " ELSE CAST(cvm_s AS DOUBLE) / CAST(cvm_den AS DOUBLE) END"
+        f" ELSE raise_error({_str_lit(_CVM_OVERFLOW)}) END"
+    ),
+    "ad_a2": (
+        "CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS DOUBLE)"
+        f" ELSE ({_NN} - 1) / {_NN} * (ad_a + ad_b) END"
+    ),
+}
+
+
+def _panel(ec: DataFrame, keys: list[str], aggs: list[str], outs: list[str]) -> DataFrame:
+    """(``*keys``, ``*outs``, n_a, n_b) per key tuple of the ECDF relation
+    ``ec``: one aggregation of the ``_PANEL_AGG`` terms ``aggs`` and the
+    side totals, then one projection of the ``_PANEL_OUT`` expressions
+    ``outs``."""
+    agg = ec.groupBy(*keys).agg(
+        *[F.expr(f"{_PANEL_AGG[a]} AS {a}") for a in aggs],
+        F.expr("max(tot_a) AS n_a"),
+        F.expr("max(tot_b) AS n_b"),
+    )
+    return agg.selectExpr(
+        *[_ident(k) for k in keys],
+        *[f"{_PANEL_OUT[o]} AS {o}" for o in outs],
+        "n_a",
+        "n_b",
     )
 
 
@@ -345,24 +438,8 @@ def ks_by_group(
     ``_ecdf_counts`` relation — same sharing contract as the
     ``ks_statistic``/``cvm_statistic``/``drift_panel`` siblings.
     """
-    cdf = (
-        ecdf if ecdf is not None else _ecdf_counts(a, b, col, bins, lo, hi, keys=keys)
-    ).select(
-        *keys,
-        F.when(F.col("tot_a") > 0, F.col("ca") / F.col("tot_a"))
-        .otherwise(F.lit(0.0))
-        .alias("cdf_a"),
-        F.when(F.col("tot_b") > 0, F.col("cb") / F.col("tot_b"))
-        .otherwise(F.lit(0.0))
-        .alias("cdf_b"),
-        "tot_a",
-        "tot_b",
-    )
-    return cdf.groupBy(*keys).agg(
-        F.max(F.abs(F.col("cdf_a") - F.col("cdf_b"))).alias("ks_d"),
-        F.max("tot_a").alias("n_a"),
-        F.max("tot_b").alias("n_b"),
-    )
+    ec = ecdf if ecdf is not None else _ecdf_counts(a, b, col, bins, lo, hi, keys=keys)
+    return _panel(ec, keys, ["ks_d"], ["ks_d"])
 
 
 def cvm_statistic(
@@ -416,87 +493,32 @@ def cvm_statistic(
         if ecdf is not None
         else _ecdf_counts(a, b, col, bins, lo, hi, keys=keys or None)
     )
-
-    def _agg(sel, *aggs):
-        return sel.groupBy(*keys).agg(*aggs) if keys else sel.agg(*aggs)
-
-    if not exact:
-        # normalized-double path for N beyond the decimal ceiling:
-        # T = n_a·n_b/N · Σ cnt/N · (F_a − F_b)²  with F_i = c_i/tot_i
-        gap_d = F.col("ca") / F.col("tot_a") - F.col("cb") / F.col("tot_b")
-        cnt_d = (F.col("n_a") + F.col("n_b")).cast("double")
-        agg = _agg(
-            ec.select(
-                *keys, (cnt_d * gap_d * gap_d).alias("s_term"), "tot_a", "tot_b"
-            ),
+    if exact:
+        return _panel(
+            ec,
+            keys,
+            ["cvm_s", "cvm_den", "cvm_rows", "cvm_terms", "cvm_denoms"],
+            ["cvm_t"],
+        )
+    # normalized-double path for N beyond the decimal ceiling:
+    # T = n_a·n_b/N · Σ cnt/N · (F_a − F_b)²  with F_i = c_i/tot_i
+    gap_d = F.col("ca") / F.col("tot_a") - F.col("cb") / F.col("tot_b")
+    cnt_d = (F.col("n_a") + F.col("n_b")).cast("double")
+    agg = (
+        ec.select(*keys, (cnt_d * gap_d * gap_d).alias("s_term"), "tot_a", "tot_b")
+        .groupBy(*keys)
+        .agg(
             F.sum("s_term").alias("s"),
             F.max("tot_a").alias("n_a"),
             F.max("tot_b").alias("n_b"),
         )
-        nn = (F.col("n_a") + F.col("n_b")).cast("double")
-        return agg.select(
-            *keys,
-            (F.col("n_a") * F.col("n_b") / (nn * nn) * F.col("s")).alias(
-                "cvm_t"
-            ),
-            "n_a",
-            "n_b",
-        )
-    # decimal BEFORE any product: the raw bigint products (ca·tot_b,
-    # N²·tot_a·tot_b) overflow int64 well before 100 TB row counts
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    gap = dec(F.col("ca")) * F.col("tot_b") - dec(F.col("cb")) * F.col("tot_a")
-    n = dec(F.col("tot_a") + F.col("tot_b"))
-    term = dec(F.col("n_a") + F.col("n_b")) * gap * gap
-    agg = _agg(
-        ec.select(
-            *keys,
-            term.alias("s_term"),
-            (n * n * F.col("tot_a") * F.col("tot_b")).alias("denom"),
-            "tot_a",
-            "tot_b",
-        ),
-        F.sum("s_term").alias("s"),
-        F.max("denom").alias("denom"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("s_term").alias("n_terms"),
-        F.count("denom").alias("n_denoms"),
-        F.max("tot_a").alias("n_a"),
-        F.max("tot_b").alias("n_b"),
     )
-    # fail LOUDLY on decimal overflow instead of returning a
-    # silently-wrong statistic. Under ansi-off an overflowing
-    # DECIMAL(38,0) term becomes NULL and F.sum SKIPS it — if only some
-    # rows overflow (typical: mid-distribution gaps overflow, edge gaps
-    # don't) the sum stays non-null but wrong, so a null-check on the
-    # sum alone is not enough: compare row count to non-null term count
-    # in the same agg. Empty input (n_a null) is a legitimate null
-    # result, not an overflow.
-    ok = (
-        F.col("s").isNotNull()
-        & F.col("denom").isNotNull()
-        & (F.col("n_terms") == F.col("n_rows"))
-        & (F.col("n_denoms") == F.col("n_rows"))
-    ) | F.col("n_a").isNull()
-    # one-sided segments (keyed mode): denom == 0 — report null, not a
-    # division artifact (the KS face reports 1.0 there; CvM's T has no
-    # finite one-sided value)
-    val = F.when(
-        F.col("denom") == 0, F.lit(None).cast("double")
-    ).otherwise(F.col("s").cast("double") / F.col("denom").cast("double"))
+    nn = (F.col("n_a") + F.col("n_b")).cast("double")
     return agg.select(
         *keys,
-        F.when(ok, val)
-        .otherwise(
-            F.raise_error(
-                F.lit(
-                    "cvm_statistic exact path: DECIMAL(38,0) overflow — "
-                    "pooled n exceeds the ~2e9-row exact ceiling; rerun "
-                    "with exact=False (normalized double gaps)"
-                )
-            )
-        )
-        .alias("cvm_t"),
+        (F.col("n_a") * F.col("n_b") / (nn * nn) * F.col("s")).alias(
+            "cvm_t"
+        ),
         "n_a",
         "n_b",
     )
@@ -544,44 +566,7 @@ def rank_sum_test(
         if ecdf is not None
         else _ecdf_counts(a, b, col, keys=keys or None)
     )
-    cnt = F.col("n_a") + F.col("n_b")
-    below = F.col("ca") + F.col("cb") - cnt  # exclusive pooled prefix
-    mr = below + (cnt + F.lit(1)) / F.lit(2.0)
-    sel = ec.select(
-        *keys,
-        (F.col("n_a") * mr).alias("ra_term"),
-        (cnt * cnt * cnt - cnt).alias("tie_term"),
-        "tot_a",
-        "tot_b",
-    )
-    aggs = [
-        F.sum("ra_term").alias("ra"),
-        F.sum("tie_term").cast("double").alias("ties"),
-        F.max("tot_a").cast("double").alias("na"),
-        F.max("tot_b").cast("double").alias("nb"),
-    ]
-    agg = sel.groupBy(*keys).agg(*aggs) if keys else sel.agg(*aggs)
-    n = F.col("na") + F.col("nb")
-    u = F.col("ra") - F.col("na") * (F.col("na") + 1) / 2
-    mu = F.col("na") * F.col("nb") / 2
-    var = (
-        F.col("na")
-        * F.col("nb")
-        / 12
-        * ((n + 1) - F.col("ties") / (n * (n - 1)))
-    )
-    return agg.select(
-        *keys,
-        u.alias("u_stat"),
-        # NaN > 0 is TRUE under Spark's NaN-greatest ordering, so the
-        # n==1 guard must be explicit, not folded into var > 0
-        F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0) & (var > 0),
-            (u - mu) / F.sqrt(var),
-        ).alias("z_score"),
-        F.col("na").cast("bigint").alias("n_a"),
-        F.col("nb").cast("bigint").alias("n_b"),
-    )
+    return _panel(ec, keys, ["ra", "ties"], ["u_stat", "z_score"])
 
 
 def anderson_darling(
@@ -624,39 +609,7 @@ def anderson_darling(
         if ecdf is not None
         else _ecdf_counts(a, b, col, bins, lo, hi, keys=keys or None)
     )
-    l = (F.col("n_a") + F.col("n_b")).cast("double")
-    n = (F.col("tot_a") + F.col("tot_b")).cast("double")
-    bb = (F.col("ca") + F.col("cb")).cast("double") - l / 2
-    denom = bb * (n - bb) - n * l / 4
-    terms = []
-    for side, tot in (("a", "tot_a"), ("b", "tot_b")):
-        m = F.col(f"c{side}").cast("double") - F.col(f"n_{side}") / 2
-        gap = n * m - F.col(tot) * bb
-        num = gap * gap  # not **2: Math.pow is ≤1ulp, x·x is exact both engines
-        terms.append(
-            F.sum(
-                F.when(
-                    (denom > 0) & (F.col(tot) > 0),
-                    (l / n) * num / denom / F.col(tot),
-                ).otherwise(0.0)
-            )
-        )
-    aggs = [
-        (terms[0] + terms[1]).alias("inner"),
-        F.max("tot_a").alias("n_a"),
-        F.max("tot_b").alias("n_b"),
-    ]
-    agg = ec.groupBy(*keys).agg(*aggs) if keys else ec.agg(*aggs)
-    nn = (F.col("n_a") + F.col("n_b")).cast("double")
-    one_sided = (F.col("n_a") == 0) | (F.col("n_b") == 0)
-    return agg.select(
-        *keys,
-        F.when(one_sided, F.lit(None).cast("double"))
-        .otherwise((nn - 1) / nn * F.col("inner"))
-        .alias("ad_a2"),
-        "n_a",
-        "n_b",
-    )
+    return _panel(ec, keys, ["ad_a", "ad_b"], ["ad_a2"])
 
 
 def qq_table(
@@ -674,7 +627,7 @@ def qq_table(
     triage report).
 
     Both sides' order statistics are picked straight off the shared
-    ``_ecdf_counts`` relation (round 8): value v occupies sorted index
+    ``_ecdf_counts`` relation: value v occupies sorted index
     range [c−n, c) on each side, so every probe quantile needs only the
     floor/ceil order statistics of q·(tot−1) — a conditional aggregation
     over the distinct-value relation, with the arithmetic of
@@ -794,7 +747,7 @@ def qq_table(
 
 
 def psi_categorical(ref: DataFrame, cur: DataFrame, col: str) -> DataFrame:
-    """Per-CATEGORY PSI decomposition (round 9 — the categorical face of
+    """Per-CATEGORY PSI decomposition (the categorical face of
     ``psi_bins``: language mix, source mix, event-type mix drift):
     (category, p_ref, p_cur, psi_term, psi_total) over the UNION of both
     sides' categories, EPS-clamped like the numeric face so one-sided
@@ -896,9 +849,14 @@ def drift_panel(
     pipeline that wants the whole panel per segment per day should pay
     ONE scan → ONE grouped aggregation — every statistic is a sum/max
     over the same per-distinct-value rows, so they fuse into a single
-    map-side-combined pass. Each formula is shared with its standalone
-    operator (same expression trees — the panel is differential-tested
-    EQUAL to the four operators, not approximately).
+    map-side-combined pass.
+
+    The per-row terms, the aggregate list and the finishing projection
+    are SQL text (``_PANEL_AGG`` / ``_PANEL_OUT``), the same fragments
+    ``ks_by_group``, ``rank_sum_test``, ``cvm_statistic`` and
+    ``anderson_darling`` select, so the panel equals those operators
+    exactly. Building it costs a few dozen py4j round trips, whatever the
+    number of segments or whether PySpark captures call-site origins.
 
     One-sided segments: ks_d = 1.0 (the ``ks_by_group`` convention),
     z_score/cvm_t/ad_a2 = NULL (no finite one-sided value; u_stat stays
@@ -912,102 +870,7 @@ def drift_panel(
         if ecdf is not None
         else _ecdf_counts(a, b, col, keys=keys or None)
     )
-    # --- per-row expressions (identical to the standalone operators) ---
-    cdf_a = F.when(F.col("tot_a") > 0, F.col("ca") / F.col("tot_a")).otherwise(
-        F.lit(0.0)
-    )
-    cdf_b = F.when(F.col("tot_b") > 0, F.col("cb") / F.col("tot_b")).otherwise(
-        F.lit(0.0)
-    )
-    cnt = F.col("n_a") + F.col("n_b")
-    below = F.col("ca") + F.col("cb") - cnt
-    mr = below + (cnt + F.lit(1)) / F.lit(2.0)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    gap = dec(F.col("ca")) * F.col("tot_b") - dec(F.col("cb")) * F.col("tot_a")
-    nn_dec = dec(F.col("tot_a") + F.col("tot_b"))
-    cvm_term = dec(cnt) * gap * gap
-    cvm_denom = nn_dec * nn_dec * F.col("tot_a") * F.col("tot_b")
-    l = cnt.cast("double")
-    nd = (F.col("tot_a") + F.col("tot_b")).cast("double")
-    bb = (F.col("ca") + F.col("cb")).cast("double") - l / 2
-    ad_denom = bb * (nd - bb) - nd * l / 4
-    ad_terms = []
-    for side, tot in (("a", "tot_a"), ("b", "tot_b")):
-        m = F.col(f"c{side}").cast("double") - F.col(f"n_{side}") / 2
-        g = nd * m - F.col(tot) * bb
-        ad_terms.append(
-            F.sum(
-                F.when(
-                    (ad_denom > 0) & (F.col(tot) > 0),
-                    (l / nd) * (g * g) / ad_denom / F.col(tot),
-                ).otherwise(0.0)
-            )
-        )
-    sel = ec.select(
-        *keys, "n_a", "n_b", "ca", "cb", "tot_a", "tot_b"
-    )
-    aggs = [
-        F.max(F.abs(cdf_a - cdf_b)).alias("ks_d"),
-        F.sum(F.col("n_a") * mr).alias("ra"),
-        F.sum(cnt * cnt * cnt - cnt).cast("double").alias("ties"),
-        F.sum(cvm_term).alias("cvm_s"),
-        F.max(cvm_denom).alias("cvm_den"),
-        F.count(F.lit(1)).alias("cvm_rows"),
-        F.count(cvm_term).alias("cvm_terms"),
-        F.count(cvm_denom).alias("cvm_denoms"),
-        ad_terms[0].alias("ad_a"),
-        ad_terms[1].alias("ad_b"),
-        F.max("tot_a").alias("n_a"),
-        F.max("tot_b").alias("n_b"),
-    ]
-    agg = sel.groupBy(*keys).agg(*aggs) if keys else sel.agg(*aggs)
-    # --- driver-free finishing math (same expressions as the operators) ---
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    n = na + nb
-    u = F.col("ra") - na * (na + 1) / 2
-    mu = na * nb / 2
-    var = na * nb / 12 * ((n + 1) - F.col("ties") / (n * (n - 1)))
-    # partial-overflow detection mirrors cvm_statistic's exact path: an
-    # ansi-off DECIMAL(38,0) overflow nulls individual terms and F.sum
-    # SKIPS them, so the sum can be non-null yet wrong — require every
-    # row to have produced a non-null term, not just a non-null sum
-    cvm_ok = (
-        F.col("cvm_s").isNotNull()
-        & F.col("cvm_den").isNotNull()
-        & (F.col("cvm_terms") == F.col("cvm_rows"))
-        & (F.col("cvm_denoms") == F.col("cvm_rows"))
-    ) | F.col("n_a").isNull()
-    cvm_val = F.when(
-        F.col("cvm_den") == 0, F.lit(None).cast("double")
-    ).otherwise(
-        F.col("cvm_s").cast("double") / F.col("cvm_den").cast("double")
-    )
-    one_sided = (F.col("n_a") == 0) | (F.col("n_b") == 0)
-    return agg.select(
-        *keys,
-        "ks_d",
-        u.alias("u_stat"),
-        F.when((na > 0) & (nb > 0) & (var > 0), (u - mu) / F.sqrt(var)).alias(
-            "z_score"
-        ),
-        F.when(cvm_ok, cvm_val)
-        .otherwise(
-            F.raise_error(
-                F.lit(
-                    "drift_panel: CvM DECIMAL(38,0) overflow — pooled n "
-                    "exceeds the ~2e9-row exact ceiling; compute "
-                    "cvm_statistic(exact=False) separately"
-                )
-            )
-        )
-        .alias("cvm_t"),
-        F.when(one_sided, F.lit(None).cast("double"))
-        .otherwise((n - 1) / n * (F.col("ad_a") + F.col("ad_b")))
-        .alias("ad_a2"),
-        "n_a",
-        "n_b",
-    )
+    return _panel(ec, keys, list(_PANEL_AGG), list(_PANEL_OUT))
 
 
 def categorical_drift_report(
@@ -1023,14 +886,13 @@ def categorical_drift_report(
     and the two-sample chi² homogeneity statistic for EVERY string column
     in ONE pass — (column, psi, jsd, chi2, n_a, n_b), one row per column.
 
-    The categorical companion of :func:`feature_drift_report` (round 10,
-    VERDICT r9 item 5): both sides melt (``profile._melt_sql``) to a
-    TAGGED (column, category, in_r) relation — a narrow generate, no
-    shuffle — and ONE groupBy (sum of tags / anti-tags per cell) aligns
-    the two distributions in a single shuffle (NULL is a real category,
-    absent categories count 0 — identical cells to the pre-round-13
-    two-groupBy + null-safe full-outer shape, minus the join), and every
-    statistic is a per-column window/agg over that bounded relation.
+    The categorical companion of :func:`feature_drift_report`: both
+    sides melt (``profile._melt_sql``) to a TAGGED (column, category,
+    in_r) relation — a narrow generate, no shuffle — and ONE groupBy (sum
+    of tags / anti-tags per cell) aligns the two distributions in a
+    single shuffle (NULL is a real category, absent categories count 0,
+    no join), and every statistic is a per-column window/agg over that
+    bounded relation.
     ``split=`` makes the tag a predicate over ONE scan of a shared source
     (``cur=None``).
     Formulas are shared with the standalone operators:
@@ -1047,8 +909,7 @@ def categorical_drift_report(
     segment count. Output gains the key columns, one row per
     (segment, column).
 
-    ``max_categories`` (round 11, VERDICT r10 item 6 — the fit_features
-    on_overflow contract): the "bounded pass" claim is only true while
+    ``max_categories`` (the ``fit_features`` on_overflow contract): the "bounded pass" claim is only true while
     Σ|categories| is bounded; a url/id-like string column at 100 TB makes
     it O(rows). Past the cap, ``on_overflow='error'`` (default) fails
     loudly; ``'keep'`` folds everything outside each column's
@@ -1082,9 +943,8 @@ def categorical_drift_report(
         return df.select(*[F.col(_ident(k)) for k in keys], tag.alias("in_r"), melt)
 
     # ONE tagged relation and ONE groupBy build the aligned category
-    # counts — sum(in_r)/sum(1-in_r) per cell is exactly what the old
-    # two-groupBy + null-safe full-outer + coalesce(0) shape computed,
-    # minus one shuffle and the join (guide §2.4; round 13). With
+    # counts: sum(in_r)/sum(1-in_r) per cell is what two groupBys, a
+    # null-safe full-outer join and coalesce(0) would compute. With
     # ``split`` the tag is a predicate over a SINGLE scan (rows where it
     # is NULL belong to neither side and drop — the two-filter
     # semantics); otherwise the two frames union with literal tags.
@@ -1106,10 +966,9 @@ def categorical_drift_report(
             # the overflow pre-check below evaluates `joined` (the tagged
             # melt + one groupBy) as its own job, and the returned plan
             # reads it again — checkpoint so the check materializes the
-            # SAME relation the statistics consume (guide §2.4; the
-            # round-13 materialize-once class). 'keep' mode has no
+            # SAME relation the statistics consume. 'keep' mode has no
             # separate pre-evaluation job (joined has ONE consumer
-            # there), so it skips the persist (ADVICE r13).
+            # there), so it skips the persist.
             joined = joined.localCheckpoint(eager=False)
             # one bounded reduction over the category counts — never
             # materializes the category relation anywhere central
@@ -1187,6 +1046,51 @@ def categorical_drift_report(
     )
 
 
+def _bucketize(
+    long: DataFrame, columns: list[str], bins: int, bounds: dict | None
+) -> DataFrame:
+    """The tagged melt ``long`` (column, v, in_a; v never NULL) with v
+    replaced by its column's clamped equi-width bucket id in [0, bins) —
+    the IEEE sequence of ``_bucket``, so per-column results equal
+    ``ks_statistic(..., bins=, lo=, hi=)`` & co exactly. Per-column
+    (lo, hi) come from ``bounds`` or, when absent, from one min/max
+    aggregation of ``long``. A constant column (hi == lo) collapses to
+    bucket 0."""
+    if bounds is not None:
+        missing = [c for c in columns if c not in bounds]
+        if missing:
+            raise ValueError(
+                "feature_drift_report: bounds= missing columns "
+                f"{missing} — the bounds join would silently drop "
+                "their rows from the panel"
+            )
+        rows = [(c, float(lo), float(hi)) for c, (lo, hi) in bounds.items()]
+    else:
+        # the min/max collect and the panel both read the melt: checkpoint
+        # so the bounds job materializes the relation the bucketing reads.
+        # Frozen training-time bounds= avoid this pass. A column without a
+        # value gets no bounds row and drops out, as it does unbinned.
+        long = long.localCheckpoint(eager=False)
+        rows = [
+            (r["column"], float(r["lo"]), float(r["hi"]))
+            for r in long.groupBy("column")
+            .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+            .collect()
+        ]
+    spec = long.sparkSession.createDataFrame(
+        rows, "column string, __lo double, __hi double"
+    )
+    w = F.when(
+        F.col("__hi") > F.col("__lo"),
+        (F.col("__hi") - F.col("__lo")) / F.lit(float(bins)),
+    ).otherwise(F.lit(1.0))
+    b = F.least(
+        F.lit(bins - 1),
+        F.greatest(F.lit(0), F.floor((F.col("v") - F.col("__lo")) / w).cast("int")),
+    )
+    return long.join(F.broadcast(spec), "column").select("column", b.alias("v"), "in_a")
+
+
 def feature_drift_report(
     ref: DataFrame,
     cur: DataFrame | None,
@@ -1205,45 +1109,52 @@ def feature_drift_report(
 
     This is the feature-level kill of the reference's per-column job
     loop (reference lib/utils.py:187-195 runs one Spark job per column
-    per statistic): both sides melt to (column, value) through
-    ``profile._melt_sql`` — a narrow generate, no shuffle; any column
-    name works — and ``drift_panel(keys=['column'])`` treats each
-    column as a segment of the SAME keyed ECDF build, so a
-    40-feature drift report costs one scan per side + one grouped
-    aggregation, not 160 jobs. Columns cast to double; NaN/null
-    excluded per column (``_ecdf_counts`` population).
+    per statistic). Every form runs the same steps:
 
-    ``categorical_columns`` (round 10): a real reference-shaped frame
-    mixes string columns in (app/data_augmentation_enhanced.py:26-188
-    carries ~170 mixed columns) — when given, the output widens to
-    (column, ks_d, u_stat, z_score, cvm_t, ad_a2, psi, jsd, chi2, n_a,
-    n_b): numeric rows carry NULL psi/jsd/chi2, categorical rows (from
-    :func:`categorical_drift_report`, one extra bounded pass) carry NULL
-    rank/ECDF statistics. Without it the legacy 8-column schema is
-    returned unchanged.
+    1. ONE tagged source: the panel columns plus a 0/1/NULL tag column —
+       ``ref`` tagged 1 ``UNION ALL`` ``cur`` tagged 0, or, with
+       ``split``, ``ref`` tagged by the predicate. When more than one
+       numeric column is melted, its width follows the optimizer's size
+       estimate (``relational.size_scaled_parallelism``), so a
+       few-fat-files input does not run the melt in one or two tasks.
+    2. ONE melt (``profile._melt_sql``) to (column, v, in_a), values cast
+       to double, keeping rows with a tag and a non-null, non-NaN value —
+       a narrow generate, no shuffle; any column name works.
+    3. With ``bins``, bucket ids replace the values (``_bucketize``).
+    4. ONE keyed ECDF build (``_ecdf_from_tagged(keys=['column'])``) and
+       ``drift_panel`` over it: each column is a segment, so a
+       40-feature report costs one scan + one grouped aggregation, not
+       160 jobs.
 
-    ``bins`` (round 10): the SCALE path — quantize each column into its
-    own ``bins`` equi-width buckets before the keyed ECDF, so the panel
-    reduces over ≤ columns·bins rows instead of the full per-column
-    distinct-value relation (a continuous column at 100 TB has ~|rows|
-    distinct values; the standalone operators' ``bins=`` contract,
-    column-vectorized). Per-column (lo, hi) come from ``bounds``
+    ``categorical_columns``: a real reference-shaped frame mixes string
+    columns in (app/data_augmentation_enhanced.py:26-188 carries ~170
+    mixed columns) — when given, the output widens to (column, ks_d,
+    u_stat, z_score, cvm_t, ad_a2, psi, jsd, chi2, n_a, n_b): numeric
+    rows carry NULL psi/jsd/chi2, categorical rows (from
+    :func:`categorical_drift_report` over the same tagged source) carry
+    NULL rank/ECDF statistics. Without it the 8-column schema is
+    returned. When both panels read the source, it is materialized once.
+
+    ``bins``: the SCALE path — quantize each column into its own ``bins``
+    equi-width buckets before the keyed ECDF, so the panel reduces over
+    ≤ columns·bins rows through a bounded window instead of the full
+    per-column distinct-value relation (a continuous column at 100 TB has
+    ~|rows| distinct values). Per-column (lo, hi) come from ``bounds``
     ({column: (lo, hi)}, e.g. frozen training-time bounds) or, when
-    absent, from one extra narrow min/max aggregation per side; the
-    bucket id is ONE shared expression over broadcast-joined bounds
-    (identical IEEE sequence to the standalone ``_bucket``, so per-column
-    results equal ``ks_statistic(..., bins=, lo=, hi=)`` & co exactly).
-    Constant columns (hi == lo) collapse to bucket 0.
+    absent, from one extra min/max aggregation of the melt.
 
-    ``split`` (round 13, optimization): a boolean Column over ``ref``
-    naming the two-sample split — ``cur`` must then be None. The panel
-    reads the source ONCE and tags rows (1 where the predicate holds,
-    0 where its negation holds, dropped where it is NULL) instead of
-    unioning two filtered scans of the same table — at 100 TB the
-    second scan is pure I/O waste (guide §2.3/§6). Results are
-    row-identical to ``feature_drift_report(ref.where(p),
+    ``split``: a boolean Column over ``ref`` naming the two-sample split
+    — ``cur`` must then be None. The source is read ONCE (1 where the
+    predicate holds, 0 where its negation holds, dropped where it is
+    NULL) instead of as two filtered scans of the same table. Results
+    are row-identical to ``feature_drift_report(ref.where(p),
     ref.where(~p), ...)`` for a null-free predicate.
     """
+    from dataquality_ml_spark.operators.relational import (
+        ensure_parallelism,
+        size_scaled_parallelism,
+    )
+
     if (split is not None) and cur is not None:
         raise ValueError(
             "feature_drift_report: pass EITHER cur (two frames) OR "
@@ -1251,206 +1162,61 @@ def feature_drift_report(
         )
     if split is None and cur is None:
         raise ValueError("feature_drift_report: cur is required without split")
-
-    melt = F.expr(_melt_sql(columns, column="{name}", v="CAST({col} AS DOUBLE)"))
-
-    def _melt(df: DataFrame, tag=None, tag_col: str | None = None) -> DataFrame:
-        # tag (split mode): 1 where the predicate holds, 0 where its
-        # negation holds, NULL (dropped) where it is NULL — exactly the
-        # rows the two-filter form keeps on each side.  tag_col names an
-        # ALREADY-computed 0/1/NULL tag column (the split path computes
-        # it before the parallelism repartition so the exchange carries
-        # only the tag + panel columns, guide §2.3).
-        if tag is not None:
-            pre = [F.when(tag, 1).when(~tag, 0).alias("in_a")]
-        elif tag_col is not None:
-            pre = [F.col(tag_col).alias("in_a")]
-        else:
-            pre = []
-        m = df.select(*pre, melt).where("NOT isnan(v) OR v IS NULL")
-        if pre:
-            # the split form feeds _ecdf_from_tagged directly, so apply
-            # the null-v filter _ecdf_counts would have applied per side
-            m = m.where("in_a IS NOT NULL AND v IS NOT NULL")
-        return m
-
-    def _bucketize(ms: list, extra: list):
-        if bounds is not None:
-            missing = [c for c in columns if c not in bounds]
-            if missing:
-                raise ValueError(
-                    "feature_drift_report: bounds= missing columns "
-                    f"{missing} — the bounds join would silently drop "
-                    "their rows from the panel"
-                )
-            rows = [(c, float(lo), float(hi)) for c, (lo, hi) in bounds.items()]
-        else:
-            # inferring bounds evaluates the melt(s) once for the min/max
-            # collect and the panel evaluates them again — checkpoint so
-            # the bounds job materializes the relation the bucketing
-            # reads (guide §2.4). Production avoids this pass entirely by
-            # passing frozen training-time bounds=.
-            ms = [m.localCheckpoint(eager=False) for m in ms]
-            pooled = ms[0]
-            for m in ms[1:]:
-                pooled = pooled.select("column", "v").unionByName(
-                    m.select("column", "v")
-                )
-            # NULL v (the two-frame melt keeps it) is left out, so a
-            # column without a value gets no bounds row and drops out of
-            # the panel, as it does unbinned and in the split= form
-            rows = [
-                (r["column"], float(r["lo"]), float(r["hi"]))
-                for r in pooled.where("v IS NOT NULL")
-                .groupBy("column")
-                .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-                .collect()
-            ]
-        spec = ms[0].sparkSession.createDataFrame(
-            rows, "column string, __lo double, __hi double"
+    cats = list(categorical_columns or [])
+    if not columns and not cats:
+        raise ValueError("feature_drift_report: no numeric or categorical columns")
+    panel = list(columns) + [c for c in cats if c not in columns]
+    tag = "__in_a"
+    while tag in panel:
+        tag = "_" + tag
+    if split is None:
+        proj = [_ident(c) for c in panel]
+        src = ref.selectExpr(f"1 AS {_ident(tag)}", *proj).unionAll(
+            cur.selectExpr(f"0 AS {_ident(tag)}", *proj)
         )
-        w = F.when(
-            F.col("__hi") > F.col("__lo"),
-            (F.col("__hi") - F.col("__lo")) / F.lit(float(bins)),
-        ).otherwise(F.lit(1.0))
-        # Null-preserving: greatest() skips nulls, so the raw clamp would
-        # turn a NULL v into bucket 0 and inflate n_a/n_b before
-        # _ecdf_counts' null filter runs. Wrap in when(isNotNull) so the
-        # binned path drops nulls exactly where the exact path does.
-        b = F.when(
-            F.col("v").isNotNull(),
-            F.least(
-                F.lit(bins - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor((F.col("v") - F.col("__lo")) / w).cast("int"),
-                ),
+    else:
+        src = ref.select(
+            F.when(split, 1).when(~split, 0).alias(tag),
+            *[F.col(_ident(c)) for c in panel],
+        )
+    if len(columns) > 1:
+        src = ensure_parallelism(
+            src,
+            min_partitions=size_scaled_parallelism(
+                src, row_multiplier=float(len(columns) + len(cats))
             ),
         )
-        def bk(m):
-            return m.join(F.broadcast(spec), "column").select(
-                "column", b.alias("v"), *extra
-            )
-        return [bk(m) for m in ms]
-
-    # Mixed panels, split mode (round 14, VERDICT r13 item 7): ONE
-    # materialized projection of the tag + every panel column feeds BOTH
-    # the numeric and the categorical branch — previously each branch
-    # scanned the source separately (2 scans; at 100 TB the second scan
-    # is pure I/O, guide §2.3/§6). The persisted relation is exactly the
-    # columns the panels read (narrower than the source), and each
-    # branch's algorithm is UNCHANGED — only its input relation is the
-    # shared materialization, so per-branch results are identical by
-    # construction. EAGER: the two branches are consumed inside one
-    # union query, and a lazy persist read by concurrent subtrees races
-    # and recomputes (the r13 pagerank lesson).
-    shared = None
-    if (
-        split is not None
-        and columns
-        and categorical_columns
-        and "__in_a" not in set(columns) | set(categorical_columns)
-    ):
-        from dataquality_ml_spark.operators.relational import (
-            ensure_parallelism,
-            size_scaled_parallelism,
-        )
-
-        extra_cats = [c for c in categorical_columns if c not in columns]
-        shared = ref.select(
-            F.when(split, 1).when(~split, 0).alias("__in_a"),
-            *[F.col(_ident(c)) for c in columns + extra_cats],
-        )
-        if len(columns) > 1:
-            shared = ensure_parallelism(
-                shared,
-                min_partitions=size_scaled_parallelism(
-                    shared,
-                    row_multiplier=float(
-                        len(columns) + len(categorical_columns)
-                    ),
-                ),
-            )
-        shared = shared.localCheckpoint(eager=True)
+    if columns and cats:
+        # EAGER: the two panels are consumed inside one union query, and a
+        # lazy checkpoint read by concurrent subtrees races and recomputes
+        src = src.localCheckpoint(eager=True)
+    num = None
     if columns:
-        if split is not None:
-            # ONE scan of the source, tagged by the split predicate —
-            # the two-filter form reads the same table twice (guide
-            # §2.3/§6: at 100 TB the second scan is the cost). Bucket
-            # ids are knob-bounded, so the binned panel also takes the
-            # bounded-window ECDF (no decomposition, no driver collect).
-            # ensure_parallelism: a few-fat-files source would otherwise
-            # run the whole melt in 1-2 tasks now that there is only one
-            # scan pipeline; no-op when the scan already parallelizes.
-            # Only worth the (possible) repartition when the melt
-            # multiplies rows — a single-column "melt" is a projection
-            # and the shuffle measured slower than the 1-task pipeline.
-            # Round 14 (VERDICT r13 item 1): (a) the tag + panel columns
-            # are PROJECTED before the exchange so it never carries the
-            # source's other columns (guide §2.3), and (b) the width is
-            # sized from the input-bytes estimate, not the core count —
-            # the defaultParallelism-wide shuffle of a ~10 MB scan made
-            # the flagship panel 2× slower cold and slower at 32 cores
-            # than 8 (guide §2.1).
-            src = ref
-            tag_kw: dict = {"tag": split}
-            if shared is not None:
-                src, tag_kw = shared, {"tag_col": "__in_a"}
-            elif len(columns) > 1 and "__in_a" not in columns:
-                from dataquality_ml_spark.operators.relational import (
-                    ensure_parallelism,
-                    size_scaled_parallelism,
-                )
-
-                src = ref.select(
-                    F.when(split, 1).when(~split, 0).alias("__in_a"),
-                    *[F.col(_ident(c)) for c in columns],
-                )
-                src = ensure_parallelism(
-                    src,
-                    min_partitions=size_scaled_parallelism(
-                        src, row_multiplier=float(len(columns))
-                    ),
-                )
-                tag_kw = {"tag_col": "__in_a"}
-            mt = _melt(src, **tag_kw)
-            if bins:
-                (mt,) = _bucketize([mt], ["in_a"])
-            num = drift_panel(
-                None,
-                None,
-                "v",
-                keys=["column"],
-                ecdf=_ecdf_from_tagged(
-                    mt.select("column", "v", "in_a"),
-                    ["column"],
-                    bounded=bool(bins),
-                ),
-            )
-        else:
-            ma, mb = _melt(ref), _melt(cur)
-            if bins:
-                ma, mb = _bucketize([ma, mb], [])
-            num = drift_panel(ma, mb, "v", keys=["column"])
-    else:
-        num = None
-    if not categorical_columns:
-        if num is None:
-            raise ValueError(
-                "feature_drift_report: no numeric or categorical columns"
-            )
+        long = src.selectExpr(
+            f"{_ident(tag)} AS in_a",
+            _melt_sql(columns, column="{name}", v="CAST({col} AS DOUBLE)"),
+        ).where("in_a IS NOT NULL AND v IS NOT NULL AND NOT isnan(v)")
+        if bins:
+            long = _bucketize(long, columns, bins, bounds)
+        num = drift_panel(
+            None,
+            None,
+            "v",
+            keys=["column"],
+            ecdf=_ecdf_from_tagged(long, ["column"], bounded=bool(bins)),
+        )
+    if not cats:
         return num
     ncols = ["ks_d", "u_stat", "z_score", "cvm_t", "ad_a2"]
     ccols = ["psi", "jsd", "chi2"]
     cat = categorical_drift_report(
-        shared if shared is not None else ref,
-        cur,
-        categorical_columns,
+        src,
+        None,
+        cats,
         max_categories=max_categories,
         on_overflow=on_overflow,
-        # over the shared materialization the tag is already a 0/1/NULL
-        # column; == 1 reproduces the predicate's three-way semantics
-        split=(F.col("__in_a") == 1) if shared is not None else split,
+        # == 1 keeps the tag's three-way semantics: NULL is on neither side
+        split=F.expr(f"{_ident(tag)} = 1"),
     ).select(
         "column",
         *[F.lit(None).cast("double").alias(s) for s in ncols],
@@ -1482,7 +1248,6 @@ def mutual_information(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """
     # four consumers (both margins, the total, the cells join) — without
     # the checkpoint each re-ran the corpus scan + contingency groupBy
-    # (round 13, guide §2.4)
     cont = (
         df.where(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(col_a, col_b)
@@ -1517,7 +1282,7 @@ def chi2_independence(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     regardless of table size. Expected count e = row_margin·col_margin/n.
     """
     # three consumers (both margins + the grid join-back) — checkpoint so
-    # the corpus scan + contingency groupBy run once (round 13, guide §2.4)
+    # the corpus scan + contingency groupBy run once
     cont = (
         df.where(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(col_a, col_b)
@@ -1571,11 +1336,10 @@ def psi_timeline(
     psi_timeline(period=half) at two periods reproduces psi_bins'
     psi_total exactly.
     """
+    c = F.col(_ident(col))
     counts = (
-        df.where(F.col(col).isNotNull())
-        .groupBy(
-            period.alias("period"), _bucket(F.col(col), lo, hi, bins).alias("bin")
-        )
+        df.where(c.isNotNull())
+        .groupBy(period.alias("period"), _bucket(c, lo, hi, bins).alias("bin"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     spark = df.sparkSession
@@ -1840,7 +1604,7 @@ def theil_sen_trend(
     # contract passed → base is ≤ max_points rows: checkpoint it so the
     # pair join (both sides), the slope-median job and the intercept agg
     # read the materialized series instead of re-running the upstream
-    # scan three more times (round 13, guide §2.4)
+    # scan three more times
     base = base.localCheckpoint(eager=False)
     # non-equi pair join over a contract-bounded series: broadcast the
     # right side explicitly so the plan is a bounded BNLJ, never a
@@ -1915,7 +1679,7 @@ def mann_kendall_trend(
     # contract passed → base is ≤ max_points rows: checkpoint it so the
     # S pair join (both sides) and the tie aggregation read the
     # materialized series instead of re-running the upstream scan three
-    # more times (round 13, guide §2.4)
+    # more times
     base = base.localCheckpoint(eager=False)
     rhs = F.broadcast(base.select(F.col("x").alias("x2"), F.col("y").alias("y2")))
     s_row = (

@@ -7,11 +7,14 @@ in pandas/numpy (P9, L4-L6); here they are all distributed DataFrame plans.
 
 from __future__ import annotations
 
+import logging
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
+
+_log = logging.getLogger(__name__)
 
 # Knuth multiplicative-hash constant: portable deterministic pseudo-random
 # stream computable identically in Spark SQL and DuckDB (plain bigint math),
@@ -66,11 +69,19 @@ def size_scaled_parallelism(
     ``row_multiplier`` accounts for row-multiplying downstream work
     (e.g. a melt of k columns). At data scale the estimate exceeds
     ``defaultParallelism × bytes_per_task`` and the clamp returns
-    defaultParallelism — i.e. the guard only narrows SMALL inputs."""
+    defaultParallelism — i.e. the guard only narrows SMALL inputs.
+    Without a readable size estimate it logs a warning and returns
+    defaultParallelism."""
     sc = df.sparkSession.sparkContext
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats introspection is best-effort
+    except Exception as e:  # noqa: BLE001 — stats introspection is best-effort
+        _log.warning(
+            "size_scaled_parallelism: no size estimate (%s); falling back to "
+            "defaultParallelism=%d",
+            e,
+            sc.defaultParallelism,
+        )
         return sc.defaultParallelism
     want = int(est * row_multiplier + bytes_per_task - 1) // bytes_per_task
     return max(2, min(sc.defaultParallelism, want))
@@ -510,7 +521,12 @@ def exclusive_prefix_sum(
     # every decomposition for zero recompute saved (ADVICE r13).
     try:
         _root = df._jdf.queryExecution().logical().getClass().getSimpleName()
-    except Exception:  # noqa: BLE001 — plan introspection is best-effort
+    except Exception as e:  # noqa: BLE001 — plan introspection is best-effort
+        _log.warning(
+            "exclusive_prefix_sum: cannot read the plan root (%s); "
+            "checkpointing the input",
+            e,
+        )
         _root = ""
     if _root not in ("LogicalRDD", "LocalRelation"):
         df = df.localCheckpoint(eager=False)

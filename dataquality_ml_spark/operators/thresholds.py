@@ -39,15 +39,18 @@ def percentile_threshold(df: DataFrame, col: str, q: float, exact: bool = True) 
     return df.agg(F.expr(f"percentile_approx({_ident(col)}, {q})").alias("t")).first()["t"]
 
 
-def iqr_threshold(df: DataFrame, col: str, k: float = 1.5, exact: bool = True) -> float:
-    """Threshold = Q3 + k·IQR (reference A8, app/LSTM_AE.py:513-517)."""
+def iqr_threshold(df: DataFrame, col: str, k: float = 1.5, exact: bool = True) -> float | None:
+    """Threshold = Q3 + k·IQR (reference A8, app/LSTM_AE.py:513-517);
+    ``None`` for a column without a value, as :func:`percentile_threshold`."""
     if exact:
         q1, q3 = exact_quantiles_select(df, col, [0.25, 0.75])
     else:
         row = df.agg(
             F.expr(f"percentile_approx({_ident(col)}, array(0.25, 0.75))").alias("qs")
         ).first()
-        q1, q3 = row["qs"]
+        q1, q3 = row["qs"] or (None, None)
+    if q1 is None:
+        return None
     return q3 + k * (q3 - q1)
 
 

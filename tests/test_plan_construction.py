@@ -1,10 +1,11 @@
 """Driver-side plan construction: the per-column operators and the feature
 projection build their aggregations, melts and expressions from SQL text
 (quoting of awkward column names, py4j round-trip budgets), the feature
-pipeline, the drift reports, the entropy profile and the threshold and
-imputation helpers quote awkward names too, the session turns off per-call
-origin capture, and the dedup, text, similarity and sequence-detector
-pipelines leave no entries in the session's CacheManager."""
+pipeline, the drift reports and single-column drift operators, the entropy
+profile and the threshold and imputation helpers quote awkward names too,
+the session turns off per-call origin capture, and the dedup, text,
+similarity and sequence-detector pipelines leave no entries in the
+session's CacheManager."""
 
 from __future__ import annotations
 
@@ -315,6 +316,72 @@ def test_binned_feature_drift_report_drops_all_null_column(awkward):
     assert got == [set(COLS) - {TICK}] * 3
 
 
+def _two_sample_oracle(a, b):
+    """KS D, Mann-Whitney U, CvM T and Anderson-Darling A² (Scholz &
+    Stephens, tie-aware) of two samples, from their distinct pooled
+    values."""
+    x = np.unique(np.concatenate([a, b]))
+    na_v = np.array([(a == v).sum() for v in x], dtype="float64")
+    nb_v = np.array([(b == v).sum() for v in x], dtype="float64")
+    ca, cb = np.cumsum(na_v), np.cumsum(nb_v)
+    ta, tb = float(len(a)), float(len(b))
+    n = ta + tb
+    cnt = na_v + nb_v
+    u = float(np.sum(na_v * (ca + cb - cnt + (cnt + 1) / 2)) - ta * (ta + 1) / 2)
+    cvm = float(np.sum(cnt * (ca * tb - cb * ta) ** 2)) / (n * n * ta * tb)
+    bb = ca + cb - cnt / 2
+    den = bb * (n - bb) - n * cnt / 4
+    inner = 0.0
+    for c, nv, t in ((ca, na_v, ta), (cb, nb_v, tb)):
+        g = n * (c - nv / 2) - t * bb
+        inner += float(np.sum(np.where(den > 0, cnt / n * g * g / np.where(den > 0, den, 1) / t, 0.0)))
+    return {
+        "ks_d": float(np.abs(ca / ta - cb / tb).max()),
+        "u_stat": u,
+        "cvm_t": cvm,
+        "ad_a2": (n - 1) / n * inner,
+        "n_a": len(a),
+        "n_b": len(b),
+    }
+
+
+def test_single_column_drift_operators_quote_awkward_names(awkward):
+    """KS, CvM, rank-sum, Anderson-Darling, the panel, the Q-Q table and
+    PSI on a column whose name needs quoting, against numpy over the
+    non-null values of each side (NaN-free columns: these operators rank
+    NaN as a value)."""
+    df, rows = awkward
+    is_one = F.col(prof._ident(DOT)) == 1
+    a, b = df.where(is_one), df.where(~is_one)
+    side_a, side_b = _split(rows)
+    for c in (DOT, QUOTE, ALL):
+        j = COLS.index(c)
+        va = np.array([r[j] for r in side_a if r[j] is not None], dtype="float64")
+        vb = np.array([r[j] for r in side_b if r[j] is not None], dtype="float64")
+        want = _two_sample_oracle(va, vb)
+        got = {
+            **dr.ks_statistic(a, b, c).first().asDict(),
+            **dr.cvm_statistic(a, b, c).first().asDict(),
+            **dr.rank_sum_test(a, b, c).first().asDict(),
+            **dr.anderson_darling(a, b, c).first().asDict(),
+        }
+        panel = dr.drift_panel(a, b, c).first().asDict()
+        for name, w in want.items():
+            assert _close(got[name], w), (c, name, got[name], w)
+            assert _close(panel[name], w), (c, name, panel[name], w)
+        qs = (0.25, 0.5, 0.9)
+        for r in dr.qq_table(a, b, c, qs=qs).collect():
+            assert _close(r["val_a"], float(np.quantile(va, r["q"]))), (c, r["q"])
+            assert _close(r["val_b"], float(np.quantile(vb, r["q"]))), (c, r["q"])
+        lo, hi, bins = -1.0, 50.0, 5
+        p = []
+        for v in (va, vb):
+            ids = np.clip(np.floor((v - lo) / ((hi - lo) / bins)), 0, bins - 1).astype(int)
+            p.append(np.maximum(np.bincount(ids, minlength=bins) / len(v), dr.EPS))
+        psi = [r["psi_term"] for r in dr.psi_bins(a, b, c, lo, hi, bins).collect()]
+        assert np.allclose(psi, (p[1] - p[0]) * np.log(p[1] / p[0]), rtol=1e-12, atol=1e-12), c
+
+
 def _telemetry_shaped(spark):
     """38 numeric columns like a telemetry_batch snapshot (SMART
     normalized doubles with NaN, raw longs, capacity) plus string keys."""
@@ -353,9 +420,9 @@ def test_profile_plan_py4j_budget(spark, monkeypatch, debugging):
 @pytest.mark.parametrize("debugging,budget", [(True, 6000), (False, 2000)])
 def test_feature_drift_report_py4j_budget(spark, monkeypatch, debugging, budget):
     """Building the two-frame drift panel on 38 columns: one SQL-text melt
-    per side, not one ``Column`` struct per column. Measured ~3,500 round
-    trips with origin capture on and ~1,100 off; with a ``Column``-API
-    melt, ~9,200 and ~3,200."""
+    of one tagged union, not one ``Column`` struct per column. Measured
+    ~970 round trips with origin capture on and ~540 off; with a
+    ``Column``-API melt, ~9,200 and ~3,200."""
     df = _telemetry_shaped(spark)
     cols = prof.numeric_columns(df)
     ref, cur = df.where("failure = 0"), df.where("failure = 1")
@@ -372,6 +439,34 @@ def test_feature_drift_report_py4j_budget(spark, monkeypatch, debugging, budget)
     monkeypatch.undo()
     assert calls[0] > 0
     assert calls[0] <= budget, calls[0]
+    assert out.count() == 38
+
+
+@pytest.mark.parametrize("debugging", [True, False])
+def test_drift_panel_py4j_budget(spark, monkeypatch, debugging):
+    """Building the panel over a prebuilt 38-key ECDF: its terms,
+    aggregates and finishing projection are SQL text, ~75 round trips
+    either way. ``Column`` trees took ~470 with origin capture off and
+    ~2,400 on."""
+    df = _telemetry_shaped(spark)
+    cols = prof.numeric_columns(df)
+    long = df.selectExpr(
+        "failure AS in_a", prof._melt_sql(cols, column="{name}", v="CAST({col} AS DOUBLE)")
+    ).where("v IS NOT NULL AND NOT isnan(v)")
+    ecdf = dr._ecdf_from_tagged(long, ["column"], bounded=False).localCheckpoint(eager=True)
+    monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
+    calls = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    out = dr.drift_panel(None, None, "v", keys=["column"], ecdf=ecdf)
+    monkeypatch.undo()
+    assert calls[0] > 0
+    assert calls[0] <= 100, calls[0]
     assert out.count() == 38
 
 
