@@ -491,7 +491,7 @@ class DQEngine:
         numeric column in one melt + one keyed aggregation
         (drift.feature_drift_report) — the whole feature-set drift
         report as a single job, not a per-column loop.
-        ``categorical_columns`` (round 10) folds string columns into the
+        ``categorical_columns`` folds string columns into the
         same report (PSI/JSD/chi² homogeneity, one extra bounded pass);
         ``bins``/``bounds`` select the quantized scale path (≤
         columns·bins reduce rows — the 100 TB shape)."""
@@ -622,6 +622,7 @@ class DQEngine:
             .select(id_col, "status", "keep_id", "split")
         )
 
+    # -- audits and statistical tests --------------------------------------
     def audit_benford(self, df: DataFrame, col: str) -> DataFrame:
         """First-digit Benford audit of a positive measure — (digit, n,
         p, p_benford, chi2_total); chi2 far above ~20 on large n says the
@@ -715,23 +716,6 @@ class DQEngine:
 
         return cusum_changepoint(df, ts_col, value_col, bucket, keys)
 
-    def cusum_monitor(
-        self,
-        df: DataFrame,
-        batch_col: str,
-        mu0: float,
-        value_col: str = "value",
-        slack: float = 0.0,
-        h: float = 1.0,
-    ) -> DataFrame:
-        """One-pass batch face of the streaming CUSUM level monitor —
-        Page's two-sided statistic per batch vs the frozen in-control
-        mean mu0, via the prefix-sum identity: (batch_id, n, mean,
-        splus, sminus, alarm)."""
-        from dataquality_ml_spark.operators.drift import cusum_monitor_batch
-
-        return cusum_monitor_batch(df, batch_col, mu0, value_col, slack, h)
-
     def robust_trend(
         self, df: DataFrame, x_col: str, y_col: str, max_points: int = 2000
     ) -> DataFrame:
@@ -758,156 +742,6 @@ class DQEngine:
 
         return importance_weight_ess(df, weight_col)
 
-    def trend_test(
-        self, df: DataFrame, x_col: str, y_col: str, max_points: int = 2000
-    ) -> DataFrame:
-        """Mann-Kendall monotonic-trend test over a BOUNDED series —
-        (n_points, s_stat, var_s, z); raises past max_points."""
-        from dataquality_ml_spark.operators.drift import mann_kendall_trend
-
-        return mann_kendall_trend(df, x_col, y_col, max_points)
-
-    def seasonal_outliers(
-        self,
-        df: DataFrame,
-        ts_col: str,
-        value_col: str,
-        k: float = 3.0,
-        id_col: str | None = None,
-    ) -> DataFrame:
-        """Hour-of-week seasonality-adjusted outliers — rows with
-        |residual| > k residual-sigmas vs the 168-cell baseline."""
-        from dataquality_ml_spark.operators.sequences import (
-            seasonal_residual_outliers,
-        )
-
-        return seasonal_residual_outliers(df, ts_col, value_col, k, id_col)
-
-    def readability(
-        self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-    ) -> DataFrame:
-        """LIX readability per document — (id, n_words, n_sentences,
-        n_long, lix); syllable-free, engine-exact."""
-        from dataquality_ml_spark.operators.text import lix_readability
-
-        return lix_readability(df, text_col, id_col)
-
-    def ratio_ci(
-        self, df: DataFrame, group_col: str, num_col: str, den_col: str
-    ) -> DataFrame:
-        """Delta-method CI for a per-group ratio metric —
-        (variant, n, ratio, se, ci_lo, ci_hi)."""
-        from dataquality_ml_spark.operators.evaluate import ratio_metric_ci
-
-        return ratio_metric_ci(df, group_col, num_col, den_col)
-
-    def fd_check(
-        self, df: DataFrame, determinant: list[str], dependent: str
-    ) -> DataFrame:
-        """Approximate functional-dependency audit X -> Y — (n_rows,
-        n_groups, n_violating_groups, g3_rows, g3_error)."""
-        from dataquality_ml_spark.operators.rules import fd_violations
-
-        return fd_violations(df, determinant, dependent)
-
-    def tail_fit(
-        self, df: DataFrame, col: str, q: float = 0.95,
-        threshold: float | None = None,
-    ) -> DataFrame:
-        """Peaks-over-threshold GPD fit (method of moments) —
-        (threshold, n, n_exceed, mean_excess, xi, beta)."""
-        from dataquality_ml_spark.operators.profile import gpd_tail_fit
-
-        return gpd_tail_fit(df, col, q, threshold)
-
-    def link_records(
-        self,
-        df: DataFrame,
-        pairs: DataFrame,
-        compare_col: str,
-        id_col: str = "doc_id",
-        threshold: float = 0.85,
-        max_key_len: int = 64,
-        on_long: str = "error",
-    ) -> DataFrame:
-        """Score blocking candidates with Jaro-Winkler and keep matches
-        >= threshold — (id_a, id_b, jw). Keys longer than max_key_len
-        raise (or truncate with on_long='truncate'): the per-pair DP is
-        quadratic in key length."""
-        from dataquality_ml_spark.operators.dedup import linkage_score_pairs
-
-        return linkage_score_pairs(
-            df, pairs, compare_col, id_col, threshold,
-            max_key_len=max_key_len, on_long=on_long,
-        )
-
-    def bootstrap_ci(
-        self,
-        df: DataFrame,
-        value_col: str,
-        id_col: str,
-        n_boot: int = 64,
-        alpha: float = 0.05,
-    ) -> DataFrame:
-        """Deterministic Poissonized bootstrap CI of the mean — all
-        replicates in one scan; (n, mean, boot_lo, boot_median,
-        boot_hi, n_boot)."""
-        from dataquality_ml_spark.operators.evaluate import poisson_bootstrap_ci
-
-        return poisson_bootstrap_ci(df, value_col, id_col, n_boot, alpha)
-
-    def calibrate_scores(
-        self,
-        df: DataFrame,
-        score: str,
-        label: str,
-        bins: int = 32,
-        lo: float = 0.0,
-        hi: float = 1.0,
-    ) -> DataFrame:
-        """Isotonic (PAV) calibration over a frozen score grid —
-        (bin, n, mean_score, frac_pos, calibrated)."""
-        from dataquality_ml_spark.operators.evaluate import isotonic_calibration
-
-        return isotonic_calibration(df, score, label, bins, lo, hi)
-
-    def pagerank(
-        self, edges: DataFrame, iterations: int = 5, damping: float = 0.85
-    ) -> DataFrame:
-        """Bounded-iteration PageRank over an undirected edge relation —
-        (node, rank); ranks sum to ~1."""
-        from dataquality_ml_spark.operators.graph import pagerank
-
-        return pagerank(edges, iterations, damping)
-
-    def embedding_anisotropy(self, df: DataFrame, vec_col: str = "embedding"):
-        """(covariance_df, effective_rank_df) — the cross-dimension
-        health pair: upper-triangle covariance + exp-entropy effective
-        rank of the embedding space."""
-        from dataquality_ml_spark.operators.similarity import (
-            embedding_covariance,
-            embedding_effective_rank,
-        )
-
-        return embedding_covariance(df, vec_col), embedding_effective_rank(
-            df, vec_col
-        )
-
-    def kfold(
-        self,
-        df: DataFrame,
-        k: int = 5,
-        group_col: str | None = None,
-        id_col: str = "doc_id",
-        seed: str = "kfold",
-    ) -> DataFrame:
-        """Deterministic leakage-safe k-fold assignment (adds ``fold``);
-        grouped units never straddle folds."""
-        from dataquality_ml_spark.operators.selection import kfold_assign
-
-        return kfold_assign(df, k, group_col, id_col, seed)
-
-    # -- round 13 -----------------------------------------------------------
     def dedup_prefix_filter(
         self,
         df: DataFrame,
@@ -1011,153 +845,3 @@ class DQEngine:
         from dataquality_ml_spark.operators.similarity import ranking_quality
 
         return ranking_quality(exact, approx, k)
-
-    def cluster_bootstrap_ci(
-        self,
-        df: DataFrame,
-        value_col: str,
-        group_col: str,
-        n_boot: int = 64,
-        alpha: float = 0.05,
-    ) -> DataFrame:
-        """Grouped (cluster) Poissonized bootstrap CI of the mean —
-        groups resample together, the correct interval for correlated
-        rows (a user's events, a host's documents)."""
-        from dataquality_ml_spark.operators.evaluate import poisson_bootstrap_ci
-
-        return poisson_bootstrap_ci(
-            df, value_col, group_col, n_boot, alpha, group_col=group_col
-        )
-
-    def embedding_two_sample(
-        self,
-        x_df: DataFrame,
-        y_df: DataFrame,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        sigma2: float = 1.0,
-    ) -> DataFrame:
-        """Linear-time kernel MMD two-sample test between two embedding
-        sets — (n_quads, mmd2, se, z); z >~ 3 means they differ."""
-        from dataquality_ml_spark.operators.similarity import mmd_linear
-
-        return mmd_linear(x_df, y_df, vec_col, id_col, sigma2)
-
-    def bootstrap_panel(
-        self,
-        df: DataFrame,
-        value_col: str,
-        id_col: str,
-        keys: list[str],
-        n_boot: int = 32,
-        alpha: float = 0.05,
-    ) -> DataFrame:
-        """Per-segment Poissonized bootstrap CI panel — one CI row per
-        key tuple from a single scan."""
-        from dataquality_ml_spark.operators.evaluate import poisson_bootstrap_ci
-
-        return poisson_bootstrap_ci(
-            df, value_col, id_col, n_boot, alpha, keys=keys
-        )
-
-    def concentration_panel(
-        self,
-        df: DataFrame,
-        key_col: str,
-        weight_col: str | None = None,
-        top_k: int = 4,
-    ) -> DataFrame:
-        """HHI / CR-k / entropy / Theil mix-concentration panel over a
-        bounded categorical key (loud max_groups contract)."""
-        from dataquality_ml_spark.operators.profile import concentration_panel
-
-        return concentration_panel(df, key_col, weight_col, top_k)
-
-    def dup_source_matrix(
-        self,
-        pairs: DataFrame,
-        src_df: DataFrame,
-        id_col: str = "doc_id",
-        source_col: str = "source",
-    ) -> DataFrame:
-        """Fold any near-dup pair relation over the doc->source mapping
-        into the cross-source duplication matrix."""
-        from dataquality_ml_spark.operators.dedup import dup_source_matrix
-
-        return dup_source_matrix(pairs, src_df, id_col, source_col)
-
-    def ks_matrix(
-        self,
-        df: DataFrame,
-        key_col: str,
-        value_col: str = "value",
-        bins: int = 50,
-        lo: float = 0.0,
-        hi: float = 1.0,
-    ) -> DataFrame:
-        """Pairwise binned-KS distance matrix across segments — which
-        segment pairs differ (loud max_keys contract)."""
-        from dataquality_ml_spark.operators.drift import ks_matrix_binned
-
-        return ks_matrix_binned(df, key_col, value_col, bins, lo, hi)
-
-    def rolling_origin(
-        self, df: DataFrame, ts_col: str, n_folds: int = 4
-    ) -> DataFrame:
-        """Expanding-window temporal CV assignment (fold, role) — the
-        no-future-leak backtest split."""
-        from dataquality_ml_spark.operators.selection import (
-            rolling_origin_assign,
-        )
-
-        return rolling_origin_assign(df, ts_col, n_folds)
-
-    def stationary_distribution(
-        self,
-        trans: DataFrame,
-        src: str = "prev_t",
-        dst: str = "next_t",
-        weight: str = "n",
-        iterations: int = 16,
-    ) -> DataFrame:
-        """Stationary distribution of a finite Markov chain over a
-        (src, dst, count) transition relation — (state, pi)."""
-        from dataquality_ml_spark.operators.graph import markov_stationary
-
-        return markov_stationary(trans, src, dst, weight, iterations)
-
-    def segment_impact(
-        self, df: DataFrame, key_col: str, value_col: str
-    ) -> DataFrame:
-        """Leave-one-segment-out mean-impact panel — which segment's
-        removal moves the corpus metric, from one closed-form pass."""
-        from dataquality_ml_spark.operators.profile import loso_mean_delta
-
-        return loso_mean_delta(df, key_col, value_col)
-
-    def welch_matrix(
-        self,
-        df: DataFrame,
-        key_col: str,
-        value_col: str = "value",
-        max_keys: int = 1000,
-    ) -> DataFrame:
-        """Pairwise Welch t + Cohen's d matrix across segments (loud
-        max_keys contract)."""
-        from dataquality_ml_spark.operators.evaluate import welch_t_matrix
-
-        return welch_t_matrix(df, key_col, value_col, max_keys)
-
-    def entropy_rate(
-        self,
-        trans: DataFrame,
-        src: str = "prev_t",
-        dst: str = "next_t",
-        weight: str = "n",
-        iterations: int = 16,
-    ) -> DataFrame:
-        """Entropy rate of a finite Markov chain — the journey-
-        predictability scalar (0 = deterministic, norm 1 = uniform)."""
-        from dataquality_ml_spark.operators.graph import markov_entropy_rate
-
-        return markov_entropy_rate(trans, src, dst, weight, iterations)

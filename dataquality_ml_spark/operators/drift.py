@@ -501,8 +501,12 @@ def cvm_statistic(
             ["cvm_t"],
         )
     # normalized-double path for N beyond the decimal ceiling:
-    # T = n_a·n_b/N · Σ cnt/N · (F_a − F_b)²  with F_i = c_i/tot_i
-    gap_d = F.col("ca") / F.col("tot_a") - F.col("cb") / F.col("tot_b")
+    # T = n_a·n_b/N · Σ cnt/N · (F_a − F_b)²  with F_i = c_i/tot_i;
+    # a one-sided segment (tot_a or tot_b = 0) sums NULL terms to NULL
+    gap_d = F.when(
+        (F.col("tot_a") > 0) & (F.col("tot_b") > 0),
+        F.col("ca") / F.col("tot_a") - F.col("cb") / F.col("tot_b"),
+    )
     cnt_d = (F.col("n_a") + F.col("n_b")).cast("double")
     agg = (
         ec.select(*keys, (cnt_d * gap_d * gap_d).alias("s_term"), "tot_a", "tot_b")

@@ -446,6 +446,26 @@ def temperature_sample(
     return _two_phase_quota_window(df, group_col, key, quota_df, margin)
 
 
+def materialize(df: DataFrame, *, caller: str, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, unless ``df`` already is a
+    materialized relation — its plan root a ``LogicalRDD`` (a checkpointed
+    frame) or a ``LocalRelation`` (a ``createDataFrame`` literal).  A
+    second persist of those would double their executor memory/disk
+    footprint (and, eager, launch a job) for no recompute saved.  If the
+    plan root cannot be read, it logs a warning naming ``caller`` and
+    checkpoints."""
+    try:
+        root = df._jdf.queryExecution().logical().getClass().getSimpleName()
+    except Exception as e:  # noqa: BLE001 — plan introspection is best-effort
+        _log.warning(
+            "%s: cannot read the plan root (%s); checkpointing the input", caller, e
+        )
+        root = ""
+    if root in ("LogicalRDD", "LocalRelation"):
+        return df
+    return df.localCheckpoint(eager=eager)
+
+
 def exclusive_prefix_sum(
     df: DataFrame,
     order_col: str,
@@ -494,8 +514,7 @@ def exclusive_prefix_sum(
     accumulator values, FREE of any extra job.  Callers that previously
     re-aggregated the *upstream* relation just to attach totals (the
     ``_ecdf_counts`` tot_a/tot_b join) re-ran the whole upstream scan;
-    reading them from the subtotals removes that second computation
-    (guide §1/§2.4: don't recompute what a pass already produced).
+    reading them from the subtotals removes that second computation.
     """
     val_cols = [val_col] if isinstance(val_col, str) else list(val_col)
     outs = [out] if isinstance(out, str) else list(out)
@@ -512,24 +531,9 @@ def exclusive_prefix_sum(
     # repartitionByRange runs a separate boundary-sampling job over its
     # child, then the exchange map stage recomputes the child again — an
     # un-checkpointed upstream (scan + melt + groupBy in the ECDF
-    # callers) therefore executes TWICE per decomposition (guide §2.4:
-    # remove recomputation before tuning anything else).  The sampling
-    # job materializes the persisted blocks; the exchange reads them.
-    # Skip it when the input IS already a materialized/local relation
-    # (a caller-checkpointed frame or a createDataFrame literal): a
-    # second persist would double the executor memory/disk footprint of
-    # every decomposition for zero recompute saved (ADVICE r13).
-    try:
-        _root = df._jdf.queryExecution().logical().getClass().getSimpleName()
-    except Exception as e:  # noqa: BLE001 — plan introspection is best-effort
-        _log.warning(
-            "exclusive_prefix_sum: cannot read the plan root (%s); "
-            "checkpointing the input",
-            e,
-        )
-        _root = ""
-    if _root not in ("LogicalRDD", "LocalRelation"):
-        df = df.localCheckpoint(eager=False)
+    # callers) would execute TWICE per decomposition.  The sampling job
+    # materializes the persisted blocks; the exchange reads them.
+    df = materialize(df, caller="exclusive_prefix_sum")
     # Lazy-checkpoint the range-partitioned relation too: it is consumed
     # twice (the subtotal collect below is its own job, then the final
     # plan reads it again) — without the checkpoint the range shuffle

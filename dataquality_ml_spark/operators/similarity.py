@@ -1972,18 +1972,23 @@ def ranking_quality(
     itself, so ndcg = 1 iff the approx list reproduces the exact
     ordering. Shape: two equi-joins on (query_id, neighbor_id) + two
     grouped sums over ≤k rows per query — broadcast-sized all the way.
+
+    Both inputs are materialized when the DataFrame is built — one eager
+    checkpoint job each, none for an input that already is materialized
+    (a checkpointed frame or a ``createDataFrame`` literal).
     """
+    from dataquality_ml_spark.operators.relational import materialize
+
     if k < 1:
         raise ValueError(f"ranking_quality: k must be >= 1, got {k}")
-    # Materialize-once (round 14, guide §2.4/§5): `exact` feeds THREE plan
-    # branches below (dcg's relevance join, idcg, mrr) and `approx` two
-    # (dcg, mrr) — without a checkpoint every branch re-runs the entire
-    # upstream knn pipeline (scan + assignment + rank window). Both
-    # relations are bounded at ≤ |queries|·k rows, so the persist is
-    # trivial; EAGER because several joins inside ONE query race a lazy
-    # persist and recompute upstream anyway (the r13 pagerank lesson).
-    exact = exact.localCheckpoint(eager=True)
-    approx = approx.localCheckpoint(eager=True)
+    # `exact` feeds THREE plan branches below (dcg's relevance join, idcg,
+    # mrr) and `approx` two (dcg, mrr) — without a checkpoint every branch
+    # re-runs the entire upstream knn pipeline (scan + assignment + rank
+    # window). Both relations are bounded at ≤ |queries|·k rows, so the
+    # persist is trivial; EAGER because several joins inside ONE query
+    # race a lazy checkpoint and recompute upstream anyway.
+    exact = materialize(exact, caller="ranking_quality", eager=True)
+    approx = materialize(approx, caller="ranking_quality", eager=True)
     rel = exact.select(
         "query_id",
         "neighbor_id",

@@ -1116,9 +1116,12 @@ def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cell_str = F.concat_ws(":", F.col("x").cast("string"), F.col("y").cast("string"))
     cells = pts.groupBy("x", "y").agg(F.count(F.lit(1)).alias("c"))
+    # eager: the first job to read the dense cells (connected_components'
+    # edge checkpoint) reads them from both sides of the self-join, where a
+    # lazy checkpoint races and recomputes
     dense = cells.where(F.col("c") >= minpts).select(
         "x", "y", cell_str.alias("cell")
-    ).cache()
+    ).localCheckpoint(eager=True)
     a = dense.select(F.col("x").alias("ax"), F.col("y").alias("ay"), F.col("cell").alias("id_a"))
     b = dense.select(F.col("x").alias("bx"), F.col("y").alias("by"), F.col("cell").alias("id_b"))
     # 8-neighborhood + self-pairs; self-edges keep isolated dense cells as
@@ -1960,7 +1963,11 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue"
             )
         )
-        .cache()
+        # eager: the returned query reads revenue from both sides of the
+        # max join, and its final plan shares no exchange between them (the
+        # inferred isnotnull(l_suppkey) filter differs), so a lazy
+        # checkpoint would race and recompute
+        .localCheckpoint(eager=True)
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     return (

@@ -11,9 +11,13 @@ pruning + predicate pushdown; CSV is an ingest-only format.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+_log = logging.getLogger(__name__)
 
 TESTDATA_TABLES = (
     "region",
@@ -32,7 +36,8 @@ TESTDATA_TABLES = (
 def _nanos_ts_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as
     bigint (``spark.sql.legacy.parquet.nanosAsLong``); we restore proper
-    timestamps. Footer-only read, no data scan."""
+    timestamps. Footer-only read, no data scan; a footer that cannot be
+    read logs a warning and converts nothing."""
     try:
         import pyarrow.dataset as ds
         import pyarrow as pa
@@ -43,7 +48,13 @@ def _nanos_ts_columns(path: str) -> list[str]:
             for f in schema
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
         ]
-    except Exception:
+    except Exception as e:  # noqa: BLE001 — footer introspection is best-effort
+        _log.warning(
+            "_nanos_ts_columns: cannot read the parquet schema of %s (%s); "
+            "converting no TIMESTAMP(NANOS) column",
+            path,
+            e,
+        )
         return []
 
 
@@ -63,7 +74,7 @@ def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = Non
     # The value-equality above HOLDS ONLY under a UTC session: a caller-
     # supplied non-UTC session would shift naive stored micros by its UTC
     # offset on read. The factory sets this; mirror it defensively here for
-    # plain driver-supplied sessions (ADVICE r2).
+    # plain driver-supplied sessions.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(path)
     from pyspark.sql.types import LongType
@@ -127,10 +138,11 @@ def read_json_with_quarantine(
     Returns (good, quarantine): good has exactly ``schema``'s columns;
     quarantine carries the raw offending line in ``raw_record``.
 
-    The parsed frame is cached before splitting — Spark refuses a query
-    that references ONLY the corrupt-record column of a JSON scan (it
-    would have to re-parse with different semantics), and the two outputs
-    would otherwise parse the input twice anyway.
+    The parsed frame is lazily checkpointed before splitting — Spark
+    refuses a query that references ONLY the corrupt-record column of a
+    JSON scan (it would have to re-parse with different semantics), and
+    the two outputs would otherwise parse the input twice anyway.  The
+    first of them to run materializes it; the other reads those rows.
     """
     if isinstance(schema, str):
         parsed = StructType.fromDDL(schema)
@@ -142,7 +154,7 @@ def read_json_with_quarantine(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .cache()
+        .localCheckpoint(eager=False)
     )
     good = df.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.where(F.col("_corrupt_record").isNotNull()).select(

@@ -198,3 +198,25 @@ def test_iqr_threshold_all_null_column_is_none(spark, exact):
     df = spark.createDataFrame([(None,), (None,)], "v double")
     assert th.percentile_threshold(df, "v", 0.9, exact=exact) is None
     assert th.iqr_threshold(df, "v", exact=exact) is None
+
+
+def test_keyed_cvm_one_sided_segment_is_null_on_both_paths(spark):
+    """A segment with rows on one side only has no finite T: both the exact
+    and the normalized-double path report NULL there, and agree on the
+    two-sided segment."""
+    a = spark.createDataFrame(
+        [("both", float(i)) for i in range(6)] + [("solo", 1.0), ("solo", 2.0)],
+        "g string, v double",
+    )
+    b = spark.createDataFrame(
+        [("both", i + 0.5) for i in range(5)] + [("b_only", 3.0)], "g string, v double"
+    )
+    got = {
+        exact: {r["g"]: r for r in dr.cvm_statistic(a, b, "v", keys=["g"], exact=exact).collect()}
+        for exact in (True, False)
+    }
+    for exact in (True, False):
+        assert set(got[exact]) == {"both", "solo", "b_only"}
+        assert got[exact]["solo"]["cvm_t"] is None and got[exact]["b_only"]["cvm_t"] is None
+    assert got[False]["both"]["cvm_t"] == pytest.approx(got[True]["both"]["cvm_t"], rel=1e-12)
+    assert got[True]["both"]["cvm_t"] > 0

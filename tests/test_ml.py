@@ -553,3 +553,37 @@ def test_fit_features_max_categories_cap(spark, telemetry):
             big, roles=broles, label_col=None, max_categories=10,
             on_overflow="warn",
         )
+
+
+def test_daily_job_passes_leave_no_cache_entries(spark, telemetry):
+    """Two daily-job passes through the facade in one long-lived session:
+    the same results, and no CacheManager entry left behind."""
+    from dataquality_ml_spark.engine import DQEngine
+
+    eng = DQEngine(spark)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other tests' cached frames are not ours
+    train = telemetry.where(F.col("failure") == 0)
+    passes = []
+    for _ in range(2):
+        eng.profile(telemetry).collect()
+        numeric = eng.prune_columns(telemetry, ["smart_1", "smart_2", "smart_dead"])
+        fitted = eng.fit_detector(
+            telemetry,
+            roles={"numeric": numeric, "categorical": ["model"], "boolean": []},
+            detector="iforest",
+        )
+        drift = eng.feature_drift(train, telemetry, numeric).collect()
+        scored = eng.score(telemetry, fitted)
+        passes.append(
+            (
+                numeric,
+                sorted(drift),
+                eng.evaluate(scored).first(),
+                eng.auc(scored).first(),
+                eng.report(scored).collect(),
+            )
+        )
+    assert passes[0] == passes[1]
+    assert passes[0][0] == ["smart_1", "smart_2"]
+    assert cache.isEmpty()
