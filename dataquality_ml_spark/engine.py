@@ -1,24 +1,28 @@
-"""High-level facade: the workflows a user of the reference runs today,
-as a handful of composable calls.
+"""The reference's daily job as a handful of composable calls.
 
 Reference workflow → engine call:
 
-- load daily snapshot, cast bools, split normal/failure
-  (app/AE_model.py:25-43)                      → ``DQEngine.load`` + ``split``
-- profile column health (lib/utils.py:187-203) → ``profile``
-- fit feature pipeline on normal rows
-  (lib/utils.py:154-269)                       → ``fit_features``
-- train detector, derive threshold
-  (app/AE_model.py:111-246)                    → ``fit_detector``
-- score a table, flag anomalies, report
-  (app/test_AE.py:109-307)                     → ``score`` + ``evaluate``
+- load the daily snapshot (app/AE_model.py:25-43)   → ``DQEngine.load``
+- profile column health (lib/utils.py:187-203)      → ``profile`` +
+  ``prune_columns``
+- fit features and a detector on the normal rows,
+  threshold = P-q of the train errors
+  (app/AE_model.py:111-246, LSTM_VAE.py:633-635)    → ``fit_detector`` /
+  ``fit_sequence_detector``
+- score a table, flag anomalies, evaluate, report
+  (app/test_AE.py:109-307)                          → ``score`` /
+  ``score_sequences`` + ``evaluate`` + ``auc`` + ``report``
 
-All returns are DataFrames or small artifact objects; nothing row-sized
-touches the driver.
+Each step is written once: both fits go through ``DQEngine._fit``, every
+scoring call through ``DQEngine._flagged``, and both artifact classes
+through one model codec (``_CODEC``). Every other operator is called
+from its own module. All returns are DataFrames or small artifact
+objects; nothing row-sized is collected.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,11 +30,62 @@ from pyspark.sql import functions as F
 
 from dataquality_ml_spark.ml import detectors as det
 from dataquality_ml_spark.ml import features as feat
+from dataquality_ml_spark.ml import keras_adapter as ka
 from dataquality_ml_spark.operators import evaluate as ev
 from dataquality_ml_spark.operators import profile as prof
 from dataquality_ml_spark.operators import relational as rel
 from dataquality_ml_spark.operators import thresholds as th
 from dataquality_ml_spark.sources import readers
+
+# model_kind → (class, model → blob, blob → model); the blob is the
+# artifact JSON's "model" string
+_CODEC = {
+    "pca": (det.PCAAutoencoder, det.PCAAutoencoder.to_json, det.PCAAutoencoder.from_json),
+    "iforest": (
+        det.IsolationForest,
+        lambda m: json.dumps(m.to_state()),
+        lambda s: det.IsolationForest.from_state(json.loads(s)),
+    ),
+    "keras_dense": (ka.KerasDenseAE, ka.KerasDenseAE.to_json, ka.KerasDenseAE.from_json),
+    "keras_lstm": (ka.KerasLSTMAE, ka.KerasLSTMAE.to_json, ka.KerasLSTMAE.from_json),
+    "keras_lstm_vae": (ka.KerasLSTMVAE, ka.KerasLSTMVAE.to_json, ka.KerasLSTMVAE.from_json),
+}
+_DETECTOR_KINDS = tuple(_CODEC)
+_SEQUENCE_KINDS = ("pca", "keras_lstm", "keras_lstm_vae")
+
+
+def _save_artifact(
+    path: str, spec: dict, model, threshold: float, threshold_q: float, kinds
+) -> None:
+    """Write ``spec`` + the encoded model + the threshold as one JSON
+    document; ``kinds`` are the model kinds the artifact may hold."""
+    kind = next((k for k in kinds if isinstance(model, _CODEC[k][0])), None)
+    if kind is None:
+        raise TypeError(f"unsupported model: {type(model)}")
+    with open(path, "w") as f:
+        json.dump(
+            {
+                **spec,
+                "model_kind": kind,
+                "model": _CODEC[kind][1](model),
+                "threshold": threshold,
+                "threshold_q": threshold_q,
+            },
+            f,
+        )
+
+
+def _load_artifact(path: str, kinds) -> tuple[dict, object]:
+    """The artifact document and its decoded model; a ``model_kind``
+    outside ``kinds`` raises ``ValueError`` naming it."""
+    with open(path) as f:
+        d = json.load(f)
+    kind = d.get("model_kind")
+    if kind not in kinds:
+        raise ValueError(
+            f"{path}: model_kind {kind!r} is not one of {', '.join(kinds)}"
+        )
+    return d, _CODEC[kind][2](d["model"])
 
 
 @dataclass
@@ -46,60 +101,14 @@ class FittedDetector:
     threshold_q: float
 
     def save(self, path: str) -> None:
-        import json
-
-        from dataquality_ml_spark.ml.keras_adapter import (
-            KerasDenseAE,
-            KerasLSTMAE,
-            KerasLSTMVAE,
+        _save_artifact(
+            path, {"features": self.features.to_json()}, self.model,
+            self.threshold, self.threshold_q, _DETECTOR_KINDS,
         )
-
-        if isinstance(self.model, det.PCAAutoencoder):
-            kind, blob = "pca", self.model.to_json()
-        elif isinstance(self.model, det.IsolationForest):
-            kind, blob = "iforest", json.dumps(self.model.to_state())
-        elif isinstance(self.model, KerasDenseAE):
-            kind, blob = "keras_dense", self.model.to_json()
-        elif isinstance(self.model, KerasLSTMVAE):
-            kind, blob = "keras_lstm_vae", self.model.to_json()
-        elif isinstance(self.model, KerasLSTMAE):
-            kind, blob = "keras_lstm", self.model.to_json()
-        else:
-            raise TypeError(f"unsupported model: {type(self.model)}")
-        with open(path, "w") as f:
-            json.dump(
-                {
-                    "features": self.features.to_json(),
-                    "model_kind": kind,
-                    "model": blob,
-                    "threshold": self.threshold,
-                    "threshold_q": self.threshold_q,
-                },
-                f,
-            )
 
     @classmethod
     def load(cls, path: str) -> "FittedDetector":
-        import json
-
-        from dataquality_ml_spark.ml.keras_adapter import (
-            KerasDenseAE,
-            KerasLSTMAE,
-            KerasLSTMVAE,
-        )
-
-        with open(path) as f:
-            d = json.load(f)
-        if d["model_kind"] == "pca":
-            model = det.PCAAutoencoder.from_json(d["model"])
-        elif d["model_kind"] == "keras_dense":
-            model = KerasDenseAE.from_json(d["model"])
-        elif d["model_kind"] == "keras_lstm_vae":
-            model = KerasLSTMVAE.from_json(d["model"])
-        elif d["model_kind"] == "keras_lstm":
-            model = KerasLSTMAE.from_json(d["model"])
-        else:
-            model = det.IsolationForest.from_state(json.loads(d["model"]))
+        d, model = _load_artifact(path, _DETECTOR_KINDS)
         return cls(
             features=feat.FeatureModel.from_json(d["features"]),
             model=model,
@@ -126,60 +135,31 @@ class FittedSequenceDetector:
     threshold: float
     threshold_q: float
 
+    _SPEC = ("key", "order", "features", "timesteps", "tiebreak")
+
     def save(self, path: str) -> None:
-        import json
-
-        from dataquality_ml_spark.ml.keras_adapter import KerasLSTMAE, KerasLSTMVAE
-
-        if isinstance(self.model, det.PCAAutoencoder):
-            kind, blob = "pca", self.model.to_json()
-        elif isinstance(self.model, KerasLSTMVAE):
-            kind, blob = "keras_lstm_vae", self.model.to_json()
-        elif isinstance(self.model, KerasLSTMAE):
-            kind, blob = "keras_lstm", self.model.to_json()
-        else:
-            raise TypeError(f"unsupported sequence model: {type(self.model)}")
-        with open(path, "w") as f:
-            json.dump(
-                {
-                    "key": self.key,
-                    "order": self.order,
-                    "features": self.features,
-                    "timesteps": self.timesteps,
-                    "tiebreak": self.tiebreak,
-                    "model_kind": kind,
-                    "model": blob,
-                    "threshold": self.threshold,
-                    "threshold_q": self.threshold_q,
-                },
-                f,
-            )
+        _save_artifact(
+            path, {k: getattr(self, k) for k in self._SPEC}, self.model,
+            self.threshold, self.threshold_q, _SEQUENCE_KINDS,
+        )
 
     @classmethod
     def load(cls, path: str) -> "FittedSequenceDetector":
-        import json
-
-        from dataquality_ml_spark.ml.keras_adapter import KerasLSTMAE, KerasLSTMVAE
-
-        with open(path) as f:
-            d = json.load(f)
-        model: object
-        if d["model_kind"] == "pca":
-            model = det.PCAAutoencoder.from_json(d["model"])
-        elif d["model_kind"] == "keras_lstm_vae":
-            model = KerasLSTMVAE.from_json(d["model"])
-        else:
-            model = KerasLSTMAE.from_json(d["model"])
+        d, model = _load_artifact(path, _SEQUENCE_KINDS)
         return cls(
-            key=d["key"],
-            order=d["order"],
-            features=d["features"],
-            timesteps=d["timesteps"],
-            tiebreak=d["tiebreak"],
+            **{k: d[k] for k in cls._SPEC},
             model=model,
             threshold=d["threshold"],
             threshold_q=d["threshold_q"],
         )
+
+
+def _normal(df: DataFrame, label: str) -> DataFrame:
+    """The rows a detector is fitted on: ``label == 0`` when ``df`` has
+    the label column, else all of them (reference app/AE_model.py:42-48)."""
+    if label in df.columns:
+        return df.where(F.col(prof._ident(label)) == F.lit(0))
+    return df
 
 
 class DQEngine:
@@ -196,9 +176,6 @@ class DQEngine:
             return readers.read_csv(self.spark, path, **kw)
         return readers.read_table(self.spark, path)
 
-    def split(self, df: DataFrame, label: str = "failure"):
-        return rel.split_by_label(df, label)
-
     # -- profiling ---------------------------------------------------------
     def profile(self, df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         return prof.profile(df, columns)
@@ -206,13 +183,36 @@ class DQEngine:
     def prune_columns(self, df: DataFrame, columns: list[str] | None = None) -> list[str]:
         return prof.prune_low_quality(df, columns)
 
-    def threshold_stats(
-        self, df: DataFrame, columns: list[str], **kw
-    ) -> dict[str, dict[str, float]]:
-        """Percentile/IQR/MAD thresholds for every column in 2 jobs total
-        (one stats aggregation + one MAD pass) — the batched facade the
-        per-threshold scalar helpers don't give you."""
-        return th.batched_thresholds(df, columns, **kw)
+    # -- fit and score cores -----------------------------------------------
+    @staticmethod
+    def _fit(rows: DataFrame, build, sample_rows: int, threshold_q: float):
+        """Fit ``build(sample)`` on the ``features`` rows and freeze the
+        threshold at the exact P-``threshold_q`` of their scores — numpy's
+        linear interpolation, as the reference's ``np.percentile(train
+        errors, 95)``. Returns ``(model, threshold)``.
+
+        ``rows`` become a lazy local checkpoint: the sample collect
+        materializes them, and the threshold's scoring pass reads those
+        rows instead of re-running the scan and the projection. It holds
+        no CacheManager entry, so a fit that raises leaves nothing behind."""
+        rows = rows.localCheckpoint(eager=False)
+        model = build(det.collect_feature_sample(rows, max_rows=sample_rows))
+        # the selection filters out NULL/NaN scores; over the bare UDF the
+        # optimizer pushes that filter below the projection and evaluates
+        # the scoring UDF twice per row, so the scores are checkpointed first
+        scored = det.score_distributed(rows, model).select("score").localCheckpoint(eager=False)
+        t = th.percentile_threshold(scored, "score", threshold_q, exact=True)
+        return model, float(t)
+
+    @staticmethod
+    def _flagged(rows: DataFrame, fitted, then=None) -> DataFrame:
+        """Score the ``features`` rows with the artifact's model and flag
+        them against its frozen threshold; ``then`` reshapes the scored
+        relation before the flag."""
+        scored = det.score_distributed(rows, fitted.model)
+        if then is not None:
+            scored = then(scored)
+        return th.flag_anomalies(scored, "score", fitted.threshold)
 
     # -- feature pipeline + detector --------------------------------------
     def fit_detector(
@@ -224,34 +224,27 @@ class DQEngine:
         n_components: int = 4,
         threshold_q: float = 0.95,
         sample_rows: int = 100_000,
-        exact_threshold: bool = False,
     ) -> FittedDetector:
-        """Fit on the normal slice, derive the threshold from TRAIN errors
-        (reference app/AE_model.py:42-48, :197) — one artifact out.
-
-        The transformed train relation is a lazy local checkpoint: the
-        sample collect materializes it on first use, and the threshold's
-        scoring pass reads those rows instead of re-running the scan and
-        the feature projection."""
-        normal = train_df.where(F.col(label) == F.lit(0)) if label in train_df.columns else train_df
-        fm = feat.fit_features(normal, roles=roles, label_col=label)
-        transformed = feat.apply_features(normal, fm).localCheckpoint(eager=False)
-        x = det.collect_feature_sample(transformed, max_rows=sample_rows)
-        if detector == "pca":
-            model = det.PCAAutoencoder.fit(x, n_components=n_components)
-        elif detector == "iforest":
-            model = det.IsolationForest(n_estimators=100, max_samples=256, seed=42).fit(x)
-        elif detector == "ae":
-            # real keras dense AE when importable, PCA stand-in otherwise —
-            # the reference's M7 path behind one flag (ml.keras_adapter)
-            from dataquality_ml_spark.ml.keras_adapter import build_autoencoder
-
-            model = build_autoencoder(x, n_components=n_components, backend="auto")
-        else:
+        """Fit features and a detector on the normal slice, derive the
+        threshold from TRAIN errors (reference app/AE_model.py:42-48,
+        :197) — one artifact out. ``detector``: "pca", "iforest" or "ae"
+        (a keras dense AE when importable, the PCA stand-in otherwise —
+        ml.keras_adapter)."""
+        fitters = {
+            "pca": lambda x: det.PCAAutoencoder.fit(x, n_components=n_components),
+            "iforest": lambda x: det.IsolationForest(
+                n_estimators=100, max_samples=256, seed=42
+            ).fit(x),
+            "ae": lambda x: ka.build_autoencoder(x, n_components=n_components, backend="auto"),
+        }
+        if detector not in fitters:
             raise ValueError(f"unknown detector: {detector}")
-        scored = det.score_distributed(transformed, model).select("score")
-        t = th.percentile_threshold(scored, "score", threshold_q, exact=exact_threshold)
-        return FittedDetector(fm, model, float(t), threshold_q)
+        normal = _normal(train_df, label)
+        fm = feat.fit_features(normal, roles=roles, label_col=label)
+        model, t = self._fit(
+            feat.apply_features(normal, fm), fitters[detector], sample_rows, threshold_q
+        )
+        return FittedDetector(fm, model, t, threshold_q)
 
     def score(self, df: DataFrame, fitted: FittedDetector) -> DataFrame:
         """Transform with the SAME artifact (no refit drift), score
@@ -262,9 +255,7 @@ class DQEngine:
         sink) reads those rows instead of re-running the scan, the feature
         projection and the scoring UDF. Under AQE the call itself runs the
         scoring input's repartition stage, if it has one."""
-        transformed = feat.apply_features(df, fitted.features)
-        scored = det.score_distributed(transformed, fitted.model)
-        return th.flag_anomalies(scored, "score", fitted.threshold).localCheckpoint(
+        return self._flagged(feat.apply_features(df, fitted.features), fitted).localCheckpoint(
             eager=False
         )
 
@@ -273,12 +264,13 @@ class DQEngine:
         the reconstruction error (AE family only — IF has no per-feature
         decomposition). Same transform artifact as ``score``, one extra
         Arrow-batched pass."""
-        transformed = feat.apply_features(df, fitted.features)
-        scored = det.score_distributed(transformed, fitted.model)
-        explained = det.explain_distributed(
-            scored, fitted.model, fitted.features.feature_names, top_k
+        return self._flagged(
+            feat.apply_features(df, fitted.features),
+            fitted,
+            lambda s: det.explain_distributed(
+                s, fitted.model, fitted.features.feature_names, top_k
+            ),
         )
-        return th.flag_anomalies(explained, "score", fitted.threshold)
 
     # -- sequence detectors (reference LSTM_AE.py / LSTM_VAE.py lifecycle) -
     def _windowed(
@@ -328,36 +320,24 @@ class DQEngine:
         keras when importable, PCA fallback otherwise — ml.keras_adapter).
         """
         feats = [features] if isinstance(features, str) else list(features)
-        normal = (
-            train_df.where(F.col(label) == F.lit(0))
-            if label in train_df.columns
-            else train_df
-        )
-        # read by the sample collect and the threshold's scoring pass; a
-        # lazy local checkpoint holds no CacheManager entry, so nothing is
-        # left behind when the fit raises
-        seqs = self._windowed(normal, key, order, feats, timesteps, tiebreak).localCheckpoint(
-            eager=False
-        )
-        x = det.collect_feature_sample(seqs, max_rows=sample_rows)
-        if detector == "pca":
-            model: object = det.PCAAutoencoder.fit(x, n_components=n_components)
-        elif detector in ("lstm_ae", "lstm_vae"):
-            from dataquality_ml_spark.ml.keras_adapter import (
-                build_sequence_autoencoder,
-            )
 
-            x3 = x.reshape(len(x), timesteps, len(feats))
-            model = build_sequence_autoencoder(
-                x3,
+        def lstm(x, variational: bool):
+            return ka.build_sequence_autoencoder(
+                x.reshape(len(x), timesteps, len(feats)),
                 n_components=n_components,
                 backend="auto",
-                variational=detector == "lstm_vae",
+                variational=variational,
             )
-        else:
+
+        fitters = {
+            "pca": lambda x: det.PCAAutoencoder.fit(x, n_components=n_components),
+            "lstm_ae": lambda x: lstm(x, False),
+            "lstm_vae": lambda x: lstm(x, True),
+        }
+        if detector not in fitters:
             raise ValueError(f"unknown sequence detector: {detector}")
-        scored = det.score_distributed(seqs, model).select("score")
-        t = th.percentile_threshold(scored, "score", threshold_q, exact=False)
+        seqs = self._windowed(_normal(train_df, label), key, order, feats, timesteps, tiebreak)
+        model, t = self._fit(seqs, fitters[detector], sample_rows, threshold_q)
         return FittedSequenceDetector(
             key=key,
             order=order,
@@ -365,7 +345,7 @@ class DQEngine:
             timesteps=timesteps,
             tiebreak=tiebreak,
             model=model,
-            threshold=float(t),
+            threshold=t,
             threshold_q=threshold_q,
         )
 
@@ -380,104 +360,23 @@ class DQEngine:
             df, fitted.key, fitted.order, fitted.features,
             fitted.timesteps, fitted.tiebreak,
         )
-        scored = det.score_distributed(seqs, fitted.model).drop("features")
-        return th.flag_anomalies(scored, "score", fitted.threshold)
+        return self._flagged(seqs, fitted, lambda s: s.drop("features"))
 
     # -- evaluation --------------------------------------------------------
     def evaluate(self, scored_df: DataFrame, label: str = "failure") -> DataFrame:
-        flagged = scored_df.withColumn("actual_failure", F.col(label) == 1)
+        flagged = scored_df.withColumn("actual_failure", F.col(prof._ident(label)) == 1)
         return ev.confusion_metrics(flagged)
 
     def auc(self, scored_df: DataFrame, label: str = "failure") -> DataFrame:
         return ev.roc_auc(
-            scored_df.withColumn("__y", F.col(label) == 1), "score", "__y"
+            scored_df.withColumn("__y", F.col(prof._ident(label)) == 1), "score", "__y"
         )
 
     def report(self, scored_df: DataFrame, k: int = 1000) -> DataFrame:
         """Top-k anomaly report sorted by score desc (reference W3/S6)."""
         return rel.top_k(scored_df.where(F.col("is_anomaly")), "score", k)
 
-    # -- corpus curation ---------------------------------------------------
-    def train_tokenizer(
-        self,
-        docs: DataFrame,
-        num_merges: int = 1000,
-        text_col: str = "text",
-        kind: str = "bpe",
-        vocab_size: int = 1000,
-    ):
-        """Tokenizer lifecycle entry: ``kind='bpe'`` (operators.bpe —
-        distributed word count, incremental in-memory merges) or
-        ``kind='unigram'`` (operators.unigram — Kudo 2018 EM over a
-        substring seed vocab, pruned to ``vocab_size``).  Both return a
-        persistable artifact with the same ``tokenize`` contract."""
-        if kind == "bpe":
-            from dataquality_ml_spark.operators.bpe import train_tokenizer
-
-            return train_tokenizer(docs, num_merges, text_col)
-        if kind == "unigram":
-            from dataquality_ml_spark.operators.unigram import (
-                train_unigram_tokenizer,
-            )
-
-            return train_unigram_tokenizer(
-                docs, vocab_size=vocab_size, text_col=text_col
-            )
-        raise ValueError("kind must be 'bpe' or 'unigram'")
-
-    def tokenize(self, docs: DataFrame, tokenizer, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-        return tokenizer.tokenize(docs, text_col, id_col)
-
-    def curate_hosts(
-        self,
-        docs: DataFrame,
-        url_col: str = "url",
-        blocklist: list[str] | None = None,
-        cap: int = 1000,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-    ) -> DataFrame:
-        """Host/domain-level curation report (operators.web): per
-        registered host — doc count, mean token count, blocklist flag and
-        per-host cap survivors."""
-        from dataquality_ml_spark.operators.web import host_curation_report
-
-        return host_curation_report(
-            docs, url_col, text_col, id_col, blocklist, cap
-        )
-
-    def suggest_rules(self, df: DataFrame, columns: list[str], **kw) -> DataFrame:
-        """Mine candidate DQ rules (rules.suggest_rules) — feed the result
-        to ``check_rules`` to close the loop."""
-        from dataquality_ml_spark.operators.rules import suggest_rules
-
-        return suggest_rules(df, columns, **kw)
-
-    def check_rules(self, df: DataFrame, suggestions: DataFrame) -> DataFrame:
-        from dataquality_ml_spark.operators.rules import (
-            rules_from_suggestions,
-            run_checks,
-        )
-
-        return run_checks(df, rules_from_suggestions(suggestions))
-
-    def drift_panel(
-        self,
-        ref: DataFrame,
-        cur: DataFrame,
-        col: str,
-        keys: list[str] | None = None,
-    ) -> DataFrame:
-        """The full two-sample drift panel (KS D, Mann-Whitney U/z, CvM T,
-        Anderson-Darling A²) between a reference slice and the current
-        data, optionally per segment — ONE aggregation over one shared
-        ECDF (drift.drift_panel). The guard the reference never had: its
-        daily retrain (app/test_AE.py:87-97) refits thresholds without
-        ever testing whether today's data still looks like training."""
-        from dataquality_ml_spark.operators.drift import drift_panel
-
-        return drift_panel(ref, cur, col, keys=keys)
-
+    # -- drift and corpus curation -----------------------------------------
     def feature_drift(
         self,
         ref: DataFrame,
@@ -502,23 +401,6 @@ class DQEngine:
             categorical_columns=categorical_columns,
             bins=bins, bounds=bounds,
         )
-
-    def drift_timeline(
-        self,
-        df: DataFrame,
-        col: str,
-        period,
-        lo: float,
-        hi: float,
-        bins: int = 10,
-    ) -> DataFrame:
-        """WHEN did it start drifting: per-period PSI of ``col`` against
-        the earliest period (drift.psi_timeline) — one bounded
-        groupBy(period, bin) scan; the retrain scheduler reads the first
-        period past the alarm line (PSI ≳ 0.2)."""
-        from dataquality_ml_spark.operators.drift import psi_timeline
-
-        return psi_timeline(df, col, period, lo, hi, bins)
 
     def curate_corpus(
         self,
@@ -621,227 +503,3 @@ class DQEngine:
             disposition.join(assigned, id_col, "left")
             .select(id_col, "status", "keep_id", "split")
         )
-
-    # -- audits and statistical tests --------------------------------------
-    def audit_benford(self, df: DataFrame, col: str) -> DataFrame:
-        """First-digit Benford audit of a positive measure — (digit, n,
-        p, p_benford, chi2_total); chi2 far above ~20 on large n says the
-        column's magnitudes were keyed in, truncated, or unit-mixed.
-        One aggregation to <=9 rows."""
-        from dataquality_ml_spark.operators.profile import benford_check
-
-        return benford_check(df, col)
-
-    def feature_iv(
-        self,
-        df: DataFrame,
-        feature: str,
-        label,
-        lo: float,
-        hi: float,
-        bins: int = 10,
-    ) -> DataFrame:
-        """Weight-of-Evidence / Information-Value screen of one feature
-        against a binary label — the pre-model ranking (IV < 0.02
-        useless, > 0.3 strong). One aggregation to <=bins cells."""
-        from dataquality_ml_spark.operators.evaluate import woe_iv
-
-        return woe_iv(df, feature, label, lo, hi, bins)
-
-    def repair_drift(
-        self,
-        cur: DataFrame,
-        col: str,
-        ref: DataFrame,
-        knots: int = 16,
-    ) -> DataFrame:
-        """Quantile-normalize a drifted column onto the reference
-        distribution (rank-preserving piecewise-linear map through exact
-        reference-quantile knots) — the REPAIR step after
-        :meth:`feature_drift` finds the alarm. Returns (value, n,
-        mapped) per distinct value; join back on value to apply."""
-        from dataquality_ml_spark.ml.features import quantile_map
-
-        return quantile_map(cur, col, ref, knots)
-
-    def survival_curve(
-        self,
-        df: DataFrame,
-        duration_col: str,
-        event_col: str,
-        bins: int | None = None,
-        lo: float | None = None,
-        hi: float | None = None,
-    ) -> DataFrame:
-        """Kaplan-Meier time-to-event curve with right censoring —
-        (t, n_at_risk, d_events, c_censored, survival). Pass ``bins=``
-        WITH explicit lo/hi at scale (every window then runs over
-        <=bins rows); the exact path raises above ~65k distinct
-        durations."""
-        from dataquality_ml_spark.operators.sequences import survival_km
-
-        return survival_km(df, duration_col, event_col, bins, lo, hi)
-
-    def tail_index(
-        self, df: DataFrame, col: str, k: int = 500, id_col: str | None = None
-    ) -> DataFrame:
-        """Hill estimator of the Pareto tail exponent over the k largest
-        values — (k_used, threshold, hill_alpha, tail_mean_log). One
-        top-(k+1) selection, no global sort."""
-        from dataquality_ml_spark.operators.profile import hill_tail_index
-
-        return hill_tail_index(df, col, k, id_col)
-
-    def concentration(
-        self, df: DataFrame, value_col: str, id_col: str | None = None
-    ) -> DataFrame:
-        """Exact Gini coefficient of a non-negative measure —
-        (n, total, gini); rank via distributed prefix sum."""
-        from dataquality_ml_spark.operators.profile import gini_coefficient
-
-        return gini_coefficient(df, value_col, id_col)
-
-    def changepoint(
-        self,
-        df: DataFrame,
-        ts_col: str,
-        value_col: str,
-        bucket: str = "day",
-        keys: list[str] | None = None,
-    ) -> DataFrame:
-        """CUSUM mean-shift screen over a time-bucketed series —
-        (bucket_ts, n, mean_value, cusum, is_changepoint); ``keys=``
-        runs one independent CUSUM per segment."""
-        from dataquality_ml_spark.operators.drift import cusum_changepoint
-
-        return cusum_changepoint(df, ts_col, value_col, bucket, keys)
-
-    def robust_trend(
-        self, df: DataFrame, x_col: str, y_col: str, max_points: int = 2000
-    ) -> DataFrame:
-        """Theil-Sen robust trend over a BOUNDED series —
-        (n_points, n_pairs, slope, intercept); raises past max_points."""
-        from dataquality_ml_spark.operators.drift import theil_sen_trend
-
-        return theil_sen_trend(df, x_col, y_col, max_points)
-
-    def dedup_richness(
-        self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-    ) -> DataFrame:
-        """Chao1 capture-recapture estimate of true distinct-content
-        count from the exact-dedup cluster histogram — (n_docs, s_obs,
-        f1, f2, chao1_estimate, coverage, dup_rate)."""
-        from dataquality_ml_spark.operators.dedup import chao1_duplicate_richness
-
-        return chao1_duplicate_richness(df, text_col, id_col)
-
-    def weight_ess(self, df: DataFrame, weight_col: str) -> DataFrame:
-        """Kish effective sample size of importance weights —
-        (n, sum_w, ess, ess_frac, max_w_share)."""
-        from dataquality_ml_spark.operators.selection import importance_weight_ess
-
-        return importance_weight_ess(df, weight_col)
-
-    def dedup_prefix_filter(
-        self,
-        df: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        k: int = 5,
-        threshold: float = 0.8,
-    ) -> DataFrame:
-        """Exact-Jaccard near-dup pairs via AllPairs/PPJoin prefix
-        filtering — the uncapped-safe alternative to the full shingle
-        inverted index (candidates come from each doc's rarest
-        prefix only)."""
-        from dataquality_ml_spark.operators.dedup import (
-            prefix_filter_jaccard_pairs,
-        )
-
-        return prefix_filter_jaccard_pairs(df, text_col, id_col, k, threshold)
-
-    def communities(
-        self, edges: DataFrame, iterations: int = 4
-    ) -> DataFrame:
-        """Label-propagation communities over an undirected edge
-        relation — (node, community); dense groups stay separate where
-        connected components would fuse them across one bridge."""
-        from dataquality_ml_spark.operators.graph import label_propagation
-
-        return label_propagation(edges, iterations)
-
-    def ewma_chart(
-        self,
-        df: DataFrame,
-        batch_col: str,
-        value_col: str = "value",
-        lam: float = 0.2,
-        nsigma: float = 3.0,
-        keys: list[str] | None = None,
-        mu0: float | None = None,
-        sigma0: float | None = None,
-    ) -> DataFrame:
-        """One-pass EWMA control chart of per-batch means (exact
-        variance-inflation limits); pass mu0/sigma0 to freeze the
-        in-control reference."""
-        from dataquality_ml_spark.operators.drift import ewma_control
-
-        return ewma_control(df, batch_col, value_col, lam, nsigma, keys,
-                            mu0, sigma0)
-
-    def autocorrelation(
-        self,
-        df: DataFrame,
-        batch_col: str,
-        value_col: str = "value",
-        max_lag: int = 7,
-        keys: list[str] | None = None,
-    ) -> DataFrame:
-        """Sample ACF + Ljung-Box Q of the per-batch mean series —
-        (lag, n_batches, rho, q_lb) per key."""
-        from dataquality_ml_spark.operators.drift import acf_ljung_box
-
-        return acf_ljung_box(df, batch_col, value_col, max_lag, keys)
-
-    def anova(
-        self, df: DataFrame, group_col: str, value_col: str = "value"
-    ) -> DataFrame:
-        """One-way ANOVA omnibus F + eta^2 across groups."""
-        from dataquality_ml_spark.operators.evaluate import anova_oneway
-
-        return anova_oneway(df, group_col, value_col)
-
-    def kruskal(
-        self, df: DataFrame, group_col: str, value_col: str = "value"
-    ) -> DataFrame:
-        """Kruskal-Wallis rank omnibus H (tie-corrected) across groups."""
-        from dataquality_ml_spark.operators.evaluate import kruskal_wallis
-
-        return kruskal_wallis(df, group_col, value_col)
-
-    def fdr_adjust(
-        self, panel: DataFrame, p_col: str = "p_value", m: int | None = None
-    ) -> DataFrame:
-        """Benjamini-Hochberg q-values over a test panel (adds
-        ``q_value``; panel-bounded contract)."""
-        from dataquality_ml_spark.operators.evaluate import fdr_bh
-
-        return fdr_bh(panel, p_col, m)
-
-    def unseen_mass(
-        self, df: DataFrame, text_col: str = "text", max_r: int = 10
-    ) -> DataFrame:
-        """Good-Turing frequency-of-frequencies panel; the r=1 row's
-        token_share is the unseen-token-mass estimate N1/N."""
-        from dataquality_ml_spark.operators.text import good_turing_panel
-
-        return good_turing_panel(df, text_col, max_r=max_r)
-
-    def ranking_quality(
-        self, exact: DataFrame, approx: DataFrame, k: int
-    ) -> DataFrame:
-        """NDCG@k + MRR of an approximate neighbor ranking against the
-        exact baseline — (query_id, dcg, idcg, ndcg, mrr)."""
-        from dataquality_ml_spark.operators.similarity import ranking_quality
-
-        return ranking_quality(exact, approx, k)

@@ -14,13 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataquality_ml_spark.operators.profile import _ident
+
 
 def confusion_counts(df: DataFrame, pred: str = "is_anomaly", actual: str = "actual_failure") -> DataFrame:
     """2×2 confusion counts (reference A11) — one grouped aggregation."""
+    p, a = F.col(_ident(pred)), F.col(_ident(actual))
     return (
-        df.groupBy(F.col(pred).cast("boolean").alias(pred), F.col(actual).cast("boolean").alias(actual))
+        df.groupBy(p.cast("boolean").alias(pred), a.cast("boolean").alias(actual))
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(pred, actual)
+        .orderBy(p, a)
     )
 
 
@@ -28,8 +31,8 @@ def confusion_metrics(df: DataFrame, pred: str = "is_anomaly", actual: str = "ac
     """Detection rate / FPR / precision / F1 as one row (reference
     app/test_AE.py:250-274 formulas), derived from a single aggregation —
     no row data leaves the executors."""
-    p = F.col(pred).cast("boolean")
-    a = F.col(actual).cast("boolean")
+    p = F.col(_ident(pred)).cast("boolean")
+    a = F.col(_ident(actual)).cast("boolean")
     agg = df.agg(
         F.count(F.when(p & a, 1)).alias("tp"),
         F.count(F.when(p & ~a, 1)).alias("fp"),
@@ -60,11 +63,12 @@ def roc_auc(df: DataFrame, score: str, label: str) -> DataFrame:
     window as a single-partition sort. Exact AUC is inherently a global
     order statistic; at 100 TB use :func:`roc_auc_binned`.
     """
-    w_rank = Window.partitionBy().orderBy(F.col(score))
+    s = F.col(_ident(score))
+    w_rank = Window.partitionBy().orderBy(s)
     ranked = df.select(
-        F.col(label).cast("boolean").alias("__y"),
+        F.col(_ident(label)).cast("boolean").alias("__y"),
         F.row_number().over(w_rank).alias("__rn"),
-        F.col(score).alias("__s"),
+        s.alias("__s"),
     ).withColumn("__midrank", F.avg("__rn").over(Window.partitionBy("__s")))
     agg = ranked.agg(
         F.sum(F.when(F.col("__y"), F.col("__midrank"))).alias("rank_sum"),
@@ -74,7 +78,7 @@ def roc_auc(df: DataFrame, score: str, label: str) -> DataFrame:
     auc = (F.col("rank_sum") - F.col("np") * (F.col("np") + 1) / 2) / (
         F.col("np") * F.col("nn")
     )
-    # single-class guard (round 10): AUC is undefined with no positives
+    # single-class guard: AUC is undefined with no positives
     # or no negatives — report NULL, not an ANSI DIVIDE_BY_ZERO
     auc = F.when((F.col("np") > 0) & (F.col("nn") > 0), auc)
     # same empty-input face as roc_auc_binned: (auc NULL, 0, 0)
@@ -135,7 +139,7 @@ def roc_auc_binned(df: DataFrame, score: str, label: str, bins: int = 10000) -> 
         F.sum("nn").alias("nn"),
     )
     auc = F.col("won2").cast("double") / (2.0 * F.col("np") * F.col("nn"))
-    # single-class / empty guard (round 10): NULL, not DIVIDE_BY_ZERO
+    # single-class / empty guard: NULL, not DIVIDE_BY_ZERO
     auc = F.when((F.col("np") > 0) & (F.col("nn") > 0), auc)
     return agg.select(
         F.round(auc, 4).alias("auc"),
@@ -152,10 +156,10 @@ def calibration_curve(
     lo: float = 0.0,
     hi: float = 1.0,
 ) -> DataFrame:
-    """Reliability diagram + Expected Calibration Error (round 9 — the
-    evaluation the reference's confusion/ROC pair misses: whether the
-    SCORES mean what they claim, which decides if a fixed probability
-    threshold transfers across days).
+    """Reliability diagram + Expected Calibration Error — the evaluation
+    the reference's confusion/ROC pair misses: whether the SCORES mean
+    what they claim, which decides if a fixed probability threshold
+    transfers across days.
 
     One scan: clamped equi-width bin over the score → per-bin
     (n, mean predicted score, empirical positive rate, |gap|). ECE —
@@ -349,9 +353,8 @@ def woe_iv(
     ≤``bins`` rows under the frozen (lo, hi) quantizer (out-of-range
     clamps to edge bins, same as the sketch family); all fractions are
     fixed float expressions over exact integer counts. The valid
-    population is non-null AND non-NaN (round-12 ADVICE: a NaN feature
-    value would otherwise clamp into bin 0 via floor(NaN/w) — the same
-    NULL/NaN-to-bucket-0 defect fixed in the binned drift path).
+    population is non-null AND non-NaN: a NaN feature value would
+    otherwise clamp into bin 0 via floor(NaN/w).
     """
     from dataquality_ml_spark.operators.profile import _valid
 
@@ -409,7 +412,7 @@ def conversion_ztest(
     (p̂ ∈ {0, 1}) reports NULL z instead of dividing by zero. A ``control``
     value absent from ``group_col`` RAISES at execution (left join +
     raise_error) instead of silently returning zero rows — loud-contract
-    convention for misconfiguration (round-12 ADVICE).
+    convention for misconfiguration.
     """
     y = F.col(success_col) if isinstance(success_col, str) else success_col
     agg = (
@@ -748,8 +751,7 @@ def isotonic_calibration(
     y = F.col(label).cast("boolean")
     # _valid (non-null AND non-NaN) on BOTH columns: a NaN score would
     # pass a bare isNotNull, floor(NaN) clamps into bin 0 and its NaN
-    # value poisons that bin's ss sum — the same NULL/NaN-to-bucket-0
-    # defect fixed in woe_iv (round-12 ADVICE).
+    # value poisons that bin's ss sum.
     cells = (
         df.where(_valid(df, score) & _valid(df, label))
         .groupBy(b.alias("bin"))
@@ -901,7 +903,7 @@ def kruskal_wallis(
     )
     # tie sum reads the prefix-sum OUTPUT (checkpoint-backed) rather than
     # re-aggregating ``vals`` — which would re-run the upstream scan +
-    # distinct-value groupBy a second time (round 13, guide §2.4)
+    # distinct-value groupBy a second time
     tie = ranked.agg(
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")).alias("t3")
     )
@@ -1012,7 +1014,7 @@ def welch_t_matrix(
     # the max_keys pre-check counts the CELLS relation the matrix is built
     # from (exact, one row per key) instead of a separate
     # approx_count_distinct scan over the raw rows — one pass, not two,
-    # and both pair-join branches read the materialized cells (round 13)
+    # and both pair-join branches read the materialized cells
     nk = cells.count()
     if nk and nk > max_keys:
         raise ValueError(

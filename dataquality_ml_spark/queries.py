@@ -999,9 +999,9 @@ _IFOREST_MEMO: dict = {}
 
 def _parquet_fingerprint(path: str) -> tuple:
     """Cheap driver-side change detector for a parquet file/directory:
-    (total bytes, max mtime_ns).  Keys the feature-model memo so
+    (total bytes, max mtime_ns).  Keys the catalog memos so
     regenerated data invalidates the cache instead of serving stale
-    fitted stats (ADVICE r5)."""
+    fitted stats."""
     import os
 
     if os.path.isfile(path):
@@ -1017,18 +1017,20 @@ def _parquet_fingerprint(path: str) -> tuple:
 
 
 def clear_feature_model_memo() -> None:
-    """Drop ALL memoized fitted models/artifacts — features, quantizers,
-    NFC projections, and the tokenizer memo in ``queries_ext`` (whose
-    entries hold session-bound checkpointed DataFrames: after a
-    SparkSession restart they reference a dead context, so the escape
-    hatch must purge them too — ADVICE r7).  The fingerprint keys already
-    handle regenerated files."""
+    """Drop ALL memoized catalog state — fitted features, the isolation
+    forest, quantizers, NFC projections, and ``queries_ext``'s tokenizer
+    and supplier-count memos. Tokenizer and NFC entries hold
+    session-bound checkpointed DataFrames, which reference a dead context
+    after a SparkSession restart, so they go too.  The fingerprint keys
+    already handle regenerated files."""
     _FEATURE_MODEL_MEMO.clear()
+    _IFOREST_MEMO.clear()
     _QUANT_MEMO.clear()
     _DOCS_NFC_MEMO.clear()
     from dataquality_ml_spark import queries_ext  # local: avoids a cycle
 
     queries_ext._TOK_MEMO.clear()
+    queries_ext._PS_SUPP_COUNT_MEMO.clear()
 
 
 _QUANT_MEMO: dict = {}

@@ -14,7 +14,7 @@ from dataquality_ml_spark.operators import profile as prof
 from dataquality_ml_spark.operators import text as tx
 from dataquality_ml_spark.operators import thresholds as th
 from dataquality_ml_spark.operators.relational import exclusive_prefix_sum
-from dataquality_ml_spark.queries import _t, register
+from dataquality_ml_spark.queries import _parquet_fingerprint, _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -5608,7 +5608,7 @@ def quantile_sketch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round 8: derived partsupp → TPC-H q2/q9/q11/q16/q20 (VERDICT r7 item 5)
+# Derived partsupp → TPC-H q2/q9/q11/q16/q20
 #
 # The driver's testdata ships no partsupp relation, so the five TPC-H join
 # shapes that need it are closed over a DERIVED partsupp: a deterministic
@@ -5645,10 +5645,12 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ps_partkey, ps_suppkey), attrs pure integer arithmetic — identical
     under any partitioning and bit-reproducible in DuckDB.  |partsupp| =
     4·|part|: a FACT relation at 100 TB (never broadcast it); the only
-    driver traffic is the supplier COUNT (memoized scalar)."""
-    if sf_dir not in _PS_SUPP_COUNT_MEMO:
-        _PS_SUPP_COUNT_MEMO[sf_dir] = _t(spark, sf_dir, "supplier").count()
-    s = _PS_SUPP_COUNT_MEMO[sf_dir]
+    value collected is the supplier COUNT, memoized per (sf_dir, supplier
+    file fingerprint) like the other catalog memos."""
+    key = (sf_dir, _parquet_fingerprint(f"{sf_dir}/supplier.parquet"))
+    if key not in _PS_SUPP_COUNT_MEMO:
+        _PS_SUPP_COUNT_MEMO[key] = _t(spark, sf_dir, "supplier").count()
+    s = _PS_SUPP_COUNT_MEMO[key]
     step = s // 4 + 1
     base = _t(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("ps_partkey"),

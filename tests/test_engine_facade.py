@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.engine import DQEngine
@@ -274,202 +275,6 @@ def test_registry_prefix_matches_driver_correctness_window():
     assert current == recorded
 
 
-def test_facade_tokenizer_and_rules_entries(spark, tmp_path):
-    from dataquality_ml_spark.engine import DQEngine
-
-    eng = DQEngine(spark)
-    docs = spark.createDataFrame(
-        [(0, "low low lower"), (1, "low slow")], "doc_id bigint, text string"
-    )
-    tok = eng.train_tokenizer(docs, num_merges=2)
-    out = eng.tokenize(docs, tok)
-    assert out.count() == 2 and "token_ids" in out.columns
-
-    ev = spark.createDataFrame(
-        [(i, "a" if i % 2 else "b", float(i)) for i in range(50)],
-        "id bigint, kind string, v double",
-    )
-    sug = eng.suggest_rules(ev, ["kind", "v"])
-    rep = {r["rule"]: r["n_violations"] for r in eng.check_rules(ev, sug).collect()}
-    assert rep["not_null(kind)"] == 0
-
-
-def test_facade_unigram_tokenizer_and_host_curation(spark):
-    from dataquality_ml_spark.engine import DQEngine
-
-    eng = DQEngine(spark)
-    docs = spark.createDataFrame(
-        [(1, "hash hash table", "https://a.example.com/1"),
-         (2, "tab hash rows", "https://a.example.com/2"),
-         (3, "join scan", "https://b.example.com/1")],
-        "doc_id bigint, text string, url string",
-    )
-    tok = eng.train_tokenizer(docs, kind="unigram", vocab_size=16)
-    ids = {r["doc_id"]: r["n_ids"] for r in eng.tokenize(docs, tok).collect()}
-    assert set(ids) == {1, 2, 3} and all(v > 0 for v in ids.values())
-
-    rep = {r["host"]: r for r in eng.curate_hosts(
-        docs, blocklist=["b.example.com"], cap=1
-    ).collect()}
-    assert rep["a.example.com"]["n_docs"] == 2 and rep["a.example.com"]["n_kept"] == 1
-    assert rep["b.example.com"]["blocked"] == 1 and rep["b.example.com"]["n_kept"] == 0
-
-
-def test_engine_drift_surface(spark):
-    """DQEngine.drift_panel / drift_timeline delegate to the drift
-    operators with identical results — the facade's retrain-guard
-    surface (the check the reference's daily refit never ran)."""
-    from dataquality_ml_spark.engine import DQEngine
-    from dataquality_ml_spark.operators.drift import drift_panel, psi_timeline
-
-    eng = DQEngine(spark)
-    a = spark.range(400).select(
-        (F.col("id") % 3).cast("string").alias("g"), (F.col("id") * 1.1).alias("v")
-    )
-    b = spark.range(300).select(
-        (F.col("id") % 3).cast("string").alias("g"), (F.col("id") * 0.9 + 30).alias("v")
-    )
-    got = {r["g"]: r for r in eng.drift_panel(a, b, "v", keys=["g"]).collect()}
-    want = {r["g"]: r for r in drift_panel(a, b, "v", keys=["g"]).collect()}
-    assert got == want and len(got) == 3
-
-    t = a.select((F.col("v") % 4).cast("int").alias("p"), "v")
-    tl = eng.drift_timeline(t, "v", F.col("p"), lo=0.0, hi=500.0, bins=8).collect()
-    wl = psi_timeline(t, "v", F.col("p"), lo=0.0, hi=500.0, bins=8).collect()
-    assert tl == wl and len(tl) == 4
-
-
-def test_facade_audit_and_repair_methods(spark):
-    """Round-11 facade additions delegate to the audited operators:
-    benford digits, feature IV, drift repair via quantile mapping, and
-    the KM survival curve."""
-    import pyspark.sql.functions as F
-
-    from dataquality_ml_spark.engine import DQEngine
-
-    eng = DQEngine(spark)
-    money = spark.range(1, 400).select((F.col("id") * 13.7).alias("v"))
-    ben = eng.audit_benford(money, "v").collect()
-    assert {r["digit"] for r in ben} <= set(range(1, 10))
-    assert all(r["chi2_total"] is not None for r in ben)
-
-    labeled = spark.range(400).select(
-        (F.col("id") % 10).cast("double").alias("x"),
-        (F.col("id") % 2 == 0).alias("y"),
-    )
-    iv = eng.feature_iv(labeled, "x", "y", lo=0.0, hi=10.0, bins=5).collect()
-    assert len(iv) == 5 and all(r["iv_total"] is not None for r in iv)
-
-    ref = spark.range(500).select((F.col("id") / 5.0).alias("v"))
-    cur = spark.range(300).select((F.col("id") / 5.0 + 1000.0).alias("v"))
-    rep = eng.repair_drift(cur, "v", ref)
-    ms = [r["mapped"] for r in rep.orderBy("value").collect()]
-    assert ms == sorted(ms) and 0 <= ms[0] <= ms[-1] <= 100.0
-
-    surv = eng.survival_curve(
-        spark.createDataFrame([(1.0, 1), (2.0, 0), (3.0, 1)], "d double, e int"),
-        "d", "e",
-    ).orderBy("t").collect()
-    assert [r["n_at_risk"] for r in surv] == [3, 2, 1]
-    assert surv[-1]["survival"] == 0.0
-
-
-def test_engine_round12_stat_facades(spark):
-    """Round-12 facade surface: tail_index / concentration / changepoint /
-    robust_trend / dedup_richness / weight_ess delegate to the operators
-    and return the documented one-row / per-bucket shapes."""
-    import datetime
-
-    import pytest
-
-    from dataquality_ml_spark.engine import DQEngine
-
-    eng = DQEngine(spark)
-    vals = spark.range(1, 1001).select(
-        F.col("id").alias("i"), F.pow(F.col("id") / 1001.0, -0.5).alias("v")
-    )
-    t = eng.tail_index(vals, "v", k=50, id_col="i").first()
-    assert t["k_used"] == 50 and t["hill_alpha"] > 0
-    g = eng.concentration(vals, "v", id_col="i").first()
-    assert 0.0 < g["gini"] < 1.0 and g["n"] == 1000
-    ev = spark.createDataFrame(
-        [(datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d), float(d >= 5))
-         for d in range(10)],
-        "ts timestamp, v double",
-    )
-    cp = eng.changepoint(ev, "ts", "v").where("is_changepoint = 1").collect()
-    assert len(cp) == 1
-    tr = eng.robust_trend(
-        spark.createDataFrame(
-            [(float(i), 2.0 * i) for i in range(10)], "x double, y double"
-        ),
-        "x",
-        "y",
-    ).first()
-    assert tr["slope"] == pytest.approx(2.0)
-    docs = spark.createDataFrame(
-        [(0, "a b"), (1, "a b"), (2, "c d")], "doc_id long, text string"
-    )
-    r = eng.dedup_richness(docs).first()
-    assert (r["n_docs"], r["s_obs"], r["f1"], r["f2"]) == (3, 2, 1, 1)
-    w = eng.weight_ess(
-        spark.range(10).select(F.lit(1.0).alias("w")), "w"
-    ).first()
-    assert w["ess"] == pytest.approx(10.0)
-
-
-def test_engine_round13_facades(spark):
-    """Round-13 facade surface: dedup_prefix_filter / communities /
-    ewma_chart / autocorrelation / anova / kruskal / fdr_adjust /
-    unseen_mass / ranking_quality delegate to the operators and return
-    the documented shapes."""
-    import pytest
-
-    from dataquality_ml_spark.engine import DQEngine
-
-    eng = DQEngine(spark)
-    base = "the quick brown fox jumps over the lazy dog again and then " * 3
-    docs = spark.createDataFrame(
-        [(1, base),
-         (2, base.replace("lazy", "sleepy", 1)),
-         (3, "completely different text about shuffle partitions here " * 3)],
-        "doc_id long, text string",
-    )
-    pairs = eng.dedup_prefix_filter(docs, threshold=0.5)
-    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2)}
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (4, 5)], "id_a long, id_b long"
-    )
-    comm = {r.node: r.community for r in eng.communities(edges).collect()}
-    assert comm[1] == comm[2] == comm[3] and comm[4] == comm[5]
-    assert comm[1] != comm[4]
-    series = spark.createDataFrame(
-        [(i, 5.0 + (i % 3)) for i in range(30)], "b long, value double"
-    )
-    ew = eng.ewma_chart(series, "b")
-    assert {"batch_id", "ewma", "lcl", "ucl", "ooc"} <= set(ew.columns)
-    ac = eng.autocorrelation(series, "b", max_lag=3)
-    assert ac.count() == 3
-    groups = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("b", 5.0), ("b", 6.0)],
-        "k string, value double",
-    )
-    assert eng.anova(groups, "k").first()["n_groups"] == 2
-    assert eng.kruskal(groups, "k").first()["n_groups"] == 2
-    panel = spark.createDataFrame(
-        [("t1", 0.01), ("t2", 0.5)], "t string, p_value double"
-    )
-    q = {r.t: r.q_value for r in eng.fdr_adjust(panel).collect()}
-    assert q["t1"] == pytest.approx(0.02) and q["t2"] == pytest.approx(0.5)
-    gt = eng.unseen_mass(docs)
-    assert {"r", "n_r", "r_star", "token_share"} <= set(gt.columns)
-    ranked = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2)], "query_id long, neighbor_id long, rank int"
-    )
-    rq = eng.ranking_quality(ranked, ranked, k=2).first()
-    assert rq["ndcg"] == pytest.approx(1.0) and rq["mrr"] == 1.0
-
-
 def test_score_output_is_materialized_for_later_consumers(spark):
     """score() returns a lazily checkpointed relation: once one consumer
     has run, the next one reads those rows — its plan has no scoring UDF —
@@ -501,3 +306,125 @@ def test_score_output_is_materialized_for_later_consumers(spark):
     assert conf == eng.evaluate(recomputed).first()
     assert auc.first() == eng.auc(recomputed).first()
     assert sorted(scored.collect()) == sorted(recomputed.collect())
+
+
+def _seq_frame(spark):
+    import numpy as np
+
+    rng = np.random.default_rng(31)
+    rows = [
+        (uid, t, float(rng.normal(10, 0.5)), 0) for uid in range(8) for t in range(40)
+    ]
+    return spark.createDataFrame(rows, "user_id bigint, ts bigint, value double, failure int")
+
+
+@pytest.mark.parametrize("detector", ["pca", "iforest", "seq_pca"])
+def test_fitted_threshold_is_numpy_percentile_of_train_scores(spark, detector):
+    """The frozen threshold is the reference's np.percentile(train errors,
+    q) of the rows the model was fitted on, not an approximate sketch."""
+    import numpy as np
+
+    from dataquality_ml_spark.ml import detectors as det
+    from dataquality_ml_spark.ml import features as feat
+
+    eng = DQEngine(spark)
+    if detector == "seq_pca":
+        df = _seq_frame(spark)
+        fitted = eng.fit_sequence_detector(
+            df, key="user_id", order="ts", features="value", timesteps=5,
+            n_components=2, threshold_q=0.9,
+        )
+        rows = eng._windowed(df, "user_id", "ts", ["value"], 5, None)
+    else:
+        telemetry = spark.createDataFrame(_fixture_rows(), SCHEMA)
+        train = telemetry.where(F.col("date") < "2024-12-25")
+        fitted = eng.fit_detector(
+            train,
+            roles={"numeric": ["smart_1", "smart_2"], "categorical": ["model"], "boolean": []},
+            detector=detector,
+            n_components=1,
+        )
+        rows = feat.apply_features(train.where(F.col("failure") == 0), fitted.features)
+    scores = [r["score"] for r in det.score_distributed(rows, fitted.model).collect()]
+    assert len(scores) > 100
+    want = float(np.percentile(scores, 100 * fitted.threshold_q))
+    assert fitted.threshold == pytest.approx(want, rel=1e-12, abs=0.0)
+
+
+def test_artifact_with_unknown_or_mismatched_kind_raises(tmp_path):
+    """A model_kind the artifact class cannot hold raises a ValueError
+    naming it, for an unknown kind and for a dense kind in a sequence
+    artifact."""
+    import json
+
+    import numpy as np
+
+    from dataquality_ml_spark.engine import FittedDetector, FittedSequenceDetector
+    from dataquality_ml_spark.ml.detectors import IsolationForest
+    from dataquality_ml_spark.ml.features import FeatureModel
+
+    x = np.random.default_rng(3).normal(size=(64, 2))
+    forest = IsolationForest(n_estimators=4, max_samples=16, seed=1).fit(x)
+    p = tmp_path / "iforest.json"
+    FittedDetector(FeatureModel(), forest, 1.0, 0.95).save(str(p))
+    assert isinstance(FittedDetector.load(str(p)).model, IsolationForest)
+    with pytest.raises(ValueError, match="'iforest'"):
+        FittedSequenceDetector.load(str(p))
+
+    d = json.loads(p.read_text())
+    d["model_kind"] = "gbm"
+    p.write_text(json.dumps(d))
+    with pytest.raises(ValueError, match="'gbm'"):
+        FittedDetector.load(str(p))
+
+
+def test_awkward_label_name_through_the_daily_job(spark):
+    """A label named ``fail.flag`` gives the threshold, confusion row,
+    confusion counts and AUC that ``failure`` gives."""
+    from dataquality_ml_spark.operators import evaluate as ev
+
+    eng = DQEngine(spark)
+    roles = {"numeric": ["smart_1", "smart_2"], "categorical": ["model"], "boolean": []}
+    telemetry = spark.createDataFrame(_fixture_rows(), SCHEMA)
+    got = []
+    for label in ("failure", "fail.flag"):
+        df = telemetry.withColumnRenamed("failure", label)
+        fitted = eng.fit_detector(
+            df.where(F.col("date") < "2024-12-25"), label=label, roles=roles, n_components=1
+        )
+        scored = eng.score(df.where(F.col("date") == "2024-12-25"), fitted)
+        got.append(
+            (
+                fitted.threshold,
+                eng.evaluate(scored, label=label).first(),
+                eng.auc(scored, label=label).first(),
+                [tuple(r) for r in ev.confusion_counts(scored, actual=label).collect()],
+                ev.confusion_metrics(scored, actual=label).first(),
+                ev.roc_auc(scored, "score", label).first(),
+            )
+        )
+    assert got[0] == got[1]
+    assert got[0][1]["tp"] >= 3
+
+
+def test_fit_threshold_reads_checkpointed_scores(spark, monkeypatch):
+    """The exact threshold selection filters NULL/NaN scores; it must read
+    checkpointed scores, or the optimizer pushes that filter below the
+    scoring UDF's projection and the UDF runs twice per train row."""
+    from dataquality_ml_spark.operators import thresholds as th
+
+    plans = []
+    real = th.percentile_threshold
+
+    def spy(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(th, "percentile_threshold", spy)
+    telemetry = spark.createDataFrame(_fixture_rows(), SCHEMA)
+    DQEngine(spark).fit_detector(
+        telemetry.where(F.col("date") < "2024-12-25"),
+        roles={"numeric": ["smart_1", "smart_2"], "categorical": [], "boolean": []},
+        detector="iforest",
+    )
+    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]

@@ -31,7 +31,7 @@ def test_catalog_faces_and_json_quarantine_leave_no_cache_entries(spark, sf_dir,
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()  # other tests' cached frames are not ours
-    q._IFOREST_MEMO.clear()  # take iforest_anomalies' fit path, its second consumer
+    q.clear_feature_model_memo()  # take iforest_anomalies' fit path, its second consumer
     faces = q.queries()
     for name in FACES:
         assert faces[name](spark, sf_dir).collect(), name

@@ -474,6 +474,36 @@ def test_feature_model_memo_invalidates_on_data_change(spark, tmp_path):
     clear_feature_model_memo()
 
 
+def test_partsupp_supplier_count_follows_rewritten_data(spark, tmp_path):
+    """_partsupp's supplier-count memo is keyed on the supplier file's
+    fingerprint: rewriting supplier.parquet with another row count under
+    the same sf_dir spreads the derived suppkeys over the new count, and
+    clear_feature_model_memo empties it and the isolation-forest memo."""
+    import time
+
+    from dataquality_ml_spark.queries import _IFOREST_MEMO, clear_feature_model_memo
+    from dataquality_ml_spark.queries_ext import _PS_SUPP_COUNT_MEMO, _partsupp
+
+    sf = str(tmp_path)
+    spark.range(1, 13).select(F.col("id").alias("p_partkey")).coalesce(1).write.parquet(
+        f"{sf}/part.parquet"
+    )
+    for n in (40, 7):
+        spark.range(n).select(F.col("id").alias("s_suppkey")).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{sf}/supplier.parquet")
+        step = n // 4 + 1
+        want = sorted((p, (p + i * step) % n) for p in range(1, 13) for i in range(4))
+        got = _partsupp(spark, sf).select("ps_partkey", "ps_suppkey").collect()
+        assert sorted(tuple(r) for r in got) == want
+        time.sleep(0.05)  # ensure mtime_ns moves even on coarse filesystems
+
+    _IFOREST_MEMO["stale"] = object()
+    assert _PS_SUPP_COUNT_MEMO
+    clear_feature_model_memo()
+    assert not _IFOREST_MEMO and not _PS_SUPP_COUNT_MEMO
+
+
 def test_fit_features_top_k_cut_only_over_the_cap(spark, monkeypatch):
     """Under max_categories the frequency collect is a plain grouped count
     (no salted top-k windows) and the categories equal a direct groupBy
