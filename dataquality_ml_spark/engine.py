@@ -187,20 +187,21 @@ class DQEngine:
     @staticmethod
     def _fit(rows: DataFrame, build, sample_rows: int, threshold_q: float):
         """Fit ``build(sample)`` on the ``features`` rows and freeze the
-        threshold at the exact P-``threshold_q`` of their scores — numpy's
-        linear interpolation, as the reference's ``np.percentile(train
-        errors, 95)``. Returns ``(model, threshold)``.
+        threshold at the exact P-``threshold_q`` of their scores, the
+        reference's ``np.percentile(train errors, 95)``: linear
+        interpolation lo·(1−f) + hi·f, bit-equal to Spark ``percentile``
+        and DuckDB ``quantile_cont`` and within 1 ulp of ``np.percentile``.
+        Returns ``(model, threshold)``.
 
         ``rows`` become a lazy local checkpoint: the sample collect
         materializes them, and the threshold's scoring pass reads those
         rows instead of re-running the scan and the projection. It holds
-        no CacheManager entry, so a fit that raises leaves nothing behind."""
+        no CacheManager entry, so a fit that raises leaves nothing behind.
+        The selection checkpoints the scores itself, so the scoring UDF
+        runs once per row."""
         rows = rows.localCheckpoint(eager=False)
         model = build(det.collect_feature_sample(rows, max_rows=sample_rows))
-        # the selection filters out NULL/NaN scores; over the bare UDF the
-        # optimizer pushes that filter below the projection and evaluates
-        # the scoring UDF twice per row, so the scores are checkpointed first
-        scored = det.score_distributed(rows, model).select("score").localCheckpoint(eager=False)
+        scored = det.score_distributed(rows, model)
         t = th.percentile_threshold(scored, "score", threshold_q, exact=True)
         return model, float(t)
 

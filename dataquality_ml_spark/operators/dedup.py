@@ -145,18 +145,8 @@ def build_fingerprint_bloom(
     impossible, so nothing already in the corpus ever sneaks through — the
     safe direction for dedup.
     """
-    proto = FingerprintBloom(b"", num_bits, num_hashes)
-    # NULL fingerprints (null/empty text) stay OUT of the filter: the exact
-    # anti-join never matches NULL keys, so the bloom path must not claim
-    # them as seen either (oracle parity on null-text corpora).
-    pos_df = (
-        corpus_df.select(bow_fingerprint(text_col).alias("__fp"))
-        .where(F.col("__fp").isNotNull())
-        .select(proto.position_cols(F.col("__fp")).alias("pos"))
-    )
-    bloom = FingerprintBloom(
-        bitmap_from_positions(pos_df, num_bits), num_bits, num_hashes
-    )
+    empty = FingerprintBloom(bytes(num_bits // 8), num_bits, num_hashes)
+    bloom = bloom_or(empty, corpus_df, bow_fingerprint(text_col))
     if bloom.fill_ratio > 0.5:
         # past ~50% load the false-positive rate grows fast and dedup
         # starts silently discarding genuinely-new documents — refuse
@@ -166,6 +156,28 @@ def build_fingerprint_bloom(
             f"raise num_bits above {num_bits} for this corpus size"
         )
     return bloom
+
+
+def bloom_or(bloom: FingerprintBloom, df: DataFrame, key) -> FingerprintBloom:
+    """A new filter holding ``bloom``'s bits OR the positions of every
+    non-null value of the ``key`` column expression over ``df`` — the
+    one fold behind the batch build and the streaming dedup monitors.
+
+    NULL keys (a NULL fingerprint: null/empty text) stay OUT of the
+    filter: the exact anti-join never matches NULL keys, so the bloom
+    path must not claim them as seen either (oracle parity on null-text
+    corpora)."""
+    import numpy as np
+
+    pos_df = (
+        df.select(key.alias("__k"))
+        .where(F.col("__k").isNotNull())
+        .select(bloom.position_cols(F.col("__k")).alias("pos"))
+    )
+    bits = np.frombuffer(bloom.bits, dtype=np.uint8) | np.frombuffer(
+        bitmap_from_positions(pos_df, bloom.num_bits), dtype=np.uint8
+    )
+    return FingerprintBloom(bits.tobytes(), bloom.num_bits, bloom.num_hashes)
 
 
 def bitmap_from_positions(pos_df: DataFrame, num_bits: int) -> bytes:

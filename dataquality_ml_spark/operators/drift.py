@@ -47,6 +47,12 @@ from dataquality_ml_spark.operators.profile import _ident, _melt_sql, _str_lit
 EPS = 1e-6  # proportion clamp so empty bins don't produce ±inf PSI terms
 
 
+def _cols(names: list[str]) -> list:
+    """Quoted column references, so key names with spaces, dots or quotes
+    resolve as one column each."""
+    return [F.col(_ident(n)) for n in names]
+
+
 def _bucket(col, lo: float, hi: float, bins: int):
     """Clamped equi-width bin id in [0, bins): outside values land in the
     edge bins, so the bucket expression is total (no null branch)."""
@@ -180,8 +186,8 @@ def _ecdf_counts(
     keys = list(keys or [])
     c = F.col(_ident(col))
     key = _bucket(c, lo, hi, bins) if bins else c
-    tagged = a.where(c.isNotNull()).select(*keys, key.alias("v"), F.lit(1).alias("in_a")).unionAll(
-        b.where(c.isNotNull()).select(*keys, key.alias("v"), F.lit(0).alias("in_a"))
+    tagged = a.where(c.isNotNull()).select(*_cols(keys), key.alias("v"), F.lit(1).alias("in_a")).unionAll(
+        b.where(c.isNotNull()).select(*_cols(keys), key.alias("v"), F.lit(0).alias("in_a"))
     )
     return _ecdf_from_tagged(tagged, keys, bounded=bool(bins))
 
@@ -200,7 +206,8 @@ def _ecdf_from_tagged(
     ``bounded=False`` from the distributed prefix-sum decomposition, so
     no window funnels ~|rows| distinct values through one task. Both give
     identical integer ca/cb/tot columns."""
-    per_v = tagged.groupBy(*keys, "v").agg(
+    kcols = _cols(keys)
+    per_v = tagged.groupBy(*kcols, "v").agg(
         F.sum("in_a").alias("n_a"),
         F.sum(1 - F.col("in_a")).alias("n_b"),
     )
@@ -209,15 +216,15 @@ def _ecdf_from_tagged(
         # counts (same partitioning: one exchange, no join, no second
         # aggregation of the upstream relation)
         run = (
-            Window.partitionBy(*keys)
+            Window.partitionBy(*kcols)
             .orderBy("v")
             .rowsBetween(Window.unboundedPreceding, 0)
         )
-        full = Window.partitionBy(*keys).rowsBetween(
+        full = Window.partitionBy(*kcols).rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
         return per_v.select(
-            *keys,
+            *kcols,
             "v",
             "n_a",
             "n_b",
@@ -242,7 +249,7 @@ def _ecdf_from_tagged(
         with_totals=True,
     )
     cum = cum.select(
-        *keys,
+        *kcols,
         "v",
         "n_a",
         "n_b",
@@ -254,7 +261,7 @@ def _ecdf_from_tagged(
         # real group (GROUP BY semantics on both engines keep it), and a
         # plain join would silently drop it
         key_schema = ", ".join(
-            f"__t_{k} {per_v.schema[k].dataType.simpleString()}" for k in keys
+            f"{_ident('__t_' + k)} {per_v.schema[k].dataType.simpleString()}" for k in keys
         )
         tots = per_v.sparkSession.createDataFrame(
             [(*kt, int(v[0]), int(v[1])) for kt, v in tot_map.items()],
@@ -262,7 +269,7 @@ def _ecdf_from_tagged(
         )
         cond = None
         for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"__t_{k}"))
+            c = F.col(_ident(k)).eqNullSafe(F.col(_ident(f"__t_{k}")))
             cond = c if cond is None else (cond & c)
         return cum.join(F.broadcast(tots), cond).drop(
             *[f"__t_{k}" for k in keys]
@@ -365,7 +372,7 @@ def _panel(ec: DataFrame, keys: list[str], aggs: list[str], outs: list[str]) -> 
     ``ec``: one aggregation of the ``_PANEL_AGG`` terms ``aggs`` and the
     side totals, then one projection of the ``_PANEL_OUT`` expressions
     ``outs``."""
-    agg = ec.groupBy(*keys).agg(
+    agg = ec.groupBy(*_cols(keys)).agg(
         *[F.expr(f"{_PANEL_AGG[a]} AS {a}") for a in aggs],
         F.expr("max(tot_a) AS n_a"),
         F.expr("max(tot_b) AS n_b"),
@@ -509,8 +516,8 @@ def cvm_statistic(
     )
     cnt_d = (F.col("n_a") + F.col("n_b")).cast("double")
     agg = (
-        ec.select(*keys, (cnt_d * gap_d * gap_d).alias("s_term"), "tot_a", "tot_b")
-        .groupBy(*keys)
+        ec.select(*_cols(keys), (cnt_d * gap_d * gap_d).alias("s_term"), "tot_a", "tot_b")
+        .groupBy(*_cols(keys))
         .agg(
             F.sum("s_term").alias("s"),
             F.max("tot_a").alias("n_a"),
@@ -519,7 +526,7 @@ def cvm_statistic(
     )
     nn = (F.col("n_a") + F.col("n_b")).cast("double")
     return agg.select(
-        *keys,
+        *_cols(keys),
         (F.col("n_a") * F.col("n_b") / (nn * nn) * F.col("s")).alias(
             "cvm_t"
         ),
@@ -676,14 +683,14 @@ def qq_table(
         cnt = F.col(f"n_{side}")
         targets = _targets(n, cum, cnt)
         tagged = ec.select(
-            *keys,
+            *_cols(keys),
             F.col("v").cast("double").alias("v"),
             (cum - cnt).alias("start"),
             cum.alias("end"),
             F.explode(targets).alias("s"),
         )
         picked = (
-            tagged.groupBy(*keys, F.col("s.q").alias("q"))
+            tagged.groupBy(*_cols(keys), F.col("s.q").alias("q"))
             .agg(
                 F.max(
                     F.when(
@@ -702,7 +709,7 @@ def qq_table(
                 F.first("s.frac").alias("frac"),
             )
             .select(
-                *keys,
+                *_cols(keys),
                 "q",
                 F.when(
                     F.col("v_hi").isNull() | (F.col("v_hi") == F.col("v_lo")),
@@ -722,21 +729,21 @@ def qq_table(
         # real segments (grouped-agg semantics on both engines)
         left = sides[0]
         right = sides[1].select(
-            *[F.col(k).alias(f"__r_{k}") for k in keys],
+            *[F.col(_ident(k)).alias(f"__r_{k}") for k in keys],
             F.col("q").alias("__r_q"),
             "val_b",
         )
         cond = F.col("q") == F.col("__r_q")
         for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__r_{k}"))
+            cond = cond & F.col(_ident(k)).eqNullSafe(F.col(_ident(f"__r_{k}")))
         joined = left.join(right, cond, "full_outer").select(
-            *[F.coalesce(F.col(k), F.col(f"__r_{k}")).alias(k) for k in keys],
+            *[F.coalesce(F.col(_ident(k)), F.col(_ident(f"__r_{k}"))).alias(k) for k in keys],
             F.coalesce(F.col("q"), F.col("__r_q")).alias("q"),
             "val_a",
             "val_b",
             (F.col("val_b") - F.col("val_a")).alias("gap"),
         )
-        return joined.orderBy(*keys, "q")
+        return joined.orderBy(*_cols(keys), "q")
     return (
         sides[0]
         .join(sides[1], "q")
@@ -944,7 +951,7 @@ def categorical_drift_report(
     )
 
     def _melt(df: DataFrame, tag) -> DataFrame:
-        return df.select(*[F.col(_ident(k)) for k in keys], tag.alias("in_r"), melt)
+        return df.select(*_cols(keys), tag.alias("in_r"), melt)
 
     # ONE tagged relation and ONE groupBy build the aligned category
     # counts: sum(in_r)/sum(1-in_r) per cell is what two groupBys, a
@@ -961,7 +968,7 @@ def categorical_drift_report(
         ).where(F.col("in_r").isNotNull())
     else:
         tagged = _melt(ref, F.lit(1)).unionAll(_melt(cur, F.lit(0)))
-    joined = tagged.groupBy(*keys, "column", "category").agg(
+    joined = tagged.groupBy(*_cols(keys), "column", "category").agg(
         F.sum("in_r").alias("n_r"),
         F.sum(1 - F.col("in_r")).alias("n_c"),
     )
@@ -977,7 +984,7 @@ def categorical_drift_report(
             # one bounded reduction over the category counts — never
             # materializes the category relation anywhere central
             worst = (
-                joined.groupBy(*keys, "column")
+                joined.groupBy(*_cols(keys), "column")
                 .agg(F.count(F.lit(1)).alias("nc"))
                 .agg(F.max("nc").alias("m"))
                 .first()["m"]
@@ -992,7 +999,7 @@ def categorical_drift_report(
                     "or max_categories=None to accept the exact cost."
                 )
         else:  # keep: top-K by combined count, rest folds into __other__
-            wrank = Window.partitionBy(*keys, "column").orderBy(
+            wrank = Window.partitionBy(*_cols(keys), "column").orderBy(
                 F.desc(F.col("n_r") + F.col("n_c")),
                 F.asc_nulls_first("category"),
             )
@@ -1004,17 +1011,17 @@ def categorical_drift_report(
                         F.col("__rk") <= max_categories, F.col("category")
                     ).otherwise(F.lit("__other__")),
                 )
-                .groupBy(*keys, "column", "category")
+                .groupBy(*_cols(keys), "column", "category")
                 .agg(F.sum("n_r").alias("n_r"), F.sum("n_c").alias("n_c"))
             )
     # ≤ Σ|categories| rows per segment — bounded
-    w = Window.partitionBy(*keys, "column")
+    w = Window.partitionBy(*_cols(keys), "column")
     # one-sided guard: a segment/column absent from one side has a zero
     # total there — its proportions are 0 (EPS-clamped downstream), not a
     # DIVIDE_BY_ZERO under ANSI
     tot_r_w, tot_c_w = F.sum("n_r").over(w), F.sum("n_c").over(w)
     cells = joined.select(
-        *keys,
+        *_cols(keys),
         "column",
         F.when(tot_r_w > 0, F.col("n_r") / tot_r_w).otherwise(0.0).alias("p"),
         F.when(tot_c_w > 0, F.col("n_c") / tot_c_w).otherwise(0.0).alias("q"),
@@ -1041,7 +1048,7 @@ def categorical_drift_report(
     ).otherwise(0.0) + F.when(
         e_c > 0, (F.col("n_c") - e_c) * (F.col("n_c") - e_c) / e_c
     ).otherwise(0.0)
-    return cells.groupBy(*keys, "column").agg(
+    return cells.groupBy(*_cols(keys), "column").agg(
         F.sum(psi_term).alias("psi"),
         ((F.sum(term_p) + F.sum(term_q)) / 2).alias("jsd"),
         F.sum(chi_term).alias("chi2"),

@@ -834,15 +834,17 @@ def exact_quantiles_select(
     groups = list(group_by or [])
     gcols = [F.col(_ident(g)).alias(f"_g{i}") for i, g in enumerate(groups)]
     gnames = [f"_g{i}" for i in range(len(groups))]
-    vals = df.select(*gcols, F.col(_ident(col)).cast("double").alias("v")).where(
-        F.col("v").isNotNull() & ~F.isnan("v")
-    )
+    vals = df.select(*gcols, F.col(_ident(col)).cast("double").alias("v"))
     # scanned once per refinement level + batched collects — materialize
     # once when the input is derived (joins/UDFs upstream); callers whose
     # input is a raw scan pass checkpoint=False (re-reading parquet twice
-    # beats writing the projection to block storage first)
+    # beats writing the projection to block storage first). The projection
+    # is checkpointed BEFORE the NULL/NaN filter: over a Python-UDF column
+    # the optimizer would push the filter below the projection and run the
+    # UDF twice per row.
     if checkpoint:
         vals = vals.localCheckpoint(eager=False)
+    vals = vals.where(F.col("v").isNotNull() & ~F.isnan("v"))
     if stats is not None:
         # optional 4th element: (approximate) distinct count — lets the
         # loop collect low-cardinality chains directly (see below)

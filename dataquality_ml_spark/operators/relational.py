@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
+from dataquality_ml_spark.operators.profile import _ident
+
 _log = logging.getLogger(__name__)
 
 # Knuth multiplicative-hash constant: portable deterministic pseudo-random
@@ -521,10 +523,11 @@ def exclusive_prefix_sum(
     if len(val_cols) != len(outs):
         raise ValueError("val_col and out must have the same length")
     keys = list(keys or [])
-    rng_exprs = [F.col(k) for k in keys] + [
+    kcols = [F.col(_ident(k)) for k in keys]
+    rng_exprs = kcols + [
         F.col(order_col).desc() if descending else F.col(order_col)
     ]
-    sort_exprs = [F.asc(k) for k in keys] + [
+    sort_exprs = [c.asc() for c in kcols] + [
         F.desc(order_col) if descending else F.asc(order_col)
     ]
     # Lazy-checkpoint the INPUT before range-partitioning it:
@@ -546,7 +549,7 @@ def exclusive_prefix_sum(
         .localCheckpoint(eager=False)
     )
     with_pid = parts.withColumn("_pid", F.spark_partition_id())
-    subtotals = with_pid.groupBy("_pid", *keys).agg(
+    subtotals = with_pid.groupBy("_pid", *kcols).agg(
         *[F.sum(c).alias(f"_psum_{i}") for i, c in enumerate(val_cols)]
     ).collect()
     accs: dict = {}
@@ -559,7 +562,7 @@ def exclusive_prefix_sum(
             a + int(r[f"_psum_{i}"] or 0) for i, a in enumerate(acc)
         ]
     key_schema = "".join(
-        f"{k} {df.schema[k].dataType.simpleString()}, " for k in keys
+        f"{_ident(k)} {df.schema[k].dataType.simpleString()}, " for k in keys
     )
     off_schema = (
         "_pid int, "
@@ -573,7 +576,7 @@ def exclusive_prefix_sum(
         )
     )
     w = (
-        Window.partitionBy("_pid", *keys)
+        Window.partitionBy("_pid", *kcols)
         .orderBy(sort_exprs[-1])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -585,7 +588,7 @@ def exclusive_prefix_sum(
             off2 = off2.withColumnRenamed(k, f"_off_k_{k}")
         cond = with_pid["_pid"] == off2["_pid"]
         for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"_off_k_{k}"))
+            cond = cond & F.col(_ident(k)).eqNullSafe(F.col(_ident(f"_off_k_{k}")))
         res = with_pid.join(F.broadcast(off2), cond).drop(off2["_pid"]).drop(
             *[f"_off_k_{k}" for k in keys]
         )

@@ -28,11 +28,14 @@ from dataquality_ml_spark.operators.profile import (
 def percentile_threshold(df: DataFrame, col: str, q: float, exact: bool = True) -> float:
     """Threshold = q-th percentile of ``col`` (reference A7: P95/P90/P72).
 
-    ``exact=True`` reproduces numpy's linear interpolation exactly via the
+    ``exact=True`` interpolates linearly as lo·(1−f) + hi·f via the
     histogram-refine selection (``profile.exact_quantiles_select``: no
     single-buffer ``Percentile`` aggregate anywhere in the plan, no
-    distinct-value shuffle; NaNs are excluded); ``exact=False`` is the
-    mergeable approx sketch (cheaper still — one pass, bounded memory).
+    distinct-value shuffle; NaNs are excluded). The value is bit-equal to
+    Spark ``percentile`` and DuckDB ``quantile_cont``, and within 1 ulp of
+    ``np.percentile``, whose interpolation rounds differently.
+    ``exact=False`` is the mergeable approx sketch (cheaper still — one
+    pass, bounded memory).
     """
     if exact:
         return exact_quantiles_select(df, col, [q])[0]
@@ -119,27 +122,29 @@ def mad_robust_outliers(
     ``exact=False`` switches both medians to the mergeable approx sketch
     for the cheapest one-pass form.
     """
+    gcol = F.col(_ident(group_col))
+
     def _grouped_median(rel: DataFrame, col: str, out: str) -> DataFrame:
         if exact:
-            # histogram-refine SELECTION per group (round 8): narrow scans
-            # + a chains·bins count shuffle — never a distinct-value
-            # shuffle; >64 groups switches to broadcast-JOIN chain
-            # membership inside (round 9), same count-row shuffles at any
-            # segment count. The medians come back as scalars, which is
-            # exactly what the broadcast join below ships anyway.
+            # histogram-refine SELECTION per group: narrow scans + a
+            # chains·bins count shuffle — never a distinct-value shuffle;
+            # >64 groups switch to broadcast-JOIN chain membership inside,
+            # same count-row shuffles at any segment count. The medians
+            # come back as scalars, which is exactly what the broadcast
+            # join below ships anyway.
             med = exact_quantiles_select(rel, col, [0.5], group_by=[group_col])
             gtype = rel.schema[group_col].dataType.simpleString()
             return rel.sparkSession.createDataFrame(
                 [(g[0], v[0]) for g, v in med.items()],
-                f"{group_col} {gtype}, {out} double",
+                f"{_ident(group_col)} {gtype}, {out} double",
             )
-        return rel.groupBy(group_col).agg(
-            F.expr(f"percentile_approx({col}, 0.5)").alias(out)
+        return rel.groupBy(gcol).agg(
+            F.expr(f"percentile_approx({_ident(col)}, 0.5)").alias(out)
         )
 
     med = _grouped_median(df, value_col, "med")
     dev = df.join(F.broadcast(med), group_col).withColumn(
-        "abs_dev", F.abs(F.col(value_col) - F.col("med"))
+        "abs_dev", F.abs(F.col(_ident(value_col)) - F.col("med"))
     )
     # the deviation relation feeds BOTH the MAD build (which itself reads
     # it twice through the prefix-sum subtotal job) and the final counts
@@ -149,7 +154,7 @@ def mad_robust_outliers(
     thr = F.lit(k) * F.lit(1.4826) * F.col("mad")
     return (
         dev.join(F.broadcast(mad), group_col)
-        .groupBy(group_col)
+        .groupBy(gcol)
         .agg(
             F.first("med").alias("med"),
             F.first("mad").alias("mad"),

@@ -4863,22 +4863,21 @@ def containment_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def drift_panel_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming drift monitor's registered face (round 11, VERDICT
-    r10 item 4): the second half of the events month replayed through the
-    PRODUCTION foreachBatch fold (streaming.score_stream._drift_monitor_fold
-    — shared verbatim with drift_monitor_stream) as 4 micro-batches
-    (event_id % 4), each scored against the frozen first-half reference
-    histogram: per batch PSI + binned KS + binned CvM under the frozen
-    (0, 500, 25) quantizer. Only ≤ bins count cells cross to the driver
-    per batch — the 100 TB property of the streaming panel."""
+    """The streaming drift monitor's registered face: the second half of
+    the events month replayed through the PRODUCTION foreachBatch fold
+    (streaming.score_stream._drift_monitor_fold — shared verbatim with
+    drift_monitor_stream) as 4 micro-batches (event_id % 4), each scored
+    against the frozen first-half reference histogram: per batch PSI +
+    binned KS + binned CvM under the frozen (0, 500, 25) quantizer. Only
+    ≤ bins count cells cross to the driver per batch — the 100 TB
+    property of the streaming panel."""
     from dataquality_ml_spark.operators.sketch import qsketch_build
     from dataquality_ml_spark.streaming.score_stream import drift_monitor_replay
 
     # ONE materialized (ts, value, event_id) projection feeds both the
-    # frozen-reference histogram build and the replay (round 14, guide
-    # §2.3/§6 — previously two scans of the same table; in production
-    # the reference histogram is a frozen training artifact, so only
-    # this demo face ever paid the second scan)
+    # frozen-reference histogram build and the replay, instead of two
+    # scans of the same table (in production the reference histogram is
+    # a frozen training artifact)
     ev_df = _t(spark, sf_dir, "events").select(
         "ts", "value", "event_id"
     ).localCheckpoint(eager=True)
@@ -5628,20 +5627,20 @@ def quantile_map_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def keyed_drift_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KEYED streaming drift panel's registered face (round 11,
-    completing the drift_panel_stream_replay pair): the second half of
-    the events month replayed through the PRODUCTION per-segment
-    foreachBatch fold (streaming.score_stream._drift_panel_fold, shared
-    verbatim with drift_panel_stream) as 3 micro-batches scored per
-    event_type against frozen per-segment first-half histograms — PSI +
-    binned KS + binned CvM + binned AD A^2 per (batch, segment). Only
-    <= segments*bins count cells cross to the driver per batch."""
+    """The KEYED streaming drift panel's registered face (the keyed twin
+    of drift_panel_stream_replay): the second half of the events month
+    replayed through the PRODUCTION per-segment foreachBatch fold
+    (streaming.score_stream._drift_panel_fold, shared verbatim with
+    drift_panel_stream) as 3 micro-batches scored per event_type against
+    frozen per-segment first-half histograms — PSI + binned KS + binned
+    CvM + binned AD A^2 per (batch, segment). Only <= segments*bins count
+    cells cross to the driver per batch."""
     from dataquality_ml_spark.operators.sketch import qsketch_build
     from dataquality_ml_spark.streaming.score_stream import drift_panel_replay
 
     # one materialized projection for both the frozen per-segment
     # histograms and the replay — same rationale as
-    # drift_panel_stream_replay (round 14)
+    # drift_panel_stream_replay
     ev_df = _t(spark, sf_dir, "events").select(
         "ts", "value", "event_id", "event_type"
     ).localCheckpoint(eager=True)

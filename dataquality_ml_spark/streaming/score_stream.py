@@ -19,8 +19,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dataquality_ml_spark.operators.drift import EPS
+from dataquality_ml_spark.operators.sketch import cms_build, hll_sketch_by_group, qsketch_build
 
 
 def windowed_stats(
@@ -65,13 +69,30 @@ def score_with_batch_operator(
 ):
     """foreachBatch bridge: apply any batch operator/sink to each
     micro-batch (how the engine reuses its scoring/report operators in
-    streaming mode). Returns the started StreamingQuery."""
+    streaming mode). Every foreachBatch monitor in this module starts its
+    query here. ``trigger_once`` processes what is available now and
+    stops. Returns the started StreamingQuery."""
     writer = stream_df.writeStream.foreachBatch(batch_fn).option(
         "checkpointLocation", checkpoint
     )
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _once_per_batch(fold: Callable[[DataFrame, int], None]):
+    """Wrap a foreachBatch fold so it skips a batch_id it already folded.
+    ``foreachBatch`` delivers at least once, and a fold that sums counts
+    or appends reports would count a replayed batch twice."""
+    applied: set = set()
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in applied:
+            return
+        fold(batch_df, batch_id)
+        applied.add(batch_id)
+
+    return _batch
 
 
 def dedup_stream(
@@ -158,12 +179,8 @@ def bloom_dedup_stream(
     Returns (query, get_bloom) — ``get_bloom()`` reads the current filter
     for persistence after the query stops.
     """
-    import numpy as np
-
-    from dataquality_ml_spark.operators.dedup import (
-        FingerprintBloom,
-        incremental_dedup_bloom,
-    )
+    from dataquality_ml_spark.functions.scalar import bow_fingerprint
+    from dataquality_ml_spark.operators.dedup import bloom_or, incremental_dedup_bloom
 
     state = {"bloom": initial_bloom}
 
@@ -172,32 +189,10 @@ def bloom_dedup_stream(
         fresh = incremental_dedup_bloom(batch_df, bloom, text_col, id_col)
         kept = batch_df.join(fresh, id_col, "semi")
         out_fn(kept, batch_id)
-        # fold the accepted docs' fingerprint positions into the bitmap —
-        # partition-local bit-set + driver OR (bitmap_from_positions), the
-        # same shuffle-free shape as the batch builder; only fixed-size
-        # bitmaps cross to the driver, never rows
-        from dataquality_ml_spark.functions.scalar import bow_fingerprint
-        from dataquality_ml_spark.operators.dedup import bitmap_from_positions
+        state["bloom"] = bloom_or(bloom, kept, bow_fingerprint(text_col))
 
-        pos_df = (
-            kept.select(bow_fingerprint(text_col).alias("__fp"))
-            .where(F.col("__fp").isNotNull())
-            .select(bloom.position_cols(F.col("__fp")).alias("pos"))
-        )
-        batch_bits = np.frombuffer(
-            bitmap_from_positions(pos_df, bloom.num_bits), dtype=np.uint8
-        )
-        bm = np.frombuffer(bloom.bits, dtype=np.uint8) | batch_bits
-        state["bloom"] = FingerprintBloom(
-            bm.tobytes(), bloom.num_bits, bloom.num_hashes
-        )
-
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), lambda: state["bloom"]
+    query = score_with_batch_operator(stream_df, _batch, checkpoint, trigger_once)
+    return query, lambda: state["bloom"]
 
 
 def span_dedup_stream(
@@ -231,12 +226,9 @@ def span_dedup_stream(
     Returns (query, get_bloom); persist ``get_bloom()`` with the
     checkpoint to resume the corpus-so-far state.
     """
-    import numpy as np
-
     from dataquality_ml_spark.operators.dedup import (
-        FingerprintBloom,
-        bitmap_from_positions,
         bloom_member_udf,
+        bloom_or,
         dedup_spans,
         reconstruct_spans,
     )
@@ -257,24 +249,10 @@ def span_dedup_stream(
         # materialize it once (RDD-owned blocks, reclaimed on GC)
         marked = marked.localCheckpoint(eager=False)
         out_fn(reconstruct_spans(marked), batch_id)
-        pos_df = (
-            marked.where("kept")
-            .select(bloom.position_cols(F.col("chunk_text")).alias("pos"))
-        )
-        batch_bits = np.frombuffer(
-            bitmap_from_positions(pos_df, bloom.num_bits), dtype=np.uint8
-        )
-        bm = np.frombuffer(bloom.bits, dtype=np.uint8) | batch_bits
-        state["bloom"] = FingerprintBloom(
-            bm.tobytes(), bloom.num_bits, bloom.num_hashes
-        )
+        state["bloom"] = bloom_or(bloom, marked.where("kept"), F.col("chunk_text"))
 
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), lambda: state["bloom"]
+    query = score_with_batch_operator(stream_df, _batch, checkpoint, trigger_once)
+    return query, lambda: state["bloom"]
 
 
 def stream_stream_interval_join(
@@ -375,12 +353,7 @@ def oov_monitor_stream(
             }
         )
 
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return score_with_batch_operator(stream_df, _batch, checkpoint, trigger_once)
 
 
 def url_dedup_stream(
@@ -427,11 +400,11 @@ def cms_monitor_stream(
     persists next to the checkpoint; ``estimate`` answers point queries
     from it (min over depth rows, the standard CMS read).
 
-    Delivery semantics (ADVICE r7): ``foreachBatch`` is at-least-once, and
+    Delivery semantics: ``foreachBatch`` is at-least-once, and
     elementwise sum — unlike the HLL twin's register-wise max — is NOT
     idempotent, so a replayed batch would double-count.  The fold is
-    therefore keyed on ``batch_id``: already-applied ids are skipped, which
-    makes a within-run replay exact.  Across a RESTART the persisted array
+    therefore keyed on ``batch_id`` (``_once_per_batch``), which makes a
+    within-run replay exact.  Across a RESTART the persisted array
     must be saved/restored together with the checkpoint (same contract as
     the bloom bitmap); restoring a stale array while the checkpoint has
     advanced undercounts, restoring a newer one double-counts.
@@ -443,23 +416,16 @@ def cms_monitor_stream(
     """
     import hashlib
 
-    import numpy as np
-
     from dataquality_ml_spark.functions.scalar import tokens as tok_fn
-    from dataquality_ml_spark.operators.sketch import cms_build
 
-    state = {"cms": np.zeros((depth, width), dtype=np.int64), "applied": set()}
+    state = {"cms": np.zeros((depth, width), dtype=np.int64)}
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in state["applied"]:
-            return  # at-least-once replay of an already-folded batch
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.select(F.explode(tok_fn(F.col(text_col))).alias("token"))
-        cells = cms_build(toks, "token", width=width, depth=depth).collect()
         part = np.zeros((depth, width), dtype=np.int64)
-        for r in cells:
+        for r in cms_build(toks, "token", width=width, depth=depth).collect():
             part[r["cms_depth"], r["cms_bucket"]] = r["cms_cnt"]
         state["cms"] = state["cms"] + part
-        state["applied"].add(batch_id)
 
     def estimate(items) -> dict:
         cms = state["cms"]
@@ -473,12 +439,10 @@ def cms_monitor_stream(
             out[it] = est
         return out
 
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
+    query = score_with_batch_operator(
+        stream_df, _once_per_batch(_fold), checkpoint, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), lambda: state["cms"], estimate
+    return query, lambda: state["cms"], estimate
 
 
 def hll_monitor_stream(
@@ -507,7 +471,6 @@ def hll_monitor_stream(
     ``hll_sketch_estimate`` over it and returns {group: est}.
     """
     from dataquality_ml_spark.functions.scalar import tokens as tok_fn
-    from dataquality_ml_spark.operators.sketch import hll_sketch_by_group
 
     schema = f"{group_col} string, hll_sketch binary"
     state: dict = {"rows": None, "spark": None}
@@ -538,12 +501,20 @@ def hll_monitor_stream(
         ).collect()
         return {r[group_col]: r["est"] for r in out}
 
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), lambda: state["rows"], estimates
+    query = score_with_batch_operator(stream_df, _batch, checkpoint, trigger_once)
+    return query, lambda: state["rows"], estimates
+
+
+def _batch_hist(
+    batch_df: DataFrame, value_col: str, lo: float, hi: float, bins: int
+) -> np.ndarray:
+    """One micro-batch's length-``bins`` count histogram under the frozen
+    (lo, hi, bins) quantizer (``sketch.qsketch_build``): only ≤ bins count
+    cells cross to the driver."""
+    hist = np.zeros(bins, dtype=np.int64)
+    for r in qsketch_build(batch_df, value_col, lo, hi, bins=bins).collect():
+        hist[r["qs_bin"]] = r["qs_cnt"]
+    return hist
 
 
 def qsketch_monitor_stream(
@@ -556,12 +527,12 @@ def qsketch_monitor_stream(
     trigger_once: bool = True,
 ):
     """Streaming quantile monitor on the fixed-bin sketch
-    (``sketch.qsketch_build`` — VERDICT r7 item 4): each micro-batch's
-    values histogram under the frozen (lo, hi, bins) quantizer and the
-    ≤ ``bins`` cells fold into the running counter array by elementwise
-    sum — the exact-merge property that makes the sketch
-    stream-maintainable with zero per-key state (A7/A8 percentile
-    thresholds read live from the array, no history rescans).
+    (``sketch.qsketch_build``): each micro-batch's values histogram under
+    the frozen (lo, hi, bins) quantizer and the ≤ ``bins`` cells fold
+    into the running counter array by elementwise sum — the exact-merge
+    property that makes the sketch stream-maintainable with zero per-key
+    state (A7/A8 percentile thresholds read live from the array, no
+    history rescans).
 
     Like ``cms_monitor_stream``: state is one fixed-size array mutated
     driver-side; only bin cells cross to the driver, never value rows.
@@ -574,22 +545,11 @@ def qsketch_monitor_stream(
     {q: est} by the same uniform-within-bin read as
     ``sketch.qsketch_quantiles`` (driver-side over the bounded array).
     """
-    import numpy as np
-
-    from dataquality_ml_spark.operators.sketch import qsketch_build
-
-    state = {"hist": np.zeros(bins, dtype=np.int64), "applied": set()}
+    state = {"hist": np.zeros(bins, dtype=np.int64)}
     width = (float(hi) - float(lo)) / bins
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in state["applied"]:
-            return
-        cells = qsketch_build(batch_df, value_col, lo, hi, bins=bins).collect()
-        part = np.zeros(bins, dtype=np.int64)
-        for r in cells:
-            part[r["qs_bin"]] = r["qs_cnt"]
-        state["hist"] = state["hist"] + part
-        state["applied"].add(batch_id)
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        state["hist"] = state["hist"] + _batch_hist(batch_df, value_col, lo, hi, bins)
 
     def quantiles(qs) -> dict:
         hist = state["hist"]
@@ -613,12 +573,55 @@ def qsketch_monitor_stream(
             out[q] = float(lo) + width * (b + (rank - before) / int(hist[b]))
         return out
 
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
+    query = score_with_batch_operator(
+        stream_df, _once_per_batch(_fold), checkpoint, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), lambda: state["hist"], quantiles
+    return query, lambda: state["hist"], quantiles
+
+
+def _binned_panel(ref: np.ndarray, cur: np.ndarray) -> dict:
+    """The two-sample drift panel of a batch histogram ``cur`` against a
+    reference histogram ``ref`` on the same frozen quantizer, computed
+    driver-side over the two bounded arrays: ``n`` (the batch count),
+    ``psi`` (EPS-clamped proportions, ``drift.psi_bins``), ``ks_d`` (max
+    CDF gap, ``drift.ks_statistic(bins=...)``), ``cvm_t``
+    (``drift.cvm_statistic(bins=...)``) and ``ad_a2`` (the tie-aware
+    Anderson-Darling A² of ``drift.drift_panel``, each occupied bin one
+    distinct value). The statistics are NULL when either side is empty."""
+    n_a, n_b = int(ref.sum()), int(cur.sum())
+    if n_a == 0 or n_b == 0:
+        return {"n": n_b, "psi": None, "ks_d": None, "cvm_t": None, "ad_a2": None}
+    pr = np.maximum(ref / n_a, EPS)
+    pc = np.maximum(cur / n_b, EPS)
+    psi = float(np.sum((pc - pr) * np.log(pc / pr)))
+    ca, cb = np.cumsum(ref), np.cumsum(cur)
+    ks = float(np.max(np.abs(ca / n_a - cb / n_b)))
+    # CvM over pooled bucket counts — drift.cvm_statistic's
+    # Σ cnt·(ca·tot_b − cb·tot_a)² / (N²·tot_a·tot_b), in object dtype:
+    # exact integers, mirroring the DECIMAL path
+    cnt = ref + cur
+    n = n_a + n_b
+    num = np.sum(
+        cnt.astype(object)
+        * (ca.astype(object) * n_b - cb.astype(object) * n_a) ** 2
+    )
+    cvm = float(num) / (float(n) * n * n_a * n_b)
+    occ = cnt > 0
+    l = cnt[occ].astype(np.float64)
+    nd = float(n)
+    bb = (ca[occ] + cb[occ]).astype(np.float64) - l / 2
+    ad_denom = bb * (nd - bb) - nd * l / 4
+    ok = ad_denom > 0
+    ad = 0.0
+    for c_side, h_side, tot in (
+        (ca[occ], ref[occ], n_a),
+        (cb[occ], cur[occ], n_b),
+    ):
+        m = c_side.astype(np.float64) - h_side.astype(np.float64) / 2
+        g = nd * m - float(tot) * bb
+        ad += float(np.sum((l[ok] / nd) * g[ok] * g[ok] / ad_denom[ok] / tot))
+    ad_a2 = (nd - 1) / nd * ad
+    return {"n": n_b, "psi": psi, "ks_d": ks, "cvm_t": cvm, "ad_a2": ad_a2}
 
 
 def drift_monitor_stream(
@@ -634,7 +637,8 @@ def drift_monitor_stream(
     the FROZEN (lo, hi, bins) quantizer of a reference histogram
     (``sketch.qsketch_build`` over the training data — the artifact an
     ``ANNIndex``-style deployment persists), and the driver computes the
-    batch-vs-reference drift panel over the two BOUNDED arrays:
+    batch-vs-reference drift panel over the two BOUNDED arrays
+    (``_binned_panel``):
 
     - ``psi``   — Population Stability Index (drift.psi_bins semantics,
       EPS-clamped proportions),
@@ -648,66 +652,28 @@ def drift_monitor_stream(
     training distribution, app/test_AE.py:87-97): per batch only ≤bins
     count cells cross to the driver, state is one bounded report list,
     and the fold is keyed on ``batch_id`` (at-least-once replays
-    skipped). Returns (query, reports) — ``reports`` is the live list of
-    {batch_id, n, psi, ks_d, cvm_t} dicts in arrival order.
+    skipped). An empty batch or an all-zero reference reports NULL
+    statistics. Returns (query, reports) — ``reports`` is the live list
+    of {batch_id, n, psi, ks_d, cvm_t} dicts in arrival order.
     """
-    _batch, reports = _drift_monitor_fold(ref_hist, value_col, lo, hi)
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), reports
+    fold, reports = _drift_monitor_fold(ref_hist, value_col, lo, hi)
+    return score_with_batch_operator(stream_df, fold, checkpoint, trigger_once), reports
 
 
 def _drift_monitor_fold(ref_hist, value_col: str, lo: float, hi: float):
-    """The foreachBatch fold behind :func:`drift_monitor_stream`, exposed
-    so :func:`drift_monitor_replay` can drive the IDENTICAL code over a
-    static frame (round 11, VERDICT r10 item 4 — the registered face
-    exercises the production fold, not a reimplementation). Returns
-    (fn(batch_df, batch_id), reports)."""
-    import numpy as np
-
-    from dataquality_ml_spark.operators.drift import EPS
-    from dataquality_ml_spark.operators.sketch import qsketch_build
-
+    """The foreachBatch fold behind :func:`drift_monitor_stream`, shared
+    with :func:`drift_monitor_replay` so the replay face runs the
+    production fold. Returns (fn(batch_df, batch_id), reports)."""
     ref = np.asarray(ref_hist, dtype=np.int64)
-    bins = len(ref)
     reports: list = []
-    applied: set = set()
 
-    def _panel(cur: "np.ndarray") -> dict:
-        n_a, n_b = int(ref.sum()), int(cur.sum())
-        if n_b == 0:
-            return {"n": 0, "psi": None, "ks_d": None, "cvm_t": None}
-        p_ref = ref / n_a
-        p_cur = cur / n_b
-        pr = np.maximum(p_ref, EPS)
-        pc = np.maximum(p_cur, EPS)
-        psi = float(np.sum((pc - pr) * np.log(pc / pr)))
-        ca, cb = np.cumsum(ref), np.cumsum(cur)
-        ks = float(np.max(np.abs(ca / n_a - cb / n_b)))
-        # CvM over pooled bucket counts — mirrors drift.cvm_statistic's
-        # Σ cnt·(ca·tot_b − cb·tot_a)² / (N²·tot_a·tot_b) exactly
-        cnt = ref + cur
-        n = n_a + n_b
-        num = np.sum(
-            cnt.astype(object) * (ca.astype(object) * n_b - cb.astype(object) * n_a) ** 2
-        )  # object dtype: exact integer arithmetic, same as the DECIMAL path
-        cvm = float(num) / (float(n) * n * n_a * n_b)
-        return {"n": n_b, "psi": psi, "ks_d": ks, "cvm_t": cvm}
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        panel = _binned_panel(ref, _batch_hist(batch_df, value_col, lo, hi, len(ref)))
+        reports.append(
+            {"batch_id": batch_id, **{k: panel[k] for k in ("n", "psi", "ks_d", "cvm_t")}}
+        )
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in applied:
-            return
-        cells = qsketch_build(batch_df, value_col, lo, hi, bins=bins).collect()
-        cur = np.zeros(bins, dtype=np.int64)
-        for r in cells:
-            cur[r["qs_bin"]] = r["qs_cnt"]
-        reports.append({"batch_id": batch_id, **_panel(cur)})
-        applied.add(batch_id)
-
-    return _batch, reports
+    return _once_per_batch(_fold), reports
 
 
 #: Replay drivers run one fold invocation (a handful of Spark jobs) per
@@ -736,6 +702,31 @@ def _replay_batches(df: DataFrame, batch_col: str) -> list:
     return [r["b"] for r in rows]
 
 
+def _replay(df: DataFrame, batch_col: str, fold, schema: str, row=None) -> DataFrame:
+    """The one replay driver: slice a STATIC frame into micro-batches by
+    ``batch_col`` (ordered distinct values, batch ids 0, 1, …), drive a
+    production foreachBatch ``fold`` — the (fn, reports) pair of a
+    ``_*_fold`` factory — over each slice, and return its reports as one
+    relation of DDL ``schema``. ``row`` maps a report to its output
+    tuple, or to None for a report the relation leaves out; by default
+    it takes the schema's fields in order."""
+    fn, reports = fold
+    if row is None:
+        names = [f.split()[0] for f in schema.split(",")]
+
+        def row(r):
+            return tuple(r[c] for c in names)
+
+    # One materialization, N cheap slice jobs: without the checkpoint
+    # every sequential fold job re-runs the upstream scan. The
+    # _replay_batches distinct-collect materializes the blocks.
+    df = df.localCheckpoint(eager=False)
+    for i, b in enumerate(_replay_batches(df, batch_col)):
+        fn(df.where(F.col(batch_col).eqNullSafe(F.lit(b))), i)
+    rows = [t for t in map(row, reports) if t is not None]
+    return df.sparkSession.createDataFrame(rows, schema)
+
+
 def drift_monitor_replay(
     df: DataFrame,
     batch_col: str,
@@ -754,41 +745,12 @@ def drift_monitor_replay(
     aggregation per slice); the result is one row per batch —
     (batch_id, n, psi, ks_d, cvm_t) — identical to what the live
     ``reports`` list accumulates when the same slices arrive as real
-    micro-batches (stream == batch differential in
-    tests/test_streaming_multimodal.py pins drift_monitor_stream to the
-    batch operators; this face shares its fold verbatim)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    fn, reports = _drift_monitor_fold(ref_hist, value_col, lo, hi)
-    # One materialization, N cheap slice jobs: a replay drives one
-    # sequential fold job per batch, and without the checkpoint every
-    # one of those jobs re-runs the upstream scan (≈|batches| parquet
-    # passes; guide §2.4). The _replay_batches distinct-collect
-    # materializes the blocks.
-    df = df.localCheckpoint(eager=False)
-    batches = _replay_batches(df, batch_col)
-    for i, b in enumerate(batches):
-        fn(df.where(F.col(batch_col).eqNullSafe(F.lit(b))), i)
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("n", LongType()),
-            StructField("psi", DoubleType()),
-            StructField("ks_d", DoubleType()),
-            StructField("cvm_t", DoubleType()),
-        ]
-    )
-    return df.sparkSession.createDataFrame(
-        [
-            (int(r["batch_id"]), int(r["n"]), r["psi"], r["ks_d"], r["cvm_t"])
-            for r in reports
-        ],
-        schema,
+    micro-batches."""
+    return _replay(
+        df,
+        batch_col,
+        _drift_monitor_fold(ref_hist, value_col, lo, hi),
+        "batch_id bigint, n bigint, psi double, ks_d double, cvm_t double",
     )
 
 
@@ -803,11 +765,12 @@ def drift_panel_stream(
     trigger_once: bool = True,
     max_segments: int = 1024,
 ):
-    """Streaming PER-SEGMENT drift panel (round 9): every micro-batch's
-    values histogram per ``key_col`` segment under the frozen
-    (lo, hi, bins) quantizer, scored against that segment's FROZEN
-    reference histogram — PSI + binned KS + binned CvM per (batch,
-    segment), the streaming face of the keyed ``drift.drift_panel``.
+    """Streaming PER-SEGMENT drift panel: every micro-batch's values
+    histogram per ``key_col`` segment under the frozen (lo, hi, bins)
+    quantizer, scored against that segment's FROZEN reference histogram
+    — PSI + binned KS + binned CvM + binned Anderson-Darling A² per
+    (batch, segment) (``_binned_panel``), the streaming face of the
+    keyed ``drift.drift_panel``.
 
     ``ref_hists``: {segment_key: length-bins count array} — e.g. built
     from ``sketch.qsketch_build(train_df, group_cols=[key_col])``; all
@@ -822,18 +785,13 @@ def drift_panel_stream(
     keyed on ``batch_id`` (at-least-once replays skipped).
 
     Returns (query, reports): reports is the live list of {batch_id,
-    key, n, psi, ks_d, cvm_t, new_segment} dicts plus one
+    key, n, psi, ks_d, cvm_t, ad_a2, new_segment} dicts plus one
     {batch_id, dropped_segments} marker per batch when the cap bit.
     """
-    _batch, reports = _drift_panel_fold(
+    fold, reports = _drift_panel_fold(
         ref_hists, value_col, key_col, lo, hi, max_segments
     )
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), reports
+    return score_with_batch_operator(stream_df, fold, checkpoint, trigger_once), reports
 
 
 def _drift_panel_fold(
@@ -844,68 +802,18 @@ def _drift_panel_fold(
     hi: float,
     max_segments: int,
 ):
-    """The foreachBatch fold behind :func:`drift_panel_stream`, exposed so
-    :func:`drift_panel_replay` can drive the IDENTICAL per-segment code
-    over a static frame (round 11 — same contract as
-    :func:`_drift_monitor_fold`). Returns (fn(batch_df, batch_id),
-    reports)."""
-    import numpy as np
-
-    from dataquality_ml_spark.operators.drift import EPS
-    from dataquality_ml_spark.operators.sketch import qsketch_build
-
+    """The foreachBatch fold behind :func:`drift_panel_stream`, shared
+    with :func:`drift_panel_replay` (the :func:`_drift_monitor_fold`
+    contract). Returns (fn(batch_df, batch_id), reports)."""
     refs = {k: np.asarray(v, dtype=np.int64) for k, v in ref_hists.items()}
     lens = {len(v) for v in refs.values()}
     if len(lens) != 1:
         raise ValueError("ref_hists must share one bins length (frozen quantizer)")
     bins = lens.pop()
+    empty = np.zeros(bins, dtype=np.int64)
     reports: list = []
-    applied: set = set()
 
-    def _panel(ref: "np.ndarray", cur: "np.ndarray") -> dict:
-        n_a, n_b = int(ref.sum()), int(cur.sum())
-        if n_a == 0 or n_b == 0:
-            return {
-                "n": n_b, "psi": None, "ks_d": None, "cvm_t": None,
-                "ad_a2": None,
-            }
-        pr = np.maximum(ref / n_a, EPS)
-        pc = np.maximum(cur / n_b, EPS)
-        psi = float(np.sum((pc - pr) * np.log(pc / pr)))
-        ca, cb = np.cumsum(ref), np.cumsum(cur)
-        ks = float(np.max(np.abs(ca / n_a - cb / n_b)))
-        cnt = ref + cur
-        n = n_a + n_b
-        num = np.sum(
-            cnt.astype(object)
-            * (ca.astype(object) * n_b - cb.astype(object) * n_a) ** 2
-        )  # object dtype: exact integers, mirroring the DECIMAL path
-        cvm = float(num) / (float(n) * n * n_a * n_b)
-        # binned Anderson-Darling A² — round 10 (VERDICT r9 item 6): the
-        # same tie-aware midpoint formula as the batch drift_panel, each
-        # occupied bin acting as one distinct value with `cnt` ties
-        occ = cnt > 0
-        l = cnt[occ].astype(np.float64)
-        nd = float(n)
-        bb = (ca[occ] + cb[occ]).astype(np.float64) - l / 2
-        ad_denom = bb * (nd - bb) - nd * l / 4
-        ok = ad_denom > 0
-        ad = 0.0
-        for c_side, h_side, tot in (
-            (ca[occ], ref[occ], n_a),
-            (cb[occ], cur[occ], n_b),
-        ):
-            m = c_side.astype(np.float64) - h_side.astype(np.float64) / 2
-            g = nd * m - float(tot) * bb
-            ad += float(
-                np.sum((l[ok] / nd) * g[ok] * g[ok] / ad_denom[ok] / tot)
-            )
-        ad_a2 = (nd - 1) / nd * ad
-        return {"n": n_b, "psi": psi, "ks_d": ks, "cvm_t": cvm, "ad_a2": ad_a2}
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in applied:
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         cells = qsketch_build(
             batch_df, value_col, lo, hi, bins=bins, group_cols=[key_col]
         ).collect()
@@ -913,30 +821,27 @@ def _drift_panel_fold(
         for r in cells:
             h = by_key.setdefault(r[key_col], np.zeros(bins, dtype=np.int64))
             h[r["qs_bin"]] = r["qs_cnt"]
-        known = {k: h for k, h in by_key.items() if k in refs}
-        unseen = {k: h for k, h in by_key.items() if k not in refs}
-        kept_unseen = sorted(
-            unseen.items(), key=lambda kv: (-int(kv[1].sum()), str(kv[0]))
-        )[:max_segments]
-        for k, h in sorted(known.items(), key=lambda kv: str(kv[0])):
+        known = sorted(
+            ((k, h) for k, h in by_key.items() if k in refs), key=lambda kv: str(kv[0])
+        )
+        unseen = sorted(
+            ((k, h) for k, h in by_key.items() if k not in refs),
+            key=lambda kv: (-int(kv[1].sum()), str(kv[0])),
+        )
+        kept_unseen = unseen[:max_segments]
+        # an unseen segment scores against an empty reference: NULL stats
+        for k, h in known + kept_unseen:
             reports.append(
-                {"batch_id": batch_id, "key": k, "new_segment": False,
-                 **_panel(refs[k], h)}
-            )
-        for k, h in kept_unseen:
-            reports.append(
-                {"batch_id": batch_id, "key": k, "new_segment": True,
-                 "n": int(h.sum()), "psi": None, "ks_d": None,
-                 "cvm_t": None, "ad_a2": None}
+                {"batch_id": batch_id, "key": k, "new_segment": k not in refs,
+                 **_binned_panel(refs.get(k, empty), h)}
             )
         if len(unseen) > len(kept_unseen):
             reports.append(
                 {"batch_id": batch_id,
                  "dropped_segments": len(unseen) - len(kept_unseen)}
             )
-        applied.add(batch_id)
 
-    return _batch, reports
+    return _once_per_batch(_fold), reports
 
 
 def drift_panel_replay(
@@ -956,51 +861,22 @@ def drift_panel_replay(
     ks_d, cvm_t, ad_a2). Dropped-segment cap markers are omitted from
     the relation (they carry no segment key); the live list still
     records them when the fold runs under a real stream."""
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    fn, reports = _drift_panel_fold(
-        ref_hists, value_col, key_col, lo, hi, max_segments
-    )
-    # see drift_monitor_replay: one materialization vs one upstream
-    # re-run per sequential batch job
-    df = df.localCheckpoint(eager=False)
-    batches = _replay_batches(df, batch_col)
-    for i, b in enumerate(batches):
-        fn(df.where(F.col(batch_col).eqNullSafe(F.lit(b))), i)
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("key", StringType()),
-            StructField("new_segment", BooleanType()),
-            StructField("n", LongType()),
-            StructField("psi", DoubleType()),
-            StructField("ks_d", DoubleType()),
-            StructField("cvm_t", DoubleType()),
-            StructField("ad_a2", DoubleType()),
-        ]
-    )
-    rows = [
-        (
-            int(r["batch_id"]),
+    stats = ("n", "psi", "ks_d", "cvm_t", "ad_a2")
+    return _replay(
+        df,
+        batch_col,
+        _drift_panel_fold(ref_hists, value_col, key_col, lo, hi, max_segments),
+        "batch_id bigint, key string, new_segment boolean, n bigint, "
+        "psi double, ks_d double, cvm_t double, ad_a2 double",
+        lambda r: (
+            r["batch_id"],
             None if r["key"] is None else str(r["key"]),
-            bool(r["new_segment"]),
-            int(r["n"]),
-            r.get("psi"),
-            r.get("ks_d"),
-            r.get("cvm_t"),
-            r.get("ad_a2"),
+            r["new_segment"],
+            *[r[s] for s in stats],
         )
-        for r in reports
         if "key" in r
-    ]
-    return df.sparkSession.createDataFrame(rows, schema)
+        else None,
+    )
 
 
 def categorical_drift_stream(
@@ -1011,15 +887,14 @@ def categorical_drift_stream(
     trigger_once: bool = True,
     max_categories: int = 4096,
 ):
-    """Streaming CATEGORICAL drift (round 10): every micro-batch's
-    category counts per string column, scored against that column's
-    FROZEN reference counts — PSI (EPS-clamped), Jensen-Shannon
-    divergence, and the two-sample chi² homogeneity statistic per
-    (batch, column). The streaming face of
-    ``drift.categorical_drift_report``, sharing its formulas: the
-    category UNION of reference and batch is scored (a category absent
-    from one side counts 0 — missing mass IS drift; chi² zero cells
-    contribute their (0−e)²/e evidence).
+    """Streaming CATEGORICAL drift: every micro-batch's category counts
+    per string column, scored against that column's FROZEN reference
+    counts — PSI (EPS-clamped), Jensen-Shannon divergence, and the
+    two-sample chi² homogeneity statistic per (batch, column). The
+    streaming face of ``drift.categorical_drift_report``, sharing its
+    formulas: the category UNION of reference and batch is scored (a
+    category absent from one side counts 0 — missing mass IS drift; chi²
+    zero cells contribute their (0−e)²/e evidence).
 
     ``ref_counts``: {column: {category_value: count}} — e.g. collected
     once from the training corpus (NULL category keys allowed). Per
@@ -1033,9 +908,6 @@ def categorical_drift_stream(
     Returns (query, reports): reports is the live list of {batch_id,
     column, n, psi, jsd, chi2, dropped_categories} dicts.
     """
-    import numpy as np
-
-    from dataquality_ml_spark.operators.drift import EPS
     from dataquality_ml_spark.operators.profile import _melt_sql
 
     refs = {
@@ -1048,7 +920,6 @@ def categorical_drift_stream(
             f"categorical_drift_stream: no reference counts for {missing}"
         )
     reports: list = []
-    applied: set = set()
     melt = _melt_sql(columns, column="{name}", category="CAST({col} AS STRING)")
 
     def _score(ref: dict, cur: dict) -> dict:
@@ -1075,12 +946,10 @@ def categorical_drift_stream(
         )
         return {"n": int(n_b), "psi": psi, "jsd": jsd, "chi2": chi2}
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in applied:
-            return
-        melted = batch_df.selectExpr(melt)
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         cells = (
-            melted.groupBy("column", "category")
+            batch_df.selectExpr(melt)
+            .groupBy("column", "category")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
@@ -1100,20 +969,27 @@ def categorical_drift_stream(
                 {"batch_id": batch_id, "column": c,
                  "dropped_categories": dropped, **_score(refs[c], cur)}
             )
-        applied.add(batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
+    query = score_with_batch_operator(
+        stream_df, _once_per_batch(_fold), checkpoint, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), reports
+    return query, reports
+
+
+def _batch_mean(batch_df: DataFrame, value_col: str) -> tuple:
+    """(count, mean) of one micro-batch's non-null ``value_col`` — the two
+    scalars per batch that the CUSUM and EWMA folds move to the driver."""
+    row = batch_df.agg(
+        F.count(F.when(F.col(value_col).isNotNull(), 1)).alias("n"),
+        F.avg(value_col).alias("m"),
+    ).first()
+    return int(row["n"]), row["m"]
 
 
 def _cusum_monitor_fold(mu0: float, value_col: str, slack: float, h: float):
-    """The foreachBatch fold behind :func:`cusum_monitor_stream`,
-    exposed so :func:`cusum_monitor_replay` drives the IDENTICAL code
-    over a static frame (same contract as ``_drift_monitor_fold``).
+    """The foreachBatch fold behind :func:`cusum_monitor_stream`, shared
+    with :func:`cusum_monitor_replay` (the ``_drift_monitor_fold``
+    contract).
 
     Page's CUSUM (Page 1954) against a FROZEN in-control mean ``mu0``:
     per batch b with mean x̄_b,
@@ -1126,23 +1002,15 @@ def _cusum_monitor_fold(mu0: float, value_col: str, slack: float, h: float):
     per batch exactly TWO scalars (count, mean) cross to the driver.
     """
     reports: list = []
-    applied: set = set()
     st = {"plo": 0.0, "min_plo": 0.0, "phi": 0.0, "max_phi": 0.0}
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in applied:
-            return
-        row = batch_df.agg(
-            F.count(F.when(F.col(value_col).isNotNull(), 1)).alias("n"),
-            F.avg(value_col).alias("m"),
-        ).first()
-        n, m = int(row["n"]), row["m"]
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        n, m = _batch_mean(batch_df, value_col)
         if n == 0:
             reports.append(
                 {"batch_id": batch_id, "n": 0, "mean": None,
                  "splus": None, "sminus": None, "alarm": None}
             )
-            applied.add(batch_id)
             return
         st["plo"] += m - mu0 - slack
         st["min_plo"] = min(st["min_plo"], st["plo"])
@@ -1160,9 +1028,8 @@ def _cusum_monitor_fold(mu0: float, value_col: str, slack: float, h: float):
                 "alarm": int(splus > h or sminus > h),
             }
         )
-        applied.add(batch_id)
 
-    return _batch, reports
+    return _once_per_batch(_fold), reports
 
 
 def cusum_monitor_stream(
@@ -1182,13 +1049,8 @@ def cusum_monitor_stream(
     "does this batch look like training", CUSUM asks "has the LEVEL
     drifted, accumulated over batches" — it catches small persistent
     shifts no single-batch test can see. Returns (query, reports)."""
-    _batch, reports = _cusum_monitor_fold(mu0, value_col, slack, h)
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), reports
+    fold, reports = _cusum_monitor_fold(mu0, value_col, slack, h)
+    return score_with_batch_operator(stream_df, fold, checkpoint, trigger_once), reports
 
 
 def cusum_monitor_replay(
@@ -1205,46 +1067,20 @@ def cusum_monitor_replay(
     (batch_id, n, mean, splus, sminus, alarm). The prefix-sum identity
     makes the whole recursion SQL-replayable, so this face is
     hash-gated like any deterministic query."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    fn, reports = _cusum_monitor_fold(mu0, value_col, slack, h)
-    # see drift_monitor_replay: one materialization vs one upstream
-    # re-run per sequential batch job
-    df = df.localCheckpoint(eager=False)
-    for i, b in enumerate(_replay_batches(df, batch_col)):
-        fn(df.where(F.col(batch_col).eqNullSafe(F.lit(b))), i)
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("n", LongType()),
-            StructField("mean", DoubleType()),
-            StructField("splus", DoubleType()),
-            StructField("sminus", DoubleType()),
-            StructField("alarm", IntegerType()),
-        ]
-    )
-    return df.sparkSession.createDataFrame(
-        [
-            (int(r["batch_id"]), int(r["n"]), r["mean"], r["splus"],
-             r["sminus"], r["alarm"])
-            for r in reports
-        ],
-        schema,
+    return _replay(
+        df,
+        batch_col,
+        _cusum_monitor_fold(mu0, value_col, slack, h),
+        "batch_id bigint, n bigint, mean double, splus double, sminus double, alarm int",
     )
 
 
 def _ewma_monitor_fold(
     mu0: float, sigma0: float, value_col: str, lam: float, nsigma: float
 ):
-    """The foreachBatch fold behind :func:`ewma_monitor_stream`, exposed
-    so :func:`ewma_monitor_replay` drives the IDENTICAL code over a
-    static frame (the ``_cusum_monitor_fold`` contract).
+    """The foreachBatch fold behind :func:`ewma_monitor_stream`, shared
+    with :func:`ewma_monitor_replay` (the ``_cusum_monitor_fold``
+    contract).
 
     EWMA chart vs a FROZEN in-control reference (μ0, σ0 — the artifact
     a deployment persists at train time): per batch b with mean x̄_b,
@@ -1259,24 +1095,16 @@ def _ewma_monitor_fold(
     import math as _math
 
     reports: list = []
-    applied: set = set()
     st = {"z": float(mu0), "t": 0}
     r = 1.0 - lam
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in applied:
-            return
-        row = batch_df.agg(
-            F.count(F.when(F.col(value_col).isNotNull(), 1)).alias("n"),
-            F.avg(value_col).alias("m"),
-        ).first()
-        n, m = int(row["n"]), row["m"]
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        n, m = _batch_mean(batch_df, value_col)
         if n == 0:
             reports.append(
                 {"batch_id": batch_id, "n": 0, "mean": None,
                  "ewma": None, "lcl": None, "ucl": None, "ooc": None}
             )
-            applied.add(batch_id)
             return
         st["t"] += 1
         st["z"] = lam * m + r * st["z"]
@@ -1296,9 +1124,8 @@ def _ewma_monitor_fold(
                 "ooc": int(st["z"] < mu0 - half or st["z"] > mu0 + half),
             }
         )
-        applied.add(batch_id)
 
-    return _batch, reports
+    return _once_per_batch(_fold), reports
 
 
 def ewma_monitor_stream(
@@ -1317,13 +1144,8 @@ def ewma_monitor_stream(
     between the per-batch drift panel (one-shot tests) and CUSUM
     (cumulative level): EWMA reacts to small persistent shifts with a
     tunable memory λ. Returns (query, reports)."""
-    _batch, reports = _ewma_monitor_fold(mu0, sigma0, value_col, lam, nsigma)
-    writer = stream_df.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), reports
+    fold, reports = _ewma_monitor_fold(mu0, sigma0, value_col, lam, nsigma)
+    return score_with_batch_operator(stream_df, fold, checkpoint, trigger_once), reports
 
 
 def ewma_monitor_replay(
@@ -1341,36 +1163,9 @@ def ewma_monitor_replay(
     (batch_id, n, mean, ewma, lcl, ucl, ooc). The closed-form prefix
     identity makes the recursion SQL-replayable, so the streaming
     operator is hash-gated like any deterministic query."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    fn, reports = _ewma_monitor_fold(mu0, sigma0, value_col, lam, nsigma)
-    # see drift_monitor_replay: one materialization vs one upstream
-    # re-run per sequential batch job
-    df = df.localCheckpoint(eager=False)
-    for i, b in enumerate(_replay_batches(df, batch_col)):
-        fn(df.where(F.col(batch_col).eqNullSafe(F.lit(b))), i)
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("n", LongType()),
-            StructField("mean", DoubleType()),
-            StructField("ewma", DoubleType()),
-            StructField("lcl", DoubleType()),
-            StructField("ucl", DoubleType()),
-            StructField("ooc", IntegerType()),
-        ]
-    )
-    return df.sparkSession.createDataFrame(
-        [
-            (int(r["batch_id"]), int(r["n"]), r["mean"], r["ewma"],
-             r["lcl"], r["ucl"], r["ooc"])
-            for r in reports
-        ],
-        schema,
+    return _replay(
+        df,
+        batch_col,
+        _ewma_monitor_fold(mu0, sigma0, value_col, lam, nsigma),
+        "batch_id bigint, n bigint, mean double, ewma double, lcl double, ucl double, ooc int",
     )

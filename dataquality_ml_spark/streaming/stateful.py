@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
     DoubleType,
     LongType,
     StructField,
@@ -41,16 +43,19 @@ OUTPUT_SCHEMA = StructType(
 )
 
 
-def _make_ew_scorer(alpha: float, z_threshold: float, min_n: int):
-    """Shared prequential EW scoring loop: score each value against the
-    state BEFORE folding it in (never score a value against state that
-    already includes it). Returned as a CLOSURE (not a module-level
-    function) on purpose: cloudpickle serializes dynamic functions by
-    value, so the stateful processors built on it can be unpickled by
-    worker processes that don't have this package on their import path —
-    the Spark 4 transformWithState driver worker is such a process."""
+def make_ew_anomaly_fn(alpha: float = 0.1, z_threshold: float = 3.0, min_n: int = 5):
+    """Build the per-group update function: emits rows whose EW z-score
+    exceeds the threshold (after a warm-up of ``min_n`` observations).
+    Each value is scored against the state BEFORE it is folded in (never
+    against state that already includes it)."""
 
-    def score(key_val, pdfs: Iterator[pd.DataFrame], mean: float, var: float, n: int):
+    def update(
+        key, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            mean, var, n = state.get
+        else:
+            mean, var, n = 0.0, 1.0, 0
         out_rows = []
         for pdf in pdfs:
             pdf = pdf.sort_values("event_id")
@@ -60,7 +65,7 @@ def _make_ew_scorer(alpha: float, z_threshold: float, min_n: int):
                     sd = max(var, 1e-12) ** 0.5
                     z = (v - mean) / sd
                     if abs(z) > z_threshold:
-                        out_rows.append((key_val, int(eid), v, mean, z))
+                        out_rows.append((key[0], int(eid), v, mean, z))
                 if n == 0:
                     mean, var = v, 1.0
                 else:
@@ -68,25 +73,6 @@ def _make_ew_scorer(alpha: float, z_threshold: float, min_n: int):
                     mean = mean + alpha * delta
                     var = (1 - alpha) * (var + alpha * delta * delta)
                 n += 1
-        return out_rows, mean, var, n
-
-    return score
-
-
-def make_ew_anomaly_fn(alpha: float = 0.1, z_threshold: float = 3.0, min_n: int = 5):
-    """Build the per-group update function: emits rows whose EW z-score
-    exceeds the threshold (after a warm-up of ``min_n`` observations)."""
-
-    score = _make_ew_scorer(alpha, z_threshold, min_n)
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            mean, var, n = state.get
-        else:
-            mean, var, n = 0.0, 1.0, 0
-        out_rows, mean, var, n = score(key[0], pdfs, mean, var, n)
         state.update((mean, var, n))
         if out_rows:
             yield pd.DataFrame(
@@ -117,73 +103,10 @@ def ew_anomaly_stream(
     )
 
 
-def make_ew_processor(alpha: float = 0.1, z_threshold: float = 3.0, min_n: int = 5):
-    """Same detector as :func:`make_ew_anomaly_fn`, expressed as a Spark 4
-    ``StatefulProcessor`` for ``transformWithStateInPandas`` — the
-    successor API to ``applyInPandasWithState``. State lives in a named
-    ``ValueState`` backed by the RocksDB state store (incremental
-    checkpointing, state larger than memory), instead of a single opaque
-    GroupState tuple; the EW math is shared with the legacy path."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # Everything the class closes over must pickle BY VALUE (the class is
-    # dynamic, the scorer is a closure, the schema is a plain StructType):
-    # the driver-side schema-validation worker that unpickles this has only
-    # pyspark/pandas on its path, not this package.
-    score = _make_ew_scorer(alpha, z_threshold, min_n)
-    state_schema = STATE_SCHEMA
-
-    class EWAnomalyProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ew", state_schema)
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            mean, var, n = prior if prior is not None else (0.0, 1.0, 0)
-            out_rows, mean, var, n = score(key[0], rows, mean, var, n)
-            self._state.update((mean, var, n))
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=["key", "event_id", "value", "ew_mean", "zscore"],
-                )
-
-        def close(self) -> None:
-            pass
-
-    return EWAnomalyProcessor()
-
-
-def ew_anomaly_stream_tws(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    alpha: float = 0.1,
-    z_threshold: float = 3.0,
-    min_n: int = 5,
-) -> DataFrame:
-    """``transformWithStateInPandas`` wiring of the EW detector (requires
-    the RocksDB state store provider, Spark 4+). Semantics identical to
-    :func:`ew_anomaly_stream`; prefer this on new deployments — at scale
-    RocksDB state survives executor memory pressure and checkpoints
-    incrementally, where the HDFS-backed default snapshots full maps."""
-    return stream_df.groupBy(key_col).transformWithStateInPandas(
-        make_ew_processor(alpha, z_threshold, min_n),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 # ---------------------------------------------------------------------------
-# Stateful sliding-window sequence scoring (round 4): the streaming face of
-# the engine's sequence-detector lifecycle (engine.FittedSequenceDetector).
+# Stateful sliding-window sequence scoring: the streaming face of the
+# engine's sequence-detector lifecycle (engine.FittedSequenceDetector).
 # ---------------------------------------------------------------------------
-from pyspark.sql.types import ArrayType, BooleanType  # noqa: E402
 
 SEQ_STATE_SCHEMA = StructType(
     [

@@ -9,6 +9,7 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from dataquality_ml_spark.operators import drift
 from dataquality_ml_spark.operators.dedup import incremental_dedup
@@ -518,12 +519,18 @@ def test_cvm_partial_overflow_detected_under_ansi_off(spark):
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_keyed_drift_family_matches_per_segment_global(spark):
+# the key and value column names: plain, and the awkward names of
+# test_plan_construction (a backtick, a quote, a dot, a backslash and a
+# space), which every key and value reference must quote
+@pytest.mark.parametrize(
+    "g,v", [("g", "v"), ("a `b'.c\\d", "sp ace")], ids=["plain", "awkward"]
+)
+def test_keyed_drift_family_matches_per_segment_global(spark, g, v):
     """rank_sum_test / cvm_statistic / anderson_darling / qq_table with
-    keys= must equal running the global operator once per segment
-    (VERDICT r8 item 4 — the one-pass panel that replaces the
-    reference's per-column job loop, lib/utils.py:187-195), including a
-    NULL segment key and a one-sided segment."""
+    keys= must equal running the global operator once per segment (the
+    one-pass panel that replaces the reference's per-column job loop,
+    lib/utils.py:187-195), including a NULL segment key and a one-sided
+    segment."""
     import random
 
     from dataquality_ml_spark.operators.drift import (
@@ -545,36 +552,45 @@ def test_keyed_drift_family_matches_per_segment_global(spark):
         + [("t2", float(rng.randrange(25))) for _ in range(250)]
         + [(None, rng.random() + 0.2) for _ in range(150)]
     )
-    a = spark.createDataFrame(rows_a, "g string, v double")
-    b = spark.createDataFrame(rows_b, "g string, v double")
+    schema = StructType([StructField(g, StringType()), StructField(v, DoubleType())])
+    a = spark.createDataFrame(rows_a, schema)
+    b = spark.createDataFrame(rows_b, schema)
     segs = ["t1", "t2", None]
 
-    def _seg(df, g):
-        return df.where(F.col("g").isNull() if g is None else (F.col("g") == g))
+    key = F.col("`" + g.replace("`", "``") + "`")
 
-    mw = {r["g"]: r for r in rank_sum_test(a, b, "v", keys=["g"]).collect()}
-    cv = {r["g"]: r for r in cvm_statistic(a, b, "v", keys=["g"]).collect()}
-    ad = {r["g"]: r for r in anderson_darling(a, b, "v", keys=["g"]).collect()}
+    def _seg(df, s):
+        return df.where(key.isNull() if s is None else (key == s))
+
+    mw = {r[g]: r for r in rank_sum_test(a, b, v, keys=[g]).collect()}
+    cv = {r[g]: r for r in cvm_statistic(a, b, v, keys=[g]).collect()}
+    ad = {r[g]: r for r in anderson_darling(a, b, v, keys=[g]).collect()}
     qq = {}
-    for r in qq_table(a, b, "v", qs=(0.25, 0.5, 0.75), keys=["g"]).collect():
-        qq.setdefault(r["g"], {})[r["q"]] = (r["val_a"], r["val_b"], r["gap"])
+    for r in qq_table(a, b, v, qs=(0.25, 0.5, 0.75), keys=[g]).collect():
+        qq.setdefault(r[g], {})[r["q"]] = (r["val_a"], r["val_b"], r["gap"])
     assert set(mw) == set(cv) == set(ad) == {"t1", "t2", None, "only_a"}
+    # the panel and the KS face group the same ECDF by the same keys
+    panel = {r[g]: r for r in drift.drift_panel(a, b, v, keys=[g]).collect()}
+    ks = {r[g]: r["ks_d"] for r in drift.ks_by_group(a, b, v, keys=[g]).collect()}
+    assert set(panel) == set(ks) == set(mw)
+    for s, r in panel.items():
+        assert (r["ks_d"], r["cvm_t"], r["u_stat"]) == (ks[s], cv[s]["cvm_t"], mw[s]["u_stat"]), s
 
-    for g in segs:
-        wa, wb = _seg(a, g), _seg(b, g)
-        w_mw = rank_sum_test(wa, wb, "v").first()
-        assert mw[g]["u_stat"] == w_mw["u_stat"], g
-        assert abs(mw[g]["z_score"] - w_mw["z_score"]) < 1e-12, g
-        assert (mw[g]["n_a"], mw[g]["n_b"]) == (w_mw["n_a"], w_mw["n_b"])
-        w_cv = cvm_statistic(wa, wb, "v").first()
-        assert cv[g]["cvm_t"] == w_cv["cvm_t"], g
-        w_ad = anderson_darling(wa, wb, "v").first()
-        assert abs(ad[g]["ad_a2"] - w_ad["ad_a2"]) < 1e-12, g
+    for s in segs:
+        wa, wb = _seg(a, s), _seg(b, s)
+        w_mw = rank_sum_test(wa, wb, v).first()
+        assert mw[s]["u_stat"] == w_mw["u_stat"], s
+        assert abs(mw[s]["z_score"] - w_mw["z_score"]) < 1e-12, s
+        assert (mw[s]["n_a"], mw[s]["n_b"]) == (w_mw["n_a"], w_mw["n_b"])
+        w_cv = cvm_statistic(wa, wb, v).first()
+        assert cv[s]["cvm_t"] == w_cv["cvm_t"], s
+        w_ad = anderson_darling(wa, wb, v).first()
+        assert abs(ad[s]["ad_a2"] - w_ad["ad_a2"]) < 1e-12, s
         w_qq = {
             r["q"]: (r["val_a"], r["val_b"], r["gap"])
-            for r in qq_table(wa, wb, "v", qs=(0.25, 0.5, 0.75)).collect()
+            for r in qq_table(wa, wb, v, qs=(0.25, 0.5, 0.75)).collect()
         }
-        assert qq[g] == w_qq, g
+        assert qq[s] == w_qq, s
 
     # one-sided segment: MW/CvM/AD report NULL statistics with the
     # correct side counts; QQ reports the present side's quantiles only
@@ -583,9 +599,9 @@ def test_keyed_drift_family_matches_per_segment_global(spark):
     assert cv["only_a"]["cvm_t"] is None
     assert ad["only_a"]["ad_a2"] is None
     qa = qq["only_a"]
-    assert all(v[1] is None and v[2] is None for v in qa.values())
+    assert all(x[1] is None and x[2] is None for x in qa.values())
     only = _seg(a, "only_a").agg(
-        F.expr("percentile(v, array(0.25, 0.5, 0.75))").alias("p")
+        F.expr(f"percentile(`{v}`, array(0.25, 0.5, 0.75))").alias("p")
     ).first()["p"]
     assert [qa[q][0] for q in (0.25, 0.5, 0.75)] == list(only)
 

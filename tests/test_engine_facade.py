@@ -408,23 +408,46 @@ def test_awkward_label_name_through_the_daily_job(spark):
 
 
 def test_fit_threshold_reads_checkpointed_scores(spark, monkeypatch):
-    """The exact threshold selection filters NULL/NaN scores; it must read
-    checkpointed scores, or the optimizer pushes that filter below the
-    scoring UDF's projection and the UDF runs twice per train row."""
+    """The exact threshold selection filters NULL/NaN scores; it must
+    checkpoint the projected scores before that filter, or the optimizer
+    pushes the filter below the scoring UDF's projection and the UDF runs
+    twice per train row. The checkpointed projection holds the one UDF
+    evaluation; the relation the selection aggregates holds none."""
+    from dataquality_ml_spark.operators import profile as prof
     from dataquality_ml_spark.operators import thresholds as th
 
-    plans = []
-    real = th.percentile_threshold
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
 
-    def spy(df, *a, **kw):
-        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
-        return real(df, *a, **kw)
+    checkpointed, selected, in_threshold = [], [], [False]
+    real_threshold, real_select = th.percentile_threshold, prof._select_chains
+    frame = type(spark.range(1))
+    real_checkpoint = frame.localCheckpoint
 
-    monkeypatch.setattr(th, "percentile_threshold", spy)
+    def threshold_spy(*a, **kw):
+        in_threshold[0] = True
+        try:
+            return real_threshold(*a, **kw)
+        finally:
+            in_threshold[0] = False
+
+    def checkpoint_spy(self, *a, **kw):
+        if in_threshold[0]:
+            checkpointed.append(plan(self))
+        return real_checkpoint(self, *a, **kw)
+
+    def select_spy(vals, *a, **kw):
+        selected.append(plan(vals))
+        return real_select(vals, *a, **kw)
+
+    monkeypatch.setattr(th, "percentile_threshold", threshold_spy)
+    monkeypatch.setattr(frame, "localCheckpoint", checkpoint_spy)
+    monkeypatch.setattr(prof, "_select_chains", select_spy)
     telemetry = spark.createDataFrame(_fixture_rows(), SCHEMA)
     DQEngine(spark).fit_detector(
         telemetry.where(F.col("date") < "2024-12-25"),
         roles={"numeric": ["smart_1", "smart_2"], "categorical": [], "boolean": []},
         detector="iforest",
     )
-    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
+    assert len(checkpointed) == 1 and checkpointed[0].count("ArrowEvalPython") == 1
+    assert len(selected) == 1 and "ArrowEvalPython" not in selected[0]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.operators.profile import categorical_entropy
@@ -14,7 +15,13 @@ from dataquality_ml_spark.operators.text import bigram_pmi
 from dataquality_ml_spark.operators.thresholds import mad_robust_outliers
 
 
-def test_mad_robust_outliers_planted(spark):
+# the group and value column names: plain, and the awkward names of
+# test_plan_construction (a backtick, a quote, a dot, a backslash and a
+# space), which every reference must quote
+@pytest.mark.parametrize(
+    "g,value", [("g", "value"), ("a `b'.c\\d", "sp ace")], ids=["plain", "awkward"]
+)
+def test_mad_robust_outliers_planted(spark, g, value):
     # Group "a": nine values tightly around 10 plus one wild outlier.
     # med = 10, MAD = median(|x-10|) = 1 → threshold 3.5*1.4826 ≈ 5.19;
     # only the planted 100.0 exceeds it.
@@ -22,16 +29,18 @@ def test_mad_robust_outliers_planted(spark):
     # Group "b": constant — MAD 0, every deviation is 0 > 0 is false.
     vals_b = [5.0] * 6
     rows = [("a", v) for v in vals_a] + [("b", v) for v in vals_b]
-    df = spark.createDataFrame(rows, ["g", "value"])
+    df = spark.createDataFrame(rows, [g, value])
 
-    out = {r["g"]: r for r in mad_robust_outliers(df, "value", "g").collect()}
-    a, b = out["a"], out["b"]
-    assert a["med"] == 10.0
-    assert a["mad"] == 1.0
-    assert a["n"] == 10
-    assert a["n_outliers"] == 1
-    assert b["mad"] == 0.0
-    assert b["n_outliers"] == 0
+    # the sketch medians are exact on ten values, so both paths agree
+    for exact in (True, False):
+        out = {r[g]: r for r in mad_robust_outliers(df, value, g, exact=exact).collect()}
+        a, b = out["a"], out["b"]
+        assert a["med"] == 10.0
+        assert a["mad"] == 1.0
+        assert a["n"] == 10
+        assert a["n_outliers"] == 1
+        assert b["mad"] == 0.0
+        assert b["n_outliers"] == 0
 
 
 def test_mad_approx_path_close_to_exact(spark):

@@ -202,63 +202,6 @@ def test_streaming_session_window(spark, tmp_path):
     assert second["n_events"] == 1 and second["total_value"] == 5.0
 
 
-def test_transform_with_state_ew_anomaly_stream(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 successor API): same EW detector
-    semantics as the applyInPandasWithState path — planted spikes flag,
-    state persists across micro-batches — under the RocksDB state store
-    the new API requires."""
-    # The transformWithState state-server protocol needs protobuf, which
-    # this container doesn't ship (and installs are off-limits) — gated
-    # skip, same policy as the Iceberg-jar test.
-    pytest.importorskip("google.protobuf")
-    from dataquality_ml_spark.streaming.stateful import ew_anomaly_stream_tws
-
-    rows1 = [(uid, eid, 10.0 + (eid % 3) * 0.1) for uid in (1, 2) for eid in range(20)]
-    rows2 = [(uid, eid, 10.0 + (eid % 3) * 0.1) for uid in (1, 2) for eid in range(20, 38)]
-    rows2 += [(1, 38, 500.0), (2, 39, -500.0)]  # planted spikes
-    src = str(tmp_path / "tws_src")
-    schema = "user_id long, event_id long, value double"
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src)
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        flagged = ew_anomaly_stream_tws(stream, key_col="user_id", z_threshold=5.0)
-
-        out: list = []
-        q = (
-            flagged.writeStream.foreachBatch(
-                lambda df, _id: out.extend(r.asDict() for r in df.collect())
-            )
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-    spikes = {(r["key"], r["event_id"]) for r in out}
-    assert (1, 38) in spikes and (2, 39) in spikes, f"spikes not flagged: {out}"
-    assert all(abs(r["value"]) > 100 for r in out), f"false positives: {out}"
-
-
 def test_stream_static_broadcast_enrichment(spark, tmp_path):
     """Stream-static join: a micro-batch stream enriched against a static
     broadcast dimension — the standard pattern for attaching reference
@@ -1849,3 +1792,23 @@ def test_ewma_monitor_replay_equals_live_stream(spark, tmp_path):
     n_before = len(reports)
     fn(spark.createDataFrame([(99.0,)], "v double"), 0)
     assert len(reports) == n_before
+
+
+def test_drift_monitor_replay_zero_reference_reports_null_stats(spark):
+    """An all-zero reference histogram holds no distribution to compare
+    against: each batch reports its count with NULL statistics, as the
+    keyed panel does for an empty segment, instead of raising inside the
+    micro-batch."""
+    import numpy as np
+
+    df = spark.createDataFrame(
+        [(i, float(i % 10), i % 2) for i in range(40)],
+        "event_id bigint, value double, batch int",
+    )
+    got = ss.drift_monitor_replay(
+        df, "batch", np.zeros(5, dtype=np.int64), "value", 0.0, 10.0
+    ).collect()
+    assert [tuple(r) for r in got] == [
+        (0, 20, None, None, None),
+        (1, 20, None, None, None),
+    ]
