@@ -428,79 +428,86 @@ class DQEngine:
         ``split`` is assigned to KEPT docs only — evicted docs carry null,
         so downstream consumers cannot accidentally train on them.
 
-        Every stage is an already-oracle-gated operator
-        (`corpus_curation_pipeline`, `dup_clusters_docs`,
-        `leakage_safe_split_docs` cover the composition pieces); the
-        facade only arranges them and never collects rows.
+        Each document is normalized once: one ``(doc_id, text, nfc)``
+        projection feeds every stage, which is built under
+        ``scalar.pre_normalized()`` over the NFC text. Quality flag,
+        bag-of-words fingerprint and exact keeper (``dedup_exact``'s min-id
+        rule) land in one checkpointed per-document relation; the near-dup
+        survivors are a filter of it, and the result is that relation
+        joined to the near-dup clusters, so no stage reruns the quality →
+        exact-dedup prefix. The NFC projection is checkpointed eagerly: the
+        keeper join reads it from both of its sides, and a lazy checkpoint
+        first read that way can be computed twice, the UDF with it. Never
+        collects rows.
 
         ``max_df`` / ``on_hot_shingle`` pass through to
         :func:`~dataquality_ml_spark.operators.dedup.ngram_jaccard_pairs`
         — by default the pipeline fails loudly on a boilerplate-shingle
         pair blow-up instead of silently going quadratic.
         """
+        from dataquality_ml_spark.functions import scalar as sc
         from dataquality_ml_spark.operators import dedup as dd
         from dataquality_ml_spark.operators import graph as gr
         from dataquality_ml_spark.operators import text as tx
 
-        base = docs.select(id_col, text_col)
-        quality = tx.text_quality(docs, text_col=text_col, id_col=id_col)
-        good_ids = quality.where(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("digit_ratio") <= max_digit_ratio)
-        ).select(id_col)
-        good = base.join(good_ids, id_col).localCheckpoint(eager=False)
-
-        exact = dd.dedup_exact(good, text_col, id_col)  # (bow_fp, keep_id, n)
-        fp = good.select(
-            F.col(id_col), dd.bow_fingerprint(text_col).alias("bow_fp")
-        )
-        exact_map = fp.join(
-            exact.select("bow_fp", F.col("keep_id").alias("_exact_keep")),
-            "bow_fp",
-        ).select(id_col, "_exact_keep")
-
-        survivors = good.join(
-            exact_map.where(F.col(id_col) == F.col("_exact_keep")).select(id_col),
-            id_col,
-        )
-        pairs = dd.ngram_jaccard_pairs(
-            survivors, text_col, id_col, k=5, threshold=jaccard_threshold,
-            max_df=max_df, on_hot_shingle=on_hot_shingle,
-        ).select("id_a", "id_b")
+        doc_id = F.col(id_col)
+        with sc.pre_normalized():
+            nfc = rel.ensure_parallelism(docs).select(
+                doc_id, text_col, sc.unicode_normalize(text_col).alias("_nfc")
+            )
+            q = tx._quality_columns(F.col(text_col), sc.tokens("_nfc"))
+            # NULL text fails the filter; a doc without an id has no keeper,
+            # so it counts as low quality too
+            good = F.coalesce(
+                (q["n_tokens"] >= min_tokens)
+                & (q["digit_ratio"] <= max_digit_ratio),
+                F.lit(False),
+            ) & doc_id.isNotNull()
+            base = nfc.select(
+                doc_id, "_nfc", good.alias("_good"),
+                sc.bow_fingerprint("_nfc").alias("bow_fp"),
+            ).localCheckpoint(eager=True)
+            exact = dd.dedup_exact(base.where("_good"), "_nfc", id_col)
+            # _exact_keep is NULL exactly for the low-quality docs. Lazy: it
+            # holds no UDF, so a second read recomputes only the keeper join
+            per_doc = (
+                base.join(
+                    exact.select("bow_fp", F.col("keep_id").alias("_keep")),
+                    "bow_fp",
+                    "left",
+                )
+                .select(
+                    doc_id, "_nfc",
+                    F.when(F.col("_good"), F.col("_keep")).alias("_exact_keep"),
+                )
+                .localCheckpoint(eager=False)
+            )
+            survivors = per_doc.where(doc_id == F.col("_exact_keep")).select(
+                doc_id, F.col("_nfc").alias(text_col)
+            )
+            pairs = dd.ngram_jaccard_pairs(
+                survivors, text_col, id_col, k=5, threshold=jaccard_threshold,
+                max_df=max_df, on_hot_shingle=on_hot_shingle,
+            ).select("id_a", "id_b")
         clusters = gr.dedup_clusters(pairs).select(
             F.col("doc_id").alias(id_col), F.col("keep_id").alias("_near_keep")
         )
 
-        disposition = (
-            docs.select(id_col)
-            .join(good_ids.withColumn("_good", F.lit(True)), id_col, "left")
-            .join(exact_map, id_col, "left")
-            .join(clusters, id_col, "left")
-            .select(
-                id_col,
-                F.when(F.col("_good").isNull(), F.lit("low_quality"))
-                .when(F.col(id_col) != F.col("_exact_keep"), F.lit("exact_dup"))
-                .when(
-                    F.col("_near_keep").isNotNull()
-                    & (F.col(id_col) != F.col("_near_keep")),
-                    F.lit("near_dup"),
-                )
-                .otherwise(F.lit("kept"))
-                .alias("status"),
-                F.when(F.col("_good").isNull(), F.lit(None).cast("long"))
-                .when(
-                    F.col(id_col) != F.col("_exact_keep"), F.col("_exact_keep")
-                )
-                .otherwise(
-                    F.coalesce(F.col("_near_keep"), F.col(id_col))
-                )
-                .alias("keep_id"),
-            )
+        exact_keep, near_keep = F.col("_exact_keep"), F.col("_near_keep")
+        low = exact_keep.isNull()
+        disposition = per_doc.join(clusters, id_col, "left").select(
+            doc_id,
+            F.when(low, F.lit("low_quality"))
+            .when(doc_id != exact_keep, F.lit("exact_dup"))
+            .when(near_keep.isNotNull() & (doc_id != near_keep), F.lit("near_dup"))
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+            F.when(low, F.lit(None).cast("long"))
+            .when(doc_id != exact_keep, exact_keep)
+            .otherwise(F.coalesce(near_keep, doc_id))
+            .alias("keep_id"),
         )
-        assigned = rel.leakage_safe_split(
-            disposition.where(F.col("status") == "kept"), "keep_id", splits
-        ).select(id_col, "split")
-        return (
-            disposition.join(assigned, id_col, "left")
-            .select(id_col, "status", "keep_id", "split")
+        return rel.leakage_safe_split(disposition, "keep_id", splits).select(
+            id_col, "status", "keep_id",
+            F.when(F.col("status") == "kept", F.col("split")).alias("split"),
         )

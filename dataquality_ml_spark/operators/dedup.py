@@ -475,8 +475,7 @@ def _shingle_intersections(
     :func:`ngram_containment_pairs`: (id_a, id_b, n_inter, n_a, n_b) for
     every doc pair sharing ≥1 surviving shingle.
 
-    ``on_hot_shingle`` (round 11, fit_features/smote loud-contract
-    convention): with ``max_df=None`` the self-join is exact but goes
+    ``on_hot_shingle``: with ``max_df=None`` the self-join is exact but goes
     quadratic on boilerplate shingles.  ``'error'`` (default) spends one
     bounded aggregation checking the hottest document frequency and
     raises past ``hot_df``; ``'exact'`` skips the check — the explicit
@@ -486,10 +485,11 @@ def _shingle_intersections(
             "on_hot_shingle must be 'error' or 'exact', got "
             f"{on_hot_shingle!r}"
         )
-    # No cache: since the cheap-filter fix in with_shingles, recomputing the
-    # shingle arrays per branch costs ~0.3s at sf0.1 while materializing the
-    # string arrays into the columnar cache cost ~3s — the cache was the
-    # bottleneck, not the recompute.
+    # The string shingle arrays are not materialized: ``sizes`` and ``ex``
+    # each tokenize and shingle ``df`` again. Over checkpointed NFC text
+    # and a plan built under ``pre_normalized()`` (what
+    # ``DQEngine.curate_corpus`` passes) that is cheap JVM work; over raw
+    # text each branch also runs the NFC UDF.
     sh = with_shingles(df, text_col, id_col, k)
     sizes = sh.select(F.col(id_col), F.size("shs").alias("n_sh"))
     # Bucket on a 60-bit hash of the shingle, not the string: ~8× smaller
@@ -504,12 +504,9 @@ def _shingle_intersections(
         freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
         ex = ex.join(freq.where(F.col("df") <= max_df).select("s"), "s")
     elif on_hot_shingle == "error":
-        # the loud-contract pre-check below evaluates ex (tokenize +
-        # shingle + explode + hash) as its own job and the main plan
-        # evaluates it again — checkpoint so the check materializes what
-        # the join consumes. Unlike the string-array cache this comment
-        # block used to warn about, ex is two longs per row (~16 B), so
-        # the persist is cheap (guide §2.4, round 13).
+        # the pre-check below is the first reader of ex (tokenize +
+        # shingle + explode + hash), so it materializes what the join
+        # consumes; ex is two longs per row (~16 B)
         ex = ex.localCheckpoint(eager=False)
         hottest = (
             ex.groupBy("s")

@@ -1410,11 +1410,12 @@ def corr_drift(
     report fisher_z = NULL (the z denominator needs n − 3 > 0).
     """
     keys = list(keys or [])
+    kc = _cols(keys)
     tagged = a.select(
-        *keys, F.col(x).alias("x"), F.col(y).alias("y"), F.lit(1).alias("in_a")
+        *kc, F.col(x).alias("x"), F.col(y).alias("y"), F.lit(1).alias("in_a")
     ).unionAll(
         b.select(
-            *keys, F.col(x).alias("x"), F.col(y).alias("y"), F.lit(0).alias("in_a")
+            *kc, F.col(x).alias("x"), F.col(y).alias("y"), F.lit(0).alias("in_a")
         )
     ).where(F.col("x").isNotNull() & F.col("y").isNotNull())
     side = lambda c, flag: F.when(F.col("in_a") == flag, F.col(c))  # noqa: E731
@@ -1424,13 +1425,13 @@ def corr_drift(
         F.count(F.when(F.col("in_a") == 1, 1)).alias("n_a"),
         F.count(F.when(F.col("in_a") == 0, 1)).alias("n_b"),
     ]
-    agg = tagged.groupBy(*keys).agg(*aggs) if keys else tagged.agg(*aggs)
+    agg = tagged.groupBy(*kc).agg(*aggs) if keys else tagged.agg(*aggs)
     atanh = lambda r: 0.5 * F.log((1 + r) / (1 - r))  # noqa: E731
     z = (atanh(F.col("r_a")) - atanh(F.col("r_b"))) / F.sqrt(
         1 / (F.col("n_a") - 3) + 1 / (F.col("n_b") - 3)
     )
     z = F.when((F.col("n_a") > 3) & (F.col("n_b") > 3), z)
-    return agg.select(*keys, "r_a", "r_b", z.alias("fisher_z"), "n_a", "n_b")
+    return agg.select(*kc, "r_a", "r_b", z.alias("fisher_z"), "n_a", "n_b")
 
 
 def cusum_changepoint(
@@ -1463,21 +1464,22 @@ def cusum_changepoint(
     from pyspark.sql import Window
 
     ks = list(keys or [])
+    kc = _cols(ks)
     cells = (
         df.where(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())
-        .groupBy(*ks, F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"))
+        .groupBy(*kc, F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.avg(F.col(value_col)).alias("mean_value"),
         )
     )
     if ks:
-        grand = cells.groupBy(*ks).agg(F.avg("mean_value").alias("__gm"))
+        grand = cells.groupBy(*kc).agg(F.avg("mean_value").alias("__gm"))
         scored = cells.join(grand, ks)
-        w = Window.partitionBy(*ks).orderBy("bucket_ts").rowsBetween(
+        w = Window.partitionBy(*kc).orderBy("bucket_ts").rowsBetween(
             Window.unboundedPreceding, 0
         )
-        tot = Window.partitionBy(*ks)
+        tot = Window.partitionBy(*kc)
     else:
         grand = cells.agg(F.avg("mean_value").alias("__gm"))
         scored = cells.join(F.broadcast(grand), F.lit(True))
@@ -1487,7 +1489,7 @@ def cusum_changepoint(
         "cusum", F.sum(F.col("mean_value") - F.col("__gm")).over(w)
     )
     return scored.select(
-        *ks,
+        *kc,
         "bucket_ts",
         "n",
         "mean_value",
@@ -1767,19 +1769,20 @@ def ewma_control(
     if not 0.0 < lam <= 1.0:
         raise ValueError(f"ewma_control: lam must be in (0, 1], got {lam}")
     keys = list(keys or [])
+    kc = _cols(keys)
     r = 1.0 - lam
     cells = (
         df.where(
             F.col(value_col).isNotNull() & F.col(batch_col).isNotNull()
             & ~F.isnan(F.col(value_col))
         )
-        .groupBy(*keys, F.col(batch_col).alias("__b"))
+        .groupBy(*kc, F.col(batch_col).alias("__b"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.avg(F.col(value_col)).alias("mean"),
         )
     )
-    wg = Window.partitionBy(*keys) if keys else Window.partitionBy()
+    wg = Window.partitionBy(*kc) if keys else Window.partitionBy()
     cum = (
         wg.orderBy("__b").rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -1791,7 +1794,7 @@ def ewma_control(
     )
     t = F.row_number().over(wg.orderBy("__b")).cast("double")
     scored = cells.select(
-        *keys,
+        *kc,
         "__b",
         "n",
         "mean",
@@ -1812,7 +1815,7 @@ def ewma_control(
         )
     )
     return scored.select(
-        *keys,
+        *kc,
         (F.col("__t") - 1).cast("bigint").alias("batch_id"),
         "n",
         "mean",
@@ -1858,23 +1861,24 @@ def acf_ljung_box(
     if max_lag < 1:
         raise ValueError(f"acf_ljung_box: max_lag must be >= 1, got {max_lag}")
     keys = list(keys or [])
+    kc = _cols(keys)
     cells = (
         df.where(
             F.col(value_col).isNotNull() & F.col(batch_col).isNotNull()
             & ~F.isnan(F.col(value_col))
         )
-        .groupBy(*keys, F.col(batch_col).alias("__b"))
+        .groupBy(*kc, F.col(batch_col).alias("__b"))
         .agg(F.avg(F.col(value_col)).alias("m"))
     )
-    wg = Window.partitionBy(*keys) if keys else Window.partitionBy()
+    wg = Window.partitionBy(*kc) if keys else Window.partitionBy()
     wo = wg.orderBy("__b")
     dev = F.col("m") - F.avg("m").over(wg)
     led = cells.select(
-        *keys,
+        *kc,
         dev.alias("d0"),
         *[F.lead(dev, k).over(wo).alias(f"d{k}") for k in range(1, max_lag + 1)],
     )
-    agg = led.groupBy(*keys).agg(
+    agg = led.groupBy(*kc).agg(
         F.count(F.lit(1)).alias("T"),
         F.sum(F.col("d0") * F.col("d0")).alias("den"),
         *[
@@ -1883,19 +1887,19 @@ def acf_ljung_box(
         ],
     )
     rhos = agg.select(
-        *keys,
+        *kc,
         F.col("T"),
         F.posexplode(
             F.array(*[F.col(f"num{k}") / F.col("den") for k in range(1, max_lag + 1)])
         ).alias("__p", "rho"),
     ).select(
-        *keys,
+        *kc,
         (F.col("__p") + 1).cast("int").alias("lag"),
         F.col("T").alias("n_batches"),
         "rho",
     )
     wq = (
-        (Window.partitionBy(*keys) if keys else Window.partitionBy())
+        (Window.partitionBy(*kc) if keys else Window.partitionBy())
         .orderBy("lag")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -1906,7 +1910,7 @@ def acf_ljung_box(
             F.col("rho") * F.col("rho") / (F.col("n_batches") - F.col("lag"))
         ).over(wq)
     )
-    return rhos.select(*keys, "lag", "n_batches", "rho", q.alias("q_lb"))
+    return rhos.select(*kc, "lag", "n_batches", "rho", q.alias("q_lb"))
 
 
 def ks_matrix_binned(

@@ -957,14 +957,18 @@ def weighted_quantiles_select(
         *gcols,
         F.col(_ident(col)).cast("double").alias("v"),
         F.col(_ident(weight_col)).cast("long").alias("w"),
-    ).where(
+    )
+    # checkpointed BEFORE the filter, as in exact_quantiles_select: over a
+    # Python-UDF column the optimizer pushes the filter below the
+    # projection and runs the UDF twice per row
+    if checkpoint:
+        vals = vals.localCheckpoint(eager=False)
+    vals = vals.where(
         F.col("v").isNotNull()
         & ~F.isnan("v")
         & F.col("w").isNotNull()
         & (F.col("w") > 0)
     )
-    if checkpoint:
-        vals = vals.localCheckpoint(eager=False)
     if groups:
         stat_rows = (
             vals.groupBy(*gnames)

@@ -46,7 +46,15 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     """Repartition only if the scan produced fewer partitions than the
     cluster can use — guards CPU-heavy per-row operators (tokenization,
     hashing, decoding) against few-fat-files inputs without paying a
-    shuffle when the input is already well partitioned."""
+    shuffle when the input is already well partitioned.
+
+    The partition count comes from ``df.rdd.getNumPartitions()``. On a
+    scan or a checkpoint that launches no Spark job; on a relation whose
+    plan holds an exchange (a join, an aggregation, a repartition),
+    adaptive execution runs that relation's shuffle stages as jobs to
+    settle the final partitioning, and their output is thrown away —
+    the returned frame runs them again. Pass a scan, a narrow projection
+    of one, or a checkpoint."""
     want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, want // 2):
         return df.repartition(want)

@@ -9,7 +9,7 @@ and every operator has an exact DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.functions.scalar import (
@@ -97,33 +97,36 @@ def subword_token_stats(
     )
 
 
-def text_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Quality scoring: length, punctuation/digit density, stopword ratio,
-    and a composite keep/drop flag — the standard pre-training corpus
-    filters (length + symbol density + stopword presence)."""
-    df = ensure_parallelism(df)
-    raw = F.col(text_col)
-    t = tokens(text_col)
+def _quality_columns(raw: Column, t: Column) -> dict[str, Column]:
+    """The per-document quality signals of :func:`text_quality`, keyed by
+    output name. Character counts and densities read the raw text ``raw``;
+    token counts read the token array ``t``, so a caller that already
+    holds the NFC text passes ``tokens(nfc)`` and gets the same numbers."""
     n_tok = F.size(t)
     punct = F.length(raw) - F.length(F.regexp_replace(raw, r"[.!?,;:]", ""))
     digit = F.length(raw) - F.length(F.regexp_replace(raw, r"[0-9]", ""))
     stop_hits = F.size(F.filter(t, lambda w: w.isin(*STOPWORDS)))
     punct_ratio = F.round(punct / F.length(raw), 4)
     digit_ratio = F.round(digit / F.length(raw), 4)
-    stop_frac = F.round(stop_hits / n_tok, 4)
-    return df.select(
-        F.col(id_col),
-        F.length(raw).alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        punct_ratio.alias("punct_ratio"),
-        digit_ratio.alias("digit_ratio"),
-        stop_frac.alias("stopword_frac"),
-        (
-            (n_tok >= 10)
-            & (punct_ratio <= 0.1)
-            & (digit_ratio <= 0.2)
-        ).alias("is_high_quality"),
-    )
+    return {
+        "n_chars": F.length(raw),
+        "n_tokens": n_tok,
+        "punct_ratio": punct_ratio,
+        "digit_ratio": digit_ratio,
+        "stopword_frac": F.round(stop_hits / n_tok, 4),
+        "is_high_quality": (
+            (n_tok >= 10) & (punct_ratio <= 0.1) & (digit_ratio <= 0.2)
+        ),
+    }
+
+
+def text_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Quality scoring: length, punctuation/digit density, stopword ratio,
+    and a composite keep/drop flag — the standard pre-training corpus
+    filters (length + symbol density + stopword presence)."""
+    df = ensure_parallelism(df)
+    cols = _quality_columns(F.col(text_col), tokens(text_col))
+    return df.select(F.col(id_col), *[c.alias(name) for name, c in cols.items()])
 
 
 def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

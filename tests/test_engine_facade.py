@@ -254,6 +254,168 @@ def test_curate_corpus_dispositions_and_split(spark):
     assert out[4]["split"] is None
 
 
+def _nfd(s):
+    import unicodedata
+
+    return unicodedata.normalize("NFD", s)
+
+
+_A = "la café au lait est très bon pour le petit déjeuner du matin"
+_B = "one two three four five six seven eight nine ten eleven twelve"
+_C = "the quick brown fox jumps over the lazy dog near the river bank"
+
+
+def _corpus_rows():
+    """~20 documents: NFC and NFD spellings of the same text, word-order
+    and case variants, near duplicates (a chain through _B), short and
+    digit-heavy docs, a NULL text, the 9/10-token boundary, and an NFD
+    doc whose digit ratio is 0.19 on the raw text but 0.21 after NFC."""
+    return [
+        (1, _A),
+        (2, _nfd(_A)),                                 # exact dup of 1 after NFC
+        (3, " ".join(reversed(_A.split()))),           # same bag of words
+        (4, _A.upper()),                               # case variant
+        (5, _A + " aussi"),                            # near dup of 1
+        (6, _B),
+        (7, _B + " thirteen"),                         # near dup of 6
+        (8, _B + " thirteen fourteen"),                # near dup of 7
+        (9, "tiny doc"),                               # too short
+        (10, "a b c d e f g h i"),                     # 9 tokens
+        (11, "a b c d e f g h i j"),                   # 10 tokens
+        (12, "12 34 56 78 90 11 22 33 44 55 66"),      # digit heavy
+        (13, _nfd("café café café café 7 7 7 7 7 7 7")),  # raw ratio below 0.2
+        (14, "café café café 7 7 7 7 7 7 7 7"),        # NFC ratio above 0.2
+        (15, None),
+        (16, _C),
+        (17, _C.replace("river", "lake")),
+        (18, _nfd("über straße naïve résumé coöperate façade jalapeño "
+                  "crème brûlée piñata")),
+        (19, "über straße naïve résumé coöperate façade jalapeño "
+             "crème brûlée piñata"),                  # exact dup of 18
+        (20, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
+    ]
+
+
+def _composed_curation(docs):
+    """curate_corpus spelled out with the public operators: text_quality →
+    dedup_exact → ngram_jaccard_pairs → dedup_clusters →
+    leakage_safe_split, each tokenizing the raw text itself."""
+    from dataquality_ml_spark.functions.scalar import bow_fingerprint
+    from dataquality_ml_spark.operators import dedup as dd
+    from dataquality_ml_spark.operators import graph as gr
+    from dataquality_ml_spark.operators import relational as rel
+    from dataquality_ml_spark.operators import text as tx
+
+    good_ids = tx.text_quality(docs).where(
+        (F.col("n_tokens") >= 10) & (F.col("digit_ratio") <= 0.2)
+    ).select("doc_id")
+    good = docs.select("doc_id", "text").join(good_ids, "doc_id")
+    exact_map = good.select("doc_id", bow_fingerprint("text").alias("bow_fp")).join(
+        dd.dedup_exact(good).select("bow_fp", F.col("keep_id").alias("_exact_keep")),
+        "bow_fp",
+    ).select("doc_id", "_exact_keep")
+    survivors = good.join(
+        exact_map.where(F.col("doc_id") == F.col("_exact_keep")).select("doc_id"), "doc_id"
+    )
+    pairs = dd.ngram_jaccard_pairs(survivors, k=5, threshold=0.8).select("id_a", "id_b")
+    clusters = gr.dedup_clusters(pairs).select(
+        "doc_id", F.col("keep_id").alias("_near_keep")
+    )
+    disposition = (
+        docs.select("doc_id")
+        .join(good_ids.withColumn("_good", F.lit(True)), "doc_id", "left")
+        .join(exact_map, "doc_id", "left")
+        .join(clusters, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.when(F.col("_good").isNull(), F.lit("low_quality"))
+            .when(F.col("doc_id") != F.col("_exact_keep"), F.lit("exact_dup"))
+            .when(
+                F.col("_near_keep").isNotNull() & (F.col("doc_id") != F.col("_near_keep")),
+                F.lit("near_dup"),
+            )
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+            F.when(F.col("_good").isNull(), F.lit(None).cast("long"))
+            .when(F.col("doc_id") != F.col("_exact_keep"), F.col("_exact_keep"))
+            .otherwise(F.coalesce(F.col("_near_keep"), F.col("doc_id")))
+            .alias("keep_id"),
+        )
+    )
+    assigned = rel.leakage_safe_split(
+        disposition.where(F.col("status") == "kept"), "keep_id"
+    ).select("doc_id", "split")
+    return disposition.join(assigned, "doc_id", "left").select(
+        "doc_id", "status", "keep_id", "split"
+    )
+
+
+def test_curate_corpus_equals_the_operator_composition(spark):
+    """Rows and schema (nullability included) equal the composition of the
+    public operators, on NFD input too: quality reads character counts off
+    the raw text and tokens off the NFC text, and dedup sees NFC text."""
+    docs = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
+    got = DQEngine(spark).curate_corpus(docs)
+    want = _composed_curation(docs)
+    assert got.schema == want.schema
+    assert [f.nullable for f in got.schema] == [f.nullable for f in want.schema]
+    rows = sorted(got.collect())
+    assert rows == sorted(want.collect())
+    status = {r["doc_id"]: r["status"] for r in rows}
+    assert [status[i] for i in (2, 3, 4, 19)] == ["exact_dup"] * 4
+    assert [status[i] for i in (5, 7, 8)] == ["near_dup"] * 3
+    assert [status[i] for i in (9, 10, 12, 14, 15)] == ["low_quality"] * 5
+    assert [status[i] for i in (1, 6, 11, 13, 16, 18, 20)] == ["kept"] * 7
+
+
+# Spark jobs of one curate_corpus call on the six-document parquet below
+JOBS_PER_CURATION = 27
+
+
+@pytest.fixture()
+def counted_nfc(spark, monkeypatch):
+    """The NFC normalizer swapped for an equivalent pandas UDF that counts
+    the rows it normalizes."""
+    import unicodedata
+
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from dataquality_ml_spark.functions import scalar
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def nfc(s):
+        acc.add(len(s))
+        return s.map(lambda x: None if x is None else unicodedata.normalize("NFC", x))
+
+    nfc.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    monkeypatch.setitem(scalar._NORM_UDFS, "NFC", pandas_udf(nfc, "string"))
+    return acc
+
+
+def test_curate_corpus_normalizes_each_document_once(spark, tmp_path, counted_nfc):
+    """One call runs the NFC UDF on each input row once, returns a plan
+    that reads no file and runs no UDF, and launches a fixed number of
+    Spark jobs."""
+    from tests.test_column_stats import _jobs
+
+    path = str(tmp_path / "docs.parquet")
+    rows = [r for r in _corpus_rows() if r[0] in (1, 2, 5, 6, 9, 13)]
+    # one file, so ensure_parallelism repartitions whatever the core count
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    out = []
+    jobs = _jobs(spark, lambda: out.append(DQEngine(spark).curate_corpus(docs).collect()))
+    assert counted_nfc.value == len(rows)
+    assert len(out[0]) == len(rows)
+    plan = DQEngine(spark).curate_corpus(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "parquet" not in plan.lower() and "Relation" not in plan
+    assert jobs == JOBS_PER_CURATION
+
+
 def test_registry_prefix_matches_driver_correctness_window():
     """The external driver's correctness gate covers the FIRST 50
     registered queries and freezes on their order (VERDICT r3) — any

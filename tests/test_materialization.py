@@ -1,7 +1,8 @@
 """One materialization idiom: the catalog faces and the JSON quarantine
 reader leave no CacheManager entry behind, ``relational.materialize``
-checkpoints only what is not materialized yet, and the reader's
-best-effort footer probe logs its fallback."""
+checkpoints only what is not materialized yet, ``ensure_parallelism``
+reads the partition count of a scan or a checkpoint without a Spark job,
+and the reader's best-effort footer probe logs its fallback."""
 
 from __future__ import annotations
 
@@ -62,6 +63,22 @@ def test_ranking_quality_skips_materialized_inputs(spark):
     assert local == checkpointed
     assert [r["query_id"] for r in local] == [1, 2]
     assert local[1]["mrr"] == 1.0 and local[0]["mrr"] == 0.5
+
+
+def test_ensure_parallelism_runs_no_job_on_a_scan_or_checkpoint(spark, tmp_path):
+    """Reading the partition count of a scan or a checkpoint launches no
+    Spark job; on a relation with an exchange, adaptive execution runs its
+    shuffle stages first, the cost the docstring warns about."""
+    from dataquality_ml_spark.operators.relational import ensure_parallelism
+
+    path = str(tmp_path / "scan.parquet")
+    spark.range(64, numPartitions=4).selectExpr("id", "id % 5 AS g").write.parquet(path)
+    scan = spark.read.parquet(path)
+    checkpoint = scan.groupBy("g").count().localCheckpoint(eager=True)
+    shuffled = scan.groupBy("g").count()
+    assert _jobs(spark, lambda: ensure_parallelism(scan)) == 0
+    assert _jobs(spark, lambda: ensure_parallelism(checkpoint)) == 0
+    assert _jobs(spark, lambda: ensure_parallelism(shuffled)) >= 1
 
 
 def test_nanos_probe_fallback_warns(spark, sf_dir, caplog, monkeypatch):

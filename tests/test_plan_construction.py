@@ -1,11 +1,11 @@
 """Driver-side plan construction: the per-column operators and the feature
 projection build their aggregations, melts and expressions from SQL text
 (quoting of awkward column names, py4j round-trip budgets), the feature
-pipeline, the drift reports and single-column drift operators, the entropy
-profile and the threshold and imputation helpers quote awkward names too,
-the session turns off per-call origin capture, and the dedup, text,
-similarity and sequence-detector pipelines leave no entries in the
-session's CacheManager."""
+pipeline, the drift reports, the single-column and keyed drift operators,
+the entropy profile and the threshold and imputation helpers quote
+awkward names too, the session turns off per-call origin capture, and the
+dedup, text, similarity and sequence-detector pipelines leave no entries
+in the session's CacheManager."""
 
 from __future__ import annotations
 
@@ -380,6 +380,47 @@ def test_single_column_drift_operators_quote_awkward_names(awkward):
             p.append(np.maximum(np.bincount(ids, minlength=bins) / len(v), dr.EPS))
         psi = [r["psi_term"] for r in dr.psi_bins(a, b, c, lo, hi, bins).collect()]
         assert np.allclose(psi, (p[1] - p[0]) * np.log(p[1] / p[0]), rtol=1e-12, atol=1e-12), c
+
+
+_KEYED = {
+    "corr_drift": lambda a, b, keys: dr.corr_drift(a, b, "x", "y", keys=keys),
+    "cusum_changepoint": lambda a, b, keys: dr.cusum_changepoint(a, "ts", "x", keys=keys),
+    "ewma_control": lambda a, b, keys: dr.ewma_control(a, "batch", "x", keys=keys),
+    "acf_ljung_box": lambda a, b, keys: dr.acf_ljung_box(a, "batch", "x", max_lag=2, keys=keys),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_KEYED))
+def test_keyed_drift_operators_quote_awkward_key(spark, op):
+    """corr_drift, cusum_changepoint, ewma_control and acf_ljung_box with
+    ``keys=[ALL]`` return the rows they return for the same key named
+    ``g``, under the awkward name."""
+    import datetime
+
+    def frame(key, shift):
+        rows = [
+            (
+                ("s1", None, "s2")[i % 3],
+                datetime.datetime(2024, 1, 1 + i % 6),
+                i // 3,
+                float((i * 7 + shift) % 11),
+                float((i * 5) % 13),
+            )
+            for i in range(36)
+        ]
+        name = key.replace("`", "``")
+        return spark.createDataFrame(
+            rows, f"`{name}` string, ts timestamp, batch bigint, x double, y double"
+        )
+
+    def rows(key):
+        out = _KEYED[op](frame(key, 0), frame(key, 3), [key])
+        assert out.columns[0] == key
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    plain = rows("g")
+    assert len(plain) >= 3
+    assert rows(ALL) == plain
 
 
 def _telemetry_shaped(spark):

@@ -509,6 +509,54 @@ def test_weighted_quantiles_select_matches_brute_force(spark):
             weighted_quantiles_select(df, "v", "w", bad)
 
 
+def test_weighted_quantiles_select_checkpoints_before_filter(spark, monkeypatch):
+    """Over a pandas-UDF value column, the relation the weighted selection
+    checkpoints holds the UDF once: its NULL/NaN/weight filter runs over
+    the checkpoint, not pushed below the UDF's projection (which would
+    evaluate the UDF twice per row). The relation the selection loop
+    scans holds no UDF."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from dataquality_ml_spark.operators import profile as prof
+
+    def square(x):
+        return x * x
+
+    # real annotation objects: this module's `from __future__ import
+    # annotations` would stringize inline hints
+    square.__annotations__ = {"x": pd.Series, "return": pd.Series}
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    checkpointed, selected = [], []
+    frame = type(spark.range(1))
+    real_checkpoint, real_select = frame.localCheckpoint, prof._select_chains
+
+    def checkpoint_spy(self, *a, **kw):
+        checkpointed.append(plan(self))
+        return real_checkpoint(self, *a, **kw)
+
+    def select_spy(vals, *a, **kw):
+        selected.append(plan(vals))
+        return real_select(vals, *a, **kw)
+
+    monkeypatch.setattr(frame, "localCheckpoint", checkpoint_spy)
+    monkeypatch.setattr(prof, "_select_chains", select_spy)
+    df = spark.range(200).select(
+        pandas_udf(square, "double")(F.col("id").cast("double")).alias("s"),
+        (F.col("id") % 4).alias("w"),
+    )
+    got = prof.weighted_quantiles_select(df, "s", "w", [0.5])
+    assert checkpointed and checkpointed[0].count("ArrowEvalPython") == 1
+    assert len(selected) == 1 and "ArrowEvalPython" not in selected[0]
+    pairs = sorted((float(i * i), i % 4) for i in range(200) if i % 4)
+    half, cum = 0.5 * sum(w for _, w in pairs), 0
+    want = next(v for v, w in pairs if (cum := cum + w) >= half)
+    assert got == [want]
+
+
 def test_weighted_quantiles_select_grouped(spark):
     """Grouped weighted selection == per-group brute-force cumulative
     weight scan, including a NULL group key and the forced-refinement /
