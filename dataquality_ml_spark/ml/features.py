@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, NumericType, StringType
 
+from dataquality_ml_spark.operators.relational import local_frame
+
 
 @dataclass
 class FeatureModel:
@@ -268,7 +270,8 @@ def apply_features(
             # StructType, not a DDL f-string: column names with spaces or
             # other non-identifier characters must not break only above
             # the cardinality cutoff
-            mapping = spark.createDataFrame(
+            mapping = local_frame(
+                spark,
                 [(v, float(i)) for i, v in enumerate(cats)],
                 schema=StructType(
                     [

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.functions.scalar import tokens
+from dataquality_ml_spark.operators.relational import local_frame
 
 SEP = "·"  # '·' — not a whitespace token char, safe separator
 EOW = "</w>"
@@ -219,7 +220,8 @@ def _bpe_train_inmem(
 
 
 def bpe_merge_df(spark: SparkSession, merges: list[tuple[int, str, str, int]]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "merge_rank int, lhs string, rhs string, cnt bigint"
     )
 
@@ -302,9 +304,7 @@ def bpe_tokenize(
     """
     spark = df.sparkSession
     vdf = F.broadcast(
-        spark.createDataFrame(
-            list(vocab.items()), "sym string, tid int"
-        )
+        local_frame(spark, list(vocab.items()), "sym string, tid int")
     )
     t = tokens(text_col)
     ex = df.select(

@@ -25,8 +25,10 @@ from dataquality_ml_spark.functions.scalar import (
     bow_fingerprint,
     portable_hash32,
     portable_hash60,
+    pre_normalized,
     shingles,
     tokens,
+    unicode_normalize,
 )
 
 #: A shingle appearing in d docs emits d·(d-1)/2 candidate pairs from the
@@ -414,13 +416,27 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: shingle → hash → sign → band →
     bucket-join → exact-Jaccard verify."""
+    from dataquality_ml_spark.operators.relational import ensure_parallelism
+
+    # Normalize once: shingling filters on the token count, and the
+    # optimizer pushes that filter below a projection holding the NFC UDF,
+    # which then runs twice per document. Built under ``pre_normalized()``
+    # over a checkpoint of the NFC text, the filter and the tokens read the
+    # stored text. Its one reader is the hs checkpoint job, so lazy.
+    nfc = (
+        ensure_parallelism(df)
+        .select(F.col(id_col), unicode_normalize(text_col).alias(text_col))
+        .localCheckpoint(eager=False)
+    )
     # The hashed-shingle relation feeds three plan branches (signatures +
-    # both sides of the verify join); checkpoint it so tokenization/
-    # shingling/hashing runs once. Compact: one bigint array per doc. A
-    # lazy local checkpoint, not .cache(): its blocks go with the returned
-    # plan, while a cache entry would stay in the session's CacheManager
-    # after every call.
-    hs = with_hashed_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
+    # both sides of the verify join); checkpoint it so shingling/hashing
+    # runs once. Compact: one bigint array per doc. Eager: the returned
+    # query's first map stages read it from several subtrees at once, and
+    # each would compute a lazy checkpoint itself. A local checkpoint, not
+    # .cache(): its blocks go with the returned plan, while a cache entry
+    # would stay in the session's CacheManager after every call.
+    with pre_normalized():
+        hs = with_hashed_shingles(nfc, text_col, id_col, k).localCheckpoint(eager=True)
     sig = minhash_signatures(hs, num_perms, id_col)
     cand = minhash_candidates(sig, bands, rows, id_col)
     return jaccard_verify(cand, hs, threshold, id_col).orderBy("id_a", "id_b")

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.operators.profile import _ident, _melt_sql, _str_lit
+from dataquality_ml_spark.operators.relational import local_frame
 
 EPS = 1e-6  # proportion clamp so empty bins don't produce ±inf PSI terms
 
@@ -263,7 +264,8 @@ def _ecdf_from_tagged(
         key_schema = ", ".join(
             f"{_ident('__t_' + k)} {per_v.schema[k].dataType.simpleString()}" for k in keys
         )
-        tots = per_v.sparkSession.createDataFrame(
+        tots = local_frame(
+            per_v.sparkSession,
             [(*kt, int(v[0]), int(v[1])) for kt, v in tot_map.items()],
             f"{key_schema}, tot_a bigint, tot_b bigint",
         )
@@ -1088,7 +1090,8 @@ def _bucketize(
             .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
             .collect()
         ]
-    spec = long.sparkSession.createDataFrame(
+    spec = local_frame(
+        long.sparkSession,
         rows, "column string, __lo double, __hi double"
     )
     w = F.when(
@@ -1719,7 +1722,8 @@ def mann_kendall_trend(
     else:
         z = 0.0
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, s, float(var_s), float(z))],
         "n_points bigint, s_stat bigint, var_s double, z double",
     )

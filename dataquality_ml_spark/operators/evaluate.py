@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.operators.profile import _ident
+from dataquality_ml_spark.operators.relational import local_frame
 
 
 def confusion_counts(df: DataFrame, pred: str = "is_anomaly", actual: str = "actual_failure") -> DataFrame:
@@ -769,7 +770,7 @@ def isotonic_calibration(
         "calibrated double"
     )
     if not cells:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # PAV with exact integer block sums: pool while the previous block's
     # rate exceeds the current's (cross-multiplied — no float compare)
     blocks: list[list[int]] = []  # [n, np, first_cell_idx]
@@ -787,7 +788,8 @@ def isotonic_calibration(
         val = bp / bn
         for i in range(first, end):
             fit[i] = val
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(r["bin"]),

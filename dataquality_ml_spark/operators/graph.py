@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataquality_ml_spark.operators.relational import local_frame
+
 # Lineage-cut cadence for the FIXED-iteration loops (pagerank, label
 # propagation): a checkpoint per iterate costs one scheduled job per
 # round — the dominant fixed cost at bench scale — while a handful of
@@ -267,9 +269,7 @@ def pagerank(
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.count()
     if n_nodes == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node long, rank double"
-        )
+        return local_frame(edges.sparkSession, [], "node long, rank double")
     base = F.lit((1.0 - damping) / n_nodes)
     # EAGER: the pipelined loop below reads sym from FIVE joins inside
     # one query — a lazy checkpoint materializes on first touch, and
@@ -494,9 +494,7 @@ def markov_stationary(
             )
         if rows is not None:
             if not rows:
-                return trans.sparkSession.createDataFrame(
-                    [], "state string, pi double"
-                )
+                return local_frame(trans.sparkSession, [], "state string, pi double")
             from pyspark.sql.types import DoubleType, StructField, StructType
 
             _, pi = _markov_local_power(rows, iterations)
@@ -507,7 +505,8 @@ def markov_stationary(
                 ]
             )
             out = sorted(pi.items(), key=lambda t: (t[0] is None, t[0]))
-            return trans.sparkSession.createDataFrame(
+            return local_frame(
+                trans.sparkSession,
                 [(s, float(v)) for s, v in out], schema
             )
     states = (
@@ -530,7 +529,7 @@ def markov_stationary(
     p = p.unionByName(dangling).localCheckpoint(eager=False)
     n_states = states.count()
     if n_states == 0:
-        return trans.sparkSession.createDataFrame([], "state string, pi double")
+        return local_frame(trans.sparkSession, [], "state string, pi double")
     pi = states.select("s", F.lit(1.0 / n_states).alias("pi")).localCheckpoint(
         eager=False
     )
@@ -591,7 +590,8 @@ def markov_entropy_rate(
             import math as _math
 
             if not rows:  # empty chain: count 0, NULL rate, norm 0.0
-                return trans.sparkSession.createDataFrame(
+                return local_frame(
+                    trans.sparkSession,
                     [(0, None, 0.0)],
                     "n_states bigint, entropy_rate double, "
                     "entropy_rate_norm double",
@@ -618,7 +618,8 @@ def markov_entropy_rate(
                 if (n_states or 0) > 1
                 else 0.0
             )
-            return trans.sparkSession.createDataFrame(
+            return local_frame(
+                trans.sparkSession,
                 [(n_states, h, norm)],
                 "n_states bigint, entropy_rate double, entropy_rate_norm double",
             )

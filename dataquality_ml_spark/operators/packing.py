@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataquality_ml_spark.operators.relational import local_frame
+
 
 def pack_sequences(
     df: DataFrame,
@@ -88,7 +90,8 @@ def mixture_sample(
 
     spark = df.sparkSession
     total_w = float(sum(weights.values()))
-    alloc_df = spark.createDataFrame(
+    alloc_df = local_frame(
+        spark,
         [(s, token_budget * w / total_w) for s, w in weights.items()],
         f"{source_col} string, _alloc double",
     )

@@ -199,8 +199,10 @@ def profile(df: DataFrame, columns: list[str] | None = None, exact_quantiles: bo
         # max) over exactly the valid population — collect it (O(cols)
         # rows) and hand those to the selection so it skips its own stats
         # scan; the collected rows are reused, not recomputed
+        from dataquality_ml_spark.operators.relational import local_frame
+
         rows = per_col.collect()
-        per_col = df.sparkSession.createDataFrame(rows, per_col.schema)
+        per_col = local_frame(df.sparkSession, rows, per_col.schema)
         pre = {(cols[r["i"]],): (r["n_valid"], r["min"], r["max"], r["nd"]) for r in rows}
         exact_pcts = exact_quantiles_multi(
             df, cols, PROFILE_QUANTILES, stats=pre, checkpoint=False
@@ -482,6 +484,8 @@ def _select_chains(
         StructType,
     )
 
+    from dataquality_ml_spark.operators.relational import local_frame
+
     spark = vals.sparkSession
     gfields = [vals.schema[g] for g in gnames]
 
@@ -499,7 +503,7 @@ def _select_chains(
             + [StructField("__lo", DoubleType()), StructField("__hi", DoubleType())]
             + ([StructField("__cid", IntegerType())] if with_id else [])
         )
-        return spark.createDataFrame(rows, StructType(fields))
+        return local_frame(spark, rows, StructType(fields))
 
     def _join_cond(n_path):
         # ungrouped selection (round 11): no group conjuncts — start from
@@ -676,7 +680,8 @@ def _select_chains(
                 .agg(_cexpr())
             )
             pre = exclusive_prefix_sum(per_v, "v", "c", out="_pfx", keys=["__cid"])
-            spec = spark.createDataFrame(
+            spec = local_frame(
+                spark,
                 [
                     (idx, ch["base"], [int(k) for k in ch["ks"]])
                     for idx, ch in enumerate(fallback)

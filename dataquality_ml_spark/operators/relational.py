@@ -72,10 +72,10 @@ def size_scaled_parallelism(
 
     For operators whose per-row work is LIGHT (melts, projections), a
     defaultParallelism-wide repartition of a tiny input pays one task
-    launch per core for no compute win — the round-13 driver bench
-    measured the flagship drift panel running FASTER at 8 cores than 32
-    because of exactly that (VERDICT r13 item 1; guide §2.1: a shuffle's
-    cost is fixed per task, so width must follow data volume).
+    launch per core for no compute win — a driver benchmark measured the
+    drift panel running faster at 8 cores than at 32 because of exactly
+    that (a shuffle's cost is fixed per task, so width must follow data
+    volume).
     ``row_multiplier`` accounts for row-multiplying downstream work
     (e.g. a melt of k columns). At data scale the estimate exceeds
     ``defaultParallelism × bytes_per_task`` and the clamp returns
@@ -449,17 +449,46 @@ def temperature_sample(
     }
     spark = df.sparkSession
     group_type = df.schema[group_col].dataType.simpleString()
-    quota_df = spark.createDataFrame(
+    quota_df = local_frame(
+        spark,
         [(g, int(counts[g]), int(quotas[g])) for g in counts],
         f"{group_col} {group_type}, _cnt bigint, _quota int",
     )
     return _two_phase_quota_window(df, group_col, key, quota_df, margin)
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A table built on the driver (offsets, totals, quotas, a model's
+    parameters), as a JVM-side ``LocalRelation``.
+
+    ``schema`` is DDL text or a ``StructType``; its nullability is kept.
+    Each row is verified and converted by PySpark's own row path (tuples,
+    lists, dicts and ``Row`` objects alike; DATE and TIMESTAMP values
+    through ``DataType.toInternal``, so a naive ``datetime`` is read in
+    the process's local time zone), then shipped as one Arrow table.  A
+    list of rows handed to ``createDataFrame`` instead plans as a
+    ``LogicalRDD`` over a Python RDD: every job that reads it, a
+    broadcast included, starts Python workers to unpickle the rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
+
+    struct = schema if isinstance(schema, StructType) else spark._parse_ddl(schema)
+    verify, to_tuple = _make_type_verifier(struct), _create_converter(struct)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(struct.toInternal(to_tuple(r)))
+    cols = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    arrow = to_arrow_schema(struct)
+    arrays = [pa.array(vals, type=af.type) for vals, af in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
+
+
 def materialize(df: DataFrame, *, caller: str, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager)``, unless ``df`` already is a
     materialized relation — its plan root a ``LogicalRDD`` (a checkpointed
-    frame) or a ``LocalRelation`` (a ``createDataFrame`` literal).  A
+    frame) or a ``LocalRelation`` (a :func:`local_frame` table).  A
     second persist of those would double their executor memory/disk
     footprint (and, eager, launch a job) for no recompute saved.  If the
     plan root cannot be read, it logs a warning naming ``caller`` and
@@ -578,7 +607,8 @@ def exclusive_prefix_sum(
         + ", ".join(f"_off_{i} long" for i in range(len(val_cols)))
     )
     off_df = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             offsets or [(0, *([None] * len(keys)), *([0] * len(val_cols)))],
             off_schema,
         )
@@ -589,8 +619,8 @@ def exclusive_prefix_sum(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     if keys:
-        # null-safe key equality: a NULL key tuple is a real group (round
-        # 8 — the plain equi-join silently dropped null-keyed rows here)
+        # null-safe key equality: a NULL key tuple is a real group (a
+        # plain equi-join would silently drop null-keyed rows here)
         off2 = off_df
         for k in keys:
             off2 = off2.withColumnRenamed(k, f"_off_k_{k}")

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
+from dataquality_ml_spark.operators.relational import local_frame
+
 
 @dataclass
 class Rule:
@@ -239,7 +241,8 @@ def suggest_rules(
              round(float(s2[f"sup_{c}"]), 4))
         )
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column string, rule string, lo double, hi double, vals string, support double",
     ).orderBy("column", "rule")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.functions.scalar import portable_hash32, tokens
+from dataquality_ml_spark.operators.relational import local_frame
 
 _U32 = 4294967296.0  # 2^32
 
@@ -258,7 +259,8 @@ def mixture_epochs(
     spark = df.sparkSession
     tot_w = sum(weights.values())
     wdf = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(s, w / tot_w) for s, w in weights.items()],
             f"{source_col} string, weight double",
         )
@@ -522,7 +524,8 @@ def rolling_origin_assign(
         raise ValueError(
             f"rolling_origin_assign: no non-null {ts_col!r} rows to split"
         )
-    folds = df.sparkSession.createDataFrame(
+    folds = local_frame(
+        df.sparkSession,
         [(i + 1, float(cuts[i]), float(cuts[i + 1])) for i in range(n_folds)],
         "fold int, c_lo double, c_hi double",
     )

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from dataquality_ml_spark.operators.relational import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -1529,7 +1531,8 @@ class ANNIndex:
             new_emb_df, self.coarse_cents, self.id_col, self.vec_col
         )
         cur = _bin_props(d, "dist2", p["lo"], p["hi"], p["bins"], "p_cur")
-        ref = spark.createDataFrame(
+        ref = local_frame(
+            spark,
             [(b, float(pr)) for b, pr in enumerate(p["p_ref"])],
             "bin int, p_ref double",
         )
@@ -1596,7 +1599,8 @@ class ANNIndex:
             .withColumn("n_tot", F.sum("n").over(tot))
             .withColumn("p_cur", F.col("n") / F.col("n_tot"))
         )
-        ref = spark.createDataFrame(
+        ref = local_frame(
+            spark,
             [(b, float(pr)) for b, pr in enumerate(p["p_ref"])],
             "bin int, p_ref double",
         )
@@ -1855,7 +1859,7 @@ def embedding_covariance(
     base = df.where(F.col(vec_col).isNotNull())
     first = base.select(F.size(vec_col).alias("d")).first()
     if first is None:
-        return df.sparkSession.createDataFrame([], "i int, j int, cov double")
+        return local_frame(df.sparkSession, [], "i int, j int, cov double")
     d = int(first["d"])
 
     def _gram(batches):
@@ -1947,7 +1951,8 @@ def embedding_effective_rank(
         nz = p[p > 0]
         erank = float(np.exp(-(nz * np.log(nz)).sum()))
         top_share = float(eig.max() / tot)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(d, tot, erank, top_share)],
         "d int, total_var double, effective_rank double, top_eig_share double",
     )
@@ -1975,7 +1980,7 @@ def ranking_quality(
 
     Both inputs are materialized when the DataFrame is built — one eager
     checkpoint job each, none for an input that already is materialized
-    (a checkpointed frame or a ``createDataFrame`` literal).
+    (a checkpointed frame or a ``local_frame`` table).
     """
     from dataquality_ml_spark.operators.relational import materialize
 

@@ -23,6 +23,7 @@ from dataquality_ml_spark.operators.profile import (
     exact_quantiles_multi,
     exact_quantiles_select,
 )
+from dataquality_ml_spark.operators.relational import local_frame
 
 
 def percentile_threshold(df: DataFrame, col: str, q: float, exact: bool = True) -> float:
@@ -134,7 +135,8 @@ def mad_robust_outliers(
             # join below ships anyway.
             med = exact_quantiles_select(rel, col, [0.5], group_by=[group_col])
             gtype = rel.schema[group_col].dataType.simpleString()
-            return rel.sparkSession.createDataFrame(
+            return local_frame(
+                rel.sparkSession,
                 [(g[0], v[0]) for g, v in med.items()],
                 f"{_ident(group_col)} {gtype}, {out} double",
             )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.functions.scalar import tokens
+from dataquality_ml_spark.operators.relational import local_frame
 
 #: Hard cap on the DP lattice depth (one bounded join per character
 #: position).  Without it, ``max_word_len=None`` defaulted to the corpus
@@ -148,7 +149,7 @@ def _em_expected_counts_array(
     deterministic literal."""
     spark = words.sparkSession
     if not plist:
-        return spark.createDataFrame([], "piece string, ecnt double")
+        return local_frame(spark, [], "piece string, ecnt double")
     m = F.map_from_arrays(
         F.lit([p for p, _ in plist]), F.lit([v for _, v in plist])
     )
@@ -493,7 +494,7 @@ def unigram_tokenize(
     if seg_words is None:
         wc = word_counts(df, text_col)
         seg = viterbi_segment_words(
-            wc, spark.createDataFrame(pieces, "piece string, prob double"),
+            wc, local_frame(spark, pieces, "piece string, prob double"),
             max_piece_len, max_word_len,
         ).select("word", "pieces")
     else:
@@ -504,7 +505,7 @@ def unigram_tokenize(
         seg = seg_words.select("word", "pieces")
     vocab = unigram_build_vocab(pieces)
     vdf = F.broadcast(
-        spark.createDataFrame(list(vocab.items()), "piece string, tid int")
+        local_frame(spark, list(vocab.items()), "piece string, tid int")
     )
     ex = df.select(
         F.col(id_col), F.posexplode(tokens(text_col)).alias("wpos", "word")
@@ -729,9 +730,7 @@ def unigram_train(
     tot = sum(r["freq"] for r in srows)
     probs = {r["piece"]: r["freq"] / tot for r in srows}
     for _ in range(n_iters):
-        pdf = spark.createDataFrame(
-            list(probs.items()), "piece string, prob double"
-        )
+        pdf = local_frame(spark, list(probs.items()), "piece string, prob double")
         ecnt = {
             r["piece"]: r["ecnt"]
             for r in em_expected_counts(wc, pdf, max_piece_len, max_wl).collect()
@@ -769,7 +768,7 @@ class UnigramTokenizer:
 
     def segment(self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
         spark = df.sparkSession
-        pdf = spark.createDataFrame(self.pieces, "piece string, prob double")
+        pdf = local_frame(spark, self.pieces, "piece string, prob double")
         wc = word_counts(df, text_col)
         seg = viterbi_segment_words(wc, pdf, self.max_piece_len)
         return unigram_segment(df, seg, text_col, id_col)

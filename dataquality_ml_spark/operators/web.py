@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.functions.scalar import tokens
+from dataquality_ml_spark.operators.relational import local_frame
 
 
 #: Host bucket for rows whose URL has no parsable host.  NULL keys are
@@ -147,9 +148,9 @@ def host_curation_report(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("_ntok"), 4).alias("avg_tokens"),
     )
-    bl = spark.createDataFrame(
-        [(h,) for h in (blocklist or [])], "host string"
-    ).withColumn("_blocked", F.lit(1))
+    bl = local_frame(spark, [(h,) for h in (blocklist or [])], "host string").withColumn(
+        "_blocked", F.lit(1)
+    )
     agg = agg.join(F.broadcast(bl), "host", "left").select(
         "host",
         "n_docs",

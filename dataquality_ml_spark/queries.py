@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.operators import profile as prof
+from dataquality_ml_spark.operators.relational import local_frame
 from dataquality_ml_spark.sources.readers import read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1946,7 +1947,8 @@ def prune_feature_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     cols = ["l_quantity", "l_discount", "l_tax"]
     kept = set(prune_low_quality(li, cols))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(c, c in kept) for c in sorted(cols)], "column string, keep boolean"
     )
 
@@ -2191,7 +2193,8 @@ def quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         (g[0], round(v[0], 4), round(v[1], 4), round(v[2], 4))
         for g, v in qv.items()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "event_type string, p25 double, p50 double, p95 double"
     ).orderBy("event_type")
 
@@ -2560,7 +2563,9 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # as is exact_keep (the near-dup input AND the final anti-join):
         # the returned query is the first to read each of them, from
         # several subtrees at once, where a lazy checkpoint races and
-        # recomputes
+        # recomputes.  The near-dup input is a checkpoint as well, so
+        # the shingling stage's partition-count probe reads it without
+        # running the join's exchange as a job of its own
         kept_q = docs.select("doc_id", "text").join(
             quality.where(
                 (F.col("n_tokens") >= 10) & (F.col("digit_ratio") <= 0.2)
@@ -2572,7 +2577,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("keep_id").alias("doc_id"))
             .localCheckpoint(eager=True)
         )
-        deduped = kept_q.join(exact_keep, "doc_id")
+        deduped = kept_q.join(exact_keep, "doc_id").localCheckpoint(eager=True)
         near = dd_ops.ngram_jaccard_pairs(
             deduped, k=5, threshold=0.8, on_hot_shingle="exact"
         ).select(
@@ -4348,7 +4353,8 @@ def stability_grid_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for g, v in results
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(out_rows),
         "pid int, p_exp double, norm string, stability double, is_best boolean",
     )

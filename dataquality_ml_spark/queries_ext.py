@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from dataquality_ml_spark.operators import profile as prof
 from dataquality_ml_spark.operators import text as tx
 from dataquality_ml_spark.operators import thresholds as th
-from dataquality_ml_spark.operators.relational import exclusive_prefix_sum
+from dataquality_ml_spark.operators.relational import exclusive_prefix_sum, local_frame
 from dataquality_ml_spark.queries import _parquet_fingerprint, _t, register
 
 
@@ -2938,7 +2938,7 @@ def _ug_shared(spark: SparkSession, sf_dir: str):
             srows = ug.seed_pieces(wc, _UG_ML, _UG_MP).collect()
             tot = sum(r["freq"] for r in srows)
             probs = [(r["piece"], r["freq"] / tot) for r in srows]
-            pdf = spark.createDataFrame(probs, "piece string, prob double")
+            pdf = local_frame(spark, probs, "piece string, prob double")
             seg = ug.viterbi_segment_words(
                 wc, pdf, _UG_ML, max_word_len=_UG_L
             ).localCheckpoint(eager=True)
@@ -3917,7 +3917,7 @@ def unigram_em_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataquality_ml_spark.operators import unigram as ug
 
     wc, probs, _ = _ug_shared(spark, sf_dir)
-    pdf = spark.createDataFrame(probs, "piece string, prob double")
+    pdf = local_frame(spark, probs, "piece string, prob double")
     return (
         # cap == the oracle's unroll depth, so both engines drop
         # over-length words at exactly the same lattice depth
@@ -3965,7 +3965,8 @@ def unigram_pieces_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_piece_len=_UG_ML,
         max_pieces=_UG_MP,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, p, round(pr, 6)) for i, (p, pr) in enumerate(pieces)],
         "piece_rank int, piece string, prob double",
     )
@@ -6852,7 +6853,8 @@ def median_by_type_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, "value", [0.5, 0.9], group_by=["event_type", "day"],
         stats=stats, checkpoint=False,
     )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (g[0], int(g[1]), float(v[0]), float(v[1]), int(stats[g][0]))
             for g, v in got.items()
@@ -7056,7 +7058,8 @@ def weighted_len_quantiles_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qs = [0.1, 0.25, 0.5, 0.9, 0.99]
     vals = weighted_quantiles_select(wv, "v", "w", qs)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(q), float(v)) for q, v in zip(qs, vals)],
         "q double, val double",
     ).orderBy("q")
@@ -7362,7 +7365,8 @@ def weighted_len_quantiles_by_source(spark: SparkSession, sf_dir: str) -> DataFr
     )
     qs = [0.25, 0.5, 0.9]
     got = weighted_quantiles_select(wv, "v", "w", qs, group_by=["source"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (g[0], float(q), float(v))
             for g, vals in got.items()

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataquality_ml_spark.operators.drift import EPS
+from dataquality_ml_spark.operators.relational import local_frame
 from dataquality_ml_spark.operators.sketch import cms_build, hll_sketch_by_group, qsketch_build
 
 
@@ -484,7 +485,7 @@ def hll_monitor_stream(
         )
         part = hll_sketch_by_group(toks, "token", [group_col], lgk=lgk)
         if state["rows"]:
-            prev = spark.createDataFrame(state["rows"], schema)
+            prev = local_frame(spark, state["rows"], schema)
             part = part.unionByName(prev)
         merged = part.groupBy(group_col).agg(
             F.hll_union_agg(F.col("hll_sketch")).alias("hll_sketch")
@@ -494,7 +495,7 @@ def hll_monitor_stream(
     def estimates() -> dict:
         if not state["rows"]:
             return {}
-        df = state["spark"].createDataFrame(state["rows"], schema)
+        df = local_frame(state["spark"], state["rows"], schema)
         out = df.select(
             group_col,
             F.hll_sketch_estimate(F.col("hll_sketch")).alias("est"),
@@ -724,7 +725,7 @@ def _replay(df: DataFrame, batch_col: str, fold, schema: str, row=None) -> DataF
     for i, b in enumerate(_replay_batches(df, batch_col)):
         fn(df.where(F.col(batch_col).eqNullSafe(F.lit(b))), i)
     rows = [t for t in map(row, reports) if t is not None]
-    return df.sparkSession.createDataFrame(rows, schema)
+    return local_frame(df.sparkSession, rows, schema)
 
 
 def drift_monitor_replay(

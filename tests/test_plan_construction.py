@@ -9,10 +9,12 @@ in the session's CacheManager."""
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 import subprocess
 import sys
+import time
 
 import numpy as np
 import py4j.clientserver
@@ -436,13 +438,18 @@ def _telemetry_shaped(spark):
     return df
 
 
-@pytest.mark.parametrize("debugging", [True, False])
-def test_profile_plan_py4j_budget(spark, monkeypatch, debugging):
-    """Building profile()'s plan costs O(1) py4j round trips per column,
-    whether or not PySpark captures per-call origins (plain sessions,
-    like the driver contract's, keep it on)."""
-    df = _telemetry_shaped(spark)
-    monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
+def _count_sends(spark, monkeypatch):
+    """Count the py4j commands sent, from any thread, until ``monkeypatch``
+    is undone. py4j's finalizer thread sends one memory-delete command per
+    freed Java proxy, at its own pace; earlier garbage is drained first, so
+    the window holds the measured call's round trips and the deletes for
+    the proxies it frees, not those of proxies freed before it opened."""
+    gc.collect()
+    pending = spark.sparkContext._gateway._gateway_client.finalizer_deque
+    deadline = time.monotonic() + 30
+    while pending and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert not pending, len(pending)
     calls = [0]
     send = py4j.clientserver.ClientServerConnection.send_command
 
@@ -451,6 +458,17 @@ def test_profile_plan_py4j_budget(spark, monkeypatch, debugging):
         return send(self, command)
 
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    return calls
+
+
+@pytest.mark.parametrize("debugging", [True, False])
+def test_profile_plan_py4j_budget(spark, monkeypatch, debugging):
+    """Building profile()'s plan costs O(1) py4j round trips per column,
+    whether or not PySpark captures per-call origins (plain sessions,
+    like the driver contract's, keep it on)."""
+    df = _telemetry_shaped(spark)
+    monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
+    calls = _count_sends(spark, monkeypatch)
     out = prof.profile(df)
     monkeypatch.undo()
     assert calls[0] > 0  # the counter sees the gateway's traffic
@@ -468,14 +486,7 @@ def test_feature_drift_report_py4j_budget(spark, monkeypatch, debugging, budget)
     cols = prof.numeric_columns(df)
     ref, cur = df.where("failure = 0"), df.where("failure = 1")
     monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
-    calls = [0]
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def counting(self, command):
-        calls[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    calls = _count_sends(spark, monkeypatch)
     out = dr.feature_drift_report(ref, cur, cols)
     monkeypatch.undo()
     assert calls[0] > 0
@@ -496,14 +507,7 @@ def test_drift_panel_py4j_budget(spark, monkeypatch, debugging):
     ).where("v IS NOT NULL AND NOT isnan(v)")
     ecdf = dr._ecdf_from_tagged(long, ["column"], bounded=False).localCheckpoint(eager=True)
     monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
-    calls = [0]
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def counting(self, command):
-        calls[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    calls = _count_sends(spark, monkeypatch)
     out = dr.drift_panel(None, None, "v", keys=["column"], ecdf=ecdf)
     monkeypatch.undo()
     assert calls[0] > 0
@@ -531,14 +535,7 @@ def test_apply_features_py4j_budget(spark, monkeypatch, debugging):
         categories={"model_40": [f"m{i}" for i in range(40)]},
     )
     monkeypatch.setattr(origin_utils, "_enable_debugging_cache", debugging)
-    calls = [0]
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def counting(self, command):
-        calls[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    calls = _count_sends(spark, monkeypatch)
     out = feat.apply_features(df, model)
     monkeypatch.undo()
     assert calls[0] > 0
